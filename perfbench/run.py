@@ -5,11 +5,13 @@
 
 Run it from the repository root. It compiles the library sources
 (src/main/scala) together with the benchmark's own (perfbench/src) once
-per source tree, caching the classes under .bench_build/perfbench/<hash>,
-then starts the compiled program directly on the JVM with Spark's jars
-(found through SPARK_HOME, or the spark-submit on PATH). Each run works
-in its own directory under .bench_build/perfbench/runs and removes it at
-the end; the run's spans are kept under .bench_build/perfbench/traces.
+per source tree, caching a jar of the classes under
+.bench_build/perfbench/<hash> together with a class-data-sharing archive
+recorded from one short tail_sync run, then starts the compiled program
+directly on the JVM with Spark's jars (found through SPARK_HOME, or the
+spark-submit on PATH). Each run works in its own directory under
+.bench_build/perfbench/runs and removes it at the end; the run's spans
+are kept under .bench_build/perfbench/traces.
 
 The last line of standard output is the run's JSON result. The exit
 code is the program's: 0 when every check passed, 1 when one failed,
@@ -23,6 +25,7 @@ import signal
 import subprocess
 import sys
 import time
+import zipfile
 
 BENCH = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.getcwd()
@@ -65,7 +68,8 @@ def sources():
 
 
 def build(jars):
-    """Compile every source once per source tree; return the classes dir."""
+    """Compile every source once per source tree into a jar, then record
+    a class-data-sharing archive for it; return (jar, archive or None)."""
     files = sources()
     h = hashlib.sha256()
     for f in files:
@@ -73,10 +77,12 @@ def build(jars):
         with open(f, "rb") as fh:
             h.update(hashlib.sha256(fh.read()).digest())
     out = os.path.join(CACHE, h.hexdigest()[:16])
-    classes = os.path.join(out, "classes")
+    jar = os.path.join(out, "perfbench.jar")
+    archive = os.path.join(out, "classes.jsa")
     if os.path.exists(os.path.join(out, "ok")):
-        return classes
+        return jar, archive if os.path.exists(archive) else None
     shutil.rmtree(out, ignore_errors=True)
+    classes = os.path.join(out, "classes")
     os.makedirs(classes)
     cp = os.path.join(jars, "*")
     args = os.path.join(out, "sources.txt")
@@ -87,24 +93,47 @@ def build(jars):
                        stdout=sys.stderr)
     if r.returncode != 0:
         fail("compilation failed")
+    # the JVM archives classes from jars only, not from directories
+    with zipfile.ZipFile(jar, "w") as z:
+        for d, _, names in os.walk(classes):
+            for n in names:
+                z.write(os.path.join(d, n), os.path.relpath(os.path.join(d, n), classes))
+    record_archive(jars, jar, archive, os.path.join(out, "train"))
     open(os.path.join(out, "ok"), "w").close()
-    return classes
+    return jar, archive if os.path.exists(archive) else None
 
 
-def java_command(jars, classes, main, args):
+def record_archive(jars, jar, archive, train_dir):
+    """Record the classes a short tail_sync run loads (Spark's start-up
+    among them) into a class-data-sharing archive, which later runs map
+    instead of loading those classes from the jars again. Without an
+    archive the runs load every class from the jars."""
+    os.makedirs(os.path.join(train_dir, "tmp"), exist_ok=True)
+    cmd = java_command(jars, jar, None, "perfbench.Main",
+                       ["--workload", "tail_sync", "--seed", "0", "--seconds", "1",
+                        "--trace", "0", "--dir", train_dir], train_dir)
+    cmd.insert(1, "-XX:ArchiveClassesAtExit=" + archive + ".tmp")
+    code = supervise(cmd, stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL)
+    if code == 0 and os.path.exists(archive + ".tmp"):
+        os.replace(archive + ".tmp", archive)
+    else:
+        print("perfbench: no class-data archive recorded; runs load classes from jars",
+              file=sys.stderr)
+    shutil.rmtree(train_dir, ignore_errors=True)
+
+
+def java_command(jars, jar, archive, main, args, run_dir):
     opens = [x for p in JVM_OPENS for x in ("--add-opens", p + "=ALL-UNNAMED")]
-    return (["java", "-Xmx3g", "-XX:-UsePerfData"] + opens +
-            ["-cp", classes + os.pathsep + os.path.join(jars, "*"), main] + args)
+    share = ["-XX:SharedArchiveFile=" + archive] if archive else []
+    return (["java", "-Djava.io.tmpdir=" + os.path.join(run_dir, "tmp"), "-Xmx3g",
+             "-XX:-UsePerfData", "-Xlog:cds=off", "-Xlog:cds+dynamic=off"] + share + opens +
+            ["-cp", jar + os.pathsep + os.path.join(jars, "*"), main] + args)
 
 
-def run_java(main, args, run_dir):
-    """Run `main` in `run_dir` (its temp files stay there); return exit code."""
-    jars = spark_jars()
-    classes = build(jars)
-    os.makedirs(os.path.join(run_dir, "tmp"), exist_ok=True)
-    cmd = java_command(jars, classes, main, args)
-    cmd.insert(1, "-Djava.io.tmpdir=" + os.path.join(run_dir, "tmp"))
-    proc = subprocess.Popen(cmd)
+def supervise(cmd, **popen):
+    """Run `cmd` to its end; on SIGTERM/SIGINT stop it (killing it after
+    20 s), wait for it, and exit."""
+    proc = subprocess.Popen(cmd, **popen)
     stopping = []
 
     def stop(signum, _frame):
@@ -113,8 +142,7 @@ def run_java(main, args, run_dir):
         stopping.append(signum)
         proc.terminate()
 
-    signal.signal(signal.SIGTERM, stop)
-    signal.signal(signal.SIGINT, stop)
+    old = [signal.signal(s, stop) for s in (signal.SIGTERM, signal.SIGINT)]
     deadline = None
     while True:
         try:
@@ -127,7 +155,17 @@ def run_java(main, args, run_dir):
                 proc.kill()
     if stopping:
         sys.exit(128 + stopping[0])
+    signal.signal(signal.SIGTERM, old[0])
+    signal.signal(signal.SIGINT, old[1])
     return code
+
+
+def run_java(main, args, run_dir):
+    """Run `main` in `run_dir` (its temp files stay there); return exit code."""
+    jars = spark_jars()
+    jar, archive = build(jars)
+    os.makedirs(os.path.join(run_dir, "tmp"), exist_ok=True)
+    return supervise(java_command(jars, jar, archive, main, args, run_dir))
 
 
 def main(argv):

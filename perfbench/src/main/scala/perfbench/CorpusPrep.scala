@@ -13,21 +13,24 @@ import graft.streaming.StreamOps
 /**
  * corpus_prep — training-data ingest captured as CDC. Document INSERTs
  * are appended to a `MemoryTailFeed` and read through `CdcTailProvider`
- * with `maxIdsPerTrigger = docsPerRound`, then drained by
+ * with `maxIdsPerTrigger = RoundDocs`, then drained by
  * `StreamOps.prepPipelineTo` (Bloom decontamination, near-duplicate
- * dedup state, quality filter, split). Set-up's warm-up batch admits
- * `warmDocs` documents into the dedup state; each timed round appends
- * `docsPerRound` more and drains them with the same query (same
- * checkpoint, output and state), so later documents are checked against
- * everything admitted before.
+ * dedup state, quality filter, split) with `Trigger.AvailableNow`.
+ * Set-up's warm-up epoch admits `WarmDocs` documents into the dedup
+ * state; each timed round appends `RoundDocs` more and drains them with
+ * the same checkpoint, output and state, so later documents are checked
+ * against everything admitted before. An epoch costs about the same
+ * whether it holds 1,000 or 2,000 documents, so a round is one epoch.
  */
 final class CorpusPrep(spark: SparkSession, seed: Long, dir: String, threads: Int,
-                       progress: ProgressLog, warmDocs: Int = 500, docsPerRound: Int = 2000)
+                       progress: ProgressLog)
     extends Workload(spark, seed, dir, threads) {
   import Workload._
   override val items = "documents"
-  override val roundSeconds = 10.0
 
+  private val WarmDocs = 500
+  private val RoundDocs = 2000
+  private val RoundSeconds = 10.0
   /** `prepPipelineTo`'s default false-positive rate, which the checks assume. */
   private val Fpp = 1e-3
 
@@ -45,7 +48,7 @@ final class CorpusPrep(spark: SparkSession, seed: Long, dir: String, threads: In
 
   private def source(feed: String): DataFrame = {
     val cs = spark.readStream.format("graft.sources.v2.CdcTailProvider")
-      .option("feed", feed).option("maxIdsPerTrigger", docsPerRound.toString)
+      .option("feed", feed).option("maxIdsPerTrigger", RoundDocs.toString)
       .option("partitions", threads.toString).load()
     Pipeline(TableFilters.whitelist(Seq(s"${OrdersGen.Schema}.${CorpusGen.Table}")),
       Stages.normalizeKind)(cs)
@@ -61,7 +64,7 @@ final class CorpusPrep(spark: SparkSession, seed: Long, dir: String, threads: In
     ds.foreach(d => feed.append(tailChange(gen.change(d))))
   }
 
-  /** Drain everything offered so far through the one query. */
+  /** Drain everything offered so far through one AvailableNow query. */
   private def drain(): StreamingQuery =
     StreamOps.prepPipelineTo(source(feedName), block, s"$base/out", s"$base/state",
       s"$base/ckpt", "doc_id", "text", fpp = Fpp)
@@ -73,8 +76,8 @@ final class CorpusPrep(spark: SparkSession, seed: Long, dir: String, threads: In
       feedName = "docs"
       base = s"$dir/corpus"
       TailFeed.register(feedName, feed)
+      offer(WarmDocs)
     }
-    offer(warmDocs)
     val (_, warmS) = Clock.secondsOf(drain().awaitTermination())
     epochs += 1
     (inputS, warmS)
@@ -82,30 +85,29 @@ final class CorpusPrep(spark: SparkSession, seed: Long, dir: String, threads: In
 
   override def timed(seconds: Double, listener: Option[LayerListener]): Timed = {
     val snap = listener.map(l => (l, l.snapshot))
-    val fresh = mutable.ArrayBuffer.empty[(Double, Long)]
+    val latency = mutable.ArrayBuffer.empty[(Double, Long)]
     val backlogs = mutable.ArrayBuffer.empty[Double]
     val all = mutable.ArrayBuffer.empty[org.apache.spark.sql.streaming.StreamingQueryProgress]
     var drainS = 0.0
     var failedBatches = 0
-    val n = rounds(seconds)
+    val n = rounds(seconds, RoundSeconds)
     (1 to n).foreach { _ =>
-      offer(docsPerRound)
-      val start = System.currentTimeMillis()
+      offer(RoundDocs)
       val (q, s) = Clock.secondsOf { val q = drain(); q.awaitTermination(); q }
       drainS += s
       val ps = awaitProgress(q.runId, offered.size)
       epochs += ps.size
       all ++= ps
       ps.foreach { p =>
-        fresh += ((Progress.commitMillis(p) - start).toDouble -> p.numInputRows)
+        latency += (Progress.dur(p, "triggerExecution") -> p.numInputRows)
         backlogs += (Progress.latestId(p) - Progress.idRange(p)._2).toDouble
       }
       if (q.exception.isDefined) failedBatches += 1
     }
-    val attempted = n.toLong * docsPerRound
+    val attempted = n.toLong * RoundDocs
     val processed = all.map(_.numInputRows).sum
     Timed(attempted, attempted - processed, all.size, failedBatches,
-      Stats.weightedMedian(fresh.toSeq), attempted / drainS, drainS / attempted,
+      Stats.weightedMedian(latency.toSeq), attempted / drainS, drainS / attempted,
       progressLayers(all.toSeq, snap, attempted, backlogs.toSeq) +
         ("gen.late_ms_max" -> 0.0))
   }
@@ -119,8 +121,10 @@ final class CorpusPrep(spark: SparkSession, seed: Long, dir: String, threads: In
     got
   }
 
+  private def docsOut = spark.read.parquet(s"$base/out/docs")
+
   private lazy val admitted: Seq[Admitted] =
-    spark.read.parquet(s"$base/out/docs").select("doc_id", "text", "split").collect()
+    docsOut.select("doc_id", "text", "split").collect()
       .map(r => Admitted(r.getLong(0), r.getString(1), r.getString(2))).toSeq
 
   override def verify(): Verified = {
@@ -130,16 +134,18 @@ final class CorpusPrep(spark: SparkSession, seed: Long, dir: String, threads: In
     val bloom = new BloomModel(gen.blocklist, Fpp)
     val errs = CorpusChecks.check(offered.toSeq, gen.blocklist.toSet, bloom, admitted,
       accounting)
-    // Checksum: the admitted rows against the generator's own text for
-    // the same ids
-    val byId = offered.map(d => d.id -> d.text).toMap
-    def frame(rows: Seq[Row]) = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, threads), CorpusGen.rowSchema)
-    val source = frame(admitted.map(a => Row(a.id, byId.getOrElse(a.id, null))))
-    val target = spark.read.parquet(s"$base/out/docs").select("doc_id", "text")
+    // Checksum: the unique documents the model admits (every one that is
+    // no Bloom false positive) against the target's rows of unique documents
+    import spark.implicits._
+    val uniques = offered.filter(_.kind == Doc.Unique)
+    val want = uniques.filterNot(d => bloom.mightContain(d.text)).map(d => Row(d.id, d.text))
+    val source = spark.createDataFrame(spark.sparkContext.parallelize(want.toSeq, threads),
+      CorpusGen.rowSchema)
+    val target = docsOut.select("doc_id", "text")
+      .join(broadcast(uniques.map(_.id).toSeq.toDF("doc_id")), "doc_id")
     val (same, srcS, tgtS) = checksumCompare(source, target, CorpusGen.rowSchema, "doc_id")
-    Verified(errs ++ (if (same) Nil else Seq("Checksum reports admitted docs inconsistent")),
-      srcS + tgtS, srcS, tgtS)
+    Verified(errs ++ (if (same) Nil else Seq("Checksum reports the admitted unique " +
+      "documents and the model inconsistent")), srcS + tgtS, srcS, tgtS)
   }
 
   override def bytesPerRow: Double =
@@ -147,7 +153,7 @@ final class CorpusPrep(spark: SparkSession, seed: Long, dir: String, threads: In
 
   override def replays(): Map[String, Double] = {
     import spark.implicits._
-    val captured = offered.takeRight(docsPerRound).toSeq
+    val captured = offered.takeRight(RoundDocs).toSeq
     val docsDf = captured.map(d => (d.id, d.text)).toDF("id", "text")
     commonReplays(spark, captured.map(gen.change),
       graft.operators.Materializer.emptyVersionedState(spark, CorpusGen.rowSchema),

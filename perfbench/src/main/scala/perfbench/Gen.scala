@@ -56,78 +56,117 @@ object Words {
 }
 
 /**
- * Seeded generator of changes to an orders-shaped table plus a noise
- * table. Mix per change: 4% noise-table inserts (dropped by the ignore
- * filter); of the orders changes 50% UPDATE of a live key, 15% DELETE of
- * a live key, 30% INSERT of a new key, 5% INSERT of a live key (skipped
- * by the apply semantics). 3% of INSERT/UPDATE payloads carry status 'X'
- * (dropped by the value filter) and 10% of actions are not upper-case.
+ * Seeded changes to an orders-shaped table (the columns of the `orders`
+ * fixture, FIXTURES.md §2) plus a noise table.
+ *
+ * Each order goes through a TPC-H lifecycle: an INSERT; one UPDATE per
+ * lineitem as it ships, the status following TPC-H's rule for
+ * `o_orderstatus` ('O' while no lineitem has shipped, 'P' while some
+ * have, 'F' once all have); a DELETE once every lineitem has shipped,
+ * followed by the INSERT of a new order, so that the table keeps its
+ * size as under TPC-H's paired refresh functions (RF1 inserts as many
+ * orders as RF2 deletes). Every change picks a live order at random and
+ * takes its next lifecycle step. What comes from the fixture (sf0.001):
+ * lineitems per order (`LineitemsPerOrder`, mean 4.0, so UPDATE :
+ * INSERT : DELETE is about 4 : 1 : 1), the five priorities and their
+ * counts, ten orders per customer, and the ranges of `o_totalprice` and
+ * `o_orderdate`. The value filter drops the '4-NOT SPECIFIED' priority,
+ * 19.8% of orders in the fixture.
+ *
+ * Unmeasured assumptions, there to exercise the filters and the apply
+ * semantics: 4% of changes are inserts into the noise table (dropped by
+ * the ignore filter), 2% are redelivered INSERTs of a live order
+ * (skipped by the apply semantics), and 10% of actions are lower-case.
  */
 final class OrdersGen(seed: Long) {
   import OrdersGen._
   private val rnd = new java.util.SplittableRandom(seed)
-  private val vocab = Words.vocabulary(new java.util.SplittableRandom(seed ^ 0x5eedL), 400)
-  // live keys with O(1) random pick and removal (swap-remove)
-  private val live = mutable.ArrayBuffer.empty[Long]
-  private val pos = mutable.HashMap.empty[Long, Int]
+
+  private final class Order(val key: Long, val custkey: Long, val cents: Long,
+                            val day: Int, val priority: String, val lineitems: Int,
+                            var shipped: Int)
+
+  // live orders with O(1) random pick and removal (swap-remove)
+  private val live = mutable.ArrayBuffer.empty[Order]
+  private var customers = 1
   private var nextKey = 1L
   private var nextNoise = 1L
+  private var replaceDeleted = false
 
-  private def addLive(k: Long): Unit =
-    if (!pos.contains(k)) { pos(k) = live.length; live += k }
-  private def removeLive(k: Long): Unit = pos.remove(k).foreach { i =>
+  private def pickLive(): Int = rnd.nextInt(live.length)
+  private def removeLive(i: Int): Unit = {
     val last = live.remove(live.length - 1)
-    if (last != k) { live(i) = last; pos(last) = i }
-  }
-  private def pickLive(): Long = live(rnd.nextInt(live.length))
-
-  private def casing(action: String): String = rnd.nextInt(10) match {
-    case 0 => action.toLowerCase
-    case _ => action
+    if (i < live.length) live(i) = last
   }
 
-  private def row(key: Long): Seq[ColVal] = {
-    val cents = 100L + rnd.nextLong(50000000L)
-    val status =
-      if (rnd.nextInt(100) < 3) "X" else Statuses(rnd.nextInt(Statuses.length))
-    val comment = (0 until 3 + rnd.nextInt(6))
-      .map(_ => vocab(rnd.nextInt(vocab.length))).mkString(" ")
-    Seq(ColVal("o_orderkey", "bigint", key.toString),
-      ColVal("o_custkey", "bigint", (1 + rnd.nextInt(5000)).toString),
+  private def weighted(ws: Array[Int]): Int = {
+    var r = rnd.nextInt(ws.sum)
+    var i = 0
+    while (r >= ws(i)) { r -= ws(i); i += 1 }
+    i
+  }
+
+  private def casing(action: String): String =
+    if (rnd.nextInt(10) == 0) action.toLowerCase else action
+
+  /** A new order whose lineitem count is drawn with weights `ws`. */
+  private def order(ws: Array[Int]): Order = {
+    val k = nextKey; nextKey += 1
+    val o = new Order(k, rnd.nextInt(customers).toLong,
+      MinCents + rnd.nextLong(MaxCents - MinCents + 1), rnd.nextInt(Days),
+      Priorities(weighted(PriorityCounts)), weighted(ws), 0)
+    live += o
+    o
+  }
+
+  private def row(o: Order, shipped: Int): Seq[ColVal] = {
+    val status = if (shipped >= o.lineitems) "F" else if (shipped == 0) "O" else "P"
+    Seq(ColVal("o_orderkey", "bigint", o.key.toString),
+      ColVal("o_custkey", "bigint", o.custkey.toString),
       ColVal("o_orderstatus", "text", Json.str(status)),
-      ColVal("o_totalprice", "double precision",
-        f"${cents / 100}%d.${cents % 100}%02d"),
-      ColVal("o_comment", "text", Json.str(comment)))
+      ColVal("o_totalprice", "double precision", f"${o.cents / 100}%d.${o.cents % 100}%02d"),
+      ColVal("o_orderdate", "date", Json.str(FirstDay.plusDays(o.day.toLong).toString)),
+      ColVal("o_orderpriority", "text", Json.str(o.priority)))
   }
 
-  /** `n` INSERTs of fresh keys (the bootstrap state), ids from `firstId`. */
-  def initial(firstId: Long, n: Int): Seq[GenChange] =
+  /**
+   * `n` INSERTs of fresh orders (the bootstrap state), ids from
+   * `firstId`. Each starts at a random point of its lifecycle, with
+   * lineitem counts weighted by lifecycle length, as in the steady state.
+   */
+  def initial(firstId: Long, n: Int): Seq[GenChange] = {
+    customers = math.max(1, n / OrdersPerCustomer)
+    val steady = LineitemsPerOrder.zipWithIndex.map { case (c, li) => c * (li + 1) }
     (0 until n).map { i =>
-      val k = nextKey; nextKey += 1; addLive(k)
-      GenChange(firstId + i, "INSERT", Orders, row(k), None)
+      val o = order(steady)
+      o.shipped = rnd.nextInt(o.lineitems + 1)
+      GenChange(firstId + i, "INSERT", Orders, row(o, o.shipped), None)
     }
+  }
 
   def next(id: Long): GenChange = {
     val r = rnd.nextInt(100)
     if (r < 4) {
       val n = nextNoise; nextNoise += 1
       GenChange(id, casing("INSERT"), Noise,
-        Seq(ColVal("n_id", "bigint", n.toString),
-          ColVal("note", "text", Json.str(vocab(rnd.nextInt(vocab.length))))),
+        Seq(ColVal("n_id", "bigint", n.toString), ColVal("note", "text", Json.str(s"note $n"))),
         None)
+    } else if (live.isEmpty || replaceDeleted) {
+      replaceDeleted = false
+      GenChange(id, casing("INSERT"), Orders, row(order(LineitemsPerOrder), 0), None)
+    } else if (r < 6) {
+      GenChange(id, casing("INSERT"), Orders, row(live(pickLive()), 0), None)
     } else {
-      val o = rnd.nextInt(100)
-      if (live.isEmpty || o >= 65 && o < 95) {
-        val k = nextKey; nextKey += 1; addLive(k)
-        GenChange(id, casing("INSERT"), Orders, row(k), None)
-      } else if (o < 50) {
-        GenChange(id, casing("UPDATE"), Orders, row(pickLive()), None)
-      } else if (o < 65) {
-        val k = pickLive(); removeLive(k)
-        GenChange(id, casing("DELETE"), Orders, Nil,
-          Some(ColVal("o_orderkey", "bigint", k.toString)))
+      val i = pickLive()
+      val o = live(i)
+      if (o.shipped < o.lineitems) {
+        o.shipped += 1
+        GenChange(id, casing("UPDATE"), Orders, row(o, o.shipped), None)
       } else {
-        GenChange(id, casing("INSERT"), Orders, row(pickLive()), None)
+        removeLive(i)
+        replaceDeleted = true
+        GenChange(id, casing("DELETE"), Orders, Nil,
+          Some(ColVal("o_orderkey", "bigint", o.key.toString)))
       }
     }
   }
@@ -138,15 +177,32 @@ object OrdersGen {
   val Orders = "orders"
   val Noise = "audit_noise"
   val Pk = "o_orderkey"
-  val DropStatus = "X"
-  private val Statuses = Array("O", "F", "P")
+  val DropPriority = "4-NOT SPECIFIED"
+
+  /** Orders of the sf0.001 fixture by lineitem count 0 to 12 (1,500
+    * orders, 6,000 lineitems). */
+  val LineitemsPerOrder: Array[Int] =
+    Array(27, 108, 225, 294, 299, 224, 139, 107, 46, 21, 7, 2, 1)
+  /** The fixture's priorities and their order counts. */
+  val Priorities: Array[String] =
+    Array("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW")
+  val PriorityCounts: Array[Int] = Array(273, 316, 320, 297, 294)
+  /** The fixture has 150 customers for 1,500 orders. */
+  val OrdersPerCustomer = 10
+  /** The fixture's `o_totalprice` range, in cents. */
+  val MinCents = 132051L
+  val MaxCents = 49970505L
+  /** The fixture's `o_orderdate` range: 1995-01-01 to 2001-08-01. */
+  val FirstDay: java.time.LocalDate = java.time.LocalDate.of(1995, 1, 1)
+  val Days: Int = (java.time.LocalDate.of(2001, 8, 1).toEpochDay - FirstDay.toEpochDay + 1).toInt
 
   import org.apache.spark.sql.types._
   val rowSchema: StructType = StructType(Seq(
     StructField("o_orderkey", LongType), StructField("o_custkey", LongType),
     StructField("o_orderstatus", StringType),
     StructField("o_totalprice", DoubleType),
-    StructField("o_comment", StringType)))
+    StructField("o_orderdate", StringType),
+    StructField("o_orderpriority", StringType)))
 }
 
 /** Encode generated changes as wal2json messages: consecutive changes

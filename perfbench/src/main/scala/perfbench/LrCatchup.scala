@@ -10,24 +10,27 @@ import graft.sources.Wal2Json
 import graft.streaming.JdbcApplySink
 
 /**
- * lr_catchup — LR-mode catch-up of a backlog. Set-up writes `changes`
- * orders changes as wal2json frames into `segments` parquet files, each
+ * lr_catchup — LR-mode catch-up of a backlog. Set-up writes `Changes`
+ * orders changes as wal2json frames into `Segments` parquet files, each
  * given its own modification time so the file source drains them in
  * order; the warm-up batch is one batch-sized backlog of another seed.
  * A round drains the whole backlog with `Trigger.AvailableNow`
- * and `maxFilesPerTrigger = filesPerTrigger` through `Wal2Json.decode`,
+ * and `maxFilesPerTrigger = FilesPerTrigger` through `Wal2Json.decode`,
  * the stage chain and `JdbcApplySink.writer`, whose executor records
  * the statements. The timed phase runs whole rounds, one per
- * `roundSeconds` of its time.
+ * `RoundSeconds` of its time.
  */
 final class LrCatchup(spark: SparkSession, seed: Long, dir: String, threads: Int,
-                      progress: ProgressLog, changes: Int = 30000, segments: Int = 6,
-                      filesPerTrigger: Int = 2)
+                      progress: ProgressLog)
     extends Workload(spark, seed, dir, threads) {
   import Workload._
   override val items = "changes"
-  override val roundSeconds = 5.0
   override val scanRdd = "FileScanRDD"
+
+  private val Changes = 30000
+  private val Segments = 6
+  private val FilesPerTrigger = 2
+  private val RoundSeconds = 5.0
 
   private var backlog: Seq[GenChange] = Nil
   private var backlogDir: String = _
@@ -72,7 +75,7 @@ final class LrCatchup(spark: SparkSession, seed: Long, dir: String, threads: Int
                     exec: Seq[JdbcApplySink.Statement] => Unit) = {
     val raw = spark.readStream
       .schema("msg_id long, msg string")
-      .option("maxFilesPerTrigger", filesPerTrigger.toLong)
+      .option("maxFilesPerTrigger", FilesPerTrigger.toLong)
       .parquet(in)
     val write = JdbcApplySink.writer(pks, Map.empty, exec)
     stages(Filters)(Wal2Json.decode(raw, "msg_id", "msg"))
@@ -84,11 +87,11 @@ final class LrCatchup(spark: SparkSession, seed: Long, dir: String, threads: Int
   override def setup(): (Double, Double) = {
     val base = s"$dir/lr"
     val (_, inputS) = Clock.secondsOf {
-      backlog = generate(seed, changes)
+      backlog = generate(seed, Changes)
       backlogDir = s"$base/backlog"
-      frames = writeBacklog(backlog, seed, segments, backlogDir)
-      writeBacklog(generate(seed + 1, changes * filesPerTrigger / segments), seed + 1,
-        filesPerTrigger, s"$base/warm")
+      frames = writeBacklog(backlog, seed, Segments, backlogDir)
+      writeBacklog(generate(seed + 1, Changes * FilesPerTrigger / Segments), seed + 1,
+        FilesPerTrigger, s"$base/warm")
     }
     val (_, warmS) = Clock.secondsOf {
       val q = drain(s"$base/warm", s"$base/warm-ckpt", _ => ())
@@ -99,17 +102,16 @@ final class LrCatchup(spark: SparkSession, seed: Long, dir: String, threads: Int
 
   override def timed(seconds: Double, listener: Option[LayerListener]): Timed = {
     val snap = listener.map(l => (l, l.snapshot))
-    val fresh = mutable.ArrayBuffer.empty[(Double, Long)]
+    val latency = mutable.ArrayBuffer.empty[(Double, Long)]
     val backlogs = mutable.ArrayBuffer.empty[Double]
     val all = mutable.ArrayBuffer.empty[org.apache.spark.sql.streaming.StreamingQueryProgress]
     var drainS = 0.0
     var failedBatches = 0
-    val n = rounds(seconds)
+    val n = rounds(seconds, RoundSeconds)
     (1 to n).foreach { _ =>
       round += 1
       val rec = mutable.ArrayBuffer.empty[JdbcApplySink.Statement]
       var calls = 0L
-      val start = System.currentTimeMillis()
       val (q, s) = Clock.secondsOf {
         val q = drain(backlogDir, s"$dir/lr-round-$round/ckpt", st => { calls += 1; rec ++= st })
         q.awaitTermination()
@@ -123,7 +125,7 @@ final class LrCatchup(spark: SparkSession, seed: Long, dir: String, threads: Int
       all ++= ps
       var left = frames
       ps.foreach { p =>
-        fresh += ((Progress.commitMillis(p) - start).toDouble -> p.numInputRows)
+        latency += (Progress.dur(p, "triggerExecution") -> p.numInputRows)
         left -= p.numInputRows
         backlogs += left.toDouble
       }
@@ -132,7 +134,7 @@ final class LrCatchup(spark: SparkSession, seed: Long, dir: String, threads: Int
     val attempted = n.toLong * backlog.size
     val applied = all.map(_.numInputRows).sum == n * frames
     Timed(attempted, if (applied) 0L else attempted, all.size, failedBatches,
-      Stats.weightedMedian(fresh.toSeq), attempted / drainS, drainS / attempted,
+      Stats.weightedMedian(latency.toSeq), attempted / drainS, drainS / attempted,
       progressLayers(all.toSeq, snap, attempted, backlogs.toSeq) +
         ("gen.late_ms_max" -> 0.0))
   }
@@ -177,13 +179,11 @@ final class LrCatchup(spark: SparkSession, seed: Long, dir: String, threads: Int
       .sum.toDouble / math.max(1, statements.size)
 
   override def replays(): Map[String, Double] = {
-    import spark.implicits._
     val captured = backlog.slice(backlog.size / 2, backlog.size / 2 + 5000)
-    val docs = captured.flatMap(c => c.cols.find(_.name == "o_comment")
-      .map(v => (c.id, v.json.stripPrefix("\"").stripSuffix("\"")))).toDF("id", "text")
+    val (docs, block) = corpusFrames(spark, seed)
     commonReplays(spark, captured,
       graft.operators.Materializer.emptyVersionedState(spark, OrdersGen.rowSchema),
-      OrdersGen.Pk, OrdersGen.rowSchema, docs, docs.select(col("text")).limit(100), seed) ++
+      OrdersGen.Pk, OrdersGen.rowSchema, docs, block, seed) ++
       Map(
         "state.files_per_batch" -> 0.0,
         "apply.exec_calls_per_batch" -> execCalls.toDouble / math.max(1L, batches),

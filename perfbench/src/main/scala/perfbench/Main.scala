@@ -13,7 +13,8 @@ import org.apache.spark.sql.SparkSession
  * Prints one summary line of operations attempted and failed, then, as
  * the last line, one JSON object: `correct`, `attempted`, `failed` and
  * `metrics` (the end-to-end metrics untraced, the per-layer metrics
- * traced). Exits 1 when a check fails, 2 on bad arguments.
+ * traced). Exits 1 when a check fails or an operation failed, 2 on bad
+ * arguments.
  */
 object Main {
   val EndToEnd: Seq[(String, String)] = Seq(
@@ -118,11 +119,15 @@ object Main {
     val phases = Seq(plain) ++ traced.toSeq.flatMap(t => Seq(t._1, t._3))
     val attempted = phases.map(_.attempted).sum
     val failed = phases.map(_.failed).sum
+    val failedBatches = phases.map(_.failedBatches).sum
     val late = phases.map(_.layers.getOrElse("gen.late_ms_max", 0.0)).max
     println(f"perfbench ${a.workload}: ${w.items} offered=$attempted applied=${attempted - failed} " +
-      f"batches started=${phases.map(_.batches).sum} failed=${phases.map(_.failedBatches).sum} " +
+      f"batches started=${phases.map(_.batches).sum} failed=$failedBatches " +
       f"gen.late_ms_max=$late%.3f")
-    v.errors.foreach(e => System.err.println(s"perfbench check failed: $e"))
+    val errors = v.errors ++
+      (if (failed > 0) Seq(s"$failed ${w.items} offered were not applied") else Nil) ++
+      (if (failedBatches > 0) Seq(s"$failedBatches queries failed") else Nil)
+    errors.foreach(e => System.err.println(s"perfbench check failed: $e"))
 
     val metrics: Seq[(String, String, Double)] = traced match {
       case None =>
@@ -140,7 +145,7 @@ object Main {
     }
     spans.write(java.nio.file.Paths.get(s"${a.dir}/spans.jsonl"))
     spark.stop()
-    val correct = v.errors.isEmpty
+    val correct = errors.isEmpty
     val body = metrics.map { case (k, u, x) =>
       s"${Json.str(k)}: {${Json.str("value")}: ${num(x)}, ${Json.str("unit")}: ${Json.str(u)}}"
     }.mkString(", ")

@@ -205,8 +205,4 @@ object CorpusChecks {
     if (want != got) errs += s"split accounting $got differs from admitted docs $want"
     errs.result()
   }
-
-  /** Unique documents the Bloom model predicts as dropped. */
-  def bloomFalsePositives(offered: Seq[Doc], bloom: BloomModel): Int =
-    offered.count(d => d.kind == Doc.Unique && bloom.mightContain(d.text))
 }

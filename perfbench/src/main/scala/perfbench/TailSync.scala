@@ -11,17 +11,20 @@ import graft.streaming.ChangesetStream
 
 /**
  * tail_sync — the audit-mode steady tail. A single-thread open-loop
- * generator appends changes at `rate` per second to a `MemoryTailFeed`;
+ * generator appends changes at `Rate` per second to a `MemoryTailFeed`;
  * the query reads them through `CdcTailProvider`, runs the stage chain
  * and materializes into a versioned state table bootstrapped with
- * `initialKeys` orders. The warm-up batch is one second of traffic
+ * `InitialKeys` orders. The warm-up batch is one second of traffic
  * applied to the bootstrapped state before timing starts.
  */
 final class TailSync(spark: SparkSession, seed: Long, dir: String, threads: Int,
-                     progress: ProgressLog, initialKeys: Int = 20000, rate: Int = 2000)
+                     progress: ProgressLog)
     extends Workload(spark, seed, dir, threads) {
   override val items = "changes"
   import Workload._
+
+  private val InitialKeys = 20000
+  private val Rate = 2000
 
   private var gen: OrdersGen = _
   private var feed: MemoryTailFeed = _
@@ -36,21 +39,21 @@ final class TailSync(spark: SparkSession, seed: Long, dir: String, threads: Int,
     val (_, inputS) = Clock.secondsOf {
       gen = new OrdersGen(seed)
       feed = new MemoryTailFeed
-      changes ++= gen.initial(1L, initialKeys)
+      changes ++= gen.initial(1L, InitialKeys)
       changes.foreach(c => feed.append(tailChange(c)))
       TailFeed.register(name, feed)
     }
     statePath = s"$dir/$name/state"
     val (_, warmS) = Clock.secondsOf {
       val cs = spark.readStream.format("graft.sources.v2.CdcTailProvider")
-        .option("feed", name).option("maxIdsPerTrigger", initialKeys.toString)
+        .option("feed", name).option("maxIdsPerTrigger", InitialKeys.toString)
         .option("partitions", threads.toString).load()
       query = ChangesetStream.materializeTo(stages(Filters)(cs), statePath,
         s"$dir/$name/ckpt", OrdersGen.Pk, OrdersGen.rowSchema, availableNow = false)
       query.processAllAvailable()
       // the warm-up batch: one second of traffic against the bootstrapped
       // state, so the timed batches run the steady-state plan warm
-      val warm = (1 to rate).map(j => gen.next(initialKeys + j))
+      val warm = (1 to Rate).map(j => gen.next(InitialKeys + j))
       changes ++= warm
       warm.foreach(c => feed.append(tailChange(c)))
       query.processAllAvailable()
@@ -59,14 +62,15 @@ final class TailSync(spark: SparkSession, seed: Long, dir: String, threads: Int,
   }
 
   override def timed(seconds: Double, listener: Option[LayerListener]): Timed = {
-    val n = math.max(1, (rate * seconds).toInt)
+    val n = math.max(1, (Rate * seconds).toInt)
     val base = changes.last.id
     val batch = (1 to n).map(j => gen.next(base + j))
     val rows = batch.map(tailChange)
     changes ++= batch
-    if (captured.isEmpty) captured = batch.take(rate)
+    if (captured.isEmpty) captured = batch.take(Rate)
     val snap = listener.map(l => (l, l.snapshot))
-    val periodNs = 1e9 / rate
+    val failed0 = progress.failedQueries
+    val periodNs = 1e9 / Rate
     val t0w = System.currentTimeMillis()
     val t0n = System.nanoTime()
     val gen0 = new Thread(() => {
@@ -88,21 +92,22 @@ final class TailSync(spark: SparkSession, seed: Long, dir: String, threads: Int,
     val lastId = base + n
     query.processAllAvailable()
     val ps = awaitProgress(lastId).filter(p => Progress.idRange(p)._2 > base)
-    val fresh = new Array[Double](n)
+    // freshness of the changes a committed batch covered; any other
+    // timed change counts as failed
+    val fresh = mutable.ArrayBuffer.empty[Double]
     ps.foreach { p =>
       val (s, e) = Progress.idRange(p)
       val commit = Progress.commitMillis(p)
-      (math.max(s, base) + 1 to e).foreach { id =>
-        fresh((id - base - 1).toInt) = commit - (t0w + (id - base - 1) * 1000.0 / rate)
+      (math.max(s, base) + 1 to math.min(e, lastId)).foreach { id =>
+        fresh += commit - (t0w + (id - base - 1) * 1000.0 / Rate)
       }
     }
-    val applied = ps.map(p => Progress.idRange(p)._2).maxOption.getOrElse(base) - base
     val lastCommit = ps.map(Progress.commitMillis).maxOption.getOrElse(t0w)
-    val freshness = Stats.median(fresh.toSeq)
+    val freshness = Stats.median(fresh)
     val backlog = ps.map(p => (Progress.latestId(p) - Progress.idRange(p)._2).toDouble)
     Timed(
-      attempted = n, failed = n - applied, batches = ps.size,
-      failedBatches = progress.failedQueries,
+      attempted = n, failed = n - fresh.size, batches = ps.size,
+      failedBatches = progress.failedQueries - failed0,
       freshnessMs = freshness,
       perSecond = n / math.max(1e-3, (lastCommit - t0w) / 1e3),
       cost = freshness / 1e3,
@@ -144,10 +149,7 @@ final class TailSync(spark: SparkSession, seed: Long, dir: String, threads: Int,
     Disk.bytes(statePath).toDouble / math.max(1, model.rows.size)
 
   override def replays(): Map[String, Double] = {
-    import spark.implicits._
-    val docs = captured.flatMap(c => c.cols.find(_.name == "o_comment")
-      .map(v => (c.id, v.json.stripPrefix("\"").stripSuffix("\"")))).toDF("id", "text")
-    val block = docs.select(col("text")).limit(100)
+    val (docs, block) = corpusFrames(spark, seed)
     commonReplays(spark, captured, spark.read.parquet(statePath), OrdersGen.Pk,
       OrdersGen.rowSchema, docs, block, seed) ++ Map(
       "state.files_per_batch" -> Disk.files(statePath).size.toDouble,

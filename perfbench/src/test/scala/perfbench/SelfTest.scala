@@ -60,6 +60,28 @@ object SelfTest {
     }
   }
 
+  def ordersGenTests(): Unit = {
+    test("orders generator: TPC-H lifecycle keeps the table size, about 4 UPDATEs per order") {
+      val g = new OrdersGen(3)
+      val cs = g.initial(1, 2000) ++ (1 to 30000).map(j => g.next(2000L + j))
+      val orders = new SerialModel("public", "o_orderkey",
+        FilterSpec(Seq("public.orders"), Nil, "none", "none")).applyAll(cs)
+      expect(math.abs(orders.rows.size - 2000) <= 1, s"${orders.rows.size} live orders")
+      val timed = cs.drop(2000).filter(_.table == OrdersGen.Orders)
+      def count(kind: String) = timed.count(_.action.equalsIgnoreCase(kind))
+      val (ins, upd, del) = (count("INSERT"), count("UPDATE"), count("DELETE"))
+      val perOrder = upd.toDouble / del
+      expect(perOrder > 3.5 && perOrder < 4.5, s"$perOrder UPDATEs per DELETE")
+      // fresh INSERTs replace DELETEs one for one; the rest are redeliveries
+      val redelivered = ins - del
+      expect(redelivered > 0.01 * cs.size && redelivered < 0.03 * cs.size,
+        s"$redelivered redelivered INSERTs")
+      val statuses = timed.filter(_.action.equalsIgnoreCase("UPDATE"))
+        .flatMap(_.cols.find(_.name == "o_orderstatus")).map(_.json).toSet
+      expect(statuses == Set("\"P\"", "\"F\""), s"UPDATE statuses $statuses")
+    }
+  }
+
   def replayerTests(): Unit = {
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(StructField("id", LongType), StructField("name", StringType)))
@@ -132,6 +154,7 @@ object SelfTest {
 
   def main(args: Array[String]): Unit = {
     serialModelTests()
+    ordersGenTests()
     replayerTests()
     corpusTests()
     val spark = SparkSession.builder().master("local[1]").appName("perfbench-selftest")
