@@ -111,12 +111,8 @@ object ProbeStateVerify {
         c
       }
       // stage 4: the candidate buckets' SETS read alone
-      val layout = spark.read.parquet(setsPath).schema.fieldNames
-      val banded = layout.contains("ib")
-      val setsSchema0 = repSets.schema
-      val setsSchema = (if (banded)
-        setsSchema0.add("ib", org.apache.spark.sql.types.IntegerType)
-      else setsSchema0)
+      val setsSchema = repSets.schema
+        .add("ib", org.apache.spark.sql.types.IntegerType)
         .add("batch", org.apache.spark.sql.types.LongType)
       val stateSets0 = spark.read.option("basePath", setsPath)
         .schema(setsSchema)
@@ -127,16 +123,15 @@ object ProbeStateVerify {
         // candidate-id range filter (superset — pushed to parquet);
         // bucket rule + count come from the ONE shared definition so
         // this mirror cannot drift from the real read
-        val ss = if (banded) {
-          val a = cand.agg(
-            collect_set(Dedup.idBucket(col("__sid"),
-              StreamOps.StateSetBuckets)).as("ibs"),
-            min(col("__sid")), max(col("__sid"))).head()
-          val ibs = a.getSeq[Int](0)
+        val a = cand.agg(
+          collect_set(Dedup.idBucket(col("__sid"),
+            StreamOps.StateSetBuckets)).as("ibs"),
+          min(col("__sid")), max(col("__sid"))).head()
+        val ibs = a.getSeq[Int](0)
+        val ss =
           if (ibs.isEmpty) stateSets0.filter(lit(false))
           else stateSets0.filter(col("ib").isin(ibs.toIndexedSeq: _*) &&
             col("doc_id") >= lit(a.get(1)) && col("doc_id") <= lit(a.get(2)))
-        } else stateSets0
         val kept = ss.join(cand.select(col("__sid")).distinct(),
           ss("doc_id") === col("__sid"), "left_semi")
           .localCheckpoint(false)

@@ -234,9 +234,11 @@ object SparkEntry {
         .select(
           col("id"), col("table_name"),
           element_at(col(Stages.PayloadCol), "user_id").cast("bigint").as("payload_user_id"),
-          element_at(col(Stages.PayloadCol), "event_type").as("payload_event_type"),
+          element_at(col(Stages.PayloadCol), "event_type").cast("string")
+            .as("payload_event_type"),
           element_at(col(Stages.PayloadCol), "k").cast("int").as("k"),
-          element_at(col(Stages.PayloadCol), "value").as("removed_value"))
+          element_at(col(Stages.PayloadCol), "value").cast("string")
+            .as("removed_value"))
         ),
 
     // T10 — kind normalization (changeset.go:21-33)

@@ -166,17 +166,27 @@ case class CdcRangePartition(feedName: String, lo: Long, hi: Long)
     extends InputPartition
 
 object CdcRangePartition {
-  /** Tile (lo, hi] into ≤`partitions` disjoint ranges (empty when hi≤lo). */
+  /** Tile (lo, hi] into ≤`partitions` contiguous disjoint ranges of a
+    * ceiling step (empty when hi≤lo). `hi - lo` and the step are taken as
+    * UNSIGNED longs: exact for every lo < hi, so no span overflows. */
   def tile(feedName: String, lo: Long, hi: Long,
-           partitions: Int): Array[InputPartition] =
-    if (hi <= lo) Array.empty
-    else {
+           partitions: Int): Array[InputPartition] = {
+    require(partitions > 0, s"partitions must be positive: $partitions")
+    import java.lang.Long.{compareUnsigned, divideUnsigned, remainderUnsigned}
+    val out = Array.newBuilder[InputPartition]
+    if (hi > lo) {
       val span = hi - lo
-      val step = math.max(1L, span / partitions)
-      (lo until hi by step).map { s =>
-        CdcRangePartition(feedName, s, math.min(s + step, hi)): InputPartition
-      }.toArray
+      val step = divideUnsigned(span, partitions.toLong) +
+        (if (remainderUnsigned(span, partitions.toLong) == 0L) 0L else 1L)
+      var s = lo
+      while (s != hi) {
+        val e = if (compareUnsigned(hi - s, step) <= 0) hi else s + step
+        out += CdcRangePartition(feedName, s, e)
+        s = e
+      }
     }
+    out.result()
+  }
 }
 
 final class CdcRangeReader(p: CdcRangePartition)

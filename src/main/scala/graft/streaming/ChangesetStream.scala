@@ -61,10 +61,13 @@ object ChangesetStream {
   def consoleSink(cs: DataFrame): DataStreamWriter[org.apache.spark.sql.Row] =
     cs.writeStream.format("console").outputMode("append")
 
-  /** K1 — JSON file sink. */
+  /** K1 — JSON file sink. Timestamps are written to the microsecond
+   *  (Spark's JSON default keeps milliseconds, which would cut every
+   *  delivered `ts`). */
   def jsonSink(cs: DataFrame, outDir: String, checkpoint: String): DataStreamWriter[org.apache.spark.sql.Row] =
     cs.writeStream.format("json")
       .option("path", outDir).option("checkpointLocation", checkpoint)
+      .option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")
       .outputMode("append")
 
   /**

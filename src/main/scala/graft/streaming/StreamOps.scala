@@ -171,19 +171,16 @@ object StreamOps {
    *
    * Scale shape: state is two append-only parquet tables (keys: 4 rows ×
    * ~40 B per admitted doc; sets: the shingle arrays — the bulk). The
-   * candidate join is (band, bkey)-bucketed, and on a NEW state the sets
-   * table is id-bucket partitioned (`ib=` dirs inside each epoch,
-   * recorded in a layout marker), so each epoch's verify reads only the
-   * CANDIDATE ids' buckets — the sets scan stops growing with the
-   * corpus. The banded layout trades a constant per-epoch cost (≤64
-   * bucket dirs written and listed per epoch — measured ~1.3 s/epoch
-   * over flat at a 5k-doc state, where pruning saves little) for the
-   * corpus-proportional scan; a long-lived ingest state grows without
-   * bound and cannot switch layouts mid-life, so banded is the default
-   * — pass `bandedState = false` for a deliberately small corpus. A
-   * marker-less pre-existing state keeps the legacy flat layout (mixed
-   * layouts under one partition root would break every read); rebuild
-   * the state to adopt the banded form. The keys table is NOT scanned
+   * candidate join is (band, bkey)-bucketed, and the sets table has ONE
+   * layout: id-bucket partitioned (`ib=` dirs inside each epoch,
+   * [[StateSetBuckets]] of them, recorded in a layout marker), so each
+   * epoch's verify reads only the CANDIDATE ids' buckets — the sets scan
+   * stops growing with the corpus, for a constant per-epoch cost (≤64
+   * bucket dirs written and listed per epoch). A state that holds keys
+   * or sets tables but no marker (a flat state from an older build, or a
+   * [[nearDupStateBootstrap]] that crashed before its marker write)
+   * fails the epoch loudly before anything is written: rebuild it with
+   * [[nearDupStateBootstrap]] over the admitted docs. The keys table is NOT scanned
    * whole per epoch: band-prefix partitioning was measured not to pay
    * there (a batch's keys span all 256 hash prefixes), so the scan is
    * bounded at the EPOCH level instead — each epoch writes a Bloom
@@ -194,8 +191,7 @@ object StreamOps {
   def nearDupDedupTo(docs: DataFrame, outPath: String, statePath: String,
                      checkpoint: String, idCol: String, textCol: String,
                      minJaccard: Double = 0.8,
-                     availableNow: Boolean = true,
-                     bandedState: Boolean = true): StreamingQuery = {
+                     availableNow: Boolean = true): StreamingQuery = {
     val writer = docs.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch0: DataFrame, batchId: Long) =>
@@ -203,8 +199,7 @@ object StreamOps {
         // writes — cache it for the duration of the epoch
         val batch = batch0.cache()
         try {
-          dedupEpoch(batch, batchId, statePath, idCol, textCol, minJaccard,
-            bandedState)
+          dedupEpoch(batch, batchId, statePath, idCol, textCol, minJaccard)
             .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
         } finally { batch.unpersist(false); () }
       }
@@ -212,95 +207,48 @@ object StreamOps {
       .start()
   }
 
-  /**
-   * One epoch of the online near-dup dedup — the foreachBatch core of
-   * [[nearDupDedupTo]], factored out so [[prepPipelineTo]] can compose it
-   * with other stages. Runs the batch-internal cascade, verifies the
-   * survivors against the admitted-corpus state (excluding THIS epoch's
-   * rows, for crash-replay safety), writes the epoch's state partitions
-   * (keys/sets, overwrite-idempotent), and returns the admitted docs
-   * frame (backed by checkpointed inputs — safe to consume after the
-   * state writes). `batch` must be cached/materialized by the caller.
-   */
-  /** id-bucket count of a NEW streaming dedup state's sets table: each
+  /** id-bucket count of the streaming dedup state's sets table: each
     * epoch's admitted shingle sets land under `ib=<id mod this>` dirs
     * inside their `batch=` partition, so the verify step reads only the
     * CANDIDATE ids' buckets instead of the whole accumulated sets table
-    * — the sets are the state's bulk (full shingle arrays; keys are 4
-    * short rows/doc), and their per-batch full scan was the one
-    * corpus-growing term of the ingest path. Recorded in a marker at
-    * state creation so every later epoch (and [[compactState]]) agrees;
-    * a pre-existing marker-less state stays on the legacy flat layout
-    * forever (mixing layouts under one partition-discovery root would
-    * break every read). */
+    * (the state's bulk: full shingle arrays; keys are 4 short rows/doc). */
   private[graft] val StateSetBuckets = 64
 
   private def stateLayoutPath(statePath: String) =
     new org.apache.hadoop.fs.Path(s"$statePath/_graft_state_layout")
 
-  /** The layout is fixed at state creation, so resolve it ONCE per JVM
-    * per state path — a continuous-mode stream would otherwise pay
-    * marker round-trips (fs.exists + open) against HDFS/object-store on
-    * every trigger for a value that cannot change. */
-  private val stateLayoutCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Option[Int]]()
-
-  /** Some(buckets) → banded sets layout; None → legacy flat. Marker
-    * present wins ([[graft.functions.LayoutMarker]] — atomic write, loud
-    * failure on malformed content); absent + existing state tables =
-    * legacy; absent + fresh state = write the marker and go banded
-    * (crash between marker and first epoch write replays clean — marker
-    * present, tables read as empty). */
-  private def resolveStateLayout(fs: org.apache.hadoop.fs.FileSystem,
-                                 statePath: String, keysPath: String,
-                                 setsPath: String,
-                                 wantBanded: Boolean): Option[Int] = {
+  /** The layout check every state writer ([[dedupEpoch]], [[compactState]],
+    * [[compactStateGrouped]]) makes before it writes anything. A present
+    * marker must record [[StateSetBuckets]] (a malformed one fails in
+    * [[graft.functions.LayoutMarker]]); an absent one is written on a
+    * fresh path, and refused beside existing keys/sets tables — a flat
+    * state from an older build, or a [[nearDupStateBootstrap]] that
+    * crashed before its marker write — since banded writes into either
+    * would mix layouts under one partition root. */
+  private def requireBandedState(fs: org.apache.hadoop.fs.FileSystem,
+                                 statePath: String): Unit = {
     import graft.functions.LayoutMarker
     val p = stateLayoutPath(statePath)
-    def fromDisk(): Option[Int] =
-      LayoutMarker.read(fs, p, "ibsets|", "dedup-state").orElse {
-        if (fs.exists(new org.apache.hadoop.fs.Path(keysPath)) ||
-          fs.exists(new org.apache.hadoop.fs.Path(setsPath))) None // legacy
-        else if (!wantBanded) None // caller opted out for a small corpus
-        else {
-          LayoutMarker.write(fs, p, "ibsets|", StateSetBuckets)
-          Some(StateSetBuckets)
-        }
-      }
-    val resolved0 = stateLayoutCache.computeIfAbsent(statePath, _ => fromDisk())
-    // a cached None (legacy flat) must not outlive the tables it was
-    // resolved FROM: deleting a legacy state and recreating it at the
-    // same path in the same JVM would otherwise silently yield a new
-    // flat state even with wantBanded=true — the fresh-state "write
-    // marker and go banded" branch never re-fires. When the cached
-    // resolution is None and the state tables (and marker) have
-    // vanished, invalidate and re-resolve (cheap exists() checks, the
-    // same per-epoch re-anchor discipline as the Some case below).
-    // ... and a cached None must also yield to a marker that APPEARED
-    // since it was resolved: [[nearDupStateBootstrap]] or
-    // [[migrateStateToPartitioned]] run from ANOTHER JVM write the
-    // marker behind this cache's back, and honoring the stale None
-    // would write flat epochs into a banded tree.
-    val resolved = resolved0 match {
-      case None if fs.exists(p) ||
-        (!fs.exists(new org.apache.hadoop.fs.Path(keysPath)) &&
-          !fs.exists(new org.apache.hadoop.fs.Path(setsPath))) =>
-        stateLayoutCache.remove(statePath)
-        stateLayoutCache.computeIfAbsent(statePath, _ => fromDisk())
-      case r => r
+    val rebuild = "rebuild the state at a fresh path with " +
+      "StreamOps.nearDupStateBootstrap over the admitted docs"
+    LayoutMarker.read(fs, p, "ibsets|", "dedup-state") match {
+      case Some(b) =>
+        require(b == StateSetBuckets, s"dedup state at $statePath has " +
+          s"$b set buckets, not $StateSetBuckets: $rebuild")
+      case None =>
+        val tables = Seq("keys", "sets").filter(t =>
+          fs.exists(new org.apache.hadoop.fs.Path(s"$statePath/$t")))
+        require(tables.isEmpty, s"dedup state at $statePath holds " +
+          s"${tables.mkString(" and ")} but no layout marker (a legacy " +
+          s"flat state, or a bootstrap that crashed before its marker " +
+          s"write): $rebuild")
+        LayoutMarker.write(fs, p, "ibsets|", StateSetBuckets)
     }
-    // the cache must not outlive the marker: a state deleted and
-    // recreated at the SAME path in one JVM would otherwise get banded
-    // epochs with no on-disk marker — which a later JVM reads as legacy,
-    // silently mixing layouts. One exists() per epoch re-anchors the
-    // cached decision to disk (still no open/read round-trip).
-    resolved.foreach(b =>
-      if (!fs.exists(p)) LayoutMarker.write(fs, p, "ibsets|", b))
-    resolved
   }
 
-  private def idBucket(id: org.apache.spark.sql.Column, buckets: Int) =
-    graft.functions.Dedup.idBucket(id, buckets) // one bucket definition
+  /** A state sets row's `ib` bucket (the one shared bucket definition). */
+  private def stateBucket(id: org.apache.spark.sql.Column) =
+    Dedup.idBucket(id, StateSetBuckets)
 
   /** Epoch directory ids present under a state table root (`batch=N`
     * names) — a metadata-only FS listing. */
@@ -317,16 +265,26 @@ object StreamOps {
   private[graft] def keySummaryPath(statePath: String, epoch: Long) =
     new org.apache.hadoop.fs.Path(s"$statePath/keysum/batch=$epoch")
 
-  /** `summaryCap` overrides [[KeySummaries.MaxKeys]] ONLY in specs: a
-    * cap of 1 routes a small batch through the over-cap degrade (no
-    * pruning, full state scan, no summary written for the epoch), which
-    * would otherwise need a ~65k-doc batch to reach. Production callers
-    * take the default. */
+  /**
+   * One epoch of the online near-dup dedup — the foreachBatch core of
+   * [[nearDupDedupTo]], factored out so [[prepPipelineTo]] can compose it
+   * with other stages. Runs the batch-internal cascade, verifies the
+   * survivors against the admitted-corpus state (excluding THIS epoch's
+   * rows, for crash-replay safety), writes the epoch's state partitions
+   * (keys/sets, overwrite-idempotent), and returns the admitted docs
+   * frame (backed by checkpointed inputs — safe to consume after the
+   * state writes). `batch` must be cached/materialized by the caller.
+   *
+   * `summaryCap` overrides [[KeySummaries.MaxKeys]] ONLY in specs: a
+   * cap of 1 routes a small batch through the over-cap degrade (no
+   * pruning, full state scan, no summary written for the epoch), which
+   * would otherwise need a ~65k-doc batch to reach. Production callers
+   * take the default.
+   */
   private[graft] def dedupEpoch(batch: DataFrame, batchId: Long,
                                 statePath: String,
                                 idCol: String, textCol: String,
                                 minJaccard: Double,
-                                wantBanded: Boolean = true,
                                 summaryCap: Int = KeySummaries.MaxKeys)
       : DataFrame = {
     val spark = batch.sparkSession
@@ -340,8 +298,7 @@ object StreamOps {
     // null-cast them — make the contract explicit and fail at the door
     graft.functions.TopKAgg.requireIntegralId(batch, idCol,
       "streaming near-dup dedup")
-    val setBuckets = resolveStateLayout(fs, statePath, keysPath, setsPath,
-      wantBanded)
+    requireBandedState(fs, statePath)
     // 1. batch-internal cascade (exact + near) → representatives
     val reps = Dedup.nearDupClusters(batch, idCol, textCol, minJaccard)
       .filter(col(idCol) === col("cluster_id")).select(col(idCol))
@@ -381,8 +338,8 @@ object StreamOps {
     // epochs that might contain a match are read — from BOTH tables,
     // since a candidate id's sets rows live in the epoch that admitted
     // it. Bloom ⇒ no false negatives ⇒ admissions are bit-identical to
-    // the full scan; an epoch with no summary (legacy state, compacted
-    // batch=-1, over-cap batch) is always read, and a batch over the
+    // the full scan; an epoch with no summary (compacted batch=-1,
+    // over-cap batch) is always read, and a batch over the
     // collect cap degrades to the full scan — never to a missed
     // candidate.
     val batchKeys: Option[Array[String]] =
@@ -392,8 +349,8 @@ object StreamOps {
       KeySummaries.pruneEpochs(fs,
         listStateEpochs(fs, keysPath).filter(_ != batchId), ks,
         m => keySummaryPath(statePath, m)))
-    val setsSchema = setBuckets.fold(repSets.schema)(_ =>
-      repSets.schema.add("ib", org.apache.spark.sql.types.IntegerType))
+    val setsSchema =
+      repSets.schema.add("ib", org.apache.spark.sql.types.IntegerType)
     def readEpochs(root: String,
                    schema: org.apache.spark.sql.types.StructType,
                    eps: Seq[Long]) = {
@@ -414,38 +371,34 @@ object StreamOps {
           stateOrEmpty(setsPath, setsSchema)
             .filter(col("batch") =!= batchId))
     }
-    val cand0 = repKeys
+    // the candidates' id buckets (bounded ≤ StateSetBuckets, one
+    // driver-side collect) become a partition filter on the sets read —
+    // the verify touches only buckets that can hold a candidate, not the
+    // whole accumulated table. cand is checkpointed because it feeds the
+    // bucket collect AND the verify join.
+    val cand = repKeys
       .join(stateKeys.select(col(idCol).as("__sid"),
         col("band"), col("bkey")), Seq("band", "bkey"))
       .select(col(idCol), col("__sid")).distinct()
-    // banded layout: the candidates' id buckets (bounded ≤ setBuckets,
-    // one driver-side collect) become a partition filter on the sets
-    // read — the verify touches only buckets that can hold a candidate,
-    // not the whole accumulated table. cand is checkpointed because it
-    // feeds the bucket collect AND the verify join.
-    val (cand, stateSets) = setBuckets match {
-      case Some(b) =>
-        val c = cand0.localCheckpoint(false)
-        // ONE job for the candidate buckets AND the candidate-id range:
-        // the [lo, hi] filter is a SUPERSET of the candidate ids (the
-        // verify join still decides membership — admissions identical),
-        // but it pushes to parquet, and the state's sets files carry
-        // id-sorted row groups (bootstrap/compaction sort within
-        // partitions) so clustered candidates — the common shape: recent
-        // docs duplicate recent docs — skip most row groups instead of
-        // scanning every hit bucket whole. Uniform candidates degrade to
-        // exactly the old ib-pruned scan, never to a miss. No cast on
-        // the id column (min/max collected in its own type) or the
-        // pushdown would silently vanish.
-        val agg = c.agg(
-          collect_set(idBucket(col("__sid"), b)).as("ibs"),
-          min(col("__sid")), max(col("__sid"))).head()
-        val ibs = agg.getSeq[Int](0)
-        if (ibs.isEmpty) (c, stateSetsAll.filter(lit(false)))
-        else (c, stateSetsAll.filter(col("ib").isin(ibs: _*) &&
-          col(idCol) >= lit(agg.get(1)) && col(idCol) <= lit(agg.get(2))))
-      case None => (cand0, stateSetsAll)
-    }
+      .localCheckpoint(false)
+    // ONE job for the candidate buckets AND the candidate-id range: the
+    // [lo, hi] filter is a SUPERSET of the candidate ids (the verify join
+    // still decides membership — admissions identical), but it pushes to
+    // parquet, and the state's sets files carry id-sorted row groups
+    // (bootstrap/compaction sort within partitions) so clustered
+    // candidates — the common shape: recent docs duplicate recent docs —
+    // skip most row groups instead of scanning every hit bucket whole.
+    // Uniform candidates degrade to exactly the ib-pruned scan, never to
+    // a miss. No cast on the id column (min/max collected in its own
+    // type) or the pushdown would silently vanish.
+    val agg = cand.agg(
+      collect_set(stateBucket(col("__sid"))).as("ibs"),
+      min(col("__sid")), max(col("__sid"))).head()
+    val ibs = agg.getSeq[Int](0)
+    val stateSets =
+      if (ibs.isEmpty) stateSetsAll.filter(lit(false))
+      else stateSetsAll.filter(col("ib").isin(ibs: _*) &&
+        col(idCol) >= lit(agg.get(1)) && col(idCol) <= lit(agg.get(2)))
     val dupIds = cand
       .join(repSets, Seq(idCol))
       .join(stateSets.select(col(idCol).as("__sid"),
@@ -476,19 +429,14 @@ object StreamOps {
     // describes committed rows.
     batchKeys.foreach(ks => KeySummaries.write(fs,
       keySummaryPath(statePath, batchId), KeySummaries.build(ks)))
-    setBuckets match {
-      case Some(b) => // write in the banded layout the marker records:
-        // repartition BY the bucket column, capped at the bucket count
-        // (the default shuffle width would run ~3x empty tasks per
-        // epoch on this hot path), so each dir gets one file
-        anti(repSets).withColumn("ib", idBucket(col(idCol), b))
-          .repartition(Dedup.writeTasks(repSets, b), col("ib"))
-          .write.mode("overwrite").partitionBy("ib")
-          .parquet(s"$setsPath/batch=$batchId")
-      case None =>
-        anti(repSets).write.mode("overwrite")
-          .parquet(s"$setsPath/batch=$batchId")
-    }
+    // the banded layout the marker records: repartition BY the bucket
+    // column, capped at the bucket count (the default shuffle width
+    // would run ~3x empty tasks per epoch on this hot path), so each dir
+    // gets one file
+    anti(repSets).withColumn("ib", stateBucket(col(idCol)))
+      .repartition(Dedup.writeTasks(repSets, StateSetBuckets), col("ib"))
+      .write.mode("overwrite").partitionBy("ib")
+      .parquet(s"$setsPath/batch=$batchId")
     anti(repDocs)
   }
 
@@ -581,8 +529,7 @@ object StreamOps {
                      lineState: Option[String] = None,
                      lineMinDocs: Int = 2,
                      lineMinChars: Int = 10,
-                     availableNow: Boolean = true,
-                     bandedState: Boolean = true): StreamingQuery = {
+                     availableNow: Boolean = true): StreamingQuery = {
     import graft.functions.{Dedup, Sampling, TextFns}
     val n = math.max(1L, blockKeys.select(col(textCol)).count())
     val (m, k) = Bloom.sizeFor(n, fpp)
@@ -617,7 +564,7 @@ object StreamOps {
           .cache() // feeds the cascade + rep semi-join for the epoch
         try {
           val admitted = dedupEpoch(clean, batchId, statePath, idCol,
-            textCol, minJaccard, bandedState)
+            textCol, minJaccard)
           val semGated = embedIndex.fold(admitted)(ip =>
             embedGate(admitted, ip, idCol, vecCol, embedLabelCol,
               embedMinCos))
@@ -843,7 +790,7 @@ object StreamOps {
     val sets = Dedup.shingleSets(corpus, idCol, textCol)
       .localCheckpoint(false)
     sets.withColumn("batch", epochCol)
-      .withColumn("ib", idBucket(col(idCol), StateSetBuckets))
+      .withColumn("ib", stateBucket(col(idCol)))
       .repartition(epochs * StateSetBuckets, col("batch"), col("ib"))
       // id-sorted within each (batch, ib) file: the writer's required
       // ordering (the partition cols) is a satisfied prefix, so no
@@ -857,84 +804,18 @@ object StreamOps {
       .repartition(epochs, col("batch"))
       .write.mode("errorifexists").partitionBy("batch")
       .parquet(s"$statePath/keys")
-    // marker BEFORE the summaries (matches resolveStateLayout: tables
-    // present + marker present = banded); a crash mid-summaries leaves
-    // summary-less epochs = always-read, correct
+    // the marker LAST of the table writes: a crash before it leaves
+    // tables without a marker, which every state writer refuses
+    // (requireBandedState) instead of mixing layouts; BEFORE the
+    // summaries, since a crash mid-summaries leaves summary-less epochs
+    // = always-read, correct
     LayoutMarker.write(fs, stateLayoutPath(statePath), "ibsets|",
       StateSetBuckets)
-    // a stream that previously ran against this path in THIS JVM may
-    // have cached None (legacy/opted-out); the bootstrap just made the
-    // path banded, so drop the entry — same discipline as
-    // [[migrateStateToPartitioned]]
-    stateLayoutCache.remove(statePath)
     val keysTable = spark.read.parquet(s"$statePath/keys")
     for (e <- 1 to epochs)
       KeySummaries.writeIfBounded(fs, keySummaryPath(statePath, -e.toLong),
         keysTable.filter(col("batch") === -e.toLong).select(col("bkey")))
     epochs
-  }
-
-  /**
-   * Migrate a LEGACY (flat-sets) streaming dedup state to the banded
-   * layout IN PLACE — the state twin of
-   * [[graft.functions.Dedup.migrateToPartitionedIndex]]: a marker-less
-   * state stays flat forever by design (mixing layouts under one
-   * partition root breaks every read), which previously meant a
-   * long-lived legacy state could only adopt the banded layout by a
-   * full rebuild. Run with the STREAM STOPPED (single-writer).
-   *
-   * Only the `sets` table changes shape (each epoch's rows gain `ib=`
-   * bucket dirs inside their `batch=` partition); `keys` is flat in
-   * both layouts and the [[KeySummaries]] files describe keys, so both
-   * survive untouched. Crash-safe the same two-layer way as the index
-   * migration: [[graft.functions.ParquetCompact]] recovery runs before
-   * the precondition reads, the rewrite itself is the staged swap, the
-   * marker lands LAST (a flat read of an already-banded tree is
-   * harmless; the banded path never engages before the marker exists),
-   * and a re-run after any crash window detects the half-migrated
-   * shape (sets already carry `ib`, marker absent) and resumes at the
-   * marker write — verifying the on-disk bucketing matches
-   * `setBuckets` first. The per-JVM layout cache entry is invalidated
-   * so a stream restarted in the SAME JVM sees the banded layout.
-   *
-   * Returns the sets row count.
-   */
-  def migrateStateToPartitioned(spark: org.apache.spark.sql.SparkSession,
-                                statePath: String,
-                                setBuckets: Int = StateSetBuckets): Long = {
-    import graft.functions.{LayoutMarker, ParquetCompact}
-    require(setBuckets > 0, s"setBuckets must be positive: $setBuckets")
-    val fs = new org.apache.hadoop.fs.Path(statePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(LayoutMarker.read(fs, stateLayoutPath(statePath), "ibsets|",
-      "dedup-state").isEmpty, s"state at $statePath is already banded")
-    val setsPath = s"$statePath/sets"
-    ParquetCompact.recoverTable(spark, setsPath)
-    require(fs.exists(new org.apache.hadoop.fs.Path(setsPath)),
-      s"no sets table at $statePath — nothing to migrate")
-    val cols = spark.read.parquet(setsPath).columns
-    val idCol = cols.filterNot(c =>
-      c == "sset" || c == "ib" || c == "batch").head
-    val n =
-      if (cols.contains("ib")) {
-        // resume after a crash between the rewrite and the marker write:
-        // verify the crashed attempt used the same bucket count
-        val sets = spark.read.parquet(setsPath)
-        require(sets.filter(
-          idBucket(col(idCol), setBuckets) =!= col("ib")).isEmpty,
-          s"half-migrated sets at $statePath were bucketed with a " +
-            s"different setBuckets than $setBuckets — resume with the " +
-            "original count")
-        sets.count()
-      } else
-        ParquetCompact.rewritePartitionedMulti(spark, setsPath,
-          Seq("batch", "ib")) { df =>
-          df.withColumn("ib", idBucket(col(idCol), setBuckets))
-            .repartition(col("batch"), col("ib"))
-        }
-    LayoutMarker.write(fs, stateLayoutPath(statePath), "ibsets|", setBuckets)
-    stateLayoutCache.remove(statePath)
-    n
   }
 
   /**
@@ -1021,10 +902,9 @@ object StreamOps {
     require(maxGroupKeys > 0, s"maxGroupKeys must be positive: $maxGroupKeys")
     val fs = new Path(statePath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    requireBandedState(fs, statePath)
     val keysRoot = s"$statePath/keys"
     val setsRoot = s"$statePath/sets"
-    val banded = LayoutMarker.read(fs, stateLayoutPath(statePath),
-      "ibsets|", "dedup-state")
     val planPath = new Path(s"$statePath/__group_plan")
 
     def writeAtomic(p: Path, content: String): Unit =
@@ -1125,21 +1005,16 @@ object StreamOps {
           .coalesce(1).write.parquet(keysStage.toString)
         val srcSets = eps.map(e => s"$setsRoot/batch=$e")
           .filter(d => fs.exists(new Path(d)))
-        if (srcSets.nonEmpty) banded match {
-          case Some(b) =>
-            val grp = spark.read.option("basePath", setsRoot)
-              .parquet(srcSets: _*).drop("batch")
-            val idc = grp.columns
-              .filterNot(c => c == "sset" || c == "ib").head
-            grp.repartition(Dedup.writeTasks(grp, b), col("ib"))
-              // id-sorted row groups, as the bootstrap writes them — the
-              // verify's candidate-range pushdown survives compaction
-              .sortWithinPartitions(col("ib"), col(idc))
-              .write.partitionBy("ib").parquet(setsStage.toString)
-          case None =>
-            spark.read.option("basePath", setsRoot)
-              .parquet(srcSets: _*).drop("batch")
-              .coalesce(1).write.parquet(setsStage.toString)
+        if (srcSets.nonEmpty) {
+          val grp = spark.read.option("basePath", setsRoot)
+            .parquet(srcSets: _*).drop("batch")
+          val idc = grp.columns
+            .filterNot(c => c == "sset" || c == "ib").head
+          grp.repartition(Dedup.writeTasks(grp, StateSetBuckets), col("ib"))
+            // id-sorted row groups, as the bootstrap writes them — the
+            // verify's candidate-range pushdown survives compaction
+            .sortWithinPartitions(col("ib"), col(idc))
+            .write.partitionBy("ib").parquet(setsStage.toString)
         }
         writeAtomic(manifest, eps.mkString("\n"))
         rollForward()
@@ -1185,17 +1060,13 @@ object StreamOps {
                    statePath: String): Map[String, Long] = {
     val fs = new org.apache.hadoop.fs.Path(statePath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a banded state's sets must compact INTO the banded layout (one
-    // file per ib dir inside the reserved batch=-1), or the next epoch
-    // would read a mixed tree; keys are flat in both layouts
-    val banded = graft.functions.LayoutMarker.read(fs,
-      stateLayoutPath(statePath), "ibsets|", "dedup-state")
-    def stageSets(df: DataFrame, stageDir: String): Unit = banded match {
-      case Some(b) =>
-        df.repartition(Dedup.writeTasks(df, b), col("ib"))
-          .write.partitionBy("ib").parquet(stageDir)
-      case None => df.coalesce(8).write.parquet(stageDir)
-    }
+    requireBandedState(fs, statePath)
+    // the sets compact INTO the banded layout (one file per ib dir
+    // inside the reserved batch=-1), or the next epoch would read a
+    // mixed tree; keys are flat
+    def stageSets(df: DataFrame, stageDir: String): Unit =
+      df.repartition(Dedup.writeTasks(df, StateSetBuckets), col("ib"))
+        .write.partitionBy("ib").parquet(stageDir)
     // the per-epoch band-key summaries describe the epoch layout this
     // rewrite is about to destroy — drop them BEFORE consolidating, so
     // a crash anywhere in the consolidation leaves no summary behind
@@ -2144,8 +2015,8 @@ object StreamOps {
       .start()
   }
 
-  /** Per-JVM memo of the ingest index's layout (create-once by design,
-    * same rationale as [[stateLayoutCache]]). */
+  /** Per-JVM memo of the ingest index's layout, fixed at index creation:
+    * saves a marker open per trigger against HDFS/object stores. */
   private val indexLayoutCache =
     new java.util.concurrent.ConcurrentHashMap[
       String, Option[graft.functions.Dedup.BandedLayout]]()
@@ -2155,7 +2026,9 @@ object StreamOps {
       : Option[graft.functions.Dedup.BandedLayout] = {
     val resolved = indexLayoutCache.computeIfAbsent(indexPath,
       _ => graft.functions.Dedup.readDedupLayout(spark, indexPath))
-    // same cache-vs-deleted-marker re-anchor as [[resolveStateLayout]]
+    // re-anchor the cached decision to disk (one exists() per epoch): an
+    // index deleted and recreated at the same path in one JVM must get
+    // its marker back, or a later JVM reads its banded epochs as flat
     resolved.foreach { b =>
       val p = graft.functions.Dedup.layoutMarkerPath(indexPath)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)

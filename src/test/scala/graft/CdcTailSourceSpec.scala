@@ -119,4 +119,41 @@ class CdcTailSourceSpec extends AnyFunSuite {
     assert(rows.map(_.getLong(0)).toSeq == Seq(1L, 3L))
     assert(rows.last.getAs[String]("action") == "DELETE")
   }
+
+  private def ranges(lo: Long, hi: Long, p: Int): Seq[(Long, Long)] =
+    graft.sources.v2.CdcRangePartition.tile("f", lo, hi, p).toSeq
+      .map(_.asInstanceOf[graft.sources.v2.CdcRangePartition])
+      .map(r => (r.lo, r.hi))
+
+  test("tile makes at most `partitions` ranges: (0, 3001] in 4") {
+    // a floor step (750) would leave a fifth range holding only 3001
+    assert(ranges(0L, 3001L, 4) ==
+      Seq((0L, 751L), (751L, 1502L), (1502L, 2253L), (2253L, 3001L)))
+    assert(ranges(5L, 5L, 3).isEmpty && ranges(9L, 5L, 3).isEmpty)
+  }
+
+  test("property: tile covers exactly (lo, hi] in at most p contiguous ranges") {
+    import org.scalacheck.Gen
+    val bound = Gen.oneOf(Gen.choose(-1000L, 1000L),
+      Gen.choose(-4000000000L, 4000000000L),
+      Gen.oneOf(Long.MinValue, Long.MinValue + 1, Long.MaxValue - 1,
+        Long.MaxValue))
+    val cases = for {
+      a <- bound; b <- bound; p <- Gen.oneOf(Gen.choose(1, 8), Gen.choose(1, 64))
+    } yield (math.min(a, b), math.max(a, b), p)
+    PropertySamples.samples(cases, 300, 30011L).foreach { case (lo, hi, p) =>
+      val rs = ranges(lo, hi, p)
+      val ctx = s"tile($lo, $hi, $p) = $rs"
+      if (hi == lo) assert(rs.isEmpty, ctx)
+      else {
+        assert(rs.nonEmpty && rs.sizeIs <= p, ctx)
+        assert(rs.head._1 == lo && rs.last._2 == hi, ctx)
+        assert(rs.forall { case (a, b) => a < b }, ctx)
+        assert(rs.sliding(2).forall {
+          case Seq((_, e), (s, _)) => e == s
+          case _ => true
+        }, ctx)
+      }
+    }
+  }
 }

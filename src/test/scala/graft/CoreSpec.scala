@@ -114,6 +114,28 @@ class CoreSpec extends AnyFunSuite {
       "fused payload pipeline must parse new_values exactly once")
   }
 
+  test("payload stages keep each value's JSON type: materialize reads (7, 1.5)") {
+    val in = changesets((1L, "INSERT", "public", "orders",
+      """{"o_orderkey":7,"o_totalprice":1.5,"x":"pii"}""", null))
+    val rowSchema = StructType(Seq(StructField("o_orderkey", LongType),
+      StructField("o_totalprice", DoubleType)))
+    def materialized(stages: Pipeline.Stage*): Seq[(Long, Double)] =
+      Materializer.materialize(Pipeline(stages: _*)(in), "o_orderkey",
+        rowSchema).collect().toSeq.map(r => (r.getLong(0), r.getDouble(1)))
+    val fused = Pipeline(Stages.openPayload, Stages.removeColumn("x"),
+      Stages.closePayload)
+    assert(fused(in).select("new_values").head.getString(0) ==
+      """{"o_orderkey":7,"o_totalprice":1.5}""")
+    assert(materialized(fused) == Seq((7L, 1.5)))
+    // the standalone stages, outside the payload domain, too
+    assert(materialized(Stages.removeColumn("x")) == Seq((7L, 1.5)))
+    assert(materialized(Stages.mapValue("x", upper)) == Seq((7L, 1.5)))
+    // a rewritten value keeps the type its function returns
+    assert(Stages.mapValue("o_orderkey", v => v.cast("int") + 1)(in)
+      .select("new_values").head.getString(0) ==
+      """{"o_orderkey":8,"o_totalprice":1.5,"x":"pii"}""")
+  }
+
   test("whitelist patterns: schema.table, schema.*, bare table; ignore wins") {
     val in = changesets(
       (1L, "INSERT", "public", "users", "{}", null),

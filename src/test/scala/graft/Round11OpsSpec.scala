@@ -275,7 +275,7 @@ class Round11OpsSpec extends AnyFunSuite {
       s"a generation's near-dup was admitted after compaction: $got")
   }
 
-  // --- stateLayoutCache re-anchor (ADVICE low) --------------------------
+  // --- marker-less state refusal ------------------------------------------
 
   test("deleting a legacy state and recreating it in one JVM goes banded") {
     import spark.implicits._
@@ -286,18 +286,25 @@ class Round11OpsSpec extends AnyFunSuite {
     val schema = Seq((1L, "x")).toDF("doc_id", "text").schema
     val st = Files.createTempDirectory("graft-rlc-st").toString + "/st"
     // a pre-existing marker-less keys dir makes this a LEGACY state: the
-    // run resolves (and caches) None for this path
+    // run fails loudly before writing anything
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(st, "keys"))
-    StreamOps.nearDupDedupTo(
+    val q = StreamOps.nearDupDedupTo(
       spark.readStream.schema(schema).parquet(in),
       Files.createTempDirectory("graft-rlc-o1").toString + "/out", st,
       Files.createTempDirectory("graft-rlc-c1").toString,
-      "doc_id", "text", 0.6).awaitTermination()
-    assert(!new java.io.File(s"$st/_graft_state_layout").exists(),
-      "legacy state must have stayed flat")
+      "doc_id", "text", 0.6)
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      q.awaitTermination()
+    }
+    def msgs(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+    assert(msgs(e).exists(_.contains("nearDupStateBootstrap")),
+      s"expected the rebuild guidance, got: ${msgs(e)}")
+    assert(!new java.io.File(s"$st/_graft_state_layout").exists() &&
+      !new java.io.File(s"$st/sets").exists(),
+      "legacy state must be refused before any write")
     // delete the state and recreate it at the SAME path in the SAME JVM:
-    // the cached None must not survive its tables — the fresh state has
-    // to take the banded branch (marker + ib dirs), not silently stay flat
+    // the fresh state takes the banded layout (marker + ib dirs)
     def rmrf(f: java.io.File): Unit = {
       Option(f.listFiles()).foreach(_.foreach(rmrf)); f.delete(); ()
     }

@@ -226,98 +226,66 @@ class Round11StateSpec extends AnyFunSuite {
       s"stale cached summary pruned the recreated epoch 0: $admitted")
   }
 
-  test("bootstrap over a cached legacy resolution still yields banded epochs") {
-    // one JVM: a stream runs OPTED OUT (caches None for this path), the
-    // state is deleted, the corpus is re-seeded via the bootstrap (tables
-    // + marker now exist, so the plain None re-anchor can't fire), and
-    // the stream restarts — its epochs must land BANDED, or a later JVM
-    // reading the marker drops the flat rows' null ib and silently
-    // admits their near-dups forever.
-    val root = Files.createTempDirectory("graft-bso").toString
-    val st = root + "/st"
+  /** Every file under `root` with its size and modification time. */
+  private def snapshot(root: String): Map[String, (Long, Long)] = {
+    import scala.jdk.CollectionConverters._
+    java.nio.file.Files.walk(java.nio.file.Paths.get(root)).iterator().asScala
+      .filter(java.nio.file.Files.isRegularFile(_))
+      .map(p => p.toString -> (p.toFile.length(), p.toFile.lastModified()))
+      .toMap
+  }
+
+  /** All three state writers refuse `st` before writing anything, with
+    * the rebuild guidance. */
+  private def assertRefused(st: String): Unit = {
+    val before = snapshot(st)
+    val batch = probeBatch(Seq(1), 2, 9000L).localCheckpoint()
+    val writers = Seq[(String, () => Any)](
+      "dedupEpoch" -> (() =>
+        StreamOps.dedupEpoch(batch, 7L, st, "doc_id", "text", 0.6)),
+      "compactState" -> (() => StreamOps.compactState(spark, st)),
+      "compactStateGrouped" -> (() =>
+        StreamOps.compactStateGrouped(spark, st, regroup = true)))
+    for ((name, write) <- writers) {
+      val e = intercept[IllegalArgumentException](write())
+      assert(e.getMessage.contains("no layout marker") &&
+        e.getMessage.contains("nearDupStateBootstrap"),
+        s"$name: ${e.getMessage}")
+      assert(snapshot(st) == before, s"$name wrote before refusing")
+    }
+  }
+
+  test("a marker-less state holding keys or sets fails every writer before any write") {
+    // a state whose tables exist but whose marker does not cannot be
+    // told apart from a flat one: writing banded epochs or banded
+    // compactions into it would mix layouts under one partition root
+    val st = Files.createTempDirectory("graft-nm").toString + "/st"
     epochInto(st, corpusDocs(30), 0L)
-    // wantBanded=false resolves and caches None for this path
-    StreamOps.dedupEpoch(probeBatch(Seq(1), 1, 9000L).localCheckpoint(),
-      1L, st, "doc_id", "text", 0.6, wantBanded = false)
-    rmrf(st)
-    StreamOps.nearDupStateBootstrap(corpusDocs(60).localCheckpoint(), st,
-      "doc_id", "text", epochDocs = 50)
-    val admitted = epochInto(st, probeBatch(Seq(2, 41), 3, 7000L), 0L)
-    assert(admitted.size == 3, s"admitted: $admitted")
-    // the streamed epoch's sets must be banded (ib= dirs inside batch=0)
-    val e0 = new java.io.File(s"$st/sets/batch=0")
-    assert(e0.isDirectory &&
-      e0.listFiles().exists(_.getName.startsWith("ib=")),
-      "post-bootstrap stream epoch landed FLAT in a banded state")
-    // and a fresh JVM's view (marker + ib filter) sees its rows: the
-    // next epoch treats epoch-0 docs as duplicates
-    val again = epochInto(st,
-      probeBatch(Seq(2, 41), 3, 7000L)
-        .withColumn("doc_id", col("doc_id") + 500L), 1L)
-    assert(again.isEmpty, s"epoch-0 rows invisible to the banded read: $again")
+    epochInto(st, corpusDocs(60).filter(col("doc_id") > 30), 1L)
+    assert(new java.io.File(s"$st/_graft_state_layout").delete())
+    assertRefused(st)
+    // a sets table alone is enough to refuse
+    rmrf(s"$st/keys")
+    assertRefused(st)
   }
 
-  test("state migration: legacy → banded in place, later epochs bit-identical") {
-    val e0 = corpusDocs(40)
-    val e1 = corpusDocs(80).filter(col("doc_id") > 40)
-    // arm A: legacy state (wantBanded = false), then migrated
-    val stA = Files.createTempDirectory("graft-sm-a").toString + "/st"
-    def legacyEpoch(b: DataFrame, id: Long, st: String) = {
-      val c = b.localCheckpoint()
-      val r = StreamOps.dedupEpoch(c, id, st, "doc_id", "text", 0.6,
-        wantBanded = false).select("doc_id").collect()
-        .map(_.getLong(0)).toSet
-      c.unpersist(); r
-    }
-    legacyEpoch(e0, 0L, stA); legacyEpoch(e1, 1L, stA)
-    assert(!new java.io.File(s"$stA/_graft_state_layout").exists())
-    assert(!new java.io.File(s"$stA/sets/batch=0").listFiles()
-      .exists(_.getName.startsWith("ib=")))
-    val n = StreamOps.migrateStateToPartitioned(spark, stA, setBuckets = 64)
-    assert(n == 80L, s"migrated rows: $n")
-    assert(new java.io.File(s"$stA/_graft_state_layout").exists())
-    for (b <- Seq(0, 1))
-      assert(new java.io.File(s"$stA/sets/batch=$b").listFiles()
-        .exists(f => f.isDirectory && f.getName.startsWith("ib=")),
-        s"epoch $b not banded after migration")
-    // arm B: the same corpus through a banded-from-birth state
-    val stB = Files.createTempDirectory("graft-sm-b").toString + "/st"
-    epochInto(stB, e0, 0L); epochInto(stB, e1, 1L)
-    // identical follow-up epoch on both — the migrated state must also
-    // take the BANDED path in this same JVM (cache invalidated)
-    val batch = probeBatch(Seq(7, 61), 3, 4000L).localCheckpoint()
-    val admA = StreamOps.dedupEpoch(batch, 2L, stA, "doc_id", "text", 0.6)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    val admB = StreamOps.dedupEpoch(batch, 2L, stB, "doc_id", "text", 0.6)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(admA == admB && admA.size == 3, s"admitted: $admA vs $admB")
-    assert(new java.io.File(s"$stA/sets/batch=2").listFiles()
-      .exists(f => f.isDirectory && f.getName.startsWith("ib=")),
-      "post-migration epochs must write banded")
-    assert(stateRows(stA, "keys") == stateRows(stB, "keys"))
-    assert(stateRows(stA, "sets") == stateRows(stB, "sets"))
-  }
-
-  test("state migration crash windows replay cleanly") {
-    val stA = Files.createTempDirectory("graft-sm-c").toString + "/st"
-    val c = corpusDocs(30).localCheckpoint()
-    StreamOps.dedupEpoch(c, 0L, stA, "doc_id", "text", 0.6,
-      wantBanded = false).count()
-    // (a) crash mid-swap: the live sets dir renamed away — recovery must
-    // roll it back before the precondition reads
-    assert(new java.io.File(s"$stA/sets")
-      .renameTo(new java.io.File(s"$stA/sets.__compact_old")))
-    assert(StreamOps.migrateStateToPartitioned(spark, stA) == 30L)
-    // (b) crash before the marker write: delete it, re-run → resume
-    new java.io.File(s"$stA/_graft_state_layout").delete()
-    assert(StreamOps.migrateStateToPartitioned(spark, stA) == 30L)
-    assert(new java.io.File(s"$stA/_graft_state_layout").exists())
-    // (c) resume with a different bucket count fails loudly
-    new java.io.File(s"$stA/_graft_state_layout").delete()
-    val e = intercept[IllegalArgumentException] {
-      StreamOps.migrateStateToPartitioned(spark, stA, setBuckets = 8)
-    }
-    assert(e.getMessage.contains("different"), e.getMessage)
+  test("a bootstrap that crashed before its marker write is refused, then rebuilt") {
+    // the crash window of nearDupStateBootstrap: both tables written,
+    // then the crash — no marker, and so no summaries (they follow it)
+    val corpus = corpusDocs(120).localCheckpoint()
+    val st = Files.createTempDirectory("graft-bcw").toString + "/st"
+    StreamOps.nearDupStateBootstrap(corpus, st, "doc_id", "text",
+      epochDocs = 50)
+    assert(new java.io.File(s"$st/_graft_state_layout").delete())
+    rmrf(s"$st/keysum")
+    assertRefused(st)
+    // the remedy the message names: rebuild over the admitted docs
+    val rebuilt = Files.createTempDirectory("graft-bcw-r").toString + "/st"
+    StreamOps.nearDupStateBootstrap(corpus, rebuilt, "doc_id", "text",
+      epochDocs = 50)
+    val admitted = epochInto(rebuilt, probeBatch(Seq(2, 61), 3, 6000L), 0L)
+    assert(admitted == (1 to 3).map(6000L + 100000L + _).toSet,
+      s"admitted: $admitted")
   }
 
   private def filesUnder(path: String): Int = {

@@ -180,13 +180,17 @@ class StreamOpsSpec extends AnyFunSuite {
       .toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(dir)
 
     val stateDir = Files.createTempDirectory("graft-snd2-st").toString + "/state"
-    // simulate a crash mid-epoch-write: the keys dir exists but committed
-    // no parquet (only an uncommitted _temporary dir), and the sets dir was
+    // simulate a crash mid-epoch-write: the layout marker (written
+    // before any table) is present, the keys dir exists but committed no
+    // parquet (only an uncommitted _temporary dir), and the sets dir was
     // never created at all. Both must read as EMPTY state — before the
     // per-path explicit-schema reads, the first wedged every replay on
     // schema inference and the second on path-not-found.
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(stateDir, "keys", "batch=0", "_temporary"))
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(stateDir, "_graft_state_layout"),
+      "ibsets|64".getBytes("UTF-8"))
 
     val outDir = Files.createTempDirectory("graft-snd2-out").toString + "/out"
     val schema = spark.read.parquet(dir).schema
@@ -204,11 +208,10 @@ class StreamOpsSpec extends AnyFunSuite {
     import spark.implicits._
     // corpus epoch: 120 distinct docs (all admitted → a sets table worth
     // pruning); probe epoch: one near-dup of doc 1 — a candidate, so the
-    // corpus epoch is READ in both arms (the epoch-level KeySummaries
-    // pruning, proven in Round11StateSpec, would otherwise skip it
-    // entirely and equalize the arms) — plus one fresh doc. The banded
-    // verify must then read only the CANDIDATE's id bucket of the sets
-    // epoch; the legacy arm reads the whole sets table.
+    // corpus epoch is READ (the epoch-level KeySummaries pruning, proven
+    // in Round11StateSpec, would otherwise skip it entirely) — plus one
+    // fresh doc. The verify must read only the CANDIDATE's id bucket of
+    // the sets epoch, not the whole sets table.
     val corpusDocs = (1L to 120L).map(i =>
       (i, s"unique document number $i holding token$i plus shared filler " +
         s"alpha$i bravo$i charlie$i delta$i echo$i foxtrot$i golf$i"))
@@ -217,99 +220,56 @@ class StreamOpsSpec extends AnyFunSuite {
         "alpha1 bravo1 charlie1 delta1 echo1 foxtrot1 golf1 zulu"),
       (901L, "entirely fresh probe text matching nothing " +
         "in the corpus with its own vocabulary of new tokens"))
-    def feed(): String = {
-      val in = Files.createTempDirectory("graft-bst-in").toString
-      corpusDocs.toDF("doc_id", "text").coalesce(1)
-        .write.mode("append").parquet(in)
-      Thread.sleep(1100)
-      probeDoc.toDF("doc_id", "text").coalesce(1)
-        .write.mode("append").parquet(in)
-      in
-    }
-    def admitted(out: String) = spark.read.parquet(out)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
     def fileBytes(): Long =
       Option(org.apache.hadoop.fs.FileSystem.getGlobalStorageStatistics
         .get("file"))
         .flatMap(s => Option(s.getLong("bytesRead")).map(_.longValue()))
         .getOrElse(0L)
+    def dirBytes(p: String): Long = {
+      def walk(f: java.io.File): Long =
+        if (f.isFile) f.length()
+        else Option(f.listFiles()).map(_.map(walk).sum).getOrElse(0L)
+      walk(new java.io.File(p))
+    }
     val schema = corpusDocs.toDF("doc_id", "text").schema
+    val in = Files.createTempDirectory("graft-bst-in").toString
+    val st = Files.createTempDirectory("graft-bst-sa").toString + "/st"
+    val out = Files.createTempDirectory("graft-bst-oa").toString + "/out"
+    val ck = Files.createTempDirectory("graft-bst-cka").toString
+    def run(): Unit = StreamOps.nearDupDedupTo(
+      spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
+        .parquet(in), out, st, ck, "doc_id", "text", 0.6).awaitTermination()
     val hc = spark.sparkContext.hadoopConfiguration
     hc.set("parquet.hadoop.vectored.io.enabled", "false")
     try {
-      // arm A: fresh state → banded layout by default
-      val inA = feed()
-      val stA = Files.createTempDirectory("graft-bst-sa").toString + "/st"
-      val outA = Files.createTempDirectory("graft-bst-oa").toString + "/out"
-      val bA0 = fileBytes()
-      StreamOps.nearDupDedupTo(
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-          .parquet(inA), outA, stA,
-        Files.createTempDirectory("graft-bst-cka").toString,
-        "doc_id", "text", 0.6).awaitTermination()
-      val bytesA = fileBytes() - bA0
-      // arm B: pre-existing marker-less state dir → legacy flat layout
-      val inB = feed()
-      val stB = Files.createTempDirectory("graft-bst-sb").toString + "/st"
-      java.nio.file.Files.createDirectories(
-        java.nio.file.Paths.get(stB, "keys"))
-      val outB = Files.createTempDirectory("graft-bst-ob").toString + "/out"
-      val bB0 = fileBytes()
-      StreamOps.nearDupDedupTo(
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-          .parquet(inB), outB, stB,
-        Files.createTempDirectory("graft-bst-ckb").toString,
-        "doc_id", "text", 0.6).awaitTermination()
-      val bytesB = fileBytes() - bB0
-      // identical admissions either way: the near-dup probe is dropped
-      // against the corpus state, the fresh doc admitted
-      assert(admitted(outA) == admitted(outB) &&
-        admitted(outA) == (1L to 120L).toSet + 901L)
-      // layout proof: marker + ib dirs in arm A, neither in arm B
-      assert(new java.io.File(s"$stA/_graft_state_layout").exists())
-      assert(new java.io.File(s"$stA/sets/batch=0").listFiles()
+      corpusDocs.toDF("doc_id", "text").coalesce(1)
+        .write.mode("append").parquet(in)
+      run() // epoch 0: the corpus
+      val corpusInput = dirBytes(in)
+      probeDoc.toDF("doc_id", "text").coalesce(1)
+        .write.mode("append").parquet(in)
+      val b0 = fileBytes()
+      run() // epoch 1: the probe, same checkpoint
+      val probeRead = fileBytes() - b0
+      // the near-dup probe is dropped against the corpus state, the
+      // fresh doc admitted
+      assert(spark.read.parquet(out).select("doc_id").collect()
+        .map(_.getLong(0)).toSet == (1L to 120L).toSet + 901L)
+      // layout proof: marker + ib dirs inside the epoch
+      assert(new java.io.File(s"$st/_graft_state_layout").exists())
+      assert(new java.io.File(s"$st/sets/batch=0").listFiles()
         .exists(f => f.isDirectory && f.getName.startsWith("ib=")),
         "banded state must write ib= dirs inside the epoch")
-      assert(!new java.io.File(s"$stB/_graft_state_layout").exists())
-      assert(!new java.io.File(s"$stB/sets/batch=0").listFiles()
-        .exists(f => f.isDirectory && f.getName.startsWith("ib=")),
-        "legacy state must stay flat")
-      // pruning proof: epoch 1's verify in arm B scans the whole
-      // 120-doc sets table; in arm A the fresh probe has no candidates
-      // and reads no sets bucket at all — the delta is a meaningful
-      // fraction of the sets table's on-disk size
-      def dirBytes(p: String): Long = {
-        def walk(f: java.io.File): Long =
-          if (f.isFile) f.length()
-          else Option(f.listFiles()).map(_.map(walk).sum).getOrElse(0L)
-        walk(new java.io.File(p))
-      }
-      val setsBytes = dirBytes(s"$stB/sets")
-      assert(bytesB - bytesA > (0.3 * setsBytes).toLong,
-        s"banded state did not prune the sets read: banded=$bytesA " +
-          s"legacy=$bytesB sets=$setsBytes")
+      // pruning proof: beyond the probe input and the corpus epoch's
+      // keys and summary (read whole), epoch 1 reads under 30% of the
+      // sets table's on-disk size — its one candidate's bucket
+      val setsBytes = dirBytes(s"$st/sets/batch=0")
+      val otherBytes = dirBytes(in) - corpusInput +
+        dirBytes(s"$st/keys/batch=0") + dirBytes(s"$st/keysum/batch=0")
+      assert(probeRead - otherBytes < (0.3 * setsBytes).toLong,
+        s"banded state did not prune the sets read: read=$probeRead " +
+          s"keys+summary+input=$otherBytes sets=$setsBytes")
     } finally hc.unset("parquet.hadoop.vectored.io.enabled")
-  }
-
-  test("bandedState = false opts a fresh state into the legacy layout") {
-    import spark.implicits._
-    val in = Files.createTempDirectory("graft-obs-in").toString
-    Seq((1L, "alpha bravo charlie delta echo foxtrot golf hotel india " +
-      "juliet kilo lima mike november oscar papa"))
-      .toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(in)
-    val st = Files.createTempDirectory("graft-obs-st").toString + "/st"
-    val out = Files.createTempDirectory("graft-obs-out").toString + "/out"
-    StreamOps.nearDupDedupTo(
-      spark.readStream.schema(
-        Seq((1L, "x")).toDF("doc_id", "text").schema).parquet(in),
-      out, st, Files.createTempDirectory("graft-obs-ck").toString,
-      "doc_id", "text", 0.6, bandedState = false).awaitTermination()
-    assert(spark.read.parquet(out).count() == 1)
-    assert(!new java.io.File(s"$st/_graft_state_layout").exists(),
-      "opt-out state must write no marker")
-    assert(!new java.io.File(s"$st/sets/batch=0").listFiles()
-      .exists(f => f.isDirectory && f.getName.startsWith("ib=")),
-      "opt-out state must stay flat")
   }
 
   test("STRING ids fail at the door with the standard guidance") {

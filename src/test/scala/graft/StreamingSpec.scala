@@ -45,6 +45,38 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed.length == batch.length && streamed.sameElements(batch))
   }
 
+  test("jsonSink delivers every streamed changeset as one JSON row") {
+    import org.apache.spark.sql.Row
+    import graft.model.ChangesetSchema
+    val t0 = 1700000000123456L // µs: the sink must not truncate to ms
+    def rows(ids: Seq[Long]): Seq[Row] = ids.map { i =>
+      val ts = if (i == 5L) null
+        else java.sql.Timestamp.from(java.time.Instant.EPOCH.plus(
+          t0 + i * 1000001L, java.time.temporal.ChronoUnit.MICROS))
+      val nv = if (i % 3 == 2) null
+        else s"""{"id":$i,"name":"o'\\"q\\" é $i","price":${i}.5}"""
+      val ov = if (i % 3 == 0) null else s"""{"id":$i}"""
+      Row(i, ts, Seq("INSERT", "UPDATE", "DELETE")((i % 3).toInt),
+        "public", "orders", 16390L, nv, ov)
+    }
+    val input = rows(1L to 6L) ++ rows(7L to 10L)
+    val logDir = tmp("graft-jlog")
+    for (part <- Seq(rows(1L to 6L), rows(7L to 10L)))
+      spark.createDataFrame(spark.sparkContext.parallelize(part),
+        ChangesetSchema.schema).coalesce(1)
+        .write.mode("append").parquet(logDir)
+    val outDir = tmp("graft-jout") + "/out"
+    ChangesetStream.jsonSink(
+      ChangesetStream.fromFiles(spark, logDir, maxFilesPerTrigger = 1),
+      outDir, tmp("graft-jck"))
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start().awaitTermination()
+    val back = spark.read.schema(ChangesetSchema.schema).json(outDir)
+      .collect().toSeq
+    assert(back.sortBy(_.getLong(0)) == input,
+      s"JSON read back differs:\n${back.sortBy(_.getLong(0)).mkString("\n")}")
+  }
+
   test("versioned merge: replay-idempotent and out-of-order safe") {
     val script = Changelog.ordersScript(spark, sfDir)
     val rowSchema = org.apache.spark.sql.types.StructType(Seq(
