@@ -99,25 +99,20 @@ object Dedup {
 
   /**
    * Per-document MinHash signature: minima of `numHashes` affine hashes of
-   * the 28-bit shingle digests. One groupBy computes all minima in a single
-   * pass (map-side combinable). Returns (idCol, m0..m{n-1}) as longs.
+   * the 28-bit shingle digests, computed in each row (no shuffle); a doc
+   * with no shingles has no row. Returns (idCol, m0..m{n-1}) as longs.
    */
   def minhashSignature(df: DataFrame, idCol: String, textCol: String,
                        numHashes: Int = 8): DataFrame =
-    minhashSignatureFromSets(
-      df.select(col(idCol), TextFns.shingles(col(textCol)).as("sset")),
-      idCol, numHashes)
+    df.select(col(idCol), ShingleHash.h28(col(textCol)).as("__hh"))
+      .filter(size(col("__hh")) > 0)
+      .select(col(idCol) +: minhashes(col("__hh"), numHashes)
+        .zipWithIndex.map { case (m, i) => m.as(s"m$i") }: _*)
 
-  /** Signature from precomputed shingle sets (column `sset`). */
-  private def minhashSignatureFromSets(sets: DataFrame, idCol: String,
-                                       numHashes: Int): DataFrame = {
-    val sh = sets.select(col(idCol), explode(col("sset")).as("s"))
-      .withColumn("hh", hash28(col("s")))
-    sh.groupBy(col(idCol))
-      .agg(min(affine(0, col("hh"))).as("m0"),
-        (1 until numHashes).map(i =>
-          min(affine(i, col("hh"))).as(s"m$i")): _*)
-  }
+  /** The first `n` MinHash minima of a row's shingle digests, computed in
+    * the row: no explode, no shuffle. */
+  private def minhashes(hh: Column, n: Int): Seq[Column] =
+    (0 until n).map(i => array_min(transform(hh, x => affine(i, x))))
 
   /**
    * MinHash-LSH candidate pairs: r=2 rows per band (band key = md5 of two
@@ -126,56 +121,120 @@ object Dedup {
    */
   def lshCandidates(df: DataFrame, idCol: String, textCol: String,
                     numBands: Int = 4): DataFrame =
-    lshCandidatesFromSets(
-      df.select(col(idCol), TextFns.shingles(col(textCol)).as("sset")),
-      idCol, numBands)
+    candidatePairs(withBandKeys(df.select(col(idCol), col(textCol)),
+      ShingleHash.h28(col(textCol)), numBands), idCol, None)
+      .select("doc_a", "doc_b")
 
   /** (id, band, bkey) LSH keys for precomputed shingle sets — the unit the
-   *  streaming dedup accumulates as its admitted-corpus index. */
+   *  streaming dedup accumulates as its admitted-corpus index. A set with
+   *  no shingles has no keys. */
   def bandKeysFromSets(sets: DataFrame, idCol: String,
-                       numBands: Int = 4): DataFrame = {
-    val sig = minhashSignatureFromSets(sets, idCol, numBands * 2)
-    val bands = array((0 until numBands).map(i =>
-      md5(concat_ws("|", col(s"m${2 * i}"), col(s"m${2 * i + 1}")))): _*)
-    sig.select(col(idCol), posexplode(bands).as(Seq("band", "bkey")))
+                       numBands: Int = 4): DataFrame =
+    withBandKeys(sets, transform(col("sset"), s => hash28(s)), numBands)
+      // _outer: a plain posexplode would make the optimizer add a
+      // non-empty filter that recomputes every key below this projection
+      .select(col(idCol), posexplode_outer(col("bkeys")).as(Seq("band", "bkey")))
+      .filter(col("bkey").isNotNull)
+
+  /** `df` plus `bkeys`: the `numBands` LSH band keys (band key = md5 of
+    * two concatenated minima) of the shingle digests `hh`, computed in
+    * the row — no explode, no shuffle. Null when there are no shingles:
+    * no keys, so never a candidate. */
+  private def withBandKeys(df: DataFrame, hh: Column,
+                           numBands: Int): DataFrame = {
+    // `hh` in its own projection: taken once, not once per minimum
+    val m = minhashes(col("__hh"), numBands * 2)
+    df.withColumn("__hh", hh)
+      .withColumn("bkeys", when(size(col("__hh")) > 0,
+        array((0 until numBands).map(i =>
+          md5(concat_ws("|", m(2 * i), m(2 * i + 1)))): _*)))
+      .drop("__hh")
   }
 
   /** Shingle sets (id, sset) — shared shape between batch and streaming. */
   def shingleSets(df: DataFrame, idCol: String, textCol: String): DataFrame =
     df.select(col(idCol), TextFns.shingles(col(textCol)).as("sset"))
 
-  private def lshCandidatesFromSets(sets: DataFrame, idCol: String,
-                                    numBands: Int): DataFrame = {
-    val keyed = bandKeysFromSets(sets, idCol, numBands)
-    val a = keyed.select(col(idCol).as("doc_a"), col("band"), col("bkey"))
-    val b = keyed.select(col(idCol).as("doc_b"), col("band"), col("bkey"))
-    a.join(b, Seq("band", "bkey"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b").distinct()
+  /** `df` signed once for the near-dup cascade: its columns plus `sset`
+    * (the shingle set of `textCol`) and `bkeys` ([[withBandKeys]], the
+    * digests straight from the text bytes — [[ShingleHash]] equals
+    * hashing each shingle of `sset`). */
+  private[graft] def signed(df: DataFrame, textCol: String): DataFrame =
+    withBandKeys(df.withColumn("sset", TextFns.shingles(col(textCol))),
+      ShingleHash.h28(col(textCol)), 4)
+
+  /**
+   * MinHash-LSH near-dup pairs, verified: [[nearDupPairs]] over every
+   * document — band-key candidates, then exact shingle-Jaccard on the
+   * candidates only; keep >= minJaccard. The signed docs are lazily
+   * localCheckpoint'ed: they feed the key join AND both sides of the
+   * verify, and Spark has no cross-branch CSE.
+   */
+  def minhashDedup(df: DataFrame, idCol: String, textCol: String,
+                   minJaccard: Double = 0.8): DataFrame =
+    nearDupPairs(signed(df.select(col(idCol), col(textCol)), textCol)
+      .drop(textCol).localCheckpoint(false), idCol, minJaccard)
+      .select(col("doc_a"), col("doc_b"), col("jac"))
+
+  /** Band-key candidates of [[nearDupPairs]]: (doc_a, doc_b, prior),
+    * distinct. `signed`'s keys join ONCE against its own keys (doc_a <
+    * doc_b) and `priorKeys` (idCol, band, bkey; prior = true). */
+  private def candidatePairs(signed: DataFrame, idCol: String,
+                             priorKeys: Option[DataFrame]): DataFrame = {
+    def side(d: DataFrame, name: String, isPrior: Boolean) =
+      d.select(col(idCol).as(name), col("band"), col("bkey"),
+        lit(isPrior).as("prior"))
+    val keys = signed.select(col(idCol),
+      posexplode(col("bkeys")).as(Seq("band", "bkey")))
+    val others = priorKeys.fold(side(keys, "doc_b", false))(p =>
+      side(keys, "doc_b", false).unionByName(side(p, "doc_b", true)))
+    side(keys, "doc_a", false).drop("prior")
+      .join(others, Seq("band", "bkey"))
+      .filter(col("prior") || col("doc_a") < col("doc_b"))
+      .select("doc_a", "doc_b", "prior").distinct()
   }
 
   /**
-   * MinHash-LSH near-dup pairs, verified: candidates from [[lshCandidates]],
-   * then exact shingle-Jaccard computed ONLY on candidates; keep >= minJaccard.
-   * The shingle sets are lazily localCheckpoint'ed: they feed the signature
-   * pipeline AND both sides of the verify join, and Spark has no
-   * cross-branch CSE — without the checkpoint the shingle construction
-   * runs three times per execution.
+   * The near-dup probe of the cascade — one implementation behind
+   * [[minhashDedup]], [[nearDupClusters]] and the streaming dedup epoch
+   * (`StreamOps.dedupEpoch`). `signed` holds (idCol, sset, bkeys) rows
+   * ([[signed]]); cache or checkpoint it, it feeds both sides.
+   *
+   * The signed docs' band keys join ONCE against their own keys and,
+   * when `prior` is given, the prior docs' keys (idCol, band, bkey) —
+   * the admitted corpus of a stream. The candidate pairs then verify
+   * exact Jaccard ONCE against the signed sets and the prior sets. The
+   * prior sets come from `prior`'s second member, called with the prior
+   * candidate ids (one column, idCol) so it can read only what they
+   * need; the candidates are checkpointed for that read.
+   *
+   * Returns (doc_a, doc_b, jac, prior): doc_a a signed id; doc_b a
+   * signed id above doc_a, or (prior = true) a prior id.
    */
-  def minhashDedup(df: DataFrame, idCol: String, textCol: String,
-                   minJaccard: Double = 0.8): DataFrame = {
-    val sets = df.select(col(idCol),
-      TextFns.shingles(col(textCol)).as("sset"))
-      .localCheckpoint(false)
-    val cands = lshCandidatesFromSets(sets, idCol, 4)
-    cands
-      .join(sets.select(col(idCol).as("doc_a"), col("sset").as("sa")), "doc_a")
-      .join(sets.select(col(idCol).as("doc_b"), col("sset").as("sb")), "doc_b")
+  private[graft] def nearDupPairs(
+      signed: DataFrame, idCol: String, minJaccard: Double,
+      prior: Option[(DataFrame, DataFrame => DataFrame)] = None)
+      : DataFrame = {
+    val cand0 = candidatePairs(signed, idCol, prior.map(_._1))
+    def sets(d: DataFrame, isPrior: Boolean) =
+      d.select(col(idCol).as("doc_b"), col("sset").as("sb"),
+        lit(isPrior).as("prior"))
+    val (cand, setsB) = prior match {
+      case None => (cand0, sets(signed, false))
+      case Some((_, priorSets)) =>
+        val c = cand0.localCheckpoint(false)
+        (c, sets(signed, false).unionByName(sets(priorSets(
+          c.filter(col("prior")).select(col("doc_b").as(idCol))), true)))
+    }
+    cand
+      .join(signed.select(col(idCol).as("doc_a"), col("sset").as("sa")),
+        "doc_a")
+      .join(setsB, Seq("doc_b", "prior"))
       .withColumn("jac",
         size(array_intersect(col("sa"), col("sb"))).cast("double") /
           size(array_union(col("sa"), col("sb"))))
       .filter(col("jac") >= minJaccard)
-      .select(col("doc_a"), col("doc_b"), col("jac"))
+      .select(col("doc_a"), col("doc_b"), col("jac"), col("prior"))
   }
 
   /**
@@ -306,15 +365,14 @@ object Dedup {
                       minJaccard: Double = 0.8,
                       maxIterations: Int = 10): DataFrame = {
     // 1. exact groups: every doc → representative (min id of its text)
-    val withHash = df.select(col(idCol), md5(col(textCol)).as("__h"))
-    val reps = withHash.groupBy("__h").agg(min(col(idCol)).as("__rep"))
-    val docToRep = withHash.join(reps, "__h")
-      .select(col(idCol), col("__rep"))
+    val docToRep = exactGroups(df.select(col(idCol), col(textCol)), idCol,
+      textCol)
 
-    // 2. near-dup pairs between representatives only
-    val repDocs = df.join(
-      reps.select(col("__rep").as(idCol)), Seq(idCol), "left_semi")
-    val pairs = minhashDedup(repDocs, idCol, textCol, minJaccard)
+    // 2. near-dup pairs between representatives only, signed once
+    val reps = signed(docToRep.filter(col(idCol) === col("__rep"))
+      .select(col(idCol), col(textCol)), textCol).drop(textCol)
+      .localCheckpoint(false)
+    val pairs = nearDupPairs(reps, idCol, minJaccard)
       .select(col("doc_a"), col("doc_b"))
 
     // 3. connected components over the pair graph
@@ -328,14 +386,51 @@ object Dedup {
         coalesce(col("label"), col("__rep")).as("cluster_id"))
   }
 
+  /** `df` plus `__rep`, the smallest id among the rows with the same text
+    * (by md5) — the cascade's exact-dup step, one shuffle on the digest,
+    * every row kept. A row is its group's representative iff its id is
+    * `__rep`. */
+  private[graft] def exactGroups(df: DataFrame, idCol: String,
+                                 textCol: String): DataFrame =
+    df.withColumn("__rep", min(col(idCol)).over(
+      org.apache.spark.sql.expressions.Window.partitionBy(md5(col(textCol)))))
+
+  /** Verified pairs a cascade collects to the driver for union-find;
+    * beyond this many it labels components distributed. */
+  private[graft] val DriverEdgeLimit = 1000000L
+
+  /** Union-find over an undirected edge list: node → the minimum node of
+    * its component, for every node on an edge except the minimums (a
+    * component's minimum labels itself and has no entry). The root is
+    * always the component minimum, so the labels do not depend on edge
+    * order. */
+  private[graft] def componentLabels(edges: Iterable[(Long, Long)])
+      : Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
+      var c = x
+      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.map(k => k -> find(k)).toMap
+  }
+
   /**
    * Connected components over an undirected edge list (doc_a, doc_b) →
    * (node, label) with label = the component's minimum node id.
    *
    * The edge set is tiny relative to the corpus (only verified near-dup
-   * pairs), so the default path collects it and runs union-find on the
-   * driver — exact, one broadcast join, no iteration overhead. Graphs
-   * bigger than `driverEdgeLimit` fall back to distributed min-label
+   * pairs), so ONE bounded collect (`driverEdgeLimit` + 1 rows) decides
+   * the branch: an edge list within the limit is already on the driver,
+   * where union-find ([[componentLabels]]) labels it exactly — one
+   * broadcast join, no iteration overhead. Graphs bigger than
+   * `driverEdgeLimit` fall back to distributed min-label
    * propagation with pointer doubling (each round: one neighbor-min hop,
    * then label ← label-of-label), converging in O(log diameter) rounds,
    * with strict loop hygiene: every iterate is
@@ -345,27 +440,13 @@ object Dedup {
    * iteration count.
    */
   def connectedComponents(pairs: DataFrame, maxIterations: Int = 10,
-                          driverEdgeLimit: Long = 1000000L): DataFrame = {
+                          driverEdgeLimit: Long = DriverEdgeLimit): DataFrame = {
     val spark = pairs.sparkSession
-    pairs.cache() // count() + collect()/reuse below must not recompute the
-                  // whole LSH/verify pipeline twice
-    val nEdges = pairs.count()
-    if (nEdges <= driverEdgeLimit) {
-      val parent = scala.collection.mutable.Map.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      pairs.collect().foreach { row =>
-        val (a, b) = (row.getLong(0), row.getLong(1))
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      pairs.unpersist(false)
-      val resolved = parent.keys.map(k => (k, find(k))).toSeq
+    val edges = pairs.limit(
+      math.min(driverEdgeLimit + 1, Int.MaxValue.toLong).toInt).collect()
+    if (edges.length <= driverEdgeLimit) {
+      val resolved = componentLabels(
+        edges.map(r => (r.getLong(0), r.getLong(1)))).toSeq
       import spark.implicits._
       broadcast(resolved.toDF("node", "label"))
     } else {
@@ -378,7 +459,6 @@ object Dedup {
       val edges = pairs.unionByName(
         pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
         .localCheckpoint()
-      pairs.unpersist(false) // edges checkpoint holds the data now
       var ls = edges.select(col("doc_a").as("node")).distinct()
         .select(col("node"), col("node").as("label"))
         .localCheckpoint()

@@ -97,8 +97,12 @@ object ChangesetStream {
           if (!fs.rename(next, dst))
             sys.error(s"state recovery rename failed: $next -> $dst")
         }
+        // the state's schema is known: reading with it skips the
+        // per-batch schema-inference job
         val state =
-          if (fs.exists(dst)) spark.read.parquet(statePath)
+          if (fs.exists(dst))
+            spark.read.schema(Materializer.versionedSchema(rowSchema))
+              .parquet(statePath)
           else Materializer.emptyVersionedState(spark, rowSchema)
         // versioned merge: idempotent under batch replay AND safe under
         // out-of-order batch delivery (file discovery order is mod-time

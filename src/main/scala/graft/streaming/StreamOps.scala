@@ -148,14 +148,16 @@ object StreamOps {
    * [[graft.functions.Dedup.nearDupClusters]]: admit a document iff it is
    * not a near-dup of anything already admitted.
    *
-   * Per micro-batch:
-   *  1. the batch dedups against ITSELF with the full batch cascade
-   *     (exact groups → MinHash-LSH candidates → exact-Jaccard verify →
-   *     connected components; keep each component's min id);
-   *  2. surviving representatives verify against the ADMITTED corpus:
-   *     their LSH band keys join the accumulated key index (bucket-local —
-   *     never corpus × batch), and candidates exact-Jaccard against the
-   *     stored shingle sets; matches are dropped;
+   * Per micro-batch ([[dedupEpoch]]):
+   *  1. the batch is signed ONCE: each exact group's representative with
+   *     its shingle set and LSH band keys, in one checkpoint;
+   *  2. it is probed ONCE against itself and the ADMITTED corpus: the
+   *     band keys join their own keys and the accumulated key index
+   *     together (bucket-local — never corpus × batch), the candidates
+   *     verify exact Jaccard against the batch's and the stored shingle
+   *     sets, and the verified pairs are collected for a driver-side
+   *     union-find — a doc is kept iff it is its in-batch component's
+   *     min id and matched no admitted doc;
    *  3. survivors land in `outPath`/`statePath` under a `batch=<epoch>`
    *     subdirectory with overwrite — a crash-replayed micro-batch
    *     rewrites its own epoch (no duplicate admissions), and the verify
@@ -176,9 +178,11 @@ object StreamOps {
    * [[StateSetBuckets]] of them, recorded in a layout marker), so each
    * epoch's verify reads only the CANDIDATE ids' buckets — the sets scan
    * stops growing with the corpus, for a constant per-epoch cost (≤64
-   * bucket dirs written and listed per epoch). A state that holds keys
-   * or sets tables but no marker (a flat state from an older build, or a
-   * [[nearDupStateBootstrap]] that crashed before its marker write)
+   * bucket dirs written per epoch; the candidate epochs' files are
+   * listed on the driver, never in a Spark listing job). A state that
+   * holds keys or sets tables but no marker (a flat state from an older
+   * build, or a [[nearDupStateBootstrap]] that crashed before its marker
+   * write)
    * fails the epoch loudly before anything is written: rebuild it with
    * [[nearDupStateBootstrap]] over the admitted docs. The keys table is NOT scanned
    * whole per epoch: band-prefix partitioning was measured not to pay
@@ -195,8 +199,7 @@ object StreamOps {
     val writer = docs.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-        // the batch feeds the cascade, the rep semi-join, and the epoch
-        // writes — cache it for the duration of the epoch
+        // cached for the epoch: see dedupEpoch
         val batch = batch0.cache()
         try {
           dedupEpoch(batch, batchId, statePath, idCol, textCol, minJaccard)
@@ -265,15 +268,36 @@ object StreamOps {
   private[graft] def keySummaryPath(statePath: String, epoch: Long) =
     new org.apache.hadoop.fs.Path(s"$statePath/keysum/batch=$epoch")
 
+  /** Data files directly under `dir`, none when it does not exist:
+    * parquet parts, not the writer's `_`/`.` bookkeeping (`_SUCCESS`,
+    * checksums, an uncommitted `_temporary`). */
+  private def dataFiles(fs: org.apache.hadoop.fs.FileSystem,
+                        dir: org.apache.hadoop.fs.Path)
+      : Seq[org.apache.hadoop.fs.FileStatus] =
+    if (!fs.exists(dir)) Nil
+    else fs.listStatus(dir).toSeq.filter { f =>
+      val n = f.getPath.getName
+      f.isFile && !n.startsWith("_") && !n.startsWith(".")
+    }
+
   /**
    * One epoch of the online near-dup dedup — the foreachBatch core of
    * [[nearDupDedupTo]], factored out so [[prepPipelineTo]] can compose it
-   * with other stages. Runs the batch-internal cascade, verifies the
-   * survivors against the admitted-corpus state (excluding THIS epoch's
-   * rows, for crash-replay safety), writes the epoch's state partitions
+   * with other stages. Signs the batch once, probes it against itself
+   * and the admitted-corpus state once (excluding THIS epoch's rows, for
+   * crash-replay safety), writes the epoch's state partitions
    * (keys/sets, overwrite-idempotent), and returns the admitted docs
-   * frame (backed by checkpointed inputs — safe to consume after the
-   * state writes). `batch` must be cached/materialized by the caller.
+   * frame (backed by the checkpointed signed batch — safe to consume
+   * after the state writes). `batch` is read once, into that
+   * checkpoint; callers cache it all the same, because a cached batch
+   * gives the checkpoint its real size, and with it the probe's small
+   * joins plan as broadcasts (without it each runs as shuffles, a Spark
+   * job per side).
+   *
+   * Admissions equal the two-pass form (batch cascade, then a state
+   * probe of the surviving representatives): a doc is admitted iff it is
+   * its exact group's representative, the minimum of its in-batch
+   * near-dup component, and has no verified pair with the state.
    *
    * `summaryCap` overrides [[KeySummaries.MaxKeys]] ONLY in specs: a
    * cap of 1 routes a small batch through the over-cap degrade (no
@@ -287,8 +311,11 @@ object StreamOps {
                                 minJaccard: Double,
                                 summaryCap: Int = KeySummaries.MaxKeys)
       : DataFrame = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.graftbridge.FileIndexBridge
+    import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
     val spark = batch.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(statePath)
+    val fs = new Path(statePath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val keysPath = s"$statePath/keys"
     val setsPath = s"$statePath/sets"
@@ -299,145 +326,170 @@ object StreamOps {
     graft.functions.TopKAgg.requireIntegralId(batch, idCol,
       "streaming near-dup dedup")
     requireBandedState(fs, statePath)
-    // 1. batch-internal cascade (exact + near) → representatives
-    val reps = Dedup.nearDupClusters(batch, idCol, textCol, minJaccard)
-      .filter(col(idCol) === col("cluster_id")).select(col(idCol))
-    val repDocs = batch.join(reps, Seq(idCol), "left_semi")
-      .localCheckpoint() // reused: sets, verify, output write
-    val repSets = Dedup.shingleSets(repDocs, idCol, textCol)
-      .localCheckpoint()
-    val repKeys = Dedup.bandKeysFromSets(repSets, idCol)
-      .localCheckpoint() // reused: candidate join + admitted write
 
-    // 2. verify representatives against the admitted corpus.
-    // State rows of THIS epoch are excluded so a crash-replay of the
-    // batch does not match its docs against their own replayed index
-    // entries (which would silently drop them).
+    // 1. SIGN ONCE: each exact group's representative (its min id) with
+    // its shingle set and band keys, checkpointed — the one frame the
+    // probe, the state writes and the output all read. Signing ahead of
+    // the exact-group shuffle runs it in the batch's own partitions.
+    val reps = Dedup.exactGroups(Dedup.signed(batch, textCol), idCol,
+      textCol).filter(col(idCol) === col("__rep")).drop("__rep")
+      .localCheckpoint()
+    val repKeys = reps.select(col(idCol),
+      posexplode(col("bkeys")).as(Seq("band", "bkey")))
+    val repSets = reps.select(col(idCol), col("sset"))
+    // the representatives' band keys, in ONE bounded collect: they prune
+    // the state epochs to read (below) and, restricted to the admitted
+    // cluster representatives, make this epoch's summary (step 3). A
+    // batch with more than `summaryCap` key rows degrades to the full
+    // scan and writes no summary — never to a missed candidate.
+    val keyed: Option[Array[(Long, String)]] = {
+      val rows = repKeys.select(col(idCol).cast("long"), col("bkey"))
+        .limit(summaryCap + 1).collect()
+      if (rows.length > summaryCap) None
+      else Some(rows.map(r => (r.getLong(0), r.getString(1))))
+    }
+
+    // 2. PROBE ONCE against the admitted corpus. State rows of THIS
+    // epoch are excluded so a crash-replay of the batch does not match
+    // its docs against their own replayed index entries (which would
+    // silently drop them).
     //
-    // Each state table reads independently with an EXPLICIT schema
-    // (its epoch frame's schema + the batch partition column) and an
-    // absent-or-empty directory reads as EMPTY state: a crash at ANY
-    // point of the epoch writes (e.g. keys/ committed but sets/ not yet
-    // created, or only _temporary present) must replay cleanly, never
-    // wedge on path-not-found or schema inference.
-    import org.apache.spark.sql.types.LongType
-    def emptyState(full: org.apache.spark.sql.types.StructType) =
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], full)
-    def stateOrEmpty(path: String,
-                     schema: org.apache.spark.sql.types.StructType) = {
-      val full = schema.add("batch", LongType)
-      if (fs.exists(new org.apache.hadoop.fs.Path(path)))
-        spark.read.schema(full).parquet(path)
-      else emptyState(full)
+    // EPOCH-LEVEL pruning via the per-epoch band-key summaries
+    // ([[KeySummaries]]): only the epochs whose Bloom file might hold one
+    // of the batch's keys are read — from BOTH tables, since a candidate
+    // id's sets rows live in the epoch that admitted it. Bloom ⇒ no false
+    // negatives ⇒ admissions are bit-identical to the full scan; an epoch
+    // with no summary (compacted batch=-1, over-cap batch) is always
+    // read, and an over-cap batch reads every epoch.
+    val epochs = {
+      val all = listStateEpochs(fs, keysPath).filter(_ != batchId)
+      keyed.fold(all)(ks => KeySummaries.pruneEpochs(fs, all,
+        ks.map(_._2).distinct, m => keySummaryPath(statePath, m)))
     }
-    // EPOCH-LEVEL pruning of the state reads via the per-epoch band-key
-    // summaries ([[KeySummaries]]): the batch's own distinct band keys
-    // (ONE bounded collect, reused below to build this epoch's summary)
-    // are tested against each prior epoch's Bloom file, and only the
-    // epochs that might contain a match are read — from BOTH tables,
-    // since a candidate id's sets rows live in the epoch that admitted
-    // it. Bloom ⇒ no false negatives ⇒ admissions are bit-identical to
-    // the full scan; an epoch with no summary (compacted batch=-1,
-    // over-cap batch) is always read, and a batch over the
-    // collect cap degrades to the full scan — never to a missed
-    // candidate.
-    val batchKeys: Option[Array[String]] =
-      KeySummaries.cappedDistinct(repKeys.select(col("bkey")),
-        cap = summaryCap)
-    val candidateEpochs: Option[Seq[Long]] = batchKeys.map(ks =>
-      KeySummaries.pruneEpochs(fs,
-        listStateEpochs(fs, keysPath).filter(_ != batchId), ks,
-        m => keySummaryPath(statePath, m)))
-    val setsSchema =
-      repSets.schema.add("ib", org.apache.spark.sql.types.IntegerType)
-    def readEpochs(root: String,
-                   schema: org.apache.spark.sql.types.StructType,
-                   eps: Seq[Long]) = {
-      val full = schema.add("batch", LongType)
-      val dirs = eps.map(m => s"$root/batch=$m")
-        .filter(d => fs.exists(new org.apache.hadoop.fs.Path(d)))
-      if (dirs.isEmpty) emptyState(full)
-      else spark.read.option("basePath", root).schema(full)
-        .parquet(dirs: _*)
+    // the state epochs are read from files listed HERE, on the driver:
+    // the layout is known (keys `batch=N/`, sets `batch=N/ib=K/`), and a
+    // Spark read would list 64 ib dirs per epoch in a job of its own.
+    // Empty or absent dirs (a crash at ANY point of an epoch's writes)
+    // contribute nothing, so a replay never wedges on them.
+    def leaf(values: Seq[Any], files: Seq[org.apache.hadoop.fs.FileStatus]) =
+      files.headOption.map(f =>
+        FileIndexBridge.Leaf(f.getPath.getParent, values, files))
+    val keyLeaves = epochs.flatMap(m =>
+      leaf(Seq(m), dataFiles(fs, new Path(s"$keysPath/batch=$m"))))
+    val setLeaves = epochs.flatMap { m =>
+      val dir = new Path(s"$setsPath/batch=$m")
+      if (!fs.exists(dir)) Nil
+      else fs.listStatus(dir).toSeq
+        .filter(d => d.isDirectory && d.getPath.getName.startsWith("ib="))
+        .flatMap(d => leaf(Seq[Any](m, d.getPath.getName.stripPrefix("ib=").toInt),
+          dataFiles(fs, d.getPath)))
     }
-    val (stateKeys, stateSetsAll) = candidateEpochs match {
-      case Some(eps) =>
-        (readEpochs(keysPath, repKeys.schema, eps),
-          readEpochs(setsPath, setsSchema, eps))
-      case None =>
-        (stateOrEmpty(keysPath, repKeys.schema)
-          .filter(col("batch") =!= batchId),
-          stateOrEmpty(setsPath, setsSchema)
-            .filter(col("batch") =!= batchId))
-    }
-    // the candidates' id buckets (bounded ≤ StateSetBuckets, one
-    // driver-side collect) become a partition filter on the sets read —
-    // the verify touches only buckets that can hold a candidate, not the
-    // whole accumulated table. cand is checkpointed because it feeds the
-    // bucket collect AND the verify join.
-    val cand = repKeys
-      .join(stateKeys.select(col(idCol).as("__sid"),
-        col("band"), col("bkey")), Seq("band", "bkey"))
-      .select(col(idCol), col("__sid")).distinct()
-      .localCheckpoint(false)
-    // ONE job for the candidate buckets AND the candidate-id range: the
-    // [lo, hi] filter is a SUPERSET of the candidate ids (the verify join
-    // still decides membership — admissions identical), but it pushes to
-    // parquet, and the state's sets files carry id-sorted row groups
-    // (bootstrap/compaction sort within partitions) so clustered
+    val batchPart = new StructType().add("batch", LongType)
+    // the candidates' id buckets (bounded ≤ StateSetBuckets) and id
+    // range become the sets read's filters: the verify touches only
+    // buckets that can hold a candidate, and the [lo, hi] range (a
+    // SUPERSET of the candidate ids — the verify join still decides
+    // membership) pushes to parquet, where the state's id-sorted row
+    // groups (bootstrap/compaction sort within partitions) let clustered
     // candidates — the common shape: recent docs duplicate recent docs —
-    // skip most row groups instead of scanning every hit bucket whole.
-    // Uniform candidates degrade to exactly the ib-pruned scan, never to
-    // a miss. No cast on the id column (min/max collected in its own
-    // type) or the pushdown would silently vanish.
-    val agg = cand.agg(
-      collect_set(stateBucket(col("__sid"))).as("ibs"),
-      min(col("__sid")), max(col("__sid"))).head()
-    val ibs = agg.getSeq[Int](0)
-    val stateSets =
-      if (ibs.isEmpty) stateSetsAll.filter(lit(false))
-      else stateSetsAll.filter(col("ib").isin(ibs: _*) &&
-        col(idCol) >= lit(agg.get(1)) && col(idCol) <= lit(agg.get(2)))
-    val dupIds = cand
-      .join(repSets, Seq(idCol))
-      .join(stateSets.select(col(idCol).as("__sid"),
-        col("sset").as("__ss")), Seq("__sid"))
-      .filter(
-        size(array_intersect(col("sset"), col("__ss"))).cast("double") /
-          size(array_union(col("sset"), col("__ss"))) >= minJaccard)
-      .select(col(idCol)).distinct()
-      .localCheckpoint() // reused by the three anti-joins below
+    // skip most row groups. ONE job over the checkpointed candidates,
+    // no shuffle: each partition folds its ids to (buckets, lo, hi) and
+    // the driver merges the partials. The bounds are cast to the id
+    // column's type, never the column, or the pushdown would silently
+    // vanish.
+    def prunedSets(ids: DataFrame): DataFrame = {
+      val (ibs, lo, hi) = ids.select(stateBucket(col(idCol)),
+          col(idCol).cast("long")).rdd
+        .mapPartitions { rows =>
+          val ibs = scala.collection.mutable.Set.empty[Int]
+          var lo = Long.MaxValue
+          var hi = Long.MinValue
+          rows.foreach { r =>
+            ibs += r.getInt(0)
+            lo = math.min(lo, r.getLong(1)); hi = math.max(hi, r.getLong(1))
+          }
+          Iterator.single((ibs.toSet, lo, hi))
+        }.collect()
+        .foldLeft((Set.empty[Int], Long.MaxValue, Long.MinValue)) {
+          case ((s0, l0, h0), (s1, l1, h1)) =>
+            (s0 ++ s1, math.min(l0, l1), math.max(h0, h1))
+        }
+      val idType = repSets.schema(idCol).dataType
+      FileIndexBridge.parquet(spark, repSets.schema,
+          batchPart.add("ib", IntegerType), setLeaves)
+        .filter(if (ibs.isEmpty) lit(false)
+          else col("ib").isin(ibs.toSeq: _*) &&
+            col(idCol) >= lit(lo).cast(idType) &&
+            col(idCol) <= lit(hi).cast(idType))
+    }
+    // no candidate epoch: the batch probes itself alone, reading zero
+    // state bytes
+    val prior = if (keyLeaves.isEmpty) None else Some((
+      FileIndexBridge.parquet(spark, repKeys.schema, batchPart, keyLeaves),
+      prunedSets _))
+    val verified = Dedup.nearDupPairs(reps.select(col(idCol), col("sset"),
+      col("bkeys")), idCol, minJaccard, prior)
+
+    // the verified pairs are few: ONE bounded collect, then union-find
+    // on the driver. Dropped: every in-batch component member but its
+    // minimum, and every representative with a verified state pair.
+    // Only these ids go back to the writes, as a broadcast anti-join.
+    // Over the edge limit the components are found distributed
+    // ([[Dedup.connectedComponents]]) and the anti-join reads a
+    // checkpointed frame of the same ids.
+    val limit = Dedup.DriverEdgeLimit
+    val edges = verified.select(col("doc_a").cast("long"),
+      col("doc_b").cast("long"), col("prior")).limit(limit.toInt + 1)
+      .collect()
+    val (admit, summaryKeys): (DataFrame => DataFrame, Option[Array[String]]) =
+      if (edges.length <= limit) {
+        val (toState, inBatch) = edges.partition(_.getBoolean(2))
+        val nonMins = Dedup.componentLabels(
+          inBatch.map(r => (r.getLong(0), r.getLong(1)))).keySet
+        val dropped = spark.sparkContext.broadcast(
+          nonMins ++ toState.map(_.getLong(0)))
+        val keep = udf((id: Long) => !dropped.value.contains(id))
+        (d => d.filter(keep(col(idCol).cast("long"))),
+          keyed.map(_.collect { case (id, k) if !nonMins(id) => k }.distinct))
+      } else {
+        val nonMins = Dedup.connectedComponents(
+          verified.filter(!col("prior")).select("doc_a", "doc_b"))
+          .filter(col("node") =!= col("label")).select(col("node").as("__d"))
+        val dropped = nonMins.union(verified.filter(col("prior"))
+          .select(col("doc_a").as("__d"))).distinct().localCheckpoint()
+        def anti(d: DataFrame, ids: DataFrame) =
+          d.join(ids, col(idCol) === col("__d"), "left_anti")
+        (anti(_, dropped), keyed.flatMap(_ => KeySummaries.cappedDistinct(
+          anti(repKeys, nonMins).select(col("bkey")), cap = summaryCap)))
+      }
 
     // 3. IDEMPOTENT per-epoch writes: every output lands in a
     // batch=<epoch> subdirectory with overwrite, so a replayed batch
-    // rewrites its own epoch instead of appending duplicates
-    // (partition discovery exposes the epoch as the `batch` column
-    // that step 2's exclusion filter prunes on). Admitted keys/sets
-    // are anti-joined from the checkpointed rep frames — no
-    // re-shingling or re-hashing.
-    def anti(d: DataFrame) = d.join(dupIds, Seq(idCol), "left_anti")
-    anti(repKeys).write.mode("overwrite")
+    // rewrites its own epoch instead of appending duplicates (the
+    // epoch dir name is the `batch` value step 2's exclusion skips).
+    // Admitted keys/sets come from the signed batch — no re-shingling
+    // or re-hashing.
+    admit(repKeys).write.mode("overwrite")
       .parquet(s"$keysPath/batch=$batchId")
-    // this epoch's band-key summary, from the SAME bounded collect the
-    // probe used: the pre-anti key set is a superset of the admitted
-    // keys (a dropped dup's key only costs a later batch one false
-    // epoch read — never a false negative), and a replayed epoch
+    // this epoch's band-key summary: the keys of its cluster
+    // representatives before the state drops — a superset of the
+    // admitted keys (a dropped dup's key only costs a later batch one
+    // false epoch read — never a false negative), and a replayed epoch
     // rewrites an identical summary (same batch → same keys). Over-cap
     // batches write none: absent = always-read, the conservative
     // default. Written AFTER the keys epoch so a present summary always
     // describes committed rows.
-    batchKeys.foreach(ks => KeySummaries.write(fs,
+    summaryKeys.foreach(ks => KeySummaries.write(fs,
       keySummaryPath(statePath, batchId), KeySummaries.build(ks)))
     // the banded layout the marker records: repartition BY the bucket
     // column, capped at the bucket count (the default shuffle width
     // would run ~3x empty tasks per epoch on this hot path), so each dir
     // gets one file
-    anti(repSets).withColumn("ib", stateBucket(col(idCol)))
+    admit(repSets).withColumn("ib", stateBucket(col(idCol)))
       .repartition(Dedup.writeTasks(repSets, StateSetBuckets), col("ib"))
       .write.mode("overwrite").partitionBy("ib")
       .parquet(s"$setsPath/batch=$batchId")
-    anti(repDocs)
+    admit(reps.select(batch.columns.map(col): _*))
   }
 
   /**
@@ -561,7 +613,7 @@ object StreamOps {
           .withColumn("__hit",
             Bloom.mightContain(col("__bloom"), col(textCol), m, k))
           .filter(!col("__hit")).drop("__bloom", "__hit")
-          .cache() // feeds the cascade + rep semi-join for the epoch
+          .cache() // for the epoch: see dedupEpoch
         try {
           val admitted = dedupEpoch(clean, batchId, statePath, idCol,
             textCol, minJaccard)
@@ -578,7 +630,8 @@ object StreamOps {
             .localCheckpoint() // feeds both the docs write and accounting
           fin.write.mode("overwrite")
             .parquet(s"$outPath/docs/batch=$batchId")
-          fin.groupBy(col("split"))
+          // one partition in, so the aggregate needs no shuffle
+          fin.coalesce(1).groupBy(col("split"))
             .agg(count(lit(1)).as("n_docs"),
               sum(size(TextFns.words(col(textCol))).cast("long"))
                 .as("n_tokens"))
