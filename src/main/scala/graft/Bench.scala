@@ -209,17 +209,13 @@ object Bench {
     // can never silently clear this round's degradation gate
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"ts":"$ts","sha":"$sha","tree":"$tree","build":"$build","closing":$closing,"closing_load":$load0,"loadavg":[$loadStart,$loadEnd],"queries":$qs,"spread":$spread,"errors":$errJson,"sf":"$sfDir"}"""
-    // short summary trailer printed BOTH before and after the full line:
-    // the driver's capture window is a bounded log tail whose edges are
-    // unpredictable from in here — round 7's single after-trailer was cut
-    // 80 bytes in (BENCH_r07 unparseable, third round running). Any
-    // contiguous capture that contains the full line now also contains at
-    // least one complete trailer, whichever side got truncated.
+    // a short summary trailer first, then the full line (the one with
+    // `queries`) LAST: consumers parse the last stdout line, and a
+    // capture that cuts the long line still holds a complete summary.
     val trailer =
       s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"loadavg":[$loadStart,$loadEnd],"errors":$errJson,"sf":"$sfDir"}"""
     println(trailer)
     println(line)
-    println(trailer)
     notes.foreach(System.err.println)
     // persist the full report: the driver captures a bounded log tail, and
     // a 90-query JSON line is long enough to get head-truncated there

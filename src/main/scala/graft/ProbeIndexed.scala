@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Dedup, Multimodal, Sampling, Similarity}
+import graft.functions.Multimodal.PhashKind
 import graft.sources.Tables
 
 /**
@@ -495,17 +496,19 @@ object ProbeIndexed {
       docs.select(col("doc_id")), phashGroups)
     val phashIdx = s"$tmp/phash"
     val phashBuild = time(
-      Multimodal.buildPhashIndex(spark, phashCorpus, phashIdx))
+      Multimodal.buildPhashIndex(spark, PhashKind.Image, phashCorpus,
+        phashIdx))
     val phashProbes = Multimodal.phashFixtureMedia(spark,
       docs.orderBy(col("doc_id")).limit(500)
         .select((col("doc_id") + 900000000L).as("doc_id")), phashGroups)
       .localCheckpoint()
     val phashProbe = (1 to reps).map(_ => time(
-      Multimodal.phashDedupAgainst(spark, phashIdx, phashProbes)
-        .count())).min
+      Multimodal.phashDedupAgainst(spark, PhashKind.Image, phashIdx,
+        phashProbes).count())).min
     val phashFilesBefore = dataFiles(phashIdx)
     val phashAppend = time(
-      Multimodal.appendToPhashIndex(spark, phashProbes, phashIdx))
+      Multimodal.appendToPhashIndex(spark, PhashKind.Image, phashProbes,
+        phashIdx))
     // lifecycle accounting (round 14): an append adds ≤ 1 file per
     // TOUCHED pb dir (≤ 256 by geometry, not corpus-proportional);
     // compaction folds the tree back to one file per dir, and the
@@ -516,8 +519,8 @@ object ProbeIndexed {
     val phashCompact = time(Multimodal.compactPhashIndex(spark, phashIdx))
     val phashFilesPostCompact = dataFiles(phashIdx)
     val phashProbePostCompact = (1 to reps).map(_ => time(
-      Multimodal.phashDedupAgainst(spark, phashIdx, phashProbes)
-        .count())).min
+      Multimodal.phashDedupAgainst(spark, PhashKind.Image, phashIdx,
+        phashProbes).count())).min
 
     val dedupPath = s"$tmp/dedup"
     val buildDedup = time(Dedup.buildDedupIndex(

@@ -1133,43 +1133,108 @@ object Multimodal {
 
   // ------------------------------------------------ persisted phash index
 
-  /** The index's fixed pigeonhole geometry: 4 blocks × 16 bits (sound
-    * for hamming ≤ 3 — k flipped bits cannot touch all k+1 blocks), and
-    * the partition key `pb` = blk × 64 + the block value's top 6 bits
-    * (4 × 64 = 256 dirs — the text index's ~320-dir lesson: few enough
-    * dirs that discovery stays cheap, many enough that a fixed probe
-    * batch prunes most of the corpus). Derived from the hash on BOTH
-    * sides, so index and probe can never disagree on routing. */
-  private[graft] def phashBlocksOf(sig: DataFrame): DataFrame =
-    phashBlocks(sig)
+  /**
+   * What one persisted perceptual-hash index kind supplies. Every kind
+   * shares the rest of the lifecycle ([[buildPhashIndex]],
+   * [[appendToPhashIndex]], [[compactPhashIndex]], [[phashDedupAgainst]]
+   * and the streaming [[graft.streaming.StreamOps.phashIngestTo]]): the
+   * 4 × 16-bit pigeonhole blocks, the 256 `pb=` dirs, bval-sorted files,
+   * `__batch=N` epochs nested inside `pb=` and the staged-swap
+   * compaction. A kind differs in three parts only:
+   *  - its signature rows: `doc_id` plus the columns the index stores,
+   *    one row per decodable payload (undecodable payloads index
+   *    nothing);
+   *  - the 64-bit routing hash its blocks derive from;
+   *  - the verify step that turns candidate pairs into the probe's
+   *    output columns and keeps the pairs within `maxHamming`.
+   */
+  sealed trait PhashKind {
+    private[graft] def signatures(spark: SparkSession,
+                                  media: DataFrame): DataFrame
+    private[graft] def route: Column
+    /** Candidate rows carry the batch's signature columns under their
+      * own names and the corpus's under `__c_<name>`, plus `doc_id` and
+      * `corpus_id`. */
+    private[graft] def verify(cand: DataFrame, maxHamming: Int): DataFrame
+  }
 
-  private def phashBlocks(sig: DataFrame): DataFrame =
-    sig.select(col("doc_id"), col("dhash"),
+  object PhashKind {
+    /** One 64-bit hash per payload, verified by its full hamming:
+      * output (doc_id, corpus_id, hamming). */
+    sealed abstract class SingleHash(hash: String) extends PhashKind {
+      private[graft] def route: Column = col(hash)
+      private[graft] def verify(cand: DataFrame,
+                                maxHamming: Int): DataFrame =
+        cand.select(col("doc_id"), col("corpus_id"),
+          expr(s"bit_count($hash ^ __c_$hash)").cast("int").as("hamming"))
+          .filter(col("hamming") <= maxHamming)
+    }
+
+    /** Images: the [[phashSignatures]] dHash (PNG or baseline JPEG),
+      * stored as (doc_id, dhash). */
+    case object Image extends SingleHash("dhash") {
+      private[graft] def signatures(spark: SparkSession,
+                                    media: DataFrame): DataFrame =
+        phashSignatures(spark, media)
+    }
+
+    /** Audio: the [[audioPhashSignatures]] loudness-envelope hash,
+      * stored as (doc_id, ehash). 64-bit like the dHash, so the
+      * hamming ≤ 3 geometry carries over unchanged. */
+    case object Audio extends SingleHash("ehash") {
+      private[graft] def signatures(spark: SparkSession,
+                                    media: DataFrame): DataFrame =
+        audioPhashSignatures(spark, media)
+    }
+
+    /** Video: one row per decoded video, (doc_id, n_frames, sig) with
+      * `sig` the frame-ordered array of ≤ `maxFrames` sampled frame
+      * dHashes ([[videoPhashSignatures]]; a video with any undecodable
+      * sampled frame emits no row). Blocks derive from FRAME 0's hash
+      * only, which is sound for the all-frames rule (every aligned frame
+      * within hamming ≤ 3 ⟹ frame 0 matches in some block), and each
+      * stored row carries the whole signature, so verification reads
+      * nothing beyond the candidate rows. A pair verifies when the frame
+      * counts are equal; output (doc_id, corpus_id, n_frames,
+      * max_hamming), `max_hamming` the worst aligned frame. */
+    final case class Video(maxFrames: Int = 8) extends PhashKind {
+      require(maxFrames >= 1, s"maxFrames must be >= 1, got $maxFrames")
+      private[graft] def signatures(spark: SparkSession,
+                                    media: DataFrame): DataFrame =
+        videoPhashSignatures(spark, media, maxFrames)
+          .groupBy(col("doc_id"))
+          .agg(sort_array(collect_list(struct(col("frame_idx"),
+            col("dhash")))).as("__s"))
+          .select(col("doc_id"),
+            size(col("__s")).cast("int").as("n_frames"),
+            transform(col("__s"), e => e.getField("dhash")).as("sig"))
+      private[graft] def route: Column = element_at(col("sig"), 1)
+      private[graft] def verify(cand: DataFrame,
+                                maxHamming: Int): DataFrame =
+        cand.filter(col("n_frames") === col("__c_n_frames"))
+          .select(col("doc_id"), col("corpus_id"), col("n_frames"),
+            expr("aggregate(zip_with(sig, __c_sig, (a, b) -> " +
+              "bit_count(a ^ b)), 0, (acc, x) -> greatest(acc, x))")
+              .cast("int").as("max_hamming"))
+          .filter(col("max_hamming") <= maxHamming)
+    }
+  }
+
+  /** The index's fixed pigeonhole geometry: 4 blocks × 16 bits of the
+    * kind's routing hash (sound for hamming ≤ 3 — k flipped bits cannot
+    * touch all k+1 blocks), and the partition key `pb` = blk × 64 + the
+    * block value's top 6 bits (4 × 64 = 256 dirs — the text index's
+    * ~320-dir lesson: few enough dirs that discovery stays cheap, many
+    * enough that a fixed probe batch prunes most of the corpus). Derived
+    * from the hash on BOTH sides, so index and probe can never disagree
+    * on routing. Every signature column rides along. */
+  private def phashBlocks(kind: PhashKind, sig: DataFrame): DataFrame =
+    sig.select(sig.columns.map(col) :+
       posexplode(array((0 until 4).map(b =>
-        shiftrightunsigned(col("dhash"), b * 16)
-          .bitwiseAND(lit(0xFFFFL))): _*)).as(Seq("blk", "bval")))
+        shiftrightunsigned(kind.route, b * 16)
+          .bitwiseAND(lit(0xFFFFL))): _*)).as(Seq("blk", "bval")): _*)
       .withColumn("pb",
         (col("blk") * 64 + shiftright(col("bval"), 10)).cast("int"))
-
-  /**
-   * Persist a perceptual-hash INDEX over a media corpus — the
-   * cross-corpus media-dedup shape at 100 TB: each decoded payload's
-   * 64-bit dHash lands exploded per pigeonhole block, partitioned by
-   * [[phashBlocks]]' `pb` dir, so probing a fixed batch reads only the
-   * batch's candidate partitions (≤ 4 × batch distinct dirs of 256)
-   * while the corpus — and its binary payloads, which never enter the
-   * index at all — stays untouched. Undecodable payloads index nothing.
-   */
-  def buildPhashIndex(spark: SparkSession, media: DataFrame,
-                      path: String): Unit =
-    phashBlocks(phashSignatures(spark, media))
-      .repartition(pbWriteTasks(spark), col("pb"))
-      // bval-sorted row groups: the probe pushes its candidate values as
-      // a bval filter, and parquet min/max stats skip the row groups a
-      // sorted layout keeps tight — the id-sorted-row-groups device from
-      // the dedup state verify
-      .sortWithinPartitions(col("pb"), col("bval"))
-      .write.mode("overwrite").partitionBy("pb").parquet(path)
 
   /** Shuffle-task count for a `pb`-partitioned index write: one task
     * per pb dir where the cluster has the cores (the 256-dir layout's
@@ -1183,20 +1248,63 @@ object Multimodal {
   private def pbWriteTasks(spark: SparkSession): Int =
     math.max(1, math.min(256, spark.sparkContext.defaultParallelism))
 
-  /** Append a media batch's signatures into the index's layout — one
-    * dynamic-partition append, ≤ 1 new file per touched dir (bounded by
-    * the batch, not the corpus). Same routing expressions as the build,
-    * so probes see appended rows identically. */
-  def appendToPhashIndex(spark: SparkSession, media: DataFrame,
-                         path: String): Unit =
-    phashBlocks(phashSignatures(spark, media))
-      .repartition(math.max(1, spark.sparkContext.defaultParallelism),
-        col("pb"))
+  /** The one `pb`-partitioned writer behind build, append and the
+    * streaming epoch: the kind's signature blocks, [[pbWriteTasks]]
+    * tasks, bval-sorted row groups (the probe pushes its candidate
+    * values as a bval filter, and parquet min/max stats skip the row
+    * groups a sorted layout keeps tight). `epoch` = Some(N) lands the
+    * rows under `pb=…/__batch=N` with DYNAMIC overwrite, so a replayed
+    * epoch rewrites exactly its own (pb, epoch) partitions; None writes
+    * the flat `pb=` layout with `mode`. */
+  private[graft] def writePhashBlocks(spark: SparkSession, kind: PhashKind,
+                                      media: DataFrame, path: String,
+                                      mode: String,
+                                      epoch: Option[Long]): Unit = {
+    val blocks = phashBlocks(kind, kind.signatures(spark, media))
+    val rows = epoch.fold(blocks)(b => blocks.withColumn("__batch", lit(b)))
+    val w = rows.repartition(pbWriteTasks(spark), col("pb"))
       .sortWithinPartitions(col("pb"), col("bval"))
-      .write.mode("append").partitionBy("pb").parquet(path)
+      .write.mode(mode)
+    (if (epoch.isDefined) w.option("partitionOverwriteMode", "dynamic")
+      .partitionBy("pb", "__batch")
+    else w.partitionBy("pb")).parquet(path)
+  }
+
+  /** Whether some `pb=<dir>/__batch=<epoch>` dir exists under the index
+    * root (`epoch` = "*" for any epoch): the streaming-ingest layout
+    * test. A driver-side glob over the tree's first two levels, no data
+    * read and no Spark job. */
+  private[graft] def pbEpochExists(spark: SparkSession, path: String,
+                                   epoch: String): Boolean = {
+    val pattern = new org.apache.hadoop.fs.Path(path, s"pb=*/__batch=$epoch")
+    val fs = pattern.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Option(fs.globStatus(pattern)).exists(_.nonEmpty)
+  }
 
   /**
-   * COMPACT the phash index's accumulated small files — every
+   * Persist a perceptual-hash INDEX over a media corpus — the
+   * cross-corpus media-dedup shape at 100 TB: each decoded payload's
+   * signature lands exploded per pigeonhole block, partitioned by
+   * [[phashBlocks]]' `pb` dir, so probing a fixed batch reads only the
+   * batch's candidate partitions (≤ 4 × batch distinct dirs of 256)
+   * while the corpus — and its binary payloads, which never enter the
+   * index at all — stays untouched. `kind` picks the signature
+   * ([[PhashKind]]); undecodable payloads index nothing.
+   */
+  def buildPhashIndex(spark: SparkSession, kind: PhashKind,
+                      media: DataFrame, path: String): Unit =
+    writePhashBlocks(spark, kind, media, path, "overwrite", epoch = None)
+
+  /** Append a media batch's signatures into the index's layout — one
+    * dynamic-partition append, ≤ 1 new file per touched dir (bounded by
+    * the batch, not the corpus). Same writer and routing as the build,
+    * so probes see appended rows identically. */
+  def appendToPhashIndex(spark: SparkSession, kind: PhashKind,
+                         media: DataFrame, path: String): Unit =
+    writePhashBlocks(spark, kind, media, path, "append", epoch = None)
+
+  /**
+   * COMPACT a phash index's accumulated small files — every
    * [[appendToPhashIndex]] (and every [[graft.streaming.StreamOps
    * .phashIngestTo]] epoch) adds ≤ 1 file per touched `pb` dir, and a
    * long-lived ingest path accumulates thousands (each a task + an
@@ -1205,43 +1313,43 @@ object Multimodal {
    * needs, via [[ParquetCompact]]'s staged-swap protocol (crash at any
    * window leaves a readable index; single-writer discipline like
    * every index mutator). Rows are untouched — probe results are
-   * bit-identical before and after.
+   * bit-identical before and after. Every kind compacts the same way:
+   * the rewrite never looks inside the signature columns.
    *
    * Both layouts compact: a flat batch-built/append-maintained index
    * keeps its `pb=` tree; a streaming-ingest index (epoch dirs nested
-   * INSIDE `pb=`) consolidates every epoch into the reserved
-   * `__batch=-1`, after which the ingest's own epochs resume from the
-   * stream's next micro-batch id ([[graft.streaming.StreamOps
-   * .phashIngestTo]] — epoch N overwrites only its own partition, so
-   * post-compaction writes cannot collide with the consolidated rows).
-   * Returns the compacted row count.
+   * INSIDE `pb=`, told apart by [[pbEpochExists]]) consolidates every
+   * epoch into the reserved `__batch=-1`, after which the ingest's own
+   * epochs resume from the stream's next micro-batch id — epoch N
+   * overwrites only its own partition, so post-compaction writes cannot
+   * collide with the consolidated rows. Returns the compacted row count.
    */
   def compactPhashIndex(spark: SparkSession, path: String): Long = {
-    val hasEpochs = spark.read.parquet(path).columns.contains("__batch")
-    if (hasEpochs)
-      ParquetCompact.rewritePartitionedMulti(spark, path,
-        Seq("pb", "__batch")) { df =>
-        df.withColumn("__batch", lit(-1L))
-          .repartition(col("pb"))
-          .sortWithinPartitions(col("pb"), col("bval"))
-      }
-    else
-      ParquetCompact.rewritePartitioned(spark, path, "pb") { df =>
-        df.repartition(col("pb"))
-          .sortWithinPartitions(col("pb"), col("bval"))
-      }
+    // heal a crashed earlier swap first: a renamed-away root would read
+    // as the flat layout
+    ParquetCompact.recoverTable(spark, path)
+    val epochs = pbEpochExists(spark, path, "*")
+    ParquetCompact.rewritePartitionedMulti(spark, path,
+      if (epochs) Seq("pb", "__batch") else Seq("pb")) { df =>
+      (if (epochs) df.withColumn("__batch", lit(-1L)) else df)
+        .repartition(col("pb"))
+        .sortWithinPartitions(col("pb"), col("bval"))
+    }
   }
 
   /**
-   * Dedup NEW media against the persisted index: decode + hash the
-   * batch, read ONLY its candidate `pb` partitions (explicit subdirs —
-   * the banded-index pruning device; ≤ 256 driver-side keys, metadata
-   * scale), join candidates on exact (block, value) and verify with the
-   * full 64-bit hamming. Returns (doc_id, corpus_id, hamming ≤
-   * maxHamming) — every corpus near-dup of every batch doc.
-   * `maxHamming` ≤ 3: the stored geometry is 4 blocks, sound up to 3.
+   * Dedup NEW media against the persisted index of the same `kind`:
+   * sign the batch, read ONLY its candidate `pb` partitions (explicit
+   * subdirs — the banded-index pruning device; ≤ 256 driver-side keys,
+   * metadata scale) with the batch's bvals pushed as a scan filter,
+   * join candidates on exact (block, value) and run the kind's verify.
+   * Returns every corpus near-dup of every batch doc within
+   * `maxHamming`: (doc_id, corpus_id, hamming) for [[PhashKind.Image]]
+   * and [[PhashKind.Audio]], (doc_id, corpus_id, n_frames, max_hamming)
+   * for [[PhashKind.Video]]. `maxHamming` ≤ 3: the stored geometry is 4
+   * blocks, sound up to 3.
    */
-  def phashDedupAgainst(spark: SparkSession, path: String,
+  def phashDedupAgainst(spark: SparkSession, kind: PhashKind, path: String,
                         newMedia: DataFrame,
                         maxHamming: Int = 3): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= 3,
@@ -1250,10 +1358,19 @@ object Multimodal {
     // renamed away — heal it BEFORE the existence check, or the probe
     // would silently read "no index" as "no duplicates"
     ParquetCompact.recoverTable(spark, path)
-    val sig = phashSignatures(spark, newMedia).localCheckpoint(false)
-    val pblocks = phashBlocks(sig)
-    val empty = sig.select(col("doc_id"), lit(0L).as("corpus_id"),
-      lit(0).cast("int").as("hamming")).limit(0)
+    val sig = kind.signatures(spark, newMedia).localCheckpoint(false)
+    val sigCols = sig.columns.filter(_ != "doc_id").toSeq
+    val pblocks = phashBlocks(kind, sig)
+    def probe(corpus: DataFrame): DataFrame =
+      kind.verify(corpus
+        .select((col("doc_id").as("corpus_id") +:
+          sigCols.map(c => col(c).as(s"__c_$c"))) ++
+          Seq(col("blk"), col("bval")): _*)
+        .join(pblocks.drop("pb"), Seq("blk", "bval")), maxHamming)
+        .distinct()
+    // built only when there is no index to read: every Dataset step
+    // runs the analyzer on the driver
+    lazy val empty = probe(pblocks).limit(0)
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) return empty
@@ -1268,251 +1385,9 @@ object Multimodal {
       .filter(fs.exists(_)).map(_.toString)
     if (dirs.isEmpty) return empty
     val bvals = keys.map(_.getLong(1)).distinct.toIndexedSeq
-    val corpus = spark.read.option("basePath", path)
+    probe(spark.read.option("basePath", path)
       .parquet(dirs.toIndexedSeq: _*)
-      .filter(col("bval").isin(bvals: _*))
-      .select(col("doc_id").as("corpus_id"), col("dhash").as("__ch"),
-        col("blk"), col("bval"))
-    corpus
-      .join(pblocks.select(col("doc_id"), col("dhash").as("__ph"),
-        col("blk"), col("bval")), Seq("blk", "bval"))
-      .select(col("doc_id"), col("corpus_id"),
-        expr("bit_count(__ph ^ __ch)").cast("int").as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-  }
-
-  // ------------------------------------------ persisted VIDEO phash index
-
-  /** One row per DECODED video: (doc_id, n_frames, sig) with `sig` the
-    * frame-ordered array of per-frame dHashes — the index's storable
-    * signature form (≤ maxFrames longs; a video with any undecodable
-    * sampled frame emits no row, the whole-video quarantine rule). */
-  private def videoSigRows(spark: SparkSession, media: DataFrame,
-                           maxFrames: Int): DataFrame =
-    videoPhashSignatures(spark, media, maxFrames)
-      .groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(struct(col("frame_idx"),
-        col("dhash")))).as("__s"))
-      .select(col("doc_id"),
-        size(col("__s")).cast("int").as("n_frames"),
-        transform(col("__s"), e => e.getField("dhash")).as("sig"))
-
-  /** Pigeonhole routing for whole-video signatures: blocks derive from
-    * FRAME 0's hash only — sound for the all-frames rule (every aligned
-    * frame within hamming ≤ 3 ⟹ frame 0 is, ⟹ frame 0 matches in some
-    * block) — and each exploded row CARRIES the full signature array,
-    * so verification reads nothing beyond the candidate rows (fetching
-    * "all frames of doc X" from a per-frame layout would be a corpus
-    * scan). Same 4 × 64 = 256 `pb` dir geometry as the image index. */
-  private def videoSigBlocks(rows: DataFrame): DataFrame =
-    rows.select(col("doc_id"), col("n_frames"), col("sig"),
-      posexplode(array((0 until 4).map(b =>
-        shiftrightunsigned(element_at(col("sig"), 1), b * 16)
-          .bitwiseAND(lit(0xFFFFL))): _*)).as(Seq("blk", "bval")))
-      .withColumn("pb",
-        (col("blk") * 64 + shiftright(col("bval"), 10)).cast("int"))
-
-  /** Persist a perceptual-hash index over a VIDEO corpus — signatures
-    * land exploded per frame-0 pigeonhole block with the same
-    * `pb`-partitioned, bval-sorted layout as [[buildPhashIndex]]; media
-    * bytes never enter the index (≤ maxFrames longs per video do). */
-  def buildVideoPhashIndex(spark: SparkSession, media: DataFrame,
-                           path: String, maxFrames: Int = 8): Unit =
-    videoSigBlocks(videoSigRows(spark, media, maxFrames))
-      .repartition(pbWriteTasks(spark), col("pb"))
-      .sortWithinPartitions(col("pb"), col("bval"))
-      .write.mode("overwrite").partitionBy("pb").parquet(path)
-
-  /** Append a video batch's signatures — same routing expressions as
-    * the build, ≤ 1 new file per touched dir (bounded by the batch). */
-  def appendToVideoPhashIndex(spark: SparkSession, media: DataFrame,
-                              path: String, maxFrames: Int = 8): Unit =
-    videoSigBlocks(videoSigRows(spark, media, maxFrames))
-      .repartition(math.max(1, spark.sparkContext.defaultParallelism),
-        col("pb"))
-      .sortWithinPartitions(col("pb"), col("bval"))
-      .write.mode("append").partitionBy("pb").parquet(path)
-
-  /** The signature-blocks composition for the streaming ingest (the
-    * [[phashBlocksOf]] device — StreamOps owns the epoch column). */
-  private[graft] def videoSigBlocksOf(spark: SparkSession,
-                                      media: DataFrame,
-                                      maxFrames: Int = 8): DataFrame =
-    videoSigBlocks(videoSigRows(spark, media, maxFrames))
-
-  /** Compact the video index's accumulated append files to one
-    * bval-sorted file per `pb` dir (probe bit-identical — same staged
-    * swap as [[compactPhashIndex]]); a streaming-ingest index (epoch
-    * dirs nested inside `pb=`) consolidates every epoch into the
-    * reserved `__batch=-1`. Returns the row count. */
-  def compactVideoPhashIndex(spark: SparkSession, path: String): Long = {
-    val hasEpochs = spark.read.parquet(path).columns.contains("__batch")
-    if (hasEpochs)
-      ParquetCompact.rewritePartitionedMulti(spark, path,
-        Seq("pb", "__batch")) { df =>
-        df.withColumn("__batch", lit(-1L))
-          .repartition(col("pb"))
-          .sortWithinPartitions(col("pb"), col("bval"))
-      }
-    else
-      ParquetCompact.rewritePartitioned(spark, path, "pb") { df =>
-        df.repartition(col("pb"))
-          .sortWithinPartitions(col("pb"), col("bval"))
-      }
-  }
-
-  /**
-   * Dedup NEW videos against the persisted index: decode + hash the
-   * batch, read ONLY its candidate `pb` partitions with the batch's
-   * bvals pushed as a scan filter (the [[phashDedupAgainst]] probe
-   * shape), join candidates on exact frame-0 (block, value), and
-   * verify the ALL-FRAMES rule entirely from the carried signature
-   * arrays: equal frame counts AND every aligned frame within
-   * `maxHamming`. Returns (doc_id, corpus_id, n_frames, max_hamming).
-   */
-  def videoPhashDedupAgainst(spark: SparkSession, path: String,
-                             newMedia: DataFrame, maxHamming: Int = 3,
-                             maxFrames: Int = 8): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 3,
-      s"the stored 4-block geometry is sound up to hamming 3, got $maxHamming")
-    ParquetCompact.recoverTable(spark, path)
-    val sig = videoSigRows(spark, newMedia, maxFrames)
-      .localCheckpoint(false)
-    val pblocks = videoSigBlocks(sig)
-    val empty = sig.select(col("doc_id"), lit(0L).as("corpus_id"),
-      lit(0).as("n_frames"), lit(0).as("max_hamming")).limit(0)
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return empty
-    val keys = pblocks.select(col("pb"), col("bval")).distinct().collect()
-    val pbs = keys.map(_.getInt(0)).distinct
-    val dirs = pbs.map(pb => new org.apache.hadoop.fs.Path(path, s"pb=$pb"))
-      .filter(fs.exists(_)).map(_.toString)
-    if (dirs.isEmpty) return empty
-    val bvals = keys.map(_.getLong(1)).distinct.toIndexedSeq
-    val corpus = spark.read.option("basePath", path)
-      .parquet(dirs.toIndexedSeq: _*)
-      .filter(col("bval").isin(bvals: _*))
-      .select(col("doc_id").as("corpus_id"),
-        col("n_frames").as("__cn"), col("sig").as("__cs"),
-        col("blk"), col("bval"))
-    corpus
-      .join(pblocks.select(col("doc_id"), col("n_frames"), col("sig"),
-        col("blk"), col("bval")), Seq("blk", "bval"))
-      .filter(col("n_frames") === col("__cn"))
-      .select(col("doc_id"), col("corpus_id"), col("n_frames"),
-        expr("aggregate(zip_with(sig, __cs, (a, b) -> bit_count(a ^ b)), " +
-          "0, (acc, x) -> greatest(acc, x))").cast("int")
-          .as("max_hamming"))
-      .distinct()
-      .filter(col("max_hamming") <= maxHamming)
-  }
-
-  // ------------------------------------------ persisted AUDIO phash index
-
-  /** Pigeonhole routing for audio envelope hashes — [[phashBlocks]]'
-    * geometry verbatim: the envelope hash is 64-bit like the image
-    * dHash, so the same 4 × 16-bit blocks and 256 `pb` dirs carry the
-    * hamming ≤ 3 soundness over unchanged. */
-  private def audioSigBlocks(sig: DataFrame): DataFrame =
-    sig.select(col("doc_id"), col("ehash"),
-      posexplode(array((0 until 4).map(b =>
-        shiftrightunsigned(col("ehash"), b * 16)
-          .bitwiseAND(lit(0xFFFFL))): _*)).as(Seq("blk", "bval")))
-      .withColumn("pb",
-        (col("blk") * 64 + shiftright(col("bval"), 10)).cast("int"))
-
-  /** The signature-blocks composition for the streaming ingest (the
-    * [[phashBlocksOf]] device — StreamOps owns the epoch column). */
-  private[graft] def audioSigBlocksOf(spark: SparkSession,
-                                      media: DataFrame): DataFrame =
-    audioSigBlocks(audioPhashSignatures(spark, media))
-
-  /** Persist a perceptual-hash index over an AUDIO corpus — the last
-    * modality without the build/append/compact/against/ingest
-    * lifecycle (image: [[buildPhashIndex]], video:
-    * [[buildVideoPhashIndex]]). Envelope hashes land exploded per
-    * pigeonhole block in the same `pb`-partitioned, bval-sorted layout;
-    * audio bytes never enter the index (8 bytes per decoded clip do).
-    * Undecodable payloads (stereo, MP3, truncated RIFF) index nothing. */
-  def buildAudioPhashIndex(spark: SparkSession, media: DataFrame,
-                           path: String): Unit =
-    audioSigBlocks(audioPhashSignatures(spark, media))
-      .repartition(pbWriteTasks(spark), col("pb"))
-      .sortWithinPartitions(col("pb"), col("bval"))
-      .write.mode("overwrite").partitionBy("pb").parquet(path)
-
-  /** Append an audio batch's signatures — same routing expressions as
-    * the build, ≤ 1 new file per touched dir (bounded by the batch). */
-  def appendToAudioPhashIndex(spark: SparkSession, media: DataFrame,
-                              path: String): Unit =
-    audioSigBlocks(audioPhashSignatures(spark, media))
-      .repartition(math.max(1, spark.sparkContext.defaultParallelism),
-        col("pb"))
-      .sortWithinPartitions(col("pb"), col("bval"))
-      .write.mode("append").partitionBy("pb").parquet(path)
-
-  /** Compact the audio index's accumulated append files to one
-    * bval-sorted file per `pb` dir (probe bit-identical — same staged
-    * swap as [[compactPhashIndex]]); a streaming-ingest index (epoch
-    * dirs nested inside `pb=`) consolidates every epoch into the
-    * reserved `__batch=-1`. Returns the row count. */
-  def compactAudioPhashIndex(spark: SparkSession, path: String): Long = {
-    val hasEpochs = spark.read.parquet(path).columns.contains("__batch")
-    if (hasEpochs)
-      ParquetCompact.rewritePartitionedMulti(spark, path,
-        Seq("pb", "__batch")) { df =>
-        df.withColumn("__batch", lit(-1L))
-          .repartition(col("pb"))
-          .sortWithinPartitions(col("pb"), col("bval"))
-      }
-    else
-      ParquetCompact.rewritePartitioned(spark, path, "pb") { df =>
-        df.repartition(col("pb"))
-          .sortWithinPartitions(col("pb"), col("bval"))
-      }
-  }
-
-  /**
-   * Dedup NEW audio against the persisted index: decode + envelope-hash
-   * the batch, read ONLY its candidate `pb` partitions with the batch's
-   * bvals pushed as a scan filter (the [[phashDedupAgainst]] probe
-   * shape), join candidates on exact (block, value) and verify with the
-   * full 64-bit hamming. Returns (doc_id, corpus_id, hamming ≤
-   * maxHamming). `maxHamming` ≤ 3: the stored 4-block geometry's bound.
-   */
-  def audioPhashDedupAgainst(spark: SparkSession, path: String,
-                             newMedia: DataFrame,
-                             maxHamming: Int = 3): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 3,
-      s"the stored 4-block geometry is sound up to hamming 3, got $maxHamming")
-    ParquetCompact.recoverTable(spark, path)
-    val sig = audioPhashSignatures(spark, newMedia).localCheckpoint(false)
-    val pblocks = audioSigBlocks(sig)
-    val empty = sig.select(col("doc_id"), lit(0L).as("corpus_id"),
-      lit(0).cast("int").as("hamming")).limit(0)
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return empty
-    val keys = pblocks.select(col("pb"), col("bval")).distinct().collect()
-    val pbs = keys.map(_.getInt(0)).distinct
-    val dirs = pbs.map(pb => new org.apache.hadoop.fs.Path(path, s"pb=$pb"))
-      .filter(fs.exists(_)).map(_.toString)
-    if (dirs.isEmpty) return empty
-    val bvals = keys.map(_.getLong(1)).distinct.toIndexedSeq
-    val corpus = spark.read.option("basePath", path)
-      .parquet(dirs.toIndexedSeq: _*)
-      .filter(col("bval").isin(bvals: _*))
-      .select(col("doc_id").as("corpus_id"), col("ehash").as("__ch"),
-        col("blk"), col("bval"))
-    corpus
-      .join(pblocks.select(col("doc_id"), col("ehash").as("__ph"),
-        col("blk"), col("bval")), Seq("blk", "bval"))
-      .select(col("doc_id"), col("corpus_id"),
-        expr("bit_count(__ph ^ __ch)").cast("int").as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
+      .filter(col("bval").isin(bvals: _*)))
   }
 
   /**

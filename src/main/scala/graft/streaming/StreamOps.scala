@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.functions.{Bloom, Dedup, Similarity}
+import graft.functions.Multimodal.PhashKind
 
 /**
  * Streaming relational capabilities over the changeset/event stream —
@@ -1610,16 +1611,15 @@ object StreamOps {
                                      nested: Boolean = false): Boolean = {
     if (compactEvery <= 0 || batchId <= 0 || batchId % compactEvery != 0)
       return false
-    val root = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val replayed =
-      if (!nested)
-        fs.exists(new org.apache.hadoop.fs.Path(
-          s"$indexPath/lists/__batch=$batchId"))
-      else fs.exists(root) && fs.listStatus(root).exists { st =>
-        st.isDirectory && st.getPath.getName.startsWith("pb=") &&
-          fs.exists(new org.apache.hadoop.fs.Path(st.getPath,
-            s"__batch=$batchId"))
+      if (nested)
+        graft.functions.Multimodal.pbEpochExists(spark, indexPath,
+          batchId.toString)
+      else {
+        val lists = new org.apache.hadoop.fs.Path(
+          s"$indexPath/lists/__batch=$batchId")
+        lists.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .exists(lists)
       }
     !replayed
   }
@@ -1821,8 +1821,9 @@ object StreamOps {
   }
 
   /**
-   * Streaming PERCEPTUAL media dedup against a frozen persisted phash
-   * index ([[graft.functions.Multimodal.buildPhashIndex]]) —
+   * Streaming PERCEPTUAL image dedup against a frozen persisted
+   * [[PhashKind.Image]] phash index
+   * ([[graft.functions.Multimodal.buildPhashIndex]]) —
    * [[embedDedupTo]]'s media form: each arriving payload decodes,
    * hashes, and gets a verdict row `(doc_id, dup_of, hamming,
    * admitted)` — its NEAREST corpus near-dup within `maxHamming`
@@ -1844,8 +1845,8 @@ object StreamOps {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val b = batch.dropDuplicates("doc_id").localCheckpoint(false)
-        val best = Multimodal.phashDedupAgainst(spark, indexPath, b,
-          maxHamming)
+        val best = Multimodal.phashDedupAgainst(spark, PhashKind.Image,
+          indexPath, b, maxHamming)
           .groupBy(col("doc_id"))
           .agg(min(struct(col("hamming"), col("corpus_id"))).as("__b"))
           .select(col("doc_id"), col("__b.corpus_id").as("dup_of"),
@@ -1861,13 +1862,14 @@ object StreamOps {
   }
 
   /**
-   * ONLINE maintenance of the persisted phash index — the streaming
-   * twin of [[graft.functions.Multimodal.appendToPhashIndex]], with the
-   * epoch idempotence the batch append cannot give (mode-append on a
+   * ONLINE maintenance of a persisted phash index of any
+   * [[PhashKind]] — the streaming twin of
+   * [[graft.functions.Multimodal.appendToPhashIndex]], with the epoch
+   * idempotence the batch append cannot give (mode-append on a
    * crash-replayed micro-batch would double its rows; duplicated index
    * rows are harmless to pair correctness — candidates re-distinct —
    * but grow the index and its probe cost without bound across
-   * replays). Each epoch's exploded hash blocks land under
+   * replays). Each epoch's signature blocks land under
    * `pb=<dir>/__batch=<epoch>/` with DYNAMIC partition overwrite, so a
    * replayed batch rewrites exactly its own (pb, epoch) partitions —
    * the `__batch` dirs nest INSIDE the `pb` dirs (unlike the IVF/dedup
@@ -1881,32 +1883,19 @@ object StreamOps {
    * micro-batch ids start at 0). Probes work unchanged — the extra
    * `__batch` partition column is ignored by the probe's explicit
    * selects, and the pushed bval filter skips row groups exactly as in
-   * the flat layout (each epoch file is bval-sorted). Compact with
-   * [[graft.functions.Multimodal.compactPhashIndex]], which
-   * consolidates every epoch into `__batch=-1`.
+   * the flat layout (each epoch file is bval-sorted). Every
+   * `compactEvery` epochs (0 = never) the accumulated epochs
+   * consolidate into `__batch=-1` through
+   * [[graft.functions.Multimodal.compactPhashIndex]], which can also be
+   * run on its own.
    */
-  def phashIngestTo(media: DataFrame, indexPath: String, checkpoint: String,
-                    availableNow: Boolean = true,
+  def phashIngestTo(kind: PhashKind, media: DataFrame, indexPath: String,
+                    checkpoint: String, availableNow: Boolean = true,
                     compactEvery: Int = 0): StreamingQuery = {
     val writer = media.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // ONLINE COMPACTION (round-15): a long-lived ingest accumulates
-        // one file per touched dir per epoch; every `compactEvery`
-        // epochs the accumulated epochs consolidate into `__batch=-1`
-        // — inside the foreachBatch body (single-writer fence) and
-        // BEFORE this epoch's write, so a crash-replayed epoch
-        // overwrites its own fresh dir instead of duplicating rows the
-        // compaction just consolidated. Probe results are bit-identical
-        // across compactions (Round14OpsSpec). shouldCompactAt skips
-        // the pass when this epoch already landed: a replayed boundary
-        // epoch must not fold its own crashed rows into -1 before
-        // re-landing them (round-15 advice).
-        if (shouldCompactAt(batch.sparkSession, indexPath, batchId,
-            compactEvery, nested = true))
-          graft.functions.Multimodal.compactPhashIndex(
-            batch.sparkSession, indexPath)
-        phashIngestEpoch(batch, batchId, indexPath)
+        phashIngestEpoch(kind, batch, batchId, indexPath, compactEvery)
       }
     (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer)
       .start()
@@ -1914,124 +1903,36 @@ object StreamOps {
 
   /** Seed a streaming phash index from a batch corpus — the reserved
     * `__batch=-1` epoch ([[ivfIngestBootstrap]]'s device). */
-  def phashIngestBootstrap(spark: org.apache.spark.sql.SparkSession,
-                           media: DataFrame, indexPath: String): Unit =
-    phashIngestEpoch(media, -1L, indexPath)
+  def phashIngestBootstrap(kind: PhashKind, media: DataFrame,
+                           indexPath: String): Unit =
+    phashIngestEpoch(kind, media, -1L, indexPath, compactEvery = 0)
 
   /** One epoch of [[phashIngestTo]] — factored out so the
     * replay-idempotence contract is directly testable: same
     * (batch, batchId) twice ≡ once. The epoch's partition set is
-    * deterministic from the batch's bytes (hashes are pure functions of
-    * content), so a replay's dynamic overwrite hits exactly the first
-    * attempt's (pb, __batch) dirs. */
-  private[graft] def phashIngestEpoch(batch: DataFrame, batchId: Long,
-                                      indexPath: String): Unit = {
+    * deterministic from the batch's bytes (signatures are pure
+    * functions of content), so a replay's dynamic overwrite hits
+    * exactly the first attempt's (pb, __batch) dirs.
+    *
+    * ONLINE COMPACTION: a long-lived ingest accumulates one file per
+    * touched dir per epoch; on a `compactEvery` boundary the
+    * accumulated epochs consolidate into `__batch=-1` — inside the
+    * foreachBatch body (single-writer fence) and BEFORE this epoch's
+    * write, so a crash-replayed epoch overwrites its own fresh dir
+    * instead of duplicating rows the compaction just consolidated.
+    * [[shouldCompactAt]] skips the pass when this epoch already landed:
+    * a replayed boundary epoch must not fold its own crashed rows into
+    * -1 before re-landing them. */
+  private[graft] def phashIngestEpoch(kind: PhashKind, batch: DataFrame,
+                                      batchId: Long, indexPath: String,
+                                      compactEvery: Int): Unit = {
     import graft.functions.Multimodal
     val spark = batch.sparkSession
-    Multimodal.phashBlocksOf(Multimodal.phashSignatures(spark, batch))
-      .withColumn("__batch", lit(batchId))
-      .repartition(math.max(1, spark.sparkContext.defaultParallelism),
-        col("pb"))
-      .sortWithinPartitions(col("pb"), col("bval"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("pb", "__batch")
-      .parquet(indexPath)
-  }
-
-  /** The video twin of [[phashIngestTo]]: per micro-batch, decode +
-    * hash the epoch's videos and land their signature blocks under
-    * `pb=…/__batch=N` with dynamic overwrite — same epoch-idempotence
-    * contract, same probe compatibility ([[graft.functions.Multimodal
-    * .videoPhashDedupAgainst]] projects the epoch column away), same
-    * [[graft.functions.Multimodal.compactVideoPhashIndex]]
-    * consolidation. */
-  def videoPhashIngestTo(media: DataFrame, indexPath: String,
-                         checkpoint: String, maxFrames: Int = 8,
-                         availableNow: Boolean = true,
-                         compactEvery: Int = 0): StreamingQuery = {
-    val writer = media.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // periodic consolidation, see phashIngestTo (incl. replay skip)
-        if (shouldCompactAt(batch.sparkSession, indexPath, batchId,
-            compactEvery, nested = true))
-          graft.functions.Multimodal.compactVideoPhashIndex(
-            batch.sparkSession, indexPath)
-        videoPhashIngestEpoch(batch, batchId, indexPath, maxFrames)
-      }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer)
-      .start()
-  }
-
-  /** Seed a streaming video phash index from a batch corpus — the
-    * reserved `__batch=-1` epoch. */
-  def videoPhashIngestBootstrap(spark: org.apache.spark.sql.SparkSession,
-                                media: DataFrame, indexPath: String,
-                                maxFrames: Int = 8): Unit =
-    videoPhashIngestEpoch(media, -1L, indexPath, maxFrames)
-
-  private[graft] def videoPhashIngestEpoch(batch: DataFrame, batchId: Long,
-                                           indexPath: String,
-                                           maxFrames: Int): Unit = {
-    import graft.functions.Multimodal
-    val spark = batch.sparkSession
-    Multimodal.videoSigBlocksOf(spark, batch, maxFrames)
-      .withColumn("__batch", lit(batchId))
-      .repartition(math.max(1, spark.sparkContext.defaultParallelism),
-        col("pb"))
-      .sortWithinPartitions(col("pb"), col("bval"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("pb", "__batch")
-      .parquet(indexPath)
-  }
-
-  /** The audio twin of [[phashIngestTo]]: per micro-batch, decode +
-    * envelope-hash the epoch's clips and land their signature blocks
-    * under `pb=…/__batch=N` with dynamic overwrite — same
-    * epoch-idempotence contract, same probe compatibility
-    * ([[graft.functions.Multimodal.audioPhashDedupAgainst]] projects
-    * the epoch column away), same [[graft.functions.Multimodal
-    * .compactAudioPhashIndex]] consolidation. */
-  def audioPhashIngestTo(media: DataFrame, indexPath: String,
-                         checkpoint: String,
-                         availableNow: Boolean = true,
-                         compactEvery: Int = 0): StreamingQuery = {
-    val writer = media.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // periodic consolidation, see phashIngestTo (incl. replay skip)
-        if (shouldCompactAt(batch.sparkSession, indexPath, batchId,
-            compactEvery, nested = true))
-          graft.functions.Multimodal.compactAudioPhashIndex(
-            batch.sparkSession, indexPath)
-        audioPhashIngestEpoch(batch, batchId, indexPath)
-      }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer)
-      .start()
-  }
-
-  /** Seed a streaming audio phash index from a batch corpus — the
-    * reserved `__batch=-1` epoch. */
-  def audioPhashIngestBootstrap(spark: org.apache.spark.sql.SparkSession,
-                                media: DataFrame,
-                                indexPath: String): Unit =
-    audioPhashIngestEpoch(media, -1L, indexPath)
-
-  private[graft] def audioPhashIngestEpoch(batch: DataFrame, batchId: Long,
-                                           indexPath: String): Unit = {
-    import graft.functions.Multimodal
-    val spark = batch.sparkSession
-    Multimodal.audioSigBlocksOf(spark, batch)
-      .withColumn("__batch", lit(batchId))
-      .repartition(math.max(1, spark.sparkContext.defaultParallelism),
-        col("pb"))
-      .sortWithinPartitions(col("pb"), col("bval"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("pb", "__batch")
-      .parquet(indexPath)
+    if (shouldCompactAt(spark, indexPath, batchId, compactEvery,
+        nested = true))
+      Multimodal.compactPhashIndex(spark, indexPath)
+    Multimodal.writePhashBlocks(spark, kind, batch, indexPath, "overwrite",
+      Some(batchId))
   }
 
   /**

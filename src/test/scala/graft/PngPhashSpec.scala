@@ -256,8 +256,10 @@ class PngPhashSpec extends AnyFunSuite {
 
     val built = java.nio.file.Files.createTempDirectory("graft-phidx")
       .toString + "/idx"
-    Multimodal.buildPhashIndex(spark, corpus, built)
-    val got = pairsOf(Multimodal.phashDedupAgainst(spark, built, probes))
+    Multimodal.buildPhashIndex(spark, Multimodal.PhashKind.Image, corpus,
+      built)
+    val got = pairsOf(Multimodal.phashDedupAgainst(spark,
+      Multimodal.PhashKind.Image, built, probes))
 
     // brute force over the two signature sets
     val cs = Multimodal.phashSignatures(spark, corpus)
@@ -273,22 +275,24 @@ class PngPhashSpec extends AnyFunSuite {
     // build-half + append-half lands the identical layout
     val appended = java.nio.file.Files.createTempDirectory("graft-phidx-a")
       .toString + "/idx"
-    Multimodal.buildPhashIndex(spark,
+    Multimodal.buildPhashIndex(spark, Multimodal.PhashKind.Image,
       corpus.filter(col("doc_id") % 2 === 0), appended)
-    Multimodal.appendToPhashIndex(spark,
+    Multimodal.appendToPhashIndex(spark, Multimodal.PhashKind.Image,
       corpus.filter(col("doc_id") % 2 === 1), appended)
     assert(pairsOf(
-      Multimodal.phashDedupAgainst(spark, appended, probes)) == want)
+      Multimodal.phashDedupAgainst(spark, Multimodal.PhashKind.Image,
+        appended, probes)) == want)
 
     // edges: missing index → empty with the contract schema; a batch of
     // only undecodable payloads probes nothing
     val gone = pairsOf(Multimodal.phashDedupAgainst(spark,
-      built + "_nonexistent", probes))
+      Multimodal.PhashKind.Image, built + "_nonexistent", probes))
     assert(gone.isEmpty)
     val corrupt = Multimodal.phashFixtureMedia(spark,
       Seq(11L, 22L).toDF("doc_id"), groups = 25)
     assert(pairsOf(
-      Multimodal.phashDedupAgainst(spark, built, corrupt)).isEmpty)
+      Multimodal.phashDedupAgainst(spark, Multimodal.PhashKind.Image,
+        built, corrupt)).isEmpty)
 
     // pruning: a one-doc probe batch must leave most partition dirs
     // unread — proxy: its candidate pb set is ≤ 4 dirs of the layout's

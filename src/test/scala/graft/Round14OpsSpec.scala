@@ -6,12 +6,13 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.{Multimodal, Similarity}
+import graft.functions.Multimodal.PhashKind
 import graft.functions.Similarity.IvfDriftStats
 import graft.streaming.StreamOps
 
 /** Round-14: regression specs for the round-13 advice items and the
   * round's new lifecycle machinery (phash index compaction + streaming
-  * ingest). */
+  * ingest; the ingest over every phash kind is in [[PhashIngestSpec]]). */
 class Round14OpsSpec extends AnyFunSuite {
   import SparkTestSession._
   import spark.implicits._
@@ -27,7 +28,7 @@ class Round14OpsSpec extends AnyFunSuite {
       (0L until 90L).map(_ + 10000L).toDF("doc_id"), groups = 25)
 
   private def phPairs(path: String): Set[(Long, Long, Int)] =
-    Multimodal.phashDedupAgainst(spark, path, phProbes)
+    Multimodal.phashDedupAgainst(spark, PhashKind.Image, path, phProbes)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
 
   private def dataFilesPerDir(root: String, prefix: String): Map[String, Int] =
@@ -46,9 +47,9 @@ class Round14OpsSpec extends AnyFunSuite {
   test("compactPhashIndex: flat layout compacts to one file per pb dir " +
     "with bit-identical probes") {
     val idx = Files.createTempDirectory("graft-phc").toString + "/idx"
-    Multimodal.buildPhashIndex(spark, phMedia(0L, 60L), idx)
-    Multimodal.appendToPhashIndex(spark, phMedia(60L, 75L), idx)
-    Multimodal.appendToPhashIndex(spark, phMedia(75L, 90L), idx)
+    Multimodal.buildPhashIndex(spark, PhashKind.Image, phMedia(0L, 60L), idx)
+    Multimodal.appendToPhashIndex(spark, PhashKind.Image, phMedia(60L, 75L), idx)
+    Multimodal.appendToPhashIndex(spark, PhashKind.Image, phMedia(75L, 90L), idx)
     val before = phPairs(idx)
     assert(before.nonEmpty)
     assert(dataFilesPerDir(idx, "pb=").values.exists(_ > 1),
@@ -62,7 +63,7 @@ class Round14OpsSpec extends AnyFunSuite {
 
   test("phash probe heals a compaction crash (live root renamed away)") {
     val idx = Files.createTempDirectory("graft-phcr").toString + "/idx"
-    Multimodal.buildPhashIndex(spark, phMedia(0L, 90L), idx)
+    Multimodal.buildPhashIndex(spark, PhashKind.Image, phMedia(0L, 90L), idx)
     val want = phPairs(idx)
     // simulate a crash between the two swap renames: live root gone,
     // __compact_old holds the only copy
@@ -78,19 +79,19 @@ class Round14OpsSpec extends AnyFunSuite {
     "replay idempotent; compaction consolidates epochs") {
     // flat reference
     val flat = Files.createTempDirectory("graft-phf").toString + "/idx"
-    Multimodal.buildPhashIndex(spark, phMedia(0L, 90L), flat)
+    Multimodal.buildPhashIndex(spark, PhashKind.Image, phMedia(0L, 90L), flat)
     val want = phPairs(flat)
     assert(want.nonEmpty)
 
     // bootstrap 0..60, stream 60..75 and 75..90 as separate epochs
     val idx = Files.createTempDirectory("graft-phi").toString + "/idx"
-    StreamOps.phashIngestBootstrap(spark, phMedia(0L, 60L), idx)
+    StreamOps.phashIngestBootstrap(PhashKind.Image, phMedia(0L, 60L), idx)
     val in = Files.createTempDirectory("graft-phin").toString
     val schema = phMedia(0L, 1L).schema
     phMedia(60L, 75L).coalesce(1).write.mode("append").parquet(in)
     Thread.sleep(1100) // distinct mtimes: FileStreamSource orders by modTime
     phMedia(75L, 90L).coalesce(1).write.mode("append").parquet(in)
-    val q = StreamOps.phashIngestTo(
+    val q = StreamOps.phashIngestTo(PhashKind.Image,
       spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
         .parquet(in),
       idx, Files.createTempDirectory("graft-phick").toString)
@@ -99,7 +100,8 @@ class Round14OpsSpec extends AnyFunSuite {
 
     // crash-replay: re-running an epoch overwrites, never doubles
     val rowsBefore = spark.read.parquet(idx).count()
-    StreamOps.phashIngestEpoch(phMedia(75L, 90L), 1L, idx)
+    StreamOps.phashIngestEpoch(PhashKind.Image, phMedia(75L, 90L), 1L, idx,
+      compactEvery = 0)
     assert(spark.read.parquet(idx).count() == rowsBefore,
       "replayed epoch must overwrite its own partitions only")
     assert(phPairs(idx) == want)
@@ -117,9 +119,10 @@ class Round14OpsSpec extends AnyFunSuite {
 
     // post-compaction epochs resume cleanly (new batch id lands beside
     // the consolidated -1 without touching it)
-    StreamOps.phashIngestEpoch(phMedia(90L, 100L), 2L, idx)
+    StreamOps.phashIngestEpoch(PhashKind.Image, phMedia(90L, 100L), 2L, idx,
+      compactEvery = 0)
     val flat2 = Files.createTempDirectory("graft-phf2").toString + "/idx"
-    Multimodal.buildPhashIndex(spark, phMedia(0L, 100L), flat2)
+    Multimodal.buildPhashIndex(spark, PhashKind.Image, phMedia(0L, 100L), flat2)
     assert(phPairs(idx) == phPairs(flat2),
       "post-compaction ingest must extend the consolidated corpus")
   }

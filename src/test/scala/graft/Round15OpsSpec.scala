@@ -7,10 +7,11 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.{Multimodal, Similarity}
+import graft.functions.Multimodal.PhashKind
 import graft.streaming.StreamOps
 
-/** Round-15: the persisted AUDIO phash index lifecycle (the last
-  * modality to get build/append/compact/against/ingest) and the
+/** Round-15: the persisted AUDIO phash index (build/append/compact/
+  * against; its streaming ingest is in [[PhashIngestSpec]]) and the
   * residual IVF-PQ snapshot EXTENSION for cells born after addPq
   * (round-14 advice: the raw-code fallback's mis-scaled ADC could
   * misrank fresh-cell neighbors out of a finite rerank budget). */
@@ -29,7 +30,7 @@ class Round15OpsSpec extends AnyFunSuite {
       (0L until 90L).map(_ + 10000L).toDF("doc_id"), groups = 25)
 
   private def auPairs(path: String): Set[(Long, Long, Int)] =
-    Multimodal.audioPhashDedupAgainst(spark, path, auProbes)
+    Multimodal.phashDedupAgainst(spark, PhashKind.Audio, path, auProbes)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
 
   private def dataFilesPerDir(root: String, prefix: String): Map[String, Int] =
@@ -48,21 +49,21 @@ class Round15OpsSpec extends AnyFunSuite {
   test("audio phash index: append ≡ build, compaction bit-identical, " +
     "crash heal") {
     val flat = Files.createTempDirectory("graft-auf").toString + "/idx"
-    Multimodal.buildAudioPhashIndex(spark, auMedia(0L, 90L), flat)
+    Multimodal.buildPhashIndex(spark, PhashKind.Audio, auMedia(0L, 90L), flat)
     val want = auPairs(flat)
     assert(want.nonEmpty)
 
     // build-half + two appends probe ≡ the one-shot build
     val idx = Files.createTempDirectory("graft-aua").toString + "/idx"
-    Multimodal.buildAudioPhashIndex(spark, auMedia(0L, 60L), idx)
-    Multimodal.appendToAudioPhashIndex(spark, auMedia(60L, 75L), idx)
-    Multimodal.appendToAudioPhashIndex(spark, auMedia(75L, 90L), idx)
+    Multimodal.buildPhashIndex(spark, PhashKind.Audio, auMedia(0L, 60L), idx)
+    Multimodal.appendToPhashIndex(spark, PhashKind.Audio, auMedia(60L, 75L), idx)
+    Multimodal.appendToPhashIndex(spark, PhashKind.Audio, auMedia(75L, 90L), idx)
     assert(auPairs(idx) == want, "append layout must probe ≡ flat build")
     assert(dataFilesPerDir(idx, "pb=").values.exists(_ > 1),
       "appends must have produced multi-file dirs for compaction to bite")
 
     // compaction: one file per pb dir, probes bit-identical
-    val n = Multimodal.compactAudioPhashIndex(spark, idx)
+    val n = Multimodal.compactPhashIndex(spark, idx)
     assert(n > 0)
     assert(auPairs(idx) == want, "compaction changed probe results")
     assert(dataFilesPerDir(idx, "pb=").values.forall(_ == 1))
@@ -75,51 +76,6 @@ class Round15OpsSpec extends AnyFunSuite {
       new org.apache.hadoop.fs.Path(idx + ".__compact_old")))
     assert(auPairs(idx) == want,
       "probe must recover the renamed-away index, not return empty")
-  }
-
-  test("audioPhashIngestTo: bootstrap + streamed epochs probe ≡ flat " +
-    "build; replay idempotent; compaction consolidates; ingest resumes") {
-    val flat = Files.createTempDirectory("graft-auif").toString + "/idx"
-    Multimodal.buildAudioPhashIndex(spark, auMedia(0L, 90L), flat)
-    val want = auPairs(flat)
-    assert(want.nonEmpty)
-
-    val idx = Files.createTempDirectory("graft-aui").toString + "/idx"
-    StreamOps.audioPhashIngestBootstrap(spark, auMedia(0L, 60L), idx)
-    val in = Files.createTempDirectory("graft-auin").toString
-    val schema = auMedia(0L, 1L).schema
-    auMedia(60L, 75L).coalesce(1).write.mode("append").parquet(in)
-    Thread.sleep(1100) // distinct mtimes: FileStreamSource orders by modTime
-    auMedia(75L, 90L).coalesce(1).write.mode("append").parquet(in)
-    val q = StreamOps.audioPhashIngestTo(
-      spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-        .parquet(in),
-      idx, Files.createTempDirectory("graft-auick").toString)
-    q.awaitTermination()
-    assert(auPairs(idx) == want, "streamed index must probe ≡ flat build")
-
-    // crash-replay: re-running an epoch overwrites, never doubles
-    val rowsBefore = spark.read.parquet(idx).count()
-    StreamOps.audioPhashIngestEpoch(auMedia(75L, 90L), 1L, idx)
-    assert(spark.read.parquet(idx).count() == rowsBefore,
-      "replayed epoch must overwrite its own partitions only")
-    assert(auPairs(idx) == want)
-
-    // compaction consolidates epochs into __batch=-1, probe unchanged
-    val n = Multimodal.compactAudioPhashIndex(spark, idx)
-    assert(n == rowsBefore)
-    assert(auPairs(idx) == want, "post-compaction probe changed")
-    val batches = spark.read.parquet(idx)
-      .select(col("__batch").cast("long")).distinct()
-      .collect().map(_.getLong(0)).toSet
-    assert(batches == Set(-1L), s"epochs must consolidate, got $batches")
-
-    // post-compaction epochs resume cleanly beside the consolidated -1
-    StreamOps.audioPhashIngestEpoch(auMedia(90L, 100L), 2L, idx)
-    val flat2 = Files.createTempDirectory("graft-auif2").toString + "/idx"
-    Multimodal.buildAudioPhashIndex(spark, auMedia(0L, 100L), flat2)
-    assert(auPairs(idx) == auPairs(flat2),
-      "post-compaction ingest must extend the consolidated corpus")
   }
 
   // ---- residual IVF-PQ: cells born after the snapshot --------------
@@ -364,21 +320,21 @@ class Round15OpsSpec extends AnyFunSuite {
     val phProbes = Multimodal.phashFixtureMedia(spark,
       (0L until 90L).map(_ + 10000L).toDF("doc_id"), groups = 25)
     def pairs(path: String) =
-      Multimodal.phashDedupAgainst(spark, path, phProbes)
+      Multimodal.phashDedupAgainst(spark, PhashKind.Image, path, phProbes)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     val flat = Files.createTempDirectory("graft-phmf").toString + "/idx"
-    Multimodal.buildPhashIndex(spark, phMedia(0L, 90L), flat)
+    Multimodal.buildPhashIndex(spark, PhashKind.Image, phMedia(0L, 90L), flat)
     val want = pairs(flat)
     assert(want.nonEmpty)
     val idx = Files.createTempDirectory("graft-phm").toString + "/idx"
-    StreamOps.phashIngestBootstrap(spark, phMedia(0L, 45L), idx)
+    StreamOps.phashIngestBootstrap(PhashKind.Image, phMedia(0L, 45L), idx)
     val in = Files.createTempDirectory("graft-phmin").toString
     val schema = phMedia(0L, 1L).schema
     Seq((45L, 60L), (60L, 75L), (75L, 90L)).foreach { case (a, b) =>
       phMedia(a, b).coalesce(1).write.mode("append").parquet(in)
       Thread.sleep(1100)
     }
-    val q = StreamOps.phashIngestTo(
+    val q = StreamOps.phashIngestTo(PhashKind.Image,
       spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
         .parquet(in),
       idx, Files.createTempDirectory("graft-phmck").toString,

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.{Bpe, Multimodal, Similarity}
+import graft.functions.Multimodal.PhashKind
 import graft.streaming.StreamOps
 
 /** Round-16: the ADVICE fixes — (1) the periodic-compaction replay
@@ -87,12 +88,13 @@ class Round16OpsSpec extends AnyFunSuite {
     val media = Multimodal.audioPhashFixtureMedia(spark,
       (0L until 20L).toDF("doc_id"), groups = 5)
     val idx = Files.createTempDirectory("graft-cprn").toString + "/idx"
-    StreamOps.audioPhashIngestBootstrap(spark, media, idx)
+    StreamOps.phashIngestBootstrap(PhashKind.Audio, media, idx)
     // bootstrap landed only __batch=-1: epoch 2 is fresh → compact
     assert(StreamOps.shouldCompactAt(spark, idx, 2L, 2, nested = true))
-    StreamOps.audioPhashIngestEpoch(
+    StreamOps.phashIngestEpoch(PhashKind.Audio,
       Multimodal.audioPhashFixtureMedia(spark,
-        (20L until 30L).toDF("doc_id"), groups = 5), 2L, idx)
+        (20L until 30L).toDF("doc_id"), groups = 5), 2L, idx,
+      compactEvery = 0)
     // the epoch dirs nest INSIDE pb= dirs — the nested probe must see
     // them (the flat probe would not)
     assert(!StreamOps.shouldCompactAt(spark, idx, 2L, 2, nested = true),

@@ -1470,7 +1470,8 @@ class StreamOpsSpec extends AnyFunSuite {
     val corpus = Multimodal.phashFixtureMedia(spark,
       (0L until 90L).toDF("doc_id"), groups = 25)
     val idx = Files.createTempDirectory("graft-ph-idx").toString + "/idx"
-    Multimodal.buildPhashIndex(spark, corpus, idx)
+    Multimodal.buildPhashIndex(spark, Multimodal.PhashKind.Image, corpus,
+      idx)
     def idxFiles = {
       def walk(f: java.io.File): Int =
         if (f.isFile) 1
@@ -1511,8 +1512,8 @@ class StreamOpsSpec extends AnyFunSuite {
     assert(got.size == 3, s"$got")
     // the dup's verdict equals the batch probe's nearest (min hamming,
     // ties to the smallest corpus id)
-    val want = Multimodal.phashDedupAgainst(spark, idx,
-      batch.filter(col("doc_id") === 10001L))
+    val want = Multimodal.phashDedupAgainst(spark,
+      Multimodal.PhashKind.Image, idx, batch.filter(col("doc_id") === 10001L))
       .orderBy(col("hamming"), col("corpus_id")).limit(1)
       .collect().map(r => r.getLong(1)).headOption
     assert(want.isDefined)

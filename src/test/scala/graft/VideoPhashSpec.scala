@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.{JpegCodec, Multimodal, PngCodec}
+import graft.functions.Multimodal.PhashKind
 
 /** Video perceptual near-dup vs a plain-Scala model: the engine must
   * recover every frame hash through container walk → mdat → JPEG frame
@@ -152,9 +153,10 @@ class VideoPhashSpec extends AnyFunSuite {
       ids.toDF("doc_id"), groups)
     val probes = Multimodal.videoPhashFixtureMedia(spark,
       ids.map(_ + 10000L).toDF("doc_id"), groups)
-    Multimodal.buildVideoPhashIndex(spark, corpus, path)
+    Multimodal.buildPhashIndex(spark, PhashKind.Video(8), corpus, path)
     val got = probeRows(
-      Multimodal.videoPhashDedupAgainst(spark, path, probes, 3))
+      Multimodal.phashDedupAgainst(spark, PhashKind.Video(8), path,
+        probes, 3))
     val want = bruteForceCross(expectedHashes(ids.map(_ + 10000L)),
       expectedHashes(ids), 3)
     assert(got == want)
@@ -171,15 +173,16 @@ class VideoPhashSpec extends AnyFunSuite {
       ids.toDF("doc_id"), groups).localCheckpoint()
     val probes = Multimodal.videoPhashFixtureMedia(spark,
       ids.map(_ + 10000L).toDF("doc_id"), groups).localCheckpoint()
-    Multimodal.buildVideoPhashIndex(spark,
+    Multimodal.buildPhashIndex(spark, PhashKind.Video(8),
       corpus.filter(col("doc_id") % 3 === 0), pathA)
-    Multimodal.appendToVideoPhashIndex(spark,
+    Multimodal.appendToPhashIndex(spark, PhashKind.Video(8),
       corpus.filter(col("doc_id") % 3 === 1), pathA)
-    Multimodal.appendToVideoPhashIndex(spark,
+    Multimodal.appendToPhashIndex(spark, PhashKind.Video(8),
       corpus.filter(col("doc_id") % 3 === 2), pathA)
-    Multimodal.buildVideoPhashIndex(spark, corpus, pathB)
+    Multimodal.buildPhashIndex(spark, PhashKind.Video(8), corpus, pathB)
     def probe(p: String) = probeRows(
-      Multimodal.videoPhashDedupAgainst(spark, p, probes, 3))
+      Multimodal.phashDedupAgainst(spark, PhashKind.Video(8), p,
+        probes, 3))
     val fresh = probe(pathB)
     assert(probe(pathA) == fresh)
     def files(p: String): Int = {
@@ -189,7 +192,7 @@ class VideoPhashSpec extends AnyFunSuite {
       walk(new java.io.File(p)).count(_.getName.endsWith(".parquet"))
     }
     val before = files(pathA)
-    Multimodal.compactVideoPhashIndex(spark, pathA)
+    Multimodal.compactPhashIndex(spark, pathA)
     assert(files(pathA) < before)
     assert(probe(pathA) == fresh)
   }
@@ -203,24 +206,25 @@ class VideoPhashSpec extends AnyFunSuite {
       ids.toDF("doc_id"), groups).localCheckpoint()
     val probes = Multimodal.videoPhashFixtureMedia(spark,
       ids.map(_ + 10000L).toDF("doc_id"), groups).localCheckpoint()
-    StreamOps.videoPhashIngestBootstrap(spark,
+    StreamOps.phashIngestBootstrap(PhashKind.Video(8),
       corpus.filter(col("doc_id") < 30), path)
     val e1 = corpus.filter(col("doc_id") >= 30 && col("doc_id") < 60)
       .localCheckpoint()
     val e2 = corpus.filter(col("doc_id") >= 60).localCheckpoint()
-    StreamOps.videoPhashIngestEpoch(e1, 0L, path, 8)
-    StreamOps.videoPhashIngestEpoch(e2, 1L, path, 8)
+    StreamOps.phashIngestEpoch(PhashKind.Video(8), e1, 0L, path, 0)
+    StreamOps.phashIngestEpoch(PhashKind.Video(8), e2, 1L, path, 0)
     def probe() = probeRows(
-      Multimodal.videoPhashDedupAgainst(spark, path, probes, 3))
+      Multimodal.phashDedupAgainst(spark, PhashKind.Video(8), path,
+        probes, 3))
     val want = bruteForceCross(expectedHashes(ids.map(_ + 10000L)),
       expectedHashes(ids), 3)
     val once = probe()
     assert(once == want)
     // crash replay of epoch 1: whole-epoch overwrite, bit-identical
-    StreamOps.videoPhashIngestEpoch(e2, 1L, path, 8)
+    StreamOps.phashIngestEpoch(PhashKind.Video(8), e2, 1L, path, 0)
     assert(probe() == once)
     // epoch-layout compaction consolidates and keeps the probe result
-    Multimodal.compactVideoPhashIndex(spark, path)
+    Multimodal.compactPhashIndex(spark, path)
     assert(probe() == once)
   }
 
@@ -228,7 +232,7 @@ class VideoPhashSpec extends AnyFunSuite {
     val ids = (0L until 12L)
     val probes = Multimodal.videoPhashFixtureMedia(spark,
       ids.toDF("doc_id"), groups)
-    val out = Multimodal.videoPhashDedupAgainst(spark,
+    val out = Multimodal.phashDedupAgainst(spark, PhashKind.Video(8),
       "/tmp/graft-vphash-definitely-absent", probes, 3)
     assert(out.columns.toSeq ==
       Seq("doc_id", "corpus_id", "n_frames", "max_hamming"))
