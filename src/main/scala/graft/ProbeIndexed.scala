@@ -536,27 +536,6 @@ object ProbeIndexed {
     // corpus (the index tables are per-doc-independent rows)
     val appendDedup = time(Dedup.appendToDedupIndex(batch,
       "doc_id", "text", dedupPath))
-    // the PARTITIONED layout (the 100 TB form): same fixed probe batch,
-    // but the probe reads only its own band-prefix/id-bucket partitions
-    // — this is the shape streaming crossDedupTo runs per micro-batch
-    // with nothing pinned, so its flatness across scales is the claim
-    // that replaced the DISK_ONLY_2 corpus snapshot
-    val dedupBandedPath = s"$tmp/dedup_banded"
-    val buildDedupBanded = time(Dedup.buildDedupIndexPartitioned(
-      docs, "doc_id", "text", dedupBandedPath))
-    val probeDedupBanded = (1 to reps).map(_ => time(
-      Dedup.dedupAgainstIndexed(spark, dedupBandedPath, batch,
-        "doc_id", "text", 0.8).count())).min
-    // small-file accounting: files one append adds (the delta tables —
-    // bounded by the batch, NOT a file per banded partition dir) and
-    // the population compaction folds the index back to
-    val bandedFilesBefore = dataFiles(dedupBandedPath)
-    val appendDedupBanded = time(Dedup.appendToDedupIndex(batch,
-      "doc_id", "text", dedupBandedPath))
-    val bandedFilesPerAppend = dataFiles(dedupBandedPath) - bandedFilesBefore
-    val compactDedupBanded = time(
-      Dedup.compactDedupIndex(spark, dedupBandedPath))
-    val bandedFilesPostCompact = dataFiles(dedupBandedPath)
 
     // STREAMING dedup state, steady-epoch cost: the online near-dup
     // path over a corpus-seeded state (nearDupStateBootstrap — multi-
@@ -756,12 +735,6 @@ object ProbeIndexed {
       s""""phash_probe_post_compact500_sec":$phashProbePostCompact,""" +
       s""""dedup_build_sec":$buildDedup,"dedup_probe500_sec":$probeDedup,""" +
       s""""dedup_append500_sec":$appendDedup,""" +
-      s""""dedup_banded_build_sec":$buildDedupBanded,""" +
-      s""""dedup_banded_probe500_sec":$probeDedupBanded,""" +
-      s""""dedup_banded_append500_sec":$appendDedupBanded,""" +
-      s""""dedup_banded_files_per_append":$bandedFilesPerAppend,""" +
-      s""""dedup_banded_compact_sec":$compactDedupBanded,""" +
-      s""""dedup_banded_files_post_compact":$bandedFilesPostCompact,""" +
       s""""state_bootstrap_sec":$stateBuild,"state_epochs":$stateEpochs,""" +
       s""""state_epoch500_sec":$stateEpochSec,""" +
       s""""state_epoch500_fresh_sec":$stateEpochFreshSec,""" +

@@ -1730,34 +1730,32 @@ object SparkEntry {
         "doc_id", "text", 0.8)
     }),
 
-    // Same ingest batch through the PARTITION-PRUNABLE index layout
-    // (buildDedupIndexPartitioned — band-prefix dirs for keys, id-bucket
-    // dirs for sets): the probe must be bit-identical to the flat layout
-    // while reading only the batch's own partitions. Same oracle as
+    // The banded-key probe over an index built in its own path: same
+    // build and probe as dedup_against_indexed (the index has one
+    // layout), kept as a separate contract row. Same oracle as
     // dedup_against.
     "dedup_against_banded" -> ((s, dir) => {
       val d = documents(s, dir)
       val batch = dedupIngestBatch(d)
       val path = s"$idxRoot/dedup_banded_" +
         java.lang.Integer.toHexString(dir.hashCode)
-      Dedup.buildDedupIndexPartitioned(d.select(col("doc_id"), col("text")),
-        "doc_id", "text", path, setBuckets = 16)
+      Dedup.buildDedupIndex(d.select(col("doc_id"), col("text")),
+        "doc_id", "text", path)
       Dedup.dedupAgainstIndexed(s, path, batch,
         "doc_id", "text", 0.8)
     }),
 
     // Steady-state twin of the banded row (frozenIndex memo, the ANN
-    // probe-twin device): the partitioned index is built once per JVM
-    // and this row times the PRUNED PROBE alone — the per-micro-batch
-    // cost streaming crossDedupTo pays. Same oracle; the self-contained
-    // build-in-query row above stays for oracle completeness.
+    // probe-twin device): the index is built once per JVM and this row
+    // times the PROBE alone — the per-micro-batch cost streaming
+    // crossDedupTo pays. Same oracle; the self-contained build-in-query
+    // row above stays for oracle completeness.
     "dedup_against_banded_probe" -> ((s, dir) => {
       val d = documents(s, dir)
       val batch = dedupIngestBatch(d)
       val path = frozenIndex("dedupbanded", dir) { p =>
-        Dedup.buildDedupIndexPartitioned(
-          d.select(col("doc_id"), col("text")), "doc_id", "text", p,
-          setBuckets = 16)
+        Dedup.buildDedupIndex(
+          d.select(col("doc_id"), col("text")), "doc_id", "text", p)
       }
       Dedup.dedupAgainstIndexed(s, path, batch,
         "doc_id", "text", 0.8)

@@ -716,7 +716,7 @@ object Dedup {
                    textCol: String, minJaccard: Double = 0.8): DataFrame = {
     TopKAgg.requireIntegralId(corpus, idCol, "dedupAgainst")
     val cSets = shingleSets(corpus, idCol, textCol).localCheckpoint(false)
-    dedupAgainstFrom(newDocs, bandKeysFromSets(cSets, idCol), cSets,
+    dedupAgainstTables(newDocs, bandKeysFromSets(cSets, idCol), cSets,
       idCol, textCol, minJaccard)
   }
 
@@ -733,6 +733,7 @@ object Dedup {
    */
   def buildDedupIndex(corpus: DataFrame, idCol: String, textCol: String,
                       path: String): Unit = {
+    requireFlatIndex(corpus.sparkSession, path)
     TopKAgg.requireIntegralId(corpus, idCol, "buildDedupIndex")
     // EAGER checkpoint: shingling (the corpus-sized cost) runs exactly
     // once, and the two table writes below — independent reads of the
@@ -747,66 +748,35 @@ object Dedup {
       () => cSets.write.mode("overwrite").parquet(s"$path/sets"),
       () => bandKeysFromSets(cSets, idCol)
         .write.mode("overwrite").parquet(s"$path/keys"))
-    // a flat rebuild over a formerly-partitioned path must also retire
-    // the layout marker (else every later probe takes the wrong path),
-    // any append deltas, and the schema memo the new shape invalidates
-    clearDedupLayout(corpus.sparkSession, path)
-    deleteDeltas(corpus.sparkSession, path)
-    invalidateSchemas(path)
   }
 
-  // ---- partition-prunable persisted index (the 100 TB layout) ----------
-
-  /** The banded-index layout parameters, recorded in the marker:
-    * `setBuckets` id buckets for the sets table, `bpChars` md5-hex chars
-    * of band-prefix for the keys table (1 → 16 dirs, 2 → 256). Fewer
-    * dirs = less per-probe file listing/planning (measured ~2 ms per
-    * file in local mode — the dominant term of the banded probe's fixed
-    * cost at small corpora); more dirs = finer IO pruning for tiny
-    * batches at huge corpora. Markers written before round 11 carry
-    * only `setBuckets` and read as `bpChars = 2` (their on-disk
-    * layout). */
-  private[graft] case class BandedLayout(setBuckets: Int, bpChars: Int) {
-    require(setBuckets > 0, s"setBuckets must be positive: $setBuckets")
-    require(bpChars == 1 || bpChars == 2, s"bpChars must be 1 or 2: $bpChars")
-    def bpDirs: Int = 1 << (4 * bpChars)
+  /** The persisted index has one layout: flat `sets` and `keys` tables,
+    * or their `__batch=N` epochs under
+    * [[graft.streaming.StreamOps.dedupIngestTo]]. A tree holding a
+    * `_graft_dedup_layout` marker or `sets_delta`/`keys_delta` tables
+    * was written by the removed partitioned layout: a flat read of it
+    * misses the delta rows, and a flat write lands beside its
+    * `ib=`/`bp=` dirs. Every index entry point refuses such a tree
+    * before it reads or writes anything (one glob, no Spark job). */
+  private[graft] def requireFlatIndex(spark: org.apache.spark.sql.SparkSession,
+                                      path: String): Unit = {
+    val pattern = new org.apache.hadoop.fs.Path(path,
+      "{_graft_dedup_layout,sets_delta,keys_delta}")
+    val fs = pattern.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val found = Option(fs.globStatus(pattern)).toSeq.flatten
+      .map(_.getPath.getName).sorted
+    require(found.isEmpty,
+      s"$path holds ${found.mkString(", ")} from the removed partitioned " +
+        s"dedup-index layout: delete $path and rebuild with " +
+        "buildDedupIndex / dedupIngestBootstrap")
   }
 
-  /** Scale-adaptive band-prefix width: 16 dirs under ~half a million
-    * docs (the fixed per-dir cost dominates any pruning there), 256
-    * beyond (a tiny probe against a 100 TB corpus should read 1/256th
-    * of the key tree, not 1/16th). */
-  private[graft] def autoBpChars(nDocs: Long): Int =
-    if (nDocs < 500000L) 1 else 2
+  /** The `ib=` bucket of an id in the streaming near-dup state's sets
+    * ([[graft.streaming.StreamOps.dedupEpoch]]). */
+  private[graft] def idBucket(id: Column, buckets: Int): Column =
+    pmod(id.cast("long"), lit(buckets.toLong)).cast("int")
 
-  /** Partition value for a band key: its first 1-2 md5-hex chars,
-    * prefixed `x` so parquet partition-value inference can never type a
-    * digit-only sample as integer. Derived from the key, so batch and
-    * corpus sides always agree. */
-  private[graft] def bandPrefix(bkey: Column, bpChars: Int = 2): Column =
-    concat(lit("x"), substring(bkey, 1, bpChars))
-
-  /** Partition value for a corpus id in the `sets` table. */
-  private[graft] def idBucket(id: Column, setBuckets: Int): Column =
-    pmod(id.cast("long"), lit(setBuckets.toLong)).cast("int")
-
-  /** THE banded sets-table write shape — bucket column + task routing in
-    * one place: every writer (batch build, batch append, streamed ingest
-    * epochs) must agree bit-for-bit with the probe's partition filters
-    * or pruning silently misses rows. Returns the frame ready for
-    * `.write...partitionBy("ib")`. */
-  private[graft] def bandedSets(sets: DataFrame, idCol: String,
-                                setBuckets: Int): DataFrame =
-    sets.withColumn("ib", idBucket(col(idCol), setBuckets))
-      .repartition(writeTasks(sets, setBuckets), col("ib"))
-
-  /** The banded keys-table twin (band-prefix dirs). */
-  private[graft] def bandedKeys(keys: DataFrame,
-                                bpChars: Int = 2): DataFrame =
-    keys.withColumn("bp", bandPrefix(col("bkey"), bpChars))
-      .repartition(writeTasks(keys, 1 << (4 * bpChars)), col("bp"))
-
-  /** Shuffle-task count for a dir-partitioned index write: one task per
+  /** Shuffle-task count for a dir-partitioned write: one task per
     * dir where the cluster has the cores (`dirs`, the layout's natural
     * width), the core count where it does not. Keying the hash
     * repartition wider than the cluster only queues task-commit waves
@@ -818,443 +788,39 @@ object Dedup {
     math.max(1, math.min(dirs,
       df.sparkSession.sparkContext.defaultParallelism))
 
-  private[graft] def layoutMarkerPath(path: String) =
-    new org.apache.hadoop.fs.Path(s"$path/_graft_dedup_layout")
-
-  /** The [[BandedLayout]] from the layout marker, if the index at `path`
-    * was built partitioned. Flat indexes (no marker) return None. A
-    * marker that exists but cannot be parsed — including a bare number
-    * from a truncated or foreign write — is CORRUPT and fails loudly
-    * rather than silently probing a partitioned tree as flat (which
-    * would read the whole index and, worse, hide layout drift). Shared
-    * format/atomicity machinery: [[LayoutMarker]]; pre-round-11 markers
-    * carry only the bucket count and read as the 256-dir key layout
-    * they were written with. */
-  private[graft] def readDedupLayout(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[BandedLayout] = {
-    val p = layoutMarkerPath(path)
-    LayoutMarker.readFields(
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration),
-      p, "banded|", "dedup-index").map {
-      case Seq(b) => BandedLayout(b, 2)
-      case Seq(b, c) => BandedLayout(b, c)
-      case other => sys.error(
-        s"corrupt dedup-index layout marker at $p: ${other.size} fields")
-    }
+  /** Probe a persisted [[buildDedupIndex]] (or a
+    * [[graft.streaming.StreamOps.dedupIngestTo]] tree): identical
+    * results to [[dedupAgainst]] on the same corpus (shared
+    * candidate/verify core; band keys and shingle sets round-trip
+    * exactly through parquet). The probe joins the batch's band keys
+    * against the whole `keys` table. */
+  def dedupAgainstIndexed(spark: org.apache.spark.sql.SparkSession,
+                          path: String, newDocs: DataFrame, idCol: String,
+                          textCol: String,
+                          minJaccard: Double = 0.8): DataFrame = {
+    requireFlatIndex(spark, path)
+    dedupAgainstTables(newDocs, spark.read.parquet(s"$path/keys"),
+      spark.read.parquet(s"$path/sets"), idCol, textCol, minJaccard)
   }
 
-  /** Remove the layout marker (flat rebuild over a formerly-partitioned
-    * path): without this the stale marker would route every later probe
-    * and append down the partitioned path against flat files. */
-  private def clearDedupLayout(spark: org.apache.spark.sql.SparkSession,
-                               path: String): Unit = {
-    val p = layoutMarkerPath(path)
-    LayoutMarker.delete(
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
-
-  private[graft] def writeDedupLayout(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String, layout: BandedLayout): Unit = {
-    val p = layoutMarkerPath(path)
-    LayoutMarker.writeFields(
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration), p,
-      "banded|", Seq(layout.setBuckets, layout.bpChars))
-  }
-
-  /**
-   * [[buildDedupIndex]] in the PARTITION-PRUNABLE layout — the 100 TB
-   * form. The flat layout forces every probe (and the streaming
-   * [[graft.streaming.StreamOps.crossDedupTo]]) to scan — or pin in
-   * executor storage — the WHOLE corpus index, O(corpus) per stream; the
-   * IVF text analogue ([[Similarity.buildIvfIndex]]'s `__cellkey` dirs)
-   * instead prunes each probe to its own cells. This applies the same
-   * device to text dedup:
-   *
-   *  - `keys` is partitioned by `bp` = [[bandPrefix]] (256 dirs): a probe
-   *    batch's band keys hash uniformly (md5), so a batch touches only
-   *    the prefixes it actually has — a small batch reads a small
-   *    fraction of the key tree, and NOTHING is pinned across batches.
-   *  - `sets` is partitioned by `ib` = id mod `setBuckets`: the verify
-   *    step needs only the CANDIDATE corpus docs' shingle sets, and
-   *    candidates are few after banding (the sets tree is the bulky
-   *    table — full shingle arrays — so this is where pruning pays
-   *    most).
-   *
-   * Results are bit-identical to the flat layout: pruning removes only
-   * partitions that cannot hold a matching band key / candidate id, and
-   * the verify core is shared ([[verifyBest]]). `setBuckets` bounds the
-   * per-probe partition-filter list (collected driver-side, ≤ setBuckets
-   * values) — raise it for huge corpora so each `sets` bucket stays
-   * executor-sized (e.g. 4096 at 100 TB keeps buckets ~25 GB and the
-   * filter list still trivially small).
-   *
-   * A one-line layout marker (`_graft_dedup_layout`) records the bucket
-   * count; [[dedupAgainstIndexed]], [[appendToDedupIndex]] and
-   * [[compactDedupIndex]] sniff it and pick the matching code path, so
-   * callers use one API for both layouts. Keep the flat builder for
-   * small corpora: below ~a few hundred MB the partition dirs cost more
-   * (listing, small files) than the pruning saves.
-   */
-  def buildDedupIndexPartitioned(corpus: DataFrame, idCol: String,
-                                 textCol: String, path: String,
-                                 setBuckets: Int = 64,
-                                 bpChars: Int = -1): Unit = {
-    TopKAgg.requireIntegralId(corpus, idCol, "buildDedupIndexPartitioned")
-    require(setBuckets > 0, s"setBuckets must be positive: $setBuckets")
-    val spark = corpus.sparkSession
-    // EAGER checkpoint — see buildDedupIndex: one shingling pass, then
-    // the two independent partitioned writes overlap
-    val cSets = shingleSets(corpus, idCol, textCol).localCheckpoint(true)
-    // band-prefix width: explicit, or scale-adaptive from the corpus
-    // size (the count is one cheap job over the checkpointed sets)
-    val layout = BandedLayout(setBuckets,
-      if (bpChars > 0) bpChars else autoBpChars(cSets.count()))
-    // [[bandedSets]]/[[bandedKeys]]: partition-column + capped task
-    // routing in one shared definition (each dir written by exactly the
-    // tasks owning its key — no file-per-task-per-key explosion, no
-    // empty shuffle tasks beyond the bucket count)
-    Similarity.inParallel(
-      () => bandedSets(cSets, idCol, setBuckets)
-        .write.mode("overwrite").partitionBy("ib").parquet(s"$path/sets"),
-      () => bandedKeys(bandKeysFromSets(cSets, idCol), layout.bpChars)
-        .write.mode("overwrite").partitionBy("bp").parquet(s"$path/keys"))
-    // a rebuild over an append-grown path must also retire the deltas
-    // (their rows are re-derived from the new corpus or gone for good)
-    // and the schema memo (a formerly-flat path gains partition columns)
-    deleteDeltas(spark, path)
-    invalidateSchemas(path)
-    writeDedupLayout(spark, path, layout)
-  }
-
-  private[graft] def deltaPaths(path: String): Seq[String] =
-    Seq(s"$path/sets_delta", s"$path/keys_delta")
-
-  private def deleteDeltas(spark: org.apache.spark.sql.SparkSession,
-                           path: String): Unit =
-    deltaPaths(path).foreach { d =>
-      val p = new org.apache.hadoop.fs.Path(d)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) { fs.delete(p, true); () }
-    }
-
-  /**
-   * Migrate a FLAT [[buildDedupIndex]] tree to the partitioned layout
-   * IN PLACE, without re-shingling the corpus — the index tables already
-   * hold everything the banded layout needs (shingling is the dominant
-   * build cost; this pays only two table rewrites). Crash-safe at every
-   * window by ordering: both tables are rewritten via
-   * [[ParquetCompact]]'s staged swap (its recover() heals a mid-swap
-   * crash on the next call), and the marker lands LAST — a flat read of
-   * an already-banded tree is harmless (the partition columns are
-   * additive and the probe selects by name), while a banded read of a
-   * still-flat tree would crash, so no window ever takes the banded
-   * path early. Single-writer discipline: no probe/append in flight.
-   *
-   * Not for epoch-partitioned ingest trees
-   * ([[graft.streaming.StreamOps.dedupIngestTo]]) — their epoch dirs
-   * nest differently; bootstrap those banded from the start
-   * (`dedupIngestBootstrapPartitioned`).
-   *
-   * RE-RUNNABLE AFTER A CRASH at any window, in two layers: first,
-   * [[ParquetCompact.recoverTable]] runs on both tables BEFORE the
-   * precondition reads (a crash mid-sets-swap leaves `$path/sets`
-   * renamed away, so the precondition's read would throw path-not-found
-   * before compactVia's own recovery could roll it back); second, the
-   * half-migrated shapes a crash BETWEEN the steps leaves (sets already
-   * banded + keys still flat: crash after the sets rewrite; both banded
-   * + marker absent: crash before the marker write) are detected and
-   * RESUMED from the first incomplete step instead of refused — the
-   * pre-resume flat-shape check would otherwise fail with a misleading
-   * "not a flat dedup index" error and leave the migration stuck until
-   * manual filesystem surgery. A resume verifies the on-disk `ib`
-   * bucketing matches `setBuckets` (one column-pruned scan, no shuffle)
-   * so a re-run with a DIFFERENT bucket count fails loudly rather than
-   * stamping a marker the data contradicts.
-   *
-   * Returns per-table row counts.
-   */
-  def migrateToPartitionedIndex(spark: org.apache.spark.sql.SparkSession,
-                                path: String,
-                                setBuckets: Int = 64): Map[String, Long] = {
-    require(setBuckets > 0, s"setBuckets must be positive: $setBuckets")
-    require(readDedupLayout(spark, path).isEmpty,
-      s"index at $path is already partitioned")
-    ParquetCompact.recoverTable(spark, s"$path/sets")
-    ParquetCompact.recoverTable(spark, s"$path/keys")
-    val setsCols = spark.read.parquet(s"$path/sets").columns
-    val keysCols = spark.read.parquet(s"$path/keys").columns
-    val setsBanded = setsCols.contains("ib")
-    val keysBanded = keysCols.contains("bp")
-    require(setsBanded || !keysBanded,
-      s"index at $path has banded keys over flat sets — not a shape this " +
-        "migration (sets first, then keys) can produce; rebuild the index")
-    require(setsCols.contains("sset") &&
-      (if (setsBanded) setsCols.length == 3 else setsCols.length == 2),
-      s"not a flat dedup index (sets columns: ${setsCols.mkString(",")}) " +
-        "— epoch-partitioned ingest trees cannot be migrated in place")
-    val idCol = setsCols.filterNot(c => c == "sset" || c == "ib").head
-    val nSets =
-      if (!setsBanded)
-        ParquetCompact.rewritePartitioned(spark, s"$path/sets",
-          "ib")(df => bandedSets(df, idCol, setBuckets))
-      else {
-        // resume: the crashed attempt's buckets must match this run's
-        val sets = spark.read.parquet(s"$path/sets")
-        require(sets.filter(idBucket(col(idCol), setBuckets) =!= col("ib"))
-          .isEmpty,
-          s"half-migrated sets at $path were bucketed with a different " +
-            s"setBuckets than $setBuckets — resume with the original count")
-        sets.count()
-      }
-    val bpChars =
-      if (keysBanded) {
-        // resume: the marker must record the width the crashed attempt
-        // actually wrote (bp = 'x' + that many hex chars)
-        val w = spark.read.parquet(s"$path/keys")
-          .select(length(col("bp"))).limit(1).collect().headOption
-          .map(_.getInt(0) - 1)
-          .getOrElse(throw new IllegalStateException(
-            s"half-migrated keys table at $path/keys is banded but empty " +
-              "— its bp width cannot be recovered; rebuild the index"))
-        require(w == 1 || w == 2,
-          s"half-migrated keys at $path carry bp width $w")
-        w
-      } else autoBpChars(nSets) // one row per doc — already counted
-    val nKeys =
-      if (!keysBanded)
-        ParquetCompact.rewritePartitioned(spark, s"$path/keys",
-          "bp")(df => bandedKeys(df, bpChars))
-      else spark.read.parquet(s"$path/keys").count()
-    invalidateSchemas(path) // flat → banded changes both table shapes
-    writeDedupLayout(spark, path, BandedLayout(setBuckets, bpChars))
-    Map("sets" -> nSets, "keys" -> nKeys)
-  }
-
-  /** Driver-side row bound for the probe's local-relation fast path:
-    * batch band keys and candidate pairs up to this many rows are
-    * collected into broadcast LocalRelations (each saves a
-    * localCheckpoint job + a separate distinct-collect job); beyond it
-    * the probe falls back to the fully distributed shape. ~25 MB of
-    * rows at the cap — the same order as the other bounded collects. */
-  private val MaxProbeRows = 262144
-
-  /** Per-JVM memo of an index table's read schema: a frozen index's
-    * schema cannot change (the frozen-index contract every probe-many
-    * caller already relies on), and per-probe inference costs a listing
-    * + footer read — which streaming probes would pay every
-    * micro-batch. */
-  private val indexSchemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]()
-  private def tableSchema(spark: org.apache.spark.sql.SparkSession,
-                          root: String) =
-    indexSchemaCache.computeIfAbsent(root,
-      _ => spark.read.parquet(root).schema)
-
-  /** Drop the memoized schemas under `path` — every REBUILD of an index
-    * (and the flat→banded migration) can change the table shape, and a
-    * stale memo would silently misread the new files. */
-  private def invalidateSchemas(path: String): Unit = {
-    val it = indexSchemaCache.keySet().iterator()
-    while (it.hasNext) if (it.next().startsWith(path)) it.remove()
-  }
-
-  /** Read selected `prefix=value` partition dirs of a banded table as
-    * explicit paths (skips listing/planning every other dir — the
-    * measured fixed cost of the banded probe is ~2 ms per FILE in the
-    * table, so reading 3 candidate dirs instead of 64 is the win), with
-    * the schema served from the per-JVM memo. `values` are the wanted
-    * partition values (dir-name suffixes); dirs that do not exist are
-    * simply absent from the listing. */
-  private def readBandedDirs(spark: org.apache.spark.sql.SparkSession,
-                             root: String, partCol: String,
-                             values: Option[Set[String]]): DataFrame = {
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // the batch-built layout puts `partCol=` dirs at the first level;
-    // the streamed ingest layout ([[graft.streaming.StreamOps
-    // .dedupIngestTo]]) nests them one level down inside `__batch=N`
-    // epoch dirs — descend one partition level to find them (metadata
-    // listings only), so both layouts prune identically
-    def level(dirs: Seq[org.apache.hadoop.fs.Path])
-        : Seq[org.apache.hadoop.fs.Path] =
-      dirs.flatMap(d => fs.listStatus(d).toSeq.map(_.getPath)
-        .filter(p => p.getName.contains("=")))
-    val first =
-      if (!fs.exists(rootPath)) Seq.empty else level(Seq(rootPath))
-    val leaves =
-      if (first.exists(_.getName.startsWith(s"$partCol="))) first
-      else level(first)
-    val wanted = leaves.filter(_.getName.startsWith(s"$partCol="))
-      .filter(p => values.forall(_.contains(
-        p.getName.stripPrefix(s"$partCol="))))
-    val schema = tableSchema(spark, root)
-    if (wanted.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(schema).option("basePath", root)
-      .parquet(wanted.map(_.toString): _*)
-  }
-
-  /** A delta table's rows, or an empty frame of the base columns when no
-    * delta exists ([[appendToDedupIndex]] writes appends FLAT into
-    * `sets_delta`/`keys_delta`; probes union them in, compaction folds
-    * them into the banded base). */
-  private def deltaOrEmpty(spark: org.apache.spark.sql.SparkSession,
-                           deltaPath: String,
-                           like: DataFrame): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(deltaPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // existence alone is not readability: a crashed FIRST append leaves
-    // the dir holding only `_temporary`, and schema inference over zero
-    // data files throws — wedging every later probe until a successful
-    // re-append. Same crash window [[stateOrEmpty]] guards streaming-side.
-    if (hasDataFiles(fs, p)) spark.read.schema(tableSchema(spark, deltaPath))
-      .parquet(deltaPath)
-    else like.limit(0)
-  }
-
-  /** Whether `p` holds at least one non-hidden file (deltas write flat, so
-    * data files sit directly under the dir; `_temporary`/`_SUCCESS` don't
-    * count). */
-  private def hasDataFiles(fs: org.apache.hadoop.fs.FileSystem,
-                           p: org.apache.hadoop.fs.Path): Boolean =
-    fs.exists(p) && fs.listStatus(p).exists(s => s.isFile && {
-      val n = s.getPath.getName
-      !n.startsWith("_") && !n.startsWith(".")
-    })
-
-  /**
-   * Probe of the partitioned layout. The batch's band keys (ONE bounded
-   * collect) become driver-side partition-dir selections AND a
-   * broadcast LocalRelation for the candidate join; the candidates
-   * (second bounded collect) select the sets buckets the same way — so
-   * the corpus trees are read only where this batch can possibly match,
-   * from explicitly-listed dirs with a memoized schema. Four Spark jobs
-   * total on the fast path (shingle checkpoint, key collect, candidate
-   * collect, verify) vs six in the round-10 shape — the job count, not
-   * the data, dominated the probe's fixed cost. A batch over the row
-   * cap falls back to the distributed shape with the same semantics —
-   * discarding the capped collect and recomputing from the checkpointed
-   * shingles. That double work is deliberate: gating with a count()
-   * first would add a job to EVERY small probe (the measured fixed
-   * cost this shape exists to cut) to save one bounded ~25 MB collect
-   * on the rare over-cap batch, which pays a large batch's cost anyway.
-   *
-   * `cap` overrides [[MaxProbeRows]] ONLY in specs: a tiny cap routes a
-   * small batch through the over-cap branches (the wide probe, the
-   * distributed candidate selection), whose equivalence would otherwise
-   * need a ~65k-doc batch to reach. Production callers take the default.
-   */
-  private[graft] def dedupAgainstPartitioned(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      layout: BandedLayout, newDocs: DataFrame, idCol: String,
-      textCol: String, minJaccard: Double,
-      cap: Int = MaxProbeRows): DataFrame = {
+  /** [[dedupAgainstIndexed]] over ALREADY-LOADED index tables (corpus
+    * band keys, corpus shingle sets) — the shared cross-corpus core:
+    * bucket-local candidates, exact-Jaccard verify, best match per new
+    * doc; the batch side shingles once (checkpointed). Callers that
+    * probe the same frozen index repeatedly (the streaming cross-corpus
+    * dedup) load + materialize keys/sets once per query instead of
+    * re-listing parquet every micro-batch. */
+  def dedupAgainstTables(newDocs: DataFrame, cKeys: DataFrame,
+                         cSets: DataFrame, idCol: String, textCol: String,
+                         minJaccard: Double = 0.8): DataFrame = {
     val nSets = shingleSets(newDocs, idCol, textCol).localCheckpoint(false)
-    val nKeysDf = bandKeysFromSets(nSets, idCol)
-    val nKeyRows = nKeysDf.limit(cap + 1).collect()
-    val keysDelta = deltaOrEmpty(spark, s"$path/keys_delta", nKeysDf)
-    if (nKeyRows.length > cap)
-      return dedupAgainstPartitionedWide(spark, path, layout, newDocs,
-        nSets, keysDelta, idCol, minJaccard)
-    import scala.jdk.CollectionConverters._
-    val localKeys = spark.createDataFrame(
-      nKeyRows.toSeq.asJava, nKeysDf.schema)
-    val bkeyAt = nKeysDf.schema.fieldIndex("bkey")
-    val bps = nKeyRows.map(r =>
-      "x" + r.getString(bkeyAt).substring(0, layout.bpChars)).toSet
-    val cKeys = readBandedDirs(spark, s"$path/keys", "bp", Some(bps))
-      .select(col(idCol), col("band"), col("bkey"))
-      .unionByName(keysDelta.select(col(idCol), col("band"), col("bkey")))
-    val cand0 = broadcast(localKeys)
-      .join(cKeys.select(col(idCol).as("__cid"), col("band"), col("bkey")),
-        Seq("band", "bkey"))
-      .select(col(idCol), col("__cid")).distinct()
-    val candRows = cand0.limit(cap + 1).collect()
-    val setsDelta = deltaOrEmpty(spark, s"$path/sets_delta", nSets)
-      .select(col(idCol), col("sset"))
-    val (cand, cSets) =
-      if (candRows.length > cap) {
-        // candidate explosion (heavily duplicated corpus): distributed
-        val c = cand0.localCheckpoint(false)
-        val ibs = c.select(idBucket(col("__cid"), layout.setBuckets)
-          .as("ib")).distinct().collect().map(_.getInt(0).toString).toSet
-        (c, readBandedDirs(spark, s"$path/sets", "ib", Some(ibs))
-          .select(col(idCol), col("sset")).unionByName(setsDelta))
-      } else {
-        val cidAt = cand0.schema.fieldIndex("__cid")
-        // corpus ids may be any integral type on disk — go via Number
-        val ibs = candRows.map(r => java.lang.Math.floorMod(
-          r.get(cidAt).asInstanceOf[Number].longValue(),
-          layout.setBuckets.toLong).toString).toSet
-        (broadcast(spark.createDataFrame(candRows.toSeq.asJava,
-          cand0.schema)),
-          readBandedDirs(spark, s"$path/sets", "ib", Some(ibs))
-            .select(col(idCol), col("sset")).unionByName(setsDelta))
-      }
-    verifyBest(newDocs, nSets, cand, cSets, idCol, minJaccard)
-  }
-
-  /** The distributed fallback for key batches past [[MaxProbeRows]] —
-    * the round-10 probe shape (checkpointed keys, distinct-collected
-    * partition filters), semantics identical. `private[graft]` so the
-    * spec can drive it DIRECTLY on a small batch: reaching it through
-    * the public probe needs >[[MaxProbeRows]] band keys (~65k docs),
-    * which would leave the fallback's equivalence untested. */
-  private[graft] def dedupAgainstPartitionedWide(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      layout: BandedLayout, newDocs: DataFrame, nSets: DataFrame,
-      keysDelta: DataFrame, idCol: String, minJaccard: Double): DataFrame = {
-    val nKeys = bandKeysFromSets(nSets, idCol).localCheckpoint(false)
-    val bps = nKeys
-      .select(bandPrefix(col("bkey"), layout.bpChars).as("bp")).distinct()
-      .collect().map(_.getString(0)).toSet // bounded: ≤ bpDirs values
-    val cKeys = readBandedDirs(spark, s"$path/keys", "bp", Some(bps))
-      .select(col(idCol), col("band"), col("bkey"))
-      .unionByName(keysDelta.select(col(idCol), col("band"), col("bkey")))
+    val nKeys = bandKeysFromSets(nSets, idCol)
     val cand = nKeys
       .join(cKeys.select(col(idCol).as("__cid"), col("band"), col("bkey")),
         Seq("band", "bkey"))
       .select(col(idCol), col("__cid")).distinct()
-      .localCheckpoint(false) // feeds the bucket collect AND the verify
-    val ibs = cand.select(idBucket(col("__cid"), layout.setBuckets).as("ib"))
-      .distinct().collect().map(_.getInt(0).toString).toSet
-    val cSets = readBandedDirs(spark, s"$path/sets", "ib", Some(ibs))
-      .select(col(idCol), col("sset"))
-      .unionByName(deltaOrEmpty(spark, s"$path/sets_delta", nSets)
-        .select(col(idCol), col("sset")))
     verifyBest(newDocs, nSets, cand, cSets, idCol, minJaccard)
   }
-
-  /** Probe a persisted [[buildDedupIndex]] or
-    * [[buildDedupIndexPartitioned]] (layout sniffed from the marker):
-    * identical results to [[dedupAgainst]] on the same corpus (shared
-    * candidate/verify core; band keys and shingle sets round-trip
-    * exactly through parquet; the partitioned path only prunes
-    * partitions that cannot match). */
-  def dedupAgainstIndexed(spark: org.apache.spark.sql.SparkSession,
-                          path: String, newDocs: DataFrame, idCol: String,
-                          textCol: String,
-                          minJaccard: Double = 0.8): DataFrame =
-    readDedupLayout(spark, path) match {
-      case Some(layout) =>
-        dedupAgainstPartitioned(spark, path, layout, newDocs, idCol,
-          textCol, minJaccard)
-      case None =>
-        dedupAgainstTables(newDocs, spark.read.parquet(s"$path/keys"),
-          spark.read.parquet(s"$path/sets"), idCol, textCol, minJaccard)
-    }
-
-  /** [[dedupAgainstIndexed]] over ALREADY-LOADED index tables — for
-    * callers that probe the same frozen index repeatedly (the streaming
-    * cross-corpus dedup loads + materializes keys/sets once per query
-    * instead of re-listing parquet every micro-batch). */
-  def dedupAgainstTables(newDocs: DataFrame, cKeys: DataFrame,
-                         cSets: DataFrame, idCol: String, textCol: String,
-                         minJaccard: Double = 0.8): DataFrame =
-    dedupAgainstFrom(newDocs, cKeys, cSets, idCol, textCol, minJaccard)
 
   /**
    * APPEND a batch to a persisted [[buildDedupIndex]] — the incremental
@@ -1266,7 +832,9 @@ object Dedup {
    * bit-identical to rebuild-then-probe over the grown corpus
    * (Round7OpsSpec proves it). This is the batch twin of the streaming
    * state writes in [[graft.streaming.StreamOps.nearDupDedupTo]] — same
-   * two tables, same row shapes, epochless.
+   * two tables, same row shapes, epochless. The batch's rows are
+   * appended to `sets` and `keys` directly; [[compactDedupIndex]] folds
+   * the accumulated files.
    *
    * Caller contract: batch ids must be new (an id already indexed would
    * shadow itself as its own duplicate at probe time), and appends are
@@ -1275,108 +843,29 @@ object Dedup {
    */
   def appendToDedupIndex(batch: DataFrame, idCol: String, textCol: String,
                          path: String): Unit = {
+    requireFlatIndex(batch.sparkSession, path)
     TopKAgg.requireIntegralId(batch, idCol, "appendToDedupIndex")
     val bSets = shingleSets(batch, idCol, textCol).localCheckpoint(false)
-    readDedupLayout(batch.sparkSession, path) match {
-      case Some(_) =>
-        // partitioned layout: the append lands FLAT in the delta tables
-        // (`sets_delta`/`keys_delta`), NOT in the banded base — writing
-        // a small batch across up to bpDirs+setBuckets partition dirs
-        // cost ~10x the flat append at every measured scale and
-        // accumulated a file per dir per append; a flat delta costs
-        // exactly the flat append, probes union it in (its size is
-        // bounded by the appends since the last compaction), and
-        // [[compactDedupIndex]] folds it into the banded base. Rows are
-        // identical either way, so append-then-probe ≡
-        // rebuild-then-probe holds unchanged.
-        bSets.coalesce(8).write.mode("append")
-          .parquet(s"$path/sets_delta")
-        bandKeysFromSets(bSets, idCol).coalesce(8).write.mode("append")
-          .parquet(s"$path/keys_delta")
-      case None =>
-        bSets.write.mode("append").parquet(s"$path/sets")
-        bandKeysFromSets(bSets, idCol)
-          .write.mode("append").parquet(s"$path/keys")
-    }
+    bSets.write.mode("append").parquet(s"$path/sets")
+    bandKeysFromSets(bSets, idCol)
+      .write.mode("append").parquet(s"$path/keys")
   }
 
-  /** Compact an append-grown dedup index in place — flat tables to
-    * ~`targetFiles` files, partitioned tables to one file per partition
-    * dir (layout sniffed from the marker), FOLDING the flat append
-    * deltas into the banded base (each table rewrites as
-    * derive(base ∪ delta) through the crash-safe staged swap; the delta
-    * dir is deleted after its swap commits, and the exact-duplicate
-    * drop makes a crash between the two converge on the next run
-    * instead of doubling rows for good). Returns per-table row
-    * counts. */
+  /** Compact an append-grown dedup index in place: each table to
+    * ~`targetFiles` files through [[ParquetCompact]]'s crash-safe staged
+    * swap. Rows are untouched, so probe verdicts are too. Returns
+    * per-table row counts. */
   def compactDedupIndex(spark: org.apache.spark.sql.SparkSession,
                         path: String,
-                        targetFiles: Int = 8): Map[String, Long] =
-    readDedupLayout(spark, path) match {
-      case Some(layout) =>
-        val fs = new org.apache.hadoop.fs.Path(path)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        // roll back/forward a crashed PRIOR compaction before the
-        // precondition reads below — a crash mid-swap renames `sets`
-        // away, and reading it for idCol detection would throw
-        // path-not-found before rewritePartitionedWith's own recovery
-        // could run (the exact hazard [[migrateToPartitionedIndex]]
-        // recovers against)
-        ParquetCompact.recoverTable(spark, s"$path/sets")
-        ParquetCompact.recoverTable(spark, s"$path/keys")
-        def delta(p: String): Option[DataFrame] =
-          if (hasDataFiles(fs, new org.apache.hadoop.fs.Path(p)))
-            Some(spark.read.parquet(p))
-          else None
-        val idCol = spark.read.parquet(s"$path/sets").columns
-          .filterNot(c => c == "sset" || c == "ib").head
-        // EXACT-duplicate drop only ((id, sset), not by id): its purpose
-        // is crash convergence (a delta folded but not yet deleted
-        // re-folds identical rows), and an id that was — against the
-        // append contract — re-appended with different text keeps BOTH
-        // generations here just as the pre-compaction probe saw them;
-        // a by-id drop could keep one generation's sset beside the
-        // other generation's band keys and verify candidates against
-        // the wrong shingles
-        val nSets = ParquetCompact.rewritePartitionedWith(spark,
-          s"$path/sets", "ib", delta(s"$path/sets_delta")) { df =>
-          bandedSets(df.select(col(idCol), col("sset"))
-            .dropDuplicates(idCol, "sset"), idCol, layout.setBuckets)
-        }
-        fs.delete(new org.apache.hadoop.fs.Path(s"$path/sets_delta"), true)
-        val nKeys = ParquetCompact.rewritePartitionedWith(spark,
-          s"$path/keys", "bp", delta(s"$path/keys_delta")) { df =>
-          bandedKeys(df.select(col(idCol), col("band"), col("bkey"))
-            .dropDuplicates(idCol, "band", "bkey"), layout.bpChars)
-        }
-        fs.delete(new org.apache.hadoop.fs.Path(s"$path/keys_delta"), true)
-        Map("sets" -> nSets, "keys" -> nKeys)
-      case None =>
-        Seq("sets", "keys").map(t =>
-          t -> ParquetCompact.table(spark, s"$path/$t", targetFiles)).toMap
-    }
-
-  /** Shared cross-corpus core over (corpus band keys, corpus shingle
-    * sets): bucket-local candidates, exact-Jaccard verify, best match
-    * per new doc. The batch side shingles once (checkpointed). */
-  private def dedupAgainstFrom(newDocs: DataFrame, cKeys: DataFrame,
-                               cSets: DataFrame, idCol: String,
-                               textCol: String,
-                               minJaccard: Double): DataFrame = {
-    val nSets = shingleSets(newDocs, idCol, textCol).localCheckpoint(false)
-    val nKeys = bandKeysFromSets(nSets, idCol)
-    val cand = nKeys
-      .join(cKeys.select(col(idCol).as("__cid"), col("band"), col("bkey")),
-        Seq("band", "bkey"))
-      .select(col(idCol), col("__cid")).distinct()
-    verifyBest(newDocs, nSets, cand, cSets, idCol, minJaccard)
+                        targetFiles: Int = 8): Map[String, Long] = {
+    requireFlatIndex(spark, path)
+    Seq("sets", "keys").map(t =>
+      t -> ParquetCompact.table(spark, s"$path/$t", targetFiles)).toMap
   }
 
-  /** Exact-Jaccard verify + best-match reduce shared by the flat and
-    * partition-pruned probe paths: identical inputs (candidate pairs,
-    * batch shingle sets, corpus shingle sets) → identical verdict rows,
-    * which is the bit-identity argument for the pruned layout (pruning
-    * only removes partitions that cannot contain a candidate). */
+  /** Exact-Jaccard verify + best-match reduce of the cross-corpus probe:
+    * (candidate pairs, batch shingle sets, corpus shingle sets) →
+    * one verdict row per new doc. */
   private def verifyBest(newDocs: DataFrame, nSets: DataFrame,
                          cand: DataFrame, cSets: DataFrame, idCol: String,
                          minJaccard: Double): DataFrame = {

@@ -3,9 +3,11 @@ package graft.functions
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /**
- * One-line layout marker shared by the persisted dedup index
- * ([[Dedup.buildDedupIndexPartitioned]]) and the streaming dedup state
- * (`graft.streaming.StreamOps`): content `<prefix><positive int>`.
+ * One-line layout marker of the streaming near-dup state
+ * (`graft.streaming.StreamOps`, `_graft_state_layout`): content
+ * `<prefix><positive int>`. Its [[replaceWith]] is the one atomic-replace
+ * primitive behind every small marker file (layout, centers, csums, PQ),
+ * key summaries and compaction plans.
  *
  * The write is ATOMIC (stage + rename, the centers-marker pattern): a
  * crash between create and flush must never leave a present-but-empty
@@ -16,14 +18,11 @@ import org.apache.hadoop.fs.{FileSystem, Path}
  *
  * The rename also OVERWRITES atomically where the filesystem supports it
  * (FileContext + Options.Rename.OVERWRITE — HDFS and the local FS do): a
- * delete-then-rename re-write leaves a window with NO marker on disk,
- * during which a reader racing a marker re-anchor sniffs a banded tree
- * as flat — a probe is merely unpruned, but an append in that window
- * writes flat files beside partition dirs, the exact mixed layout the
- * code elsewhere guards against. On a store whose FileContext cannot
- * overwrite-rename, the delete+rename fallback applies and the
- * single-writer contract must be read as covering marker re-anchors
- * versus concurrent probes/appends.
+ * delete-then-rename re-write leaves a window with NO file on disk, in
+ * which a reader racing the re-write sees the marker as never written.
+ * On a store whose FileContext cannot overwrite-rename, the
+ * delete+rename fallback applies and the single-writer contract must be
+ * read as covering marker re-writes versus concurrent readers.
  */
 private[graft] object LayoutMarker {
 
@@ -40,48 +39,12 @@ private[graft] object LayoutMarker {
       Some(b)
     }
 
-  /** [[read]] for markers carrying one or more comma-separated positive
-    * ints (`<prefix>v1[,v2,...]`) — the dedup-index marker grew a second
-    * field (band-prefix width) in round 11; single-int markers from
-    * older builds read as a one-element list, so existing indexes keep
-    * their meaning. Same strictness: present-but-malformed fails loudly
-    * rather than guessing a layout. */
-  def readFields(fs: FileSystem, p: Path, prefix: String,
-                 what: String): Option[Seq[Int]] =
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val raw = try scala.io.Source.fromInputStream(in).mkString.trim
-      finally in.close()
-      val vals =
-        if (!raw.startsWith(prefix)) None
-        else {
-          val parts = raw.stripPrefix(prefix).split(',').toSeq
-            .map(_.toIntOption)
-          if (parts.nonEmpty && parts.forall(_.exists(_ > 0)))
-            Some(parts.flatten)
-          else None
-        }
-      Some(vals.getOrElse(
-        sys.error(s"corrupt $what layout marker at $p: '$raw'")))
-    }
-
-  def writeFields(fs: FileSystem, p: Path, prefix: String,
-                  values: Seq[Int]): Unit = {
-    require(values.nonEmpty && values.forall(_ > 0),
-      s"marker fields must be positive: $values")
-    writeRaw(fs, p, prefix + values.mkString(","))
-  }
-
   def write(fs: FileSystem, p: Path, prefix: String, value: Int): Unit =
-    writeRaw(fs, p, s"$prefix$value")
-
-  private def writeRaw(fs: FileSystem, p: Path, content: String): Unit =
     replaceWith(fs, p, "layout marker")(
-      _.write(content.getBytes("UTF-8")))
+      _.write(s"$prefix$value".getBytes("UTF-8")))
 
-  /** The ONE atomic-replace primitive behind layout markers, key
-    * summaries and compaction plans/manifests: stage to `.tmp`, then
+  /** The ONE atomic-replace primitive behind the layout, centers, csums
+    * and PQ markers, key summaries and compaction plans: stage to `.tmp`, then
     * overwrite-rename via FileContext where the store supports it, with
     * the windowed delete+rename fallback otherwise (single-writer
     * contract covers the window there). Keeping a single copy means the
@@ -104,7 +67,4 @@ private[graft] object LayoutMarker {
         require(fs.rename(tmp, p), s"$what rename failed: $tmp -> $p")
     }
   }
-
-  def delete(fs: FileSystem, p: Path): Unit =
-    if (fs.exists(p)) { fs.delete(p, false); () }
 }

@@ -1223,9 +1223,9 @@ object Multimodal {
   /** The index's fixed pigeonhole geometry: 4 blocks × 16 bits of the
     * kind's routing hash (sound for hamming ≤ 3 — k flipped bits cannot
     * touch all k+1 blocks), and the partition key `pb` = blk × 64 + the
-    * block value's top 6 bits (4 × 64 = 256 dirs — the text index's
-    * ~320-dir lesson: few enough dirs that discovery stays cheap, many
-    * enough that a fixed probe batch prunes most of the corpus). Derived
+    * block value's top 6 bits (4 × 64 = 256 dirs: few enough that
+    * listing stays cheap, many enough that a fixed probe batch prunes
+    * most of the corpus). Derived
     * from the hash on BOTH sides, so index and probe can never disagree
     * on routing. Every signature column rides along. */
   private def phashBlocks(kind: PhashKind, sig: DataFrame): DataFrame =
@@ -1340,8 +1340,8 @@ object Multimodal {
   /**
    * Dedup NEW media against the persisted index of the same `kind`:
    * sign the batch, read ONLY its candidate `pb` partitions (explicit
-   * subdirs — the banded-index pruning device; ≤ 256 driver-side keys,
-   * metadata scale) with the batch's bvals pushed as a scan filter,
+   * subdirs listed on the driver; ≤ 256 driver-side keys, metadata
+   * scale) with the batch's bvals pushed as a scan filter,
    * join candidates on exact (block, value) and run the kind's verify.
    * Returns every corpus near-dup of every batch doc within
    * `maxHamming`: (doc_id, corpus_id, hamming) for [[PhashKind.Image]]
@@ -1374,19 +1374,37 @@ object Multimodal {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) return empty
+    import org.apache.spark.sql.graftbridge.FileIndexBridge
     // the batch's candidate keys, collected once: pb dirs to READ (≤ 256)
     // and bvals to PUSH as a scan filter (≤ 4 × batch) — with the
     // bval-sorted row groups the min/max stats skip everything a small
     // batch doesn't touch, keeping the probe's bytes bounded by the
     // batch even when its dirs span the whole layout
     val keys = pblocks.select(col("pb"), col("bval")).distinct().collect()
-    val pbs = keys.map(_.getInt(0)).distinct
-    val dirs = pbs.map(pb => new org.apache.hadoop.fs.Path(path, s"pb=$pb"))
-      .filter(fs.exists(_)).map(_.toString)
-    if (dirs.isEmpty) return empty
+    // the candidate dirs are read from files listed HERE, on the driver:
+    // `spark.read` over more than 32 of them would list them in a Spark
+    // job of its own, once per probe. A streamed index nests
+    // `__batch=N` epoch dirs inside each `pb=` dir, which the listing
+    // itself shows; the data schema is the batch's own block schema,
+    // since the same writer ([[writePhashBlocks]]) made the index.
+    val listed = keys.map(_.getInt(0)).distinct.toSeq.flatMap { pb =>
+      val d = new org.apache.hadoop.fs.Path(path, s"pb=$pb")
+      if (fs.exists(d)) Some(pb -> fs.listStatus(d).toSeq) else None
+    }
+    def isEpoch(f: org.apache.hadoop.fs.FileStatus) =
+      f.isDirectory && f.getPath.getName.startsWith("__batch=")
+    val epochs = listed.exists(_._2.exists(isEpoch))
+    val leaves = listed.flatMap { case (pb, entries) =>
+      if (!epochs) FileIndexBridge.leafOf(Seq(pb), entries)
+      else entries.filter(isEpoch).flatMap(e => FileIndexBridge.leaf(fs,
+        e.getPath, Seq[Any](pb,
+          e.getPath.getName.stripPrefix("__batch=").toLong)))
+    }
+    if (leaves.isEmpty) return empty
+    val part = new StructType().add("pb", IntegerType)
     val bvals = keys.map(_.getLong(1)).distinct.toIndexedSeq
-    probe(spark.read.option("basePath", path)
-      .parquet(dirs.toIndexedSeq: _*)
+    probe(FileIndexBridge.parquet(spark, pblocks.drop("pb").schema,
+        if (epochs) part.add("__batch", LongType) else part, leaves)
       .filter(col("bval").isin(bvals: _*)))
   }
 

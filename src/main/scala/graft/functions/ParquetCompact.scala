@@ -5,13 +5,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /**
- * Small-file compaction for the append-maintained persisted indexes
- * ([[Dedup.appendToDedupIndex]], [[Similarity.appendToIvfIndex]]) — the
+ * Small-file compaction for the append-maintained persisted indexes —
+ * the text-dedup index's flat tables ([[Dedup.appendToDedupIndex]]),
+ * the IVF index's cell dirs ([[Similarity.appendToIvfIndex]]) and the
+ * phash index's `pb=` dirs ([[Multimodal.appendToPhashIndex]]) — the
  * same problem [[graft.streaming.StreamOps.compactState]] solves for the
- * streaming state's `batch=` partitions, for flat / value-partitioned
- * tables: every appended batch adds part files, and a long-lived ingest
- * path accumulates thousands of them (each one a task + open-file cost
- * per probe).
+ * streaming state's `batch=` partitions: every appended batch adds part
+ * files, and a long-lived ingest path accumulates thousands of them
+ * (each one a task + open-file cost per probe).
  *
  * Crash-safe at EVERY window — the round-7 in-place `mode(overwrite)`
  * had one loss case (a JVM crash mid-overwrite killed both the on-disk
@@ -67,11 +68,11 @@ object ParquetCompact {
   }
 
   /** Run the crash recovery for `path` WITHOUT compacting — for callers
-    * whose own preconditions read the live table before any compactVia
-    * call runs ([[Dedup.migrateToPartitionedIndex]]): a crash mid-swap
-    * from a prior run leaves the live dir renamed away, so a precondition
-    * `spark.read.parquet(path)` throws path-not-found before the next
-    * compactVia could heal it. Idempotent; no-op on a clean path. */
+    * that read the live table before any compactVia call runs (the phash
+    * probe and compaction): a crash mid-swap from a prior run leaves the
+    * live dir renamed away, so a `spark.read.parquet(path)` throws
+    * path-not-found (or reads "no index") before the next compactVia
+    * could heal it. Idempotent; no-op on a clean path. */
   def recoverTable(spark: SparkSession, path: String): Unit = {
     val (live, tmp, old) = paths(path)
     recover(live.getFileSystem(spark.sparkContext.hadoopConfiguration),
@@ -107,42 +108,15 @@ object ParquetCompact {
         .write.partitionBy(partitionCol).parquet(tmpDir)
     }
 
-  /** Rewrite a table through an arbitrary `derive` transform into a
-    * `partitionCol`-partitioned layout, via the same staged swap —
-    * the layout-migration primitive ([[Dedup.migrateToPartitionedIndex]]
-    * derives the bucket column it partitions by). Returns the row
-    * count. */
-  def rewritePartitioned(spark: SparkSession, path: String,
-                         partitionCol: String)
-                        (derive: DataFrame => DataFrame): Long =
-    compactVia(spark, path) { (df, tmpDir) =>
-      derive(df).write.partitionBy(partitionCol).parquet(tmpDir)
-    }
-
-  /** [[rewritePartitioned]] with a MULTI-level partition layout — the
-    * epoch-partitioned streaming state nests its bucket dirs inside the
-    * `batch=` epoch dirs, so its migration rewrites under two partition
-    * columns at once. */
+  /** Rewrite a table through a `derive` transform into a layout
+    * partitioned by `partitionCols`, via the same staged swap — the
+    * phash index compaction ([[Multimodal.compactPhashIndex]]) keeps its
+    * `pb=` dirs, with the `__batch=` epochs nested inside them on a
+    * streamed index. Returns the row count. */
   def rewritePartitionedMulti(spark: SparkSession, path: String,
                               partitionCols: Seq[String])
                              (derive: DataFrame => DataFrame): Long =
     compactVia(spark, path) { (df, tmpDir) =>
       derive(df).write.partitionBy(partitionCols: _*).parquet(tmpDir)
-    }
-
-  /** [[rewritePartitioned]] folding EXTRA rows (an append delta) into
-    * the rewrite: the staged copy is derive(live ∪ extra), swapped in by
-    * the same crash-safe protocol. The caller deletes the extra's source
-    * AFTER this returns — a crash between the two leaves the rows
-    * doubled (harmless to the dedup probes, which re-distinct candidates
-    * and take per-pair best), and the next compaction's dedup step
-    * converges it. */
-  def rewritePartitionedWith(spark: SparkSession, path: String,
-                             partitionCol: String, extra: Option[DataFrame])
-                            (derive: DataFrame => DataFrame): Long =
-    compactVia(spark, path) { (df, tmpDir) =>
-      val merged = extra.fold(df)(e => df.unionByName(e,
-        allowMissingColumns = true))
-      derive(merged).write.partitionBy(partitionCol).parquet(tmpDir)
     }
 }

@@ -656,8 +656,8 @@ object Similarity {
                              epochHash: Option[Long],
                              mark: String => Unit): Unit = {
     val delta = csumKvsOf(batch, labelCol, idCol, vecCol, dims)
-    // touched cells only, read as EXPLICIT subdirectories (the
-    // readBandedDirs device): an isin partition filter still pays full
+    // touched cells only, read as EXPLICIT subdirectories: an isin
+    // partition filter still pays full
     // partition DISCOVERY over all K cell dirs, which at K ∝ n is the
     // corpus-proportional term this path exists to avoid (measured:
     // the 1000-dir listing dominated the append at 100x)
@@ -1266,16 +1266,12 @@ object Similarity {
                                epoch: Option[Long] = None,
                                epochHash: Option[Long] = None): Unit = {
     val p = csumsMarkerPath(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(p.toString + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write(
+    LayoutMarker.replaceWith(
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration), p,
+      "csums marker")(_.write(
       (s"$maxId|$dims" + epoch.fold("")(e => s"|$e") +
         (for { _ <- epoch; h <- epochHash } yield s"|$h").getOrElse(""))
-        .getBytes("UTF-8"))
-    finally out.close()
-    if (fs.exists(p)) fs.delete(p, false)
-    require(fs.rename(tmp, p), s"csums marker rename failed: $tmp -> $p")
+        .getBytes("UTF-8")))
   }
 
   /** Compact an append-grown IVF index in place: one file per cell
@@ -2644,14 +2640,10 @@ object Similarity {
                             maxId: Long, m: Int, ksub: Int,
                             dims: Int, residual: Boolean = false): Unit = {
     val p = pqMarkerPath(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(p.toString + ".tmp")
-    val out = fs.create(tmp, true)
     val r = if (residual) "1" else "0"
-    try out.write(s"$maxId|$m|$ksub|$dims|$r".getBytes("UTF-8"))
-    finally out.close()
-    if (fs.exists(p)) fs.delete(p, false)
-    require(fs.rename(tmp, p), s"pq marker rename failed: $tmp -> $p")
+    LayoutMarker.replaceWith(
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration), p,
+      "pq marker")(_.write(s"$maxId|$m|$ksub|$dims|$r".getBytes("UTF-8")))
   }
 
   /**

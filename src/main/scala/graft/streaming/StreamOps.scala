@@ -269,18 +269,6 @@ object StreamOps {
   private[graft] def keySummaryPath(statePath: String, epoch: Long) =
     new org.apache.hadoop.fs.Path(s"$statePath/keysum/batch=$epoch")
 
-  /** Data files directly under `dir`, none when it does not exist:
-    * parquet parts, not the writer's `_`/`.` bookkeeping (`_SUCCESS`,
-    * checksums, an uncommitted `_temporary`). */
-  private def dataFiles(fs: org.apache.hadoop.fs.FileSystem,
-                        dir: org.apache.hadoop.fs.Path)
-      : Seq[org.apache.hadoop.fs.FileStatus] =
-    if (!fs.exists(dir)) Nil
-    else fs.listStatus(dir).toSeq.filter { f =>
-      val n = f.getPath.getName
-      f.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }
-
   /**
    * One epoch of the online near-dup dedup — the foreachBatch core of
    * [[nearDupDedupTo]], factored out so [[prepPipelineTo]] can compose it
@@ -372,18 +360,15 @@ object StreamOps {
     // Spark read would list 64 ib dirs per epoch in a job of its own.
     // Empty or absent dirs (a crash at ANY point of an epoch's writes)
     // contribute nothing, so a replay never wedges on them.
-    def leaf(values: Seq[Any], files: Seq[org.apache.hadoop.fs.FileStatus]) =
-      files.headOption.map(f =>
-        FileIndexBridge.Leaf(f.getPath.getParent, values, files))
     val keyLeaves = epochs.flatMap(m =>
-      leaf(Seq(m), dataFiles(fs, new Path(s"$keysPath/batch=$m"))))
+      FileIndexBridge.leaf(fs, new Path(s"$keysPath/batch=$m"), Seq(m)))
     val setLeaves = epochs.flatMap { m =>
       val dir = new Path(s"$setsPath/batch=$m")
       if (!fs.exists(dir)) Nil
       else fs.listStatus(dir).toSeq
         .filter(d => d.isDirectory && d.getPath.getName.startsWith("ib="))
-        .flatMap(d => leaf(Seq[Any](m, d.getPath.getName.stripPrefix("ib=").toInt),
-          dataFiles(fs, d.getPath)))
+        .flatMap(d => FileIndexBridge.leaf(fs, d.getPath,
+          Seq[Any](m, d.getPath.getName.stripPrefix("ib=").toInt)))
     }
     val batchPart = new StructType().add("batch", LongType)
     // the candidates' id buckets (bounded ≤ StateSetBuckets) and id
@@ -817,8 +802,8 @@ object StreamOps {
    * (partitioned by epoch), then the summaries in one bounded collect
    * per epoch against the just-written epoch partitions.
    *
-   * Requires a FRESH `statePath` (single-writer, no stream attached) —
-   * the same no-mixed-layout rule as [[dedupIngestBootstrapPartitioned]].
+   * Requires a FRESH `statePath` (single-writer, no stream attached):
+   * bootstrapping over existing tables would mix layouts.
    * Returns the epoch count.
    */
   def nearDupStateBootstrap(corpus: DataFrame, statePath: String,
@@ -1399,14 +1384,10 @@ object StreamOps {
                                  indexPath: String, lastEpoch: Long,
                                  epochs: Set[Long]): Unit = {
     val p = centersMarkerPath(indexPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(p.toString + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write(
-      s"$lastEpoch|${epochs.toSeq.sorted.mkString(",")}".getBytes("UTF-8"))
-    finally out.close()
-    if (fs.exists(p)) fs.delete(p, false)
-    require(fs.rename(tmp, p), s"marker rename failed: $tmp -> $p")
+    graft.functions.LayoutMarker.replaceWith(
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration), p,
+      "centers marker")(_.write(
+      s"$lastEpoch|${epochs.toSeq.sorted.mkString(",")}".getBytes("UTF-8")))
   }
 
   /** One epoch of [[ivfIngestTo]] — factored out so the replay-idempotence
@@ -1658,31 +1639,18 @@ object StreamOps {
    * [[nearDupDedupTo]] downstream for "new-vs-corpus AND new-vs-new".
    *
    * Per-batch cost is the batch's own shingling plus bucket-local joins
-   * against the prebuilt key/set tables. The scale shape depends on the
-   * index layout (sniffed once at stream start):
-   *
-   *  - PARTITIONED index ([[graft.functions.Dedup.buildDedupIndexPartitioned]],
-   *    the 100 TB layout): each micro-batch probes via the partition-
-   *    pruned path — only the batch's own band-prefix dirs of `keys` and
-   *    candidate id-buckets of `sets` are read from disk — so NOTHING
-   *    corpus-proportional is pinned in cluster storage, the same
-   *    build-once / probe-many contract as [[annProbeTo]]'s pruned IVF
-   *    probes. The index files are re-resolved per batch, so the frozen-
-   *    index contract is load-bearing here exactly as for [[annProbeTo]]:
-   *    no concurrent append/compact on the path while the stream runs.
-   *  - FLAT index ([[graft.functions.Dedup.buildDedupIndex]], small
-   *    corpora): every probe needs the whole key/set tables, so they are
-   *    loaded + materialized ONCE per query (the [[lmScoreTo]]
-   *    pre-stream-build pattern), not re-listed from parquet every
-   *    micro-batch; this also pins one index snapshot for the life of
-   *    the stream. The snapshot is held at `DISK_ONLY_2` (not
-   *    `localCheckpoint`): a localCheckpoint TRUNCATES lineage into
-   *    non-replicated executor blocks, so one executor loss would make
-   *    the corpus-scale snapshot unrecoverable and fail every later
-   *    micro-batch of a long-running stream. persist keeps the parquet
-   *    lineage (the file listing is captured at read time, so a
-   *    recompute still sees this snapshot's files) and 2-replicates the
-   *    blocks, surviving single-executor loss without a recompute.
+   * against the prebuilt key/set tables. Every probe needs the whole
+   * key/set tables, so they are loaded + materialized ONCE per query
+   * (the [[lmScoreTo]] pre-stream-build pattern), not re-listed from
+   * parquet every micro-batch; this also pins one index snapshot for the
+   * life of the stream. The snapshot is held at `DISK_ONLY_2` (not
+   * `localCheckpoint`): a localCheckpoint TRUNCATES lineage into
+   * non-replicated executor blocks, so one executor loss would make the
+   * corpus-scale snapshot unrecoverable and fail every later
+   * micro-batch of a long-running stream. persist keeps the parquet
+   * lineage (the file listing is captured at read time, so a recompute
+   * still sees this snapshot's files) and 2-replicates the blocks,
+   * surviving single-executor loss without a recompute.
    *
    * Duplicate ids WITHIN a micro-batch (at-least-once upstream, a
    * crawler re-emitting a page) are collapsed to one row before the
@@ -1693,33 +1661,22 @@ object StreamOps {
                    checkpoint: String, idCol: String, textCol: String,
                    minJaccard: Double = 0.8,
                    availableNow: Boolean = true): StreamingQuery = {
-    import graft.functions.Dedup
     val spark = docs.sparkSession
-    val partitioned = Dedup.readDedupLayout(spark, indexPath).isDefined
-    val (cKeys, cSets) =
-      if (partitioned) (null, null) // pruned per-batch reads instead
-      else {
-        val k = spark.read.parquet(s"$indexPath/keys")
-          .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY_2)
-        val s = spark.read.parquet(s"$indexPath/sets")
-          .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY_2)
-        k.count(); s.count() // eager: materialize before the stream
-        (k, s)
-      }
+    Dedup.requireFlatIndex(spark, indexPath)
+    val cKeys = spark.read.parquet(s"$indexPath/keys")
+      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY_2)
+    val cSets = spark.read.parquet(s"$indexPath/sets")
+      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY_2)
+    cKeys.count(); cSets.count() // eager: materialize before the stream
     val writer = docs.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // checkpointed: the batch feeds the probe (shingling + two
-        // bounded collects on the pruned path) AND the final verdict
+        // checkpointed: the batch feeds the probe AND the final verdict
         // join — one evaluation keeps them consistent even over a
         // nondeterministic upstream transform
         val b = batch.dropDuplicates(idCol).localCheckpoint(false)
-        val verdicts =
-          if (partitioned)
-            Dedup.dedupAgainstIndexed(spark, indexPath, b, idCol, textCol,
-              minJaccard)
-          else Dedup.dedupAgainstTables(b, cKeys, cSets, idCol, textCol,
-            minJaccard)
+        val verdicts = Dedup.dedupAgainstTables(b, cKeys, cSets, idCol,
+          textCol, minJaccard)
         b.join(verdicts, Seq(idCol))
           .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
         ()
@@ -1969,67 +1926,26 @@ object StreamOps {
       .start()
   }
 
-  /** Per-JVM memo of the ingest index's layout, fixed at index creation:
-    * saves a marker open per trigger against HDFS/object stores. */
-  private val indexLayoutCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, Option[graft.functions.Dedup.BandedLayout]]()
-
-  private def ingestIndexLayout(spark: org.apache.spark.sql.SparkSession,
-                                indexPath: String)
-      : Option[graft.functions.Dedup.BandedLayout] = {
-    val resolved = indexLayoutCache.computeIfAbsent(indexPath,
-      _ => graft.functions.Dedup.readDedupLayout(spark, indexPath))
-    // re-anchor the cached decision to disk (one exists() per epoch): an
-    // index deleted and recreated at the same path in one JVM must get
-    // its marker back, or a later JVM reads its banded epochs as flat
-    resolved.foreach { b =>
-      val p = graft.functions.Dedup.layoutMarkerPath(indexPath)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p))
-        graft.functions.Dedup.writeDedupLayout(spark, indexPath, b)
-    }
-    resolved
-  }
-
   /** One epoch of [[dedupIngestTo]] — factored out so the
     * replay-idempotence contract is directly testable: same
-    * (batch, batchId) twice ≡ once. Honors the index's layout marker:
-    * epochs of a PARTITIONED index ([[dedupIngestBootstrapPartitioned]])
-    * nest `ib=`/`bp=` dirs inside their `__batch=` partition, so
-    * [[graft.functions.Dedup.dedupAgainstIndexed]] prunes probes of the
-    * streamed index exactly as it does the batch-built one (partition
-    * filters prune at any nesting level). */
+    * (batch, batchId) twice ≡ once. Ids must be integral: the probe's
+    * verify casts corpus ids to long and its best-match reduce skips
+    * null ids, so an index ingested with string ids would admit every
+    * near-dup silently. Both checks run before anything lands. */
   private[graft] def dedupIngestEpoch(batch: DataFrame, batchId: Long,
                                       indexPath: String, idCol: String,
                                       textCol: String): Unit = {
-    import graft.functions.Dedup
+    Dedup.requireFlatIndex(batch.sparkSession, indexPath)
+    graft.functions.TopKAgg.requireIntegralId(batch, idCol, "dedup ingest")
     // shingle once, derive both tables from the materialized sets —
     // identical row shapes to the batch build/append, so a probe cannot
     // tell which path populated the index
     val sets = Dedup.shingleSets(batch, idCol, textCol)
       .localCheckpoint(false)
-    ingestIndexLayout(batch.sparkSession, indexPath) match {
-      case Some(layout) =>
-        // same door-check as every banded writer: the bucket column
-        // null-casts non-integral ids, silently landing every row in the
-        // Hive default partition (the flat path below keeps supporting
-        // them — no bucket arithmetic there)
-        graft.functions.TopKAgg.requireIntegralId(batch, idCol,
-          "partitioned dedup ingest")
-        Dedup.bandedSets(sets, idCol, layout.setBuckets)
-          .write.mode("overwrite").partitionBy("ib")
-          .parquet(s"$indexPath/sets/__batch=$batchId")
-        Dedup.bandedKeys(Dedup.bandKeysFromSets(sets, idCol),
-          layout.bpChars)
-          .write.mode("overwrite").partitionBy("bp")
-          .parquet(s"$indexPath/keys/__batch=$batchId")
-      case None =>
-        sets.write.mode("overwrite")
-          .parquet(s"$indexPath/sets/__batch=$batchId")
-        Dedup.bandKeysFromSets(sets, idCol).write.mode("overwrite")
-          .parquet(s"$indexPath/keys/__batch=$batchId")
-    }
+    sets.write.mode("overwrite")
+      .parquet(s"$indexPath/sets/__batch=$batchId")
+    Dedup.bandKeysFromSets(sets, idCol).write.mode("overwrite")
+      .parquet(s"$indexPath/keys/__batch=$batchId")
   }
 
   /** Seed [[dedupIngestTo]]'s index with a pre-existing corpus in the
@@ -2038,67 +1954,19 @@ object StreamOps {
                            idCol: String, textCol: String): Unit =
     dedupIngestEpoch(corpus, -1L, indexPath, idCol, textCol)
 
-  /** [[dedupIngestBootstrap]] in the PARTITION-PRUNABLE layout
-    * ([[graft.functions.Dedup.buildDedupIndexPartitioned]]'s epoch-
-    * partitioned streaming form): writes the layout marker, then the
-    * seed epoch; every later streamed epoch and the compactor follow the
-    * marker, and probes of the streamed index prune to the batch's own
-    * band-prefix/id-bucket partitions instead of scanning the whole
-    * accumulated corpus. */
-  def dedupIngestBootstrapPartitioned(corpus: DataFrame, indexPath: String,
-                                      idCol: String, textCol: String,
-                                      setBuckets: Int = 64): Unit = {
-    require(setBuckets > 0, s"setBuckets must be positive: $setBuckets")
-    // stamping a banded marker onto a tree that already holds FLAT
-    // epochs would brick every later read (partition discovery finds
-    // leaf files at inconsistent depths) — the partitioned bootstrap
-    // needs a fresh path, same rule the state side enforces
-    val fs = new org.apache.hadoop.fs.Path(indexPath)
-      .getFileSystem(corpus.sparkSession.sparkContext.hadoopConfiguration)
-    for (t <- Seq("sets", "keys"))
-      require(!fs.exists(new org.apache.hadoop.fs.Path(s"$indexPath/$t")),
-        s"dedupIngestBootstrapPartitioned: $indexPath already holds a " +
-          "'" + t + "' table — a banded marker over existing flat epochs " +
-          "would produce a mixed layout that breaks partition discovery; " +
-          "bootstrap a fresh path (or compact + rebuild to migrate)")
-    // band-prefix width from the seed corpus size (the streamed epochs
-    // follow the marker, so the whole tree stays one width)
-    graft.functions.Dedup.writeDedupLayout(corpus.sparkSession, indexPath,
-      graft.functions.Dedup.BandedLayout(setBuckets,
-        graft.functions.Dedup.autoBpChars(corpus.count())))
-    dedupIngestEpoch(corpus, -1L, indexPath, idCol, textCol)
-  }
-
   /** Compact [[dedupIngestTo]]'s epoch partitions — every epoch adds
     * files to both tables; consolidates each into the reserved
-    * `__batch=-1` via the crash-safe [[consolidateEpochs]], preserving
-    * the `ib=`/`bp=` dirs of a partitioned index. Run OFFLINE
+    * `__batch=-1` via the crash-safe [[consolidateEpochs]]. Run OFFLINE
     * (single-writer). Returns per-table row counts. */
   def compactDedupIngestState(spark: org.apache.spark.sql.SparkSession,
                               indexPath: String,
-                              targetFiles: Int = 8): Map[String, Long] =
-    graft.functions.Dedup.readDedupLayout(spark, indexPath) match {
-      case Some(layout) => Map(
-        "sets" -> consolidateEpochs(spark, s"$indexPath/sets") {
-          (df, stageDir) =>
-            df.repartition(
-                graft.functions.Dedup.writeTasks(df, layout.setBuckets),
-                col("ib"))
-              .write.partitionBy("ib").parquet(stageDir)
-        }.getOrElse(0L),
-        "keys" -> consolidateEpochs(spark, s"$indexPath/keys") {
-          (df, stageDir) =>
-            df.repartition(
-                graft.functions.Dedup.writeTasks(df, layout.bpDirs),
-                col("bp"))
-              .write.partitionBy("bp").parquet(stageDir)
-        }.getOrElse(0L))
-      case None =>
-        Seq("sets", "keys").map(t =>
-          t -> consolidateEpochs(spark, s"$indexPath/$t") { (df, stageDir) =>
-            df.coalesce(targetFiles).write.parquet(stageDir)
-          }.getOrElse(0L)).toMap
-    }
+                              targetFiles: Int = 8): Map[String, Long] = {
+    Dedup.requireFlatIndex(spark, indexPath)
+    Seq("sets", "keys").map(t =>
+      t -> consolidateEpochs(spark, s"$indexPath/$t") { (df, stageDir) =>
+        df.coalesce(targetFiles).write.parquet(stageDir)
+      }.getOrElse(0L)).toMap
+  }
 
   /**
    * Crash-safe consolidation of an epoch-partitioned table

@@ -1,6 +1,6 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.datasources.{FileStatusCache,
@@ -24,10 +24,29 @@ object FileIndexBridge {
     * order) and its data files. */
   final case class Leaf(dir: Path, values: Seq[Any], files: Seq[FileStatus])
 
-  /** A parquet frame of `dataSchema ++ partitionSchema` over `leaves`.
-    * Partition filters on the frame prune leaves; no file is listed. */
-  def parquet(spark: SparkSession, dataSchema: StructType,
+  /** The leaf of one directory's `listing`: its parquet parts, not the
+    * writer's `_`/`.` bookkeeping (`_SUCCESS`, checksums, an uncommitted
+    * `_temporary`), keyed by their own (qualified) parent path; None when
+    * it holds none — an empty dir (a crash before a write landed)
+    * contributes nothing. */
+  def leafOf(values: Seq[Any], listing: Seq[FileStatus]): Option[Leaf] = {
+    val files = listing.filter { f =>
+      val n = f.getPath.getName
+      f.isFile && !n.startsWith("_") && !n.startsWith(".")
+    }
+    files.headOption.map(f => Leaf(f.getPath.getParent, values, files))
+  }
+
+  /** [[leafOf]] the listing of `dir`; None when `dir` is absent. */
+  def leaf(fs: FileSystem, dir: Path, values: Seq[Any]): Option[Leaf] =
+    if (!fs.exists(dir)) None else leafOf(values, fs.listStatus(dir).toSeq)
+
+  /** A parquet frame of `schema ++ partitionSchema` over `leaves`.
+    * Partition filters on the frame prune leaves; no file is listed.
+    * The data columns read as nullable, as Spark writes them. */
+  def parquet(spark: SparkSession, schema: StructType,
               partitionSchema: StructType, leaves: Seq[Leaf]): DataFrame = {
+    val dataSchema = schema.asNullable
     val listed = leaves.map(l => l.dir -> l.files.toArray).toMap
     val cache = new FileStatusCache {
       override def getLeafFiles(path: Path): Option[Array[FileStatus]] =

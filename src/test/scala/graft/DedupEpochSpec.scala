@@ -2,9 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import scala.collection.mutable
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.StreamOps
@@ -16,40 +13,6 @@ import graft.streaming.StreamOps
 class DedupEpochSpec extends AnyFunSuite {
   import SparkTestSession._
   import spark.implicits._
-
-  /** Records every job's description and streaming batch id. */
-  private final class JobRecorder extends SparkListener {
-    val jobs = mutable.ArrayBuffer.empty[(Option[Long], String)]
-    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
-      val p = Option(e.properties)
-      jobs += ((p.flatMap(q => Option(q.getProperty("streaming.sql.batchId")))
-        .map(_.toLong),
-        p.flatMap(q => Option(q.getProperty("spark.job.description")))
-          .getOrElse("")))
-      ()
-    }
-    def of(batch: Long): Seq[String] = synchronized {
-      jobs.collect { case (Some(`batch`), d) => d }.toSeq
-    }
-  }
-
-  /** Runs `body` with a recorder installed. Listener events arrive
-    * asynchronously but in order, so once a fence job of the body's
-    * thread is seen, every earlier job has been recorded. */
-  private def recording[T](body: JobRecorder => T): T = {
-    val sc = spark.sparkContext
-    val r = new JobRecorder
-    sc.addSparkListener(r)
-    try {
-      val t = body(r)
-      sc.setJobDescription("job-recorder-fence")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      val deadline = System.nanoTime() + 30e9.toLong
-      while (!r.synchronized(r.jobs.exists(_._2 == "job-recorder-fence")) &&
-        System.nanoTime() < deadline) Thread.sleep(10)
-      t
-    } finally sc.removeSparkListener(r)
-  }
 
   private val vocab = (0 until 600).map(i => s"w$i")
 
@@ -85,7 +48,7 @@ class DedupEpochSpec extends AnyFunSuite {
     val st = Files.createTempDirectory("graft-dej-st").toString + "/st"
     val ck = Files.createTempDirectory("graft-dej-ck").toString
     val schema = spark.read.parquet(in).schema
-    val perEpoch = recording { r =>
+    val perEpoch = JobRecorder.recording(spark) { r =>
       StreamOps.nearDupDedupTo(
         spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
           .parquet(in), out, st, ck, "doc_id", "text", 0.6)

@@ -113,4 +113,41 @@ class PhashIngestSpec extends AnyFunSuite {
         "post-compaction ingest must extend the consolidated corpus")
     }
   }
+
+  test("a probe over more than 32 pb dirs starts no listing job, on either layout") {
+    val kind = PhashKind.Image
+    val probes = fixture(kind, (0L until 90L).map(_ + 10000L))
+      .localCheckpoint()
+    // the probe's candidate dirs, by the index's own geometry: 4 blocks
+    // of 16 bits, pb = blk * 64 + the block value's top 6 bits
+    val probePbs = Multimodal.phashSignatures(spark, probes)
+      .select("dhash").collect().map(_.getLong(0)).toSeq
+      .flatMap(h => (0 until 4).map(b =>
+        b * 64 + (((h >>> (16 * b)) & 0xFFFFL) >> 10).toInt))
+      .toSet
+    def pbDirs(root: String): Set[Int] = new java.io.File(root).listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith("pb="))
+      .map(_.getName.stripPrefix("pb=").toInt).toSet
+    val flat = Files.createTempDirectory("graft-phls").toString + "/idx"
+    Multimodal.buildPhashIndex(spark, kind, fixture(kind, 0L until 90L), flat)
+    val streamed = Files.createTempDirectory("graft-phls-s").toString + "/idx"
+    StreamOps.phashIngestBootstrap(kind, fixture(kind, 0L until 45L), streamed)
+    StreamOps.phashIngestEpoch(kind, fixture(kind, 45L until 90L), 0L,
+      streamed, compactEvery = 0)
+    val want = Multimodal.phashDedupAgainst(spark, kind, flat, probes)
+      .collect().map(_.toSeq).toSet
+    assert(want.nonEmpty)
+    Seq(flat, streamed).foreach { idx =>
+      val touched = (probePbs & pbDirs(idx)).size
+      assert(touched > 32, s"the probe must touch more than 32 pb dirs: $touched")
+      val (got, jobs) = JobRecorder.recording(spark) { r =>
+        val got = Multimodal.phashDedupAgainst(spark, kind, idx, probes)
+          .collect().map(_.toSeq).toSet
+        (got, r)
+      }
+      assert(got == want, s"$idx: probe changed")
+      val listing = jobs.descriptions.filter(_.startsWith("Listing leaf files"))
+      assert(listing.isEmpty, s"$idx: the probe started listing jobs: $listing")
+    }
+  }
 }

@@ -9,9 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.{Dedup, TextFns}
 import graft.sources.Tables
 
-/** Round-10: the partition-prunable persisted text-dedup index —
-  * bit-identity with the flat layout, the FS-bytes pruning proof,
-  * append/compact parity, and loud failure on layout drift. */
+/** Round-10: the persisted text-dedup index's edge cases (a batch with
+  * no shingles, a tree from the removed partitioned layout), the
+  * frozen-keys line strip and the audio container headers. */
 class Round10OpsSpec extends AnyFunSuite {
   import SparkTestSession._
 
@@ -37,191 +37,11 @@ class Round10OpsSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), Option(r.get(1)),
         Option(r.get(2)), r.getBoolean(3))).toSet
 
-  private def fileBytesRead(): Long =
-    Option(org.apache.hadoop.fs.FileSystem.getGlobalStorageStatistics
-      .get("file"))
-      .flatMap(s => Option(s.getLong("bytesRead")).map(_.longValue()))
-      .getOrElse(0L)
-
-  private def dirBytes(path: String): Long = {
-    def walk(f: java.io.File): Long =
-      if (f.isFile) f.length()
-      else Option(f.listFiles()).map(_.map(walk).sum).getOrElse(0L)
-    walk(new java.io.File(path))
-  }
-
-  private def partDirs(path: String, prefix: String): Seq[java.io.File] =
-    new java.io.File(path).listFiles().toSeq
-      .filter(f => f.isDirectory && f.getName.startsWith(prefix))
-
-  test("partitioned layout probe ≡ flat probe ≡ direct dedupAgainst") {
-    val flat = Files.createTempDirectory("graft-ddp-flat").toString
-    val banded = Files.createTempDirectory("graft-ddp-band").toString
-    val corpus = docs
-    Dedup.buildDedupIndex(corpus, "doc_id", "text", flat)
-    Dedup.buildDedupIndexPartitioned(corpus, "doc_id", "text", banded,
-      setBuckets = 16)
-    val batch = probeBatch.localCheckpoint()
-    val direct = verdictRows(
-      Dedup.dedupAgainst(batch, corpus, "doc_id", "text", 0.8))
-    val viaFlat = verdictRows(
-      Dedup.dedupAgainstIndexed(spark, flat, batch, "doc_id", "text", 0.8))
-    val viaBanded = verdictRows(
-      Dedup.dedupAgainstIndexed(spark, banded, batch, "doc_id", "text", 0.8))
-    assert(viaBanded == viaFlat, "partitioned probe must be bit-identical")
-    assert(viaBanded == direct, "indexed probes must match dedupAgainst")
-    assert(viaBanded.exists(!_._4) && viaBanded.exists(_._4),
-      "fixture must exercise both dup and admitted verdicts")
-    // and the layout is what the builder promises: value-partition dirs
-    assert(partDirs(s"$banded/keys", "bp=x").nonEmpty)
-    assert(partDirs(s"$banded/sets", "ib=").nonEmpty)
-  }
-
-  test("partitioned probe reads only the batch's partitions (FS bytes)") {
-    val flat = Files.createTempDirectory("graft-ddb-flat").toString
-    val banded = Files.createTempDirectory("graft-ddb-band").toString
-    Dedup.buildDedupIndex(docs, "doc_id", "text", flat)
-    Dedup.buildDedupIndexPartitioned(docs, "doc_id", "text", banded,
-      setBuckets = 64)
-    // a SMALL batch (3 docs): its band keys cover few of the 256 prefix
-    // dirs and its candidates few of the 64 id buckets. Checkpointed so
-    // neither arm pays parquet reads for the batch itself.
-    val small = probeBatch.limit(3).localCheckpoint()
-    // Measurement trap: parquet's vectored IO reads data pages outside
-    // Hadoop's FS statistics (only footers and listings count — a full
-    // scan of this index registers ~5% of its bytes), so it is turned
-    // off for the measured block. The probes are driven through a full
-    // collect so every verdict column — and with it every index scan —
-    // is evaluated regardless of what an optimizer might prune under a
-    // bare count().
-    val hc = spark.sparkContext.hadoopConfiguration
-    hc.set("parquet.hadoop.vectored.io.enabled", "false")
-    val (flatBytes, bandedBytes) = try {
-      val b0 = fileBytesRead()
-      verdictRows(
-        Dedup.dedupAgainstIndexed(spark, flat, small, "doc_id", "text", 0.8))
-      val fb = fileBytesRead() - b0
-      val b1 = fileBytesRead()
-      verdictRows(
-        Dedup.dedupAgainstIndexed(spark, banded, small, "doc_id", "text", 0.8))
-      (fb, fileBytesRead() - b1)
-    } finally hc.unset("parquet.hadoop.vectored.io.enabled")
-    val idxBytes = dirBytes(flat)
-    // the flat probe scans the whole index; the pruned probe must skip
-    // most of it — the margin is a meaningful fraction of the index's
-    // on-disk size, not a rounding error
-    assert(flatBytes - bandedBytes > (0.3 * idxBytes).toLong,
-      s"pruning saved too little: flat=$flatBytes banded=$bandedBytes " +
-        s"index=$idxBytes")
-    assert(bandedBytes < flatBytes / 2,
-      s"pruned probe read too much: banded=$bandedBytes flat=$flatBytes")
-  }
-
-  test("banded probe's sets read is rooted at candidate ib DIRS only") {
-    val p = Files.createTempDirectory("graft-ddpf").toString
-    Dedup.buildDedupIndexPartitioned(docs, "doc_id", "text", p,
-      setBuckets = 16)
-    val out = Dedup.dedupAgainstIndexed(spark, p, probeBatch.limit(5),
-      "doc_id", "text", 0.8)
-    out.collect() // resolve the adaptive plan before inspecting it
-    // round 11 moved the pruning EARLIER than a PartitionFilters clause:
-    // the probe selects the candidate ib dirs driver-side and hands the
-    // scan explicit subdir roots, so non-candidate dirs are never even
-    // LISTED. The plan proof is therefore in the scan's input files —
-    // every sets file read must live under a candidate ib= dir, and the
-    // candidate set must be a strict subset of the 16 buckets.
-    val setsFiles = out.inputFiles.filter(_.contains("/sets/")).toSeq
-    assert(setsFiles.nonEmpty &&
-      setsFiles.forall(_.matches(""".*/sets/ib=\d+/[^/]+""")),
-      s"sets scan not rooted at explicit ib dirs: $setsFiles")
-    val buckets = setsFiles.map(_.replaceAll(""".*/ib=(\d+)/.*""", "$1"))
-      .distinct
-    assert(buckets.size < 16,
-      s"a 5-doc probe should select a strict subset of buckets: $buckets")
-  }
-
-  test("append to the partitioned layout ≡ partitioned rebuild") {
-    val grown = Files.createTempDirectory("graft-ddap-g").toString
-    val rebuilt = Files.createTempDirectory("graft-ddap-r").toString
-    Dedup.buildDedupIndexPartitioned(docs.filter(col("doc_id") % 2 === 0),
-      "doc_id", "text", grown, setBuckets = 16)
-    Dedup.appendToDedupIndex(docs.filter(col("doc_id") % 2 === 1),
-      "doc_id", "text", grown)
-    Dedup.buildDedupIndexPartitioned(docs, "doc_id", "text", rebuilt,
-      setBuckets = 16)
-    val batch = probeBatch.localCheckpoint()
-    val g = verdictRows(
-      Dedup.dedupAgainstIndexed(spark, grown, batch, "doc_id", "text", 0.8))
-    val r = verdictRows(
-      Dedup.dedupAgainstIndexed(spark, rebuilt, batch, "doc_id", "text", 0.8))
-    assert(g == r && g.nonEmpty,
-      "append-then-probe must equal rebuild-then-probe")
-    // appended rows landed IN partition dirs (no flat files beside them)
-    val stray = new java.io.File(s"$grown/sets").listFiles()
-      .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-    assert(stray.isEmpty, s"append wrote flat files: ${stray.mkString(",")}")
-  }
-
-  test("compact preserves the partitioned layout and the probe verdicts") {
-    val p = Files.createTempDirectory("graft-ddcp").toString
-    Dedup.buildDedupIndexPartitioned(docs.filter(col("doc_id") % 2 === 0),
-      "doc_id", "text", p, setBuckets = 8)
-    Dedup.appendToDedupIndex(docs.filter(col("doc_id") % 4 === 1),
-      "doc_id", "text", p)
-    Dedup.appendToDedupIndex(docs.filter(col("doc_id") % 4 === 3),
-      "doc_id", "text", p)
-    val batch = probeBatch.localCheckpoint()
-    val before = verdictRows(
-      Dedup.dedupAgainstIndexed(spark, p, batch, "doc_id", "text", 0.8))
-    val counts = Dedup.compactDedupIndex(spark, p)
-    assert(counts("sets") == docs.count(),
-      "compact must keep every corpus row")
-    val after = verdictRows(
-      Dedup.dedupAgainstIndexed(spark, p, batch, "doc_id", "text", 0.8))
-    assert(after == before, "compaction changed the verdicts")
-    // one file per partition dir, layout intact
-    for (d <- partDirs(s"$p/sets", "ib=") ++ partDirs(s"$p/keys", "bp="))
-      assert(d.listFiles().count(f =>
-        f.isFile && f.getName.endsWith(".parquet")) == 1,
-        s"${d.getName} not compacted to one file")
-  }
-
-  test("migrateToPartitionedIndex: in-place flat→banded, no re-shingle") {
-    val p = Files.createTempDirectory("graft-ddmig").toString
-    Dedup.buildDedupIndex(docs, "doc_id", "text", p)
-    val batch = probeBatch.localCheckpoint()
-    val before = verdictRows(
-      Dedup.dedupAgainstIndexed(spark, p, batch, "doc_id", "text", 0.8))
-    val counts = Dedup.migrateToPartitionedIndex(spark, p, setBuckets = 16)
-    assert(counts("sets") == docs.count())
-    // layout flipped: marker + partition dirs present
-    assert(new java.io.File(s"$p/_graft_dedup_layout").exists())
-    assert(partDirs(s"$p/sets", "ib=").nonEmpty &&
-      partDirs(s"$p/keys", "bp=x").nonEmpty)
-    // probes are bit-identical through the migration, and appends land
-    // in the banded layout
-    val after = verdictRows(
-      Dedup.dedupAgainstIndexed(spark, p, batch, "doc_id", "text", 0.8))
-    assert(after == before && after.nonEmpty)
-    assert(intercept[IllegalArgumentException] {
-      Dedup.migrateToPartitionedIndex(spark, p)
-    }.getMessage.contains("already partitioned"))
-    // an epoch-partitioned ingest tree is refused (its sets carry the
-    // __batch partition column)
-    val ingest = Files.createTempDirectory("graft-ddmig-i").toString + "/idx"
-    graft.streaming.StreamOps.dedupIngestBootstrap(
-      docs.limit(5), ingest, "doc_id", "text")
-    assert(intercept[IllegalArgumentException] {
-      Dedup.migrateToPartitionedIndex(spark, ingest)
-    }.getMessage.contains("not a flat dedup index"))
-  }
-
   test("a batch with no shingles probes cleanly (empty partition filters)") {
     import spark.implicits._
     val p = Files.createTempDirectory("graft-ddsh").toString
-    Dedup.buildDedupIndexPartitioned(docs, "doc_id", "text", p,
-      setBuckets = 16)
-    // two words → zero 3-shingles → no band keys → empty prefix list
+    Dedup.buildDedupIndex(docs, "doc_id", "text", p)
+    // two words → zero 3-shingles → no band keys → no candidates
     val tiny = Seq((999999L, "hello world")).toDF("doc_id", "text")
     val out = verdictRows(
       Dedup.dedupAgainstIndexed(spark, p, tiny, "doc_id", "text", 0.8))
@@ -312,47 +132,26 @@ class Round10OpsSpec extends AnyFunSuite {
 
   test("a corrupt layout marker fails loudly, not silently-flat") {
     val p = Files.createTempDirectory("graft-ddcm").toString
-    Dedup.buildDedupIndexPartitioned(docs, "doc_id", "text", p,
-      setBuckets = 16)
-    // drop the Hadoop checksum sidecar so the direct overwrite below is
-    // read back as content (not a ChecksumException)
-    def poison(content: String): Unit = {
-      new java.io.File(s"$p/._graft_dedup_layout.crc").delete()
+    Dedup.buildDedupIndex(docs, "doc_id", "text", p)
+    // a marker of the removed partitioned layout, well-formed or not,
+    // is never read as a flat index: the probe refuses the tree
+    def poison(content: String): Unit =
       java.nio.file.Files.write(
         java.nio.file.Paths.get(s"$p/_graft_dedup_layout"),
         content.getBytes("UTF-8"))
-    }
     poison("banded|not-a-number")
     val e = intercept[RuntimeException] {
       Dedup.dedupAgainstIndexed(spark, p, probeBatch, "doc_id", "text", 0.8)
     }
-    assert(e.getMessage.contains("corrupt"),
+    assert(e.getMessage.contains("rebuild with buildDedupIndex"),
       s"unexpected error: ${e.getMessage}")
-    // a bare number (truncated/foreign write) is NOT a valid marker: it
-    // must not pass as a bucket count that mis-buckets later appends
+    // a bare number (truncated/foreign write) is refused the same way
     poison("16")
     val e2 = intercept[RuntimeException] {
       Dedup.dedupAgainstIndexed(spark, p, probeBatch, "doc_id", "text", 0.8)
     }
-    assert(e2.getMessage.contains("corrupt"),
+    assert(e2.getMessage.contains("rebuild with buildDedupIndex"),
       s"unexpected error: ${e2.getMessage}")
-  }
-
-  test("flat rebuild over a formerly-partitioned path retires the marker") {
-    val p = Files.createTempDirectory("graft-ddfr").toString
-    Dedup.buildDedupIndexPartitioned(docs, "doc_id", "text", p,
-      setBuckets = 16)
-    // rebuild FLAT at the same path: the marker must go with the old
-    // layout, or every later probe filters on a bp column that no
-    // longer exists
-    Dedup.buildDedupIndex(docs, "doc_id", "text", p)
-    val batch = probeBatch.localCheckpoint()
-    val viaRebuilt = verdictRows(
-      Dedup.dedupAgainstIndexed(spark, p, batch, "doc_id", "text", 0.8))
-    val direct = verdictRows(
-      Dedup.dedupAgainst(batch, docs, "doc_id", "text", 0.8))
-    assert(viaRebuilt == direct && viaRebuilt.nonEmpty,
-      "flat rebuild over a partitioned path must probe flat and match")
   }
 
   test("WAV fingerprint ignores trailing chunks and the pad byte") {

@@ -10,15 +10,15 @@ import graft.functions.{Dedup, Similarity}
 import graft.streaming.StreamOps
 
 /**
- * Property obligation for the round-12 verdict: the banded dedup index's
- * READ-side contract under its whole maintenance lifecycle. The delta
- * union (probe = banded base ∪ flat deltas) is read between appends and
+ * Property obligation for the round-12 verdict: the persisted dedup
+ * index's READ-side contract under its whole maintenance lifecycle.
+ * Appended files are read beside compacted ones between appends and
  * compactions; single-writer discipline is documented, but nothing
  * pinned that a probe taken at ANY point of an interleaved
  * append/compact sequence equals the inline dedup over exactly the
  * documents admitted so far — the way RowKeyProperties pinned the JDBC
  * apply side. Randomized op sequences (append / compact / probe) run
- * against a live banded index; every probe is bit-compared against
+ * against a live index; every probe is bit-compared against
  * [[Dedup.dedupAgainst]] over the accumulated corpus (the oracle-proven
  * inline form — "rebuild probe" — since a fresh index over the same
  * corpus IS the inline computation, Round7OpsSpec).
@@ -70,9 +70,8 @@ class Round12Properties extends AnyFunSuite {
       var admitted = (0 until 10).map { i =>
         (i.toLong, freshText(si * 10000L + i))
       }
-      Dedup.buildDedupIndexPartitioned(
-        admitted.toDF("doc_id", "text"), "doc_id", "text", path,
-        setBuckets = 4, bpChars = 1)
+      Dedup.buildDedupIndex(
+        admitted.toDF("doc_id", "text"), "doc_id", "text", path)
       var probed = 0
       ops.foreach {
         case 0 => // append: a mix of near-dups of admitted docs and fresh
@@ -255,21 +254,21 @@ class Round12Properties extends AnyFunSuite {
 
   test("property: appends after a compaction keep folding (delta → base → delta)") {
     // the fixed lifecycle the random walk may not hit: append → compact
-    // → append → probe, verifying the SECOND delta generation unions in
-    // after the first was folded into the banded base
+    // → append → probe, verifying the SECOND append generation is probed
+    // beside the first, already compacted into the base files
     val path = Files.createTempDirectory("graft-r12p-cycle").toString + "/idx"
     val corpus = (0 until 8).map(i => (i.toLong, freshText(777000L + i)))
-    Dedup.buildDedupIndexPartitioned(corpus.toDF("doc_id", "text"),
-      "doc_id", "text", path, setBuckets = 4, bpChars = 1)
+    Dedup.buildDedupIndex(corpus.toDF("doc_id", "text"),
+      "doc_id", "text", path)
     val b1 = Seq((2000L, nearDupOf(corpus(3)._2, 2000L)),
       (2001L, freshText(777100L)))
     Dedup.appendToDedupIndex(b1.toDF("doc_id", "text"), "doc_id", "text", path)
     Dedup.compactDedupIndex(spark, path)
-    val b2 = Seq((2100L, nearDupOf(b1.head._2, 2100L)), // dup of a DELTA-era doc
+    val b2 = Seq((2100L, nearDupOf(b1.head._2, 2100L)), // dup of a 1st-gen append
       (2101L, freshText(777200L)))
     Dedup.appendToDedupIndex(b2.toDF("doc_id", "text"), "doc_id", "text", path)
     val probe = Seq((900000L, nearDupOf(corpus(1)._2, 900000L)),
-      (900001L, nearDupOf(b2.head._2, 900001L)), // dup of a 2nd-gen delta doc
+      (900001L, nearDupOf(b2.head._2, 900001L)), // dup of a 2nd-gen append
       (900002L, freshText(777300L)))
       .toDF("doc_id", "text").localCheckpoint()
     val all = (corpus ++ b1 ++ b2).toDF("doc_id", "text")

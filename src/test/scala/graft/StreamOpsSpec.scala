@@ -1150,12 +1150,10 @@ class StreamOpsSpec extends AnyFunSuite {
     assert(once == dedupRebuiltRows())
   }
 
-  test("PARTITIONED dedup ingest: streamed epochs probe pruned ≡ batch rebuild") {
-    import graft.functions.Dedup
+  test("dedup ingest: streamed epochs ≡ batch rebuild through replay and compaction") {
     val in = Files.createTempDirectory("graft-ddbp-in").toString
     val idx = Files.createTempDirectory("graft-ddbp-idx").toString + "/idx"
-    StreamOps.dedupIngestBootstrapPartitioned(dedupSeed, idx, "doc_id",
-      "text", setBuckets = 8)
+    StreamOps.dedupIngestBootstrap(dedupSeed, idx, "doc_id", "text")
     dedupEpoch1.coalesce(1).write.mode("append").parquet(in)
     Thread.sleep(1100)
     dedupEpoch2.coalesce(1).write.mode("append").parquet(in)
@@ -1165,78 +1163,90 @@ class StreamOpsSpec extends AnyFunSuite {
       idx, Files.createTempDirectory("graft-ddbp-ck").toString,
       "doc_id", "text")
     q.awaitTermination()
-    // streamed epochs landed in the banded layout
-    assert(new java.io.File(s"$idx/sets/__batch=1").listFiles()
-      .exists(f => f.isDirectory && f.getName.startsWith("ib=")),
-      "streamed epoch must nest ib= dirs")
-    assert(new java.io.File(s"$idx/keys/__batch=1").listFiles()
-      .exists(f => f.isDirectory && f.getName.startsWith("bp=")),
-      "streamed epoch must nest bp= dirs")
-    // probes prune AND match a batch-built partitioned index exactly
+    // probes match a batch-built index of the same corpus exactly
     val got = dedupProbeRows(idx)
-    val rebuilt = Files.createTempDirectory("graft-ddbp-rb").toString
-    Dedup.buildDedupIndexPartitioned(
-      dedupSeed.unionByName(dedupEpoch1).unionByName(dedupEpoch2),
-      "doc_id", "text", rebuilt, setBuckets = 8)
-    assert(got.nonEmpty && got == dedupProbeRows(rebuilt),
-      "streamed banded index must probe like the batch-built one")
+    assert(got.nonEmpty && got == dedupRebuiltRows(),
+      "streamed index must probe like the batch-built one")
     assert(got.exists { case (id, dup, adm) =>
       id == 10L && dup.contains(4L) && !adm })
-    // replay idempotence on the banded layout: same epoch twice ≡ once
+    // replay idempotence after the stream: same epoch twice ≡ once
     StreamOps.dedupIngestEpoch(dedupEpoch2, 1L, idx, "doc_id", "text")
     assert(dedupProbeRows(idx) == got)
-    // compaction preserves the banded layout and the probe results
+    // compaction consolidates every epoch and keeps the probe results
     val counts = StreamOps.compactDedupIngestState(spark, idx)
     assert(counts("sets") == 4L, s"counts: $counts")
-    assert(new java.io.File(s"$idx/sets/__batch=-1").listFiles()
-      .exists(f => f.isDirectory && f.getName.startsWith("ib=")),
-      "compaction must keep the ib= dirs")
+    assert(new java.io.File(s"$idx/sets").listFiles()
+      .filter(_.getName.startsWith("__batch=")).map(_.getName).toSeq ==
+      Seq("__batch=-1"), "compaction must leave only the consolidated epoch")
     assert(dedupProbeRows(idx) == got, "compaction changed probe results")
   }
 
-  test("partitioned ingest guards: string ids, mixed layouts, lost markers") {
+  test("dedupIngestBootstrap with string ids fails before any write") {
     import spark.implicits._
+    // the probe casts corpus ids to long and skips null ids, so a
+    // string-id index would admit every near-dup silently
+    val idx = Files.createTempDirectory("graft-pig-a").toString + "/idx"
+    val e = intercept[IllegalArgumentException] {
+      StreamOps.dedupIngestBootstrap(
+        Seq(("a", "some text here")).toDF("doc_id", "text"), idx,
+        "doc_id", "text")
+    }
+    assert(e.getMessage.contains("integral"), e.getMessage)
+    assert(!new java.io.File(s"$idx/sets").exists() &&
+      !new java.io.File(s"$idx/keys").exists(),
+      "a refused epoch must leave no table behind")
+  }
+
+  test("a tree of the removed partitioned layout is refused by every index entry point") {
     import graft.functions.Dedup
-    // 1. string ids fail at the banded door (the flat path supports
-    // them; the bucket column would null-cast every row)
-    val e1 = intercept[IllegalArgumentException] {
-      StreamOps.dedupIngestBootstrapPartitioned(
-        Seq(("a", "some text here")).toDF("doc_id", "text"),
-        Files.createTempDirectory("graft-pig-a").toString + "/idx",
-        "doc_id", "text")
+    // built by hand: a flat index plus a layout marker, and a flat
+    // index plus one append-delta parquet file
+    def flatIndex(tag: String) = {
+      val p = Files.createTempDirectory(s"graft-rfz-$tag").toString + "/idx"
+      Dedup.buildDedupIndex(dedupSeed, "doc_id", "text", p)
+      p
     }
-    assert(e1.getMessage.contains("integral"), e1.getMessage)
-    // 2. a banded bootstrap over an existing FLAT tree is refused — the
-    // marker would make partition discovery read mixed leaf depths
-    val mixed = Files.createTempDirectory("graft-pig-b").toString + "/idx"
-    StreamOps.dedupIngestBootstrap(dedupSeed, mixed, "doc_id", "text")
-    val e2 = intercept[IllegalArgumentException] {
-      StreamOps.dedupIngestBootstrapPartitioned(dedupSeed, mixed,
-        "doc_id", "text")
+    val marked = flatIndex("m")
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(s"$marked/_graft_dedup_layout"),
+      "banded|16,1".getBytes("UTF-8"))
+    val delta = flatIndex("d")
+    dedupEpoch1.coalesce(1).write.parquet(s"$delta/sets_delta")
+    val in = Files.createTempDirectory("graft-rfz-in").toString
+    dedupProbeBatch.coalesce(1).write.mode("append").parquet(in)
+    def tree(p: String): Map[String, Long] = {
+      val root = new java.io.File(p).toPath
+      Files.walk(root).toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
+        .map(f => root.relativize(f).toString ->
+          (if (Files.isRegularFile(f)) Files.size(f) else -1L)).toMap
     }
-    assert(e2.getMessage.contains("mixed layout"), e2.getMessage)
-    // 3. the per-JVM layout cache must not outlive the on-disk marker:
-    // delete + recreate the index at the same path — the next epoch's
-    // cached banded decision must re-write the marker, not leave banded
-    // epochs a later JVM would misread as legacy
-    val idx = Files.createTempDirectory("graft-pig-c").toString + "/idx"
-    StreamOps.dedupIngestBootstrapPartitioned(dedupSeed, idx,
-      "doc_id", "text", setBuckets = 8)
-    def rmrf(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rmrf)); f.delete(); ()
+    Seq(marked, delta).foreach { p =>
+      val before = tree(p)
+      val entryPoints: Seq[(String, () => Any)] = Seq(
+        "buildDedupIndex" -> (() =>
+          Dedup.buildDedupIndex(dedupSeed, "doc_id", "text", p)),
+        "appendToDedupIndex" -> (() =>
+          Dedup.appendToDedupIndex(dedupEpoch2, "doc_id", "text", p)),
+        "compactDedupIndex" -> (() => Dedup.compactDedupIndex(spark, p)),
+        "dedupAgainstIndexed" -> (() => Dedup.dedupAgainstIndexed(spark, p,
+          dedupProbeBatch, "doc_id", "text", 0.5)),
+        "dedupIngestEpoch" -> (() =>
+          StreamOps.dedupIngestEpoch(dedupEpoch2, 0L, p, "doc_id", "text")),
+        "compactDedupIngestState" -> (() =>
+          StreamOps.compactDedupIngestState(spark, p)),
+        "crossDedupTo" -> (() => StreamOps.crossDedupTo(
+          spark.readStream.schema(dedupProbeBatch.schema).parquet(in), p,
+          Files.createTempDirectory("graft-rfz-out").toString + "/out",
+          Files.createTempDirectory("graft-rfz-ck").toString,
+          "doc_id", "text", 0.5)))
+      entryPoints.foreach { case (name, call) =>
+        val e = intercept[IllegalArgumentException](call())
+        assert(e.getMessage.contains(
+          s"delete $p and rebuild with buildDedupIndex / dedupIngestBootstrap"),
+          s"$name: ${e.getMessage}")
+      }
+      assert(tree(p) == before, s"a refused call changed the tree at $p")
     }
-    rmrf(new java.io.File(idx)) // operator resets the state dir
-    StreamOps.dedupIngestEpoch(dedupEpoch1, 0L, idx, "doc_id", "text")
-    assert(new java.io.File(s"$idx/_graft_dedup_layout").exists(),
-      "cached banded decision must re-anchor the marker on disk")
-    assert(new java.io.File(s"$idx/sets/__batch=0").listFiles()
-      .exists(f => f.isDirectory && f.getName.startsWith("ib=")))
-    // and the recreated tree still probes correctly (banded path)
-    val probe = Dedup.dedupAgainstIndexed(spark, idx,
-      Seq((50L, "another unrelated document mentioning parquet column " +
-        "pruning")).toDF("doc_id", "text"), "doc_id", "text", 0.5)
-      .collect().map(r => (r.getLong(0), Option(r.get(1)))).toSet
-    assert(probe == Set((50L, Some(3L))), s"probe: $probe")
   }
 
   test("crossDedupTo: frozen-index verdicts match the batch probe; index untouched") {
@@ -1274,43 +1284,6 @@ class StreamOpsSpec extends AnyFunSuite {
     // streamed rows carry the doc columns alongside the verdict
     assert(spark.read.parquet(out).columns.toSet
       .contains("text"))
-  }
-
-  test("crossDedupTo on a PARTITIONED index: same verdicts, nothing pinned") {
-    import graft.functions.Dedup
-    val idx = Files.createTempDirectory("graft-xdp-idx").toString
-    Dedup.buildDedupIndexPartitioned(dedupSeed.unionByName(dedupEpoch2),
-      "doc_id", "text", idx, setBuckets = 8)
-    val in = Files.createTempDirectory("graft-xdp-in").toString
-    dedupProbeBatch.coalesce(1).write.mode("append").parquet(in)
-    val out = Files.createTempDirectory("graft-xdp-out").toString + "/out"
-    // the flat path's pin is recognizable by its storage level: the
-    // 2-replicated DISK_ONLY snapshot (batch-sized localCheckpoints are
-    // MEMORY_AND_DISK, replication 1, and are fine)
-    def replicatedPins() = spark.sparkContext.getPersistentRDDs.values
-      .count(_.getStorageLevel.replication > 1)
-    val pinnedBefore = replicatedPins()
-    val q = StreamOps.crossDedupTo(
-      spark.readStream.schema(dedupProbeBatch.schema).parquet(in),
-      idx, out, Files.createTempDirectory("graft-xdp-ck").toString,
-      "doc_id", "text", 0.5)
-    q.awaitTermination()
-    // the partitioned path must NOT take the flat path's corpus-snapshot
-    // pin — per-batch pruned reads replace it entirely
-    assert(replicatedPins() == pinnedBefore,
-      "partitioned crossDedupTo pinned the index in executor storage")
-    val got = spark.read.parquet(out)
-      .select("doc_id", "dup_of", "admitted").collect()
-      .map(r => (r.getLong(0), Option(r.get(1)), r.getBoolean(2))).toSet
-    val want = Dedup.dedupAgainstIndexed(spark, idx, dedupProbeBatch,
-      "doc_id", "text", 0.5)
-      .select("doc_id", "dup_of", "admitted").collect()
-      .map(r => (r.getLong(0), Option(r.get(1)), r.getBoolean(2))).toSet
-    assert(got == want && got.nonEmpty,
-      "streamed verdicts must equal the pruned batch probe")
-    assert(got.exists { case (id, dup, adm) =>
-      id == 10L && dup.contains(4L) && !adm })
-    assert(got.contains((11L, None, true)))
   }
 
   test("e2e prep pipeline with the embedding gate: crash replay still idempotent") {

@@ -23,7 +23,8 @@ exists to document do not hold in it:
 With a SECOND artifact (the 100x-replica capture), cross-scale gates
 also apply: the assigned append must stay within max(2.5x, +2s) of its
 1x value — the round-12 claim that no corpus-proportional term remains
-in the monotone append path.
+in the monotone append path — and so must the flat text-dedup probe,
+the premise of the index's one layout.
 """
 import json
 import sys
@@ -402,6 +403,19 @@ def main():
             fails.append(
                 f"assigned append grew with the corpus: {big:.2f}s at "
                 f"100x vs {base:.2f}s at 1x (cap max(3.0x, +2s))")
+        # the text-dedup index has ONE (flat) layout, whose probe joins
+        # a fixed 500-doc batch against the whole keys table: that this
+        # stays flat from 1x to 100x (0.204s vs 0.206s when the layout
+        # was chosen) is the premise of dropping the partitioned one.
+        # Absence at 100x fails like the other required rows.
+        dbase = doc["dedup_probe500_sec"]
+        dbig = doc100.get("dedup_probe500_sec")
+        if not isinstance(dbig, (int, float)):
+            fails.append("100x artifact lacks dedup_probe500_sec")
+        elif dbig > max(2.5 * dbase, dbase + 2.0):
+            fails.append(
+                f"dedup probe grew with the corpus: {dbig:.2f}s at 100x "
+                f"vs {dbase:.2f}s at 1x (cap max(2.5x, +2s))")
         # the flag must be PRESENT and true: a pre-round-12 artifact (no
         # flag) cannot substantiate the cross-scale incremental claim
         if doc100.get("ivf_append200_assigned_incremental") is not True:
