@@ -619,18 +619,10 @@ object ProbeIndexed {
       b.unpersist(); t
     }).min
 
-    // JDBC apply: serial statement generation (the reference-faithful
-    // driver loop, memory-bounded by applyChunked) vs the opt-in
-    // executor-parallel mode over a fixed ≤200k-changeset batch with
-    // realistically wide payloads. With no-op executors both arms
-    // measure pure statement GENERATION — honest finding: generation
-    // runs ~1M stmts/s driver-side, so it is NOT the serial path's
-    // bottleneck and the parallel arm's constant ~0.15s Spark job
-    // overhead exceeds its generation win at this size. The parallel
-    // mode's real value is N concurrent target CONNECTIONS applying
-    // partitions at once (the DB round-trips a no-Postgres sandbox
-    // cannot measure); these rows pin the generation-side costs so a
-    // regression in either path is visible.
+    // JDBC apply: the sink's one ordered loop over a fixed
+    // ≤200k-changeset batch with realistically wide payloads and a
+    // no-op executor, so it measures statement generation only (a real
+    // target adds its DB round-trips).
     val applyBatch = {
       import graft.model.ChangesetSchema
       val ev = Tables.load(spark, sfDir, "events").limit(200000)
@@ -662,9 +654,6 @@ object ProbeIndexed {
     val applySerial = (1 to reps).map(_ => time(
       JdbcApplySink.applyChunked(applyBatch, applyPks, applySeq,
         _ => ()))).min
-    val applyParallel = (1 to reps).map(_ => time(
-      JdbcApplySink.applyPartitioned(applyBatch, applyPks, applySeq,
-        () => _ => (), _ => (), numPartitions = 16))).min
 
     // terminal training-shard shuffle over the WHOLE corpus (text
     // payload included — the shuffle moves it): ONE hash shuffle + a
@@ -741,7 +730,6 @@ object ProbeIndexed {
       s""""state_compact_grouped_sec":$stateCompactSec,""" +
       s""""state_epoch500_postcompact_sec":$stateEpochPostCompactSec,""" +
       s""""jdbc_apply200k_serial_sec":$applySerial,""" +
-      s""""jdbc_apply200k_parallel16_sec":$applyParallel,""" +
       s""""shard_shuffle64_sec":$shardShuffleSec}"""
     println(line)
     // persist the artifact (round 7 only printed it, so the amortization

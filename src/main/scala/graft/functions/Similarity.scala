@@ -2392,37 +2392,18 @@ object Similarity {
       .select(flatten(transform(col("__rows"),
         r => r.getField("center"))).as("__cb"))
 
-  /** Squared L2 distance between subvector `sv` and the codebook-flat
-    * slice for (sub `j`, code `c`): explicit left fold from 0.0 so the
-    * IEEE op sequence is engine-reproducible (the DuckDB oracle mirrors
-    * it with list_reduce over the same element order). */
-  private def pqD2(sv: Column, cbFlat: Column, j: Column, c: Column,
-                   ksub: Int, sd: Int): Column =
-    aggregate(
-      zip_with(sv, slice(cbFlat, (j * ksub + c) * sd + 1, lit(sd)),
-        (a, b) => (a - b) * (a - b)),
-      lit(0.0), (acc, x) => acc + x)
-
   /** Nearest code for subvector `sv` under codebook `cbFlat`, sub `j`:
     * argmin over the ksub candidates — (distance ASC, code ASC), the
     * same tie-break every quantizer here uses. Pure expression, no
     * shuffle. Evaluated by the native [[PqNearestCode]] expression
     * (bit-identical to the HOF array_min-of-(d2, code)-structs
-    * formulation it replaced — [[pqNearestCodeHof]] keeps that form as
-    * the spec the parity test pins against): the HOF form ran
+    * formulation it replaced, which `PqNearestCodeSpec` keeps as the
+    * spec its parity test pins against): the HOF form ran
     * ksub × sd interpreted lambda ops per call, m calls per encoded
     * row — the PQ family's dominant per-row cost. */
   private def pqNearestCode(sv: Column, cbFlat: Column, j: Column,
                             ksub: Int, sd: Int): Column =
     PqNearestCode(sv, cbFlat, j, ksub, sd)
-
-  /** The pre-native HOF formulation of [[pqNearestCode]] — retained as
-    * the executable spec for the bit-parity test only. */
-  private[graft] def pqNearestCodeHof(sv: Column, cbFlat: Column, j: Column,
-                                      ksub: Int, sd: Int): Column =
-    array_min(transform(sequence(lit(0), lit(ksub - 1)), c =>
-      struct(pqD2(sv, cbFlat, j, c, ksub, sd).as("d"),
-        c.as("code")))).getField("code")
 
   /** Subvector slice `j` (0-based) of `vec`, promoted to double. */
   private def pqSub(vec: Column, j: Column, sd: Int): Column =

@@ -4,14 +4,6 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.JdbcApplySink
 
-/** JVM-static collector for [[JdbcApplySink.applyPartitioned]]'s
-  * executor-side exec calls (task closures are serialized even in local
-  * mode, so a captured instance would be a per-task copy). */
-object PartCollector {
-  val q = new java.util.concurrent.ConcurrentLinkedQueue[
-    Seq[JdbcApplySink.Statement]]()
-}
-
 class JdbcApplySinkSpec extends AnyFunSuite {
   import SparkTestSession._
 
@@ -61,6 +53,9 @@ class JdbcApplySinkSpec extends AnyFunSuite {
       .start()
     q.awaitTermination()
     assert(seen.map(_.sql.split(" ").head).toSeq == Seq("INSERT", "DELETE"))
+    // the source is read once per batch: without the writer's checkpoint
+    // the sort's sampling job scans it again and progress counts 4
+    assert(q.recentProgress.map(_.numInputRows).sum == 2L)
   }
 
   test("oversized batch is split into ordered chunks, setval once at end") {
@@ -82,16 +77,15 @@ class JdbcApplySinkSpec extends AnyFunSuite {
       exec = st => { calls += st; () },
       maxRowsPerBatch = 300)
     assert(applied == 1000L)
-    // 4 data chunks of ≤300 + 1 final setval call
-    val (dataCalls, syncCalls) = calls.toSeq.partition(
-      c => !c.exists(_.sql.startsWith("SELECT setval")))
-    assert(dataCalls.map(_.size) == Seq(300, 300, 300, 100),
-      s"chunk sizes: ${dataCalls.map(_.size)}")
-    assert(syncCalls.flatten.map(_.sql) ==
+    // 4 chunks of ≤300 changesets, the setval appended to the last one
+    assert(calls.map(_.size).toSeq == Seq(300, 300, 300, 100 + 1),
+      s"chunk sizes: ${calls.map(_.size)}")
+    val setvals = calls.toSeq.map(_.filter(_.sql.startsWith("SELECT setval")))
+    assert(setvals.init.forall(_.isEmpty) && setvals.last.map(_.sql) ==
       Seq("SELECT setval('public.users_id_seq', 1000, true)"),
-      "exactly one setval, at the GLOBAL max, after the last chunk")
+      "exactly one setval, at the GLOBAL max, in the last call")
     // global id order across chunk boundaries: payload names u1..u1000
-    val ids = dataCalls.flatten.map(_.payloadJson).map(j =>
+    val ids = calls.toSeq.flatten.map(_.payloadJson).filter(_ != null).map(j =>
       j.substring(j.indexOf("u") + 1, j.indexOf("\"}", j.indexOf("u"))).toLong)
     assert(ids == (1L to 1000L), "statement stream must follow changeset id order")
     // and the chunked stream equals the unchunked one, statement for
@@ -101,8 +95,6 @@ class JdbcApplySinkSpec extends AnyFunSuite {
       Map(("public", "users") -> Seq(("id", "public.users_id_seq"))))
     assert(calls.toSeq.flatten == unchunked)
   }
-
-  // ---- executor-parallel apply (round 11) ------------------------------
 
   /** A tiny target-DB model with the statement stream's semantics:
     * INSERT = dup-skip, UPSERT = absolute set, DELETE = absolute remove,
@@ -123,116 +115,93 @@ class JdbcApplySinkSpec extends AnyFunSuite {
       }
     }
 
-  test("partitioned apply: per-key order kept, any partition order converges") {
-    // 3 tables x 20 keys, each key living a full INSERT→UPDATE→DELETE→
-    // INSERT→UPDATE life in global id order; sequence values descend
-    // with id so only a global-max setval is correct
-    val rows = for {
-      t <- Seq("users", "orders", "events")
-      k <- 1 to 20
-      (step, i) <- Seq("INSERT", "UPDATE", "DELETE", "INSERT", "UPDATE").zipWithIndex
-    } yield {
-      val id = (Seq("users", "orders", "events").indexOf(t) * 20 + k) * 10L + i
-      val nv = s"""{"id":$k,"step":$i,"sv":${100000L - id}}"""
-      (id, step, t, if (step == "DELETE") null else nv,
-        if (step == "DELETE") s"""{"id":$k}""" else null)
-    }
-    val batch = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.map { case (id, a, t, nv, ov) =>
-        org.apache.spark.sql.Row(id, null, a, "public", t, 1L, nv, ov)
-      }, 7), graft.model.ChangesetSchema.schema)
-    val pks = Seq("users", "orders", "events")
-      .map(t => ("public", t) -> Seq("id")).toMap
-    val seqCols = Map(("public", "users") -> Seq(("sv", "public.users_sv_seq")))
-    // the exec factory's closure is task-serialized even in local mode,
-    // so the collector must be JVM-static (resolved per executor JVM),
-    // not a captured instance
-    PartCollector.q.clear()
-    val syncCalls = scala.collection.mutable.ArrayBuffer.empty[
-      Seq[JdbcApplySink.Statement]]
-    val applied = JdbcApplySink.applyPartitioned(batch, pks, seqCols,
-      execFactory = () => st => { PartCollector.q.add(st); () },
-      seqExec = st => { syncCalls += st; () },
-      numPartitions = 5)
-    assert(applied == rows.size.toLong)
-    import scala.jdk.CollectionConverters._
-    val parts = PartCollector.q.asScala.toSeq
-    // every key's statements live in exactly ONE partition, in step order
-    def keyOf(st: JdbcApplySink.Statement): (String, Long) = {
-      val table = st.sql.split("\"")(3)
-      val id = com.fasterxml.jackson.databind.json.JsonMapper.builder()
-        .build().readTree(st.payloadJson).get("id").asLong()
-      (table, id)
-    }
-    val byKey = parts.zipWithIndex.flatMap { case (stmts, pi) =>
-      stmts.map(st => (keyOf(st), pi, st))
-    }.groupBy(_._1)
-    assert(byKey.size == 60)
-    byKey.foreach { case (key, occ) =>
-      assert(occ.map(_._2).distinct.size == 1,
-        s"key $key split across partitions")
-      val kinds = occ.map(_._3.sql.split(" ").head)
-      assert(kinds == Seq("INSERT", "INSERT", "DELETE", "INSERT", "INSERT"),
-        s"key $key out of order: $kinds")
-    }
-    // ONE setval, at the global max of the descending sequence values
-    assert(syncCalls.flatten.map(_.sql) ==
-      Seq(s"SELECT setval('public.users_sv_seq', ${100000L - 10L}, true)"))
-    // end-state equivalence: serial stream ≡ partitions in ANY order
-    val serial = JdbcApplySink.statementsFor(batch, pks, seqCols)
-    val dbSerial = scala.collection.mutable.Map.empty[String, String]
-    applyModel(dbSerial, serial)
-    for (ordering <- Seq(parts, parts.reverse, scala.util.Random.shuffle(parts))) {
-      val db = scala.collection.mutable.Map.empty[String, String]
-      ordering.foreach(p => applyModel(db, p))
-      syncCalls.foreach(s => applyModel(db, s))
-      assert(db == dbSerial, "partitioned end state diverged from serial")
-    }
-    // replay idempotence: applying the whole thing twice changes nothing
-    val dbTwice = scala.collection.mutable.Map.empty[String, String]
-    for (_ <- 1 to 2) {
-      parts.foreach(p => applyModel(dbTwice, p))
-      syncCalls.foreach(s => applyModel(dbTwice, s))
-    }
-    assert(dbTwice == dbSerial, "replay must be idempotent")
+  /** 3 tables x 20 keys, each key living a full INSERT→UPDATE→DELETE→
+    * INSERT→UPDATE life in global id order; sequence values descend
+    * with id so only a global-max setval is correct. */
+  private val keyLives = for {
+    t <- Seq("users", "orders", "events")
+    k <- 1 to 20
+    (step, i) <- Seq("INSERT", "UPDATE", "DELETE", "INSERT", "UPDATE").zipWithIndex
+  } yield {
+    val id = (Seq("users", "orders", "events").indexOf(t) * 20 + k) * 10L + i
+    val nv = s"""{"id":$k,"step":$i,"sv":${100000L - id}}"""
+    (id, step, t, if (step == "DELETE") null else nv,
+      if (step == "DELETE") s"""{"id":$k}""" else null)
   }
 
-  test("mixed PK representations (5 vs \"5\") still key one row to one partition") {
-    // common audit-trigger shape: new_values carries the PK as a JSON
-    // number, old_values as a stringified value. The partition key must
-    // canonicalize — on the raw JSON rendering ("5" vs "\"5\"") a row's
-    // INSERT and DELETE land in different partitions and lose order.
-    val rows = for {
-      k <- 1 to 12
-      (step, i) <- Seq("INSERT", "DELETE", "INSERT").zipWithIndex
-    } yield (k * 10L + i, step,
-      if (step == "DELETE") null else s"""{"id":$k,"v":$i}""",
-      // half the keys stringify the PK, half render it as a float —
-      // both must canonicalize to the integer rendering new_values uses
-      if (step == "DELETE")
-        (if (k % 2 == 0) s"""{"id":"$k"}""" else s"""{"id":$k.0}""")
-      else null)
-    val batch = cs(rows: _*)
-    val pks = Map(("public", "users") -> Seq("id"))
-    PartCollector.q.clear()
-    val applied = JdbcApplySink.applyPartitioned(batch, pks, Map.empty,
-      execFactory = () => st => { PartCollector.q.add(st); () },
-      seqExec = _ => (), numPartitions = 7)
-    assert(applied == rows.size.toLong)
-    import scala.jdk.CollectionConverters._
-    val parts = PartCollector.q.asScala.toSeq
-    val mapper = com.fasterxml.jackson.databind.json.JsonMapper.builder()
-      .build()
-    val byKey = parts.zipWithIndex.flatMap { case (stmts, pi) =>
-      stmts.map(st =>
-        (mapper.readTree(st.payloadJson).get("id").asLong(), pi, st))
-    }.groupBy(_._1)
-    assert(byKey.size == 12)
-    byKey.foreach { case (k, occ) =>
-      assert(occ.map(_._2).distinct.size == 1,
-        s"key $k split across partitions on payload representation")
-      assert(occ.map(_._3.sql.split(" ").head) ==
-        Seq("INSERT", "DELETE", "INSERT"), s"key $k out of order")
+  private def keyLivesBatch(rows: Seq[(Long, String, String, String, String)],
+                            numSlices: Int) =
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(rows.map { case (id, a, t, nv, ov) =>
+        org.apache.spark.sql.Row(id, null, a, "public", t, 1L, nv, ov)
+      }, numSlices), graft.model.ChangesetSchema.schema)
+
+  private val keyLivesPks = Seq("users", "orders", "events")
+    .map(t => ("public", t) -> Seq("id")).toMap
+  private val keyLivesSeqCols =
+    Map(("public", "users") -> Seq(("sv", "public.users_sv_seq")))
+
+  test("partitioned apply: per-key order kept, any partition order converges") {
+    // the same changesets laid out over the batch's partitions in
+    // different counts and orders: the one id-ordered loop must hand
+    // exec the same chunks every time, keep each key's step order, and
+    // reach the serial end state, also when the batch is applied twice
+    val layouts = Seq(
+      keyLivesBatch(keyLives, 7),
+      keyLivesBatch(keyLives.reverse, 3),
+      keyLivesBatch(new scala.util.Random(11).shuffle(keyLives), 5),
+      keyLivesBatch(keyLives.grouped(15).toSeq.reverse.flatten, 20))
+    val serial = JdbcApplySink.statementsFor(layouts.head, keyLivesPks, keyLivesSeqCols)
+    val mapper = com.fasterxml.jackson.databind.json.JsonMapper.builder().build()
+    val byKey = serial.filter(_.payloadJson != null).groupBy(st =>
+      (st.sql.split("\"")(3), mapper.readTree(st.payloadJson).get("id").asLong()))
+    assert(byKey.size == 60)
+    byKey.foreach { case (key, stmts) =>
+      assert(stmts.map(_.sql.split(" ").head) ==
+        Seq("INSERT", "INSERT", "DELETE", "INSERT", "INSERT"), s"key $key out of order")
+    }
+    val dbSerial = scala.collection.mutable.Map.empty[String, String]
+    applyModel(dbSerial, serial)
+    val firstCalls = scala.collection.mutable.ArrayBuffer.empty[Seq[JdbcApplySink.Statement]]
+    layouts.zipWithIndex.foreach { case (batch, li) =>
+      val calls = scala.collection.mutable.ArrayBuffer.empty[Seq[JdbcApplySink.Statement]]
+      val applied = JdbcApplySink.applyChunked(batch, keyLivesPks, keyLivesSeqCols,
+        st => { calls += st; () }, maxRowsPerBatch = 40)
+      assert(applied == keyLives.size.toLong)
+      if (li == 0) firstCalls ++= calls
+      else assert(calls == firstCalls, s"layout $li changed the chunk stream")
+      assert(JdbcApplySink.statementsFor(batch, keyLivesPks, keyLivesSeqCols) == serial,
+        s"layout $li changed the collected stream")
+      val db = scala.collection.mutable.Map.empty[String, String]
+      for (_ <- 1 to 2) calls.foreach(applyModel(db, _))
+      assert(db == dbSerial, s"layout $li diverged from the serial end state")
+    }
+  }
+
+  test("chunked apply: a crash between chunks and a replay converge to the serial end state") {
+    val batch = keyLivesBatch(keyLives, 7)
+    val calls = scala.collection.mutable.ArrayBuffer.empty[Seq[JdbcApplySink.Statement]]
+    val applied = JdbcApplySink.applyChunked(batch, keyLivesPks, keyLivesSeqCols,
+      st => { calls += st; () }, maxRowsPerBatch = 40)
+    assert(applied == keyLives.size.toLong)
+    assert(calls.map(_.size).toSeq == Seq.fill(7)(40) :+ (20 + 1))
+    // ONE setval, at the global max of the descending sequence values,
+    // in the last call
+    val setval = Seq(s"SELECT setval('public.users_sv_seq', ${100000L - 10L}, true)")
+    assert(calls.toSeq.map(_.filter(_.sql.startsWith("SELECT setval")).map(_.sql)) ==
+      Seq.fill(7)(Nil) :+ setval)
+    // the chunked stream is the collected one (per-key order: above)
+    val serial = JdbcApplySink.statementsFor(batch, keyLivesPks, keyLivesSeqCols)
+    assert(calls.toSeq.flatten == serial)
+    val dbSerial = scala.collection.mutable.Map.empty[String, String]
+    applyModel(dbSerial, serial)
+    // a crash after any prefix of committed chunks, then the whole
+    // micro-batch replayed, ends in the serial end state
+    for (k <- 0 to calls.size) {
+      val db = scala.collection.mutable.Map.empty[String, String]
+      calls.take(k).foreach(applyModel(db, _))
+      calls.foreach(applyModel(db, _))
+      assert(db == dbSerial, s"replay after $k committed chunks diverged")
     }
   }
 

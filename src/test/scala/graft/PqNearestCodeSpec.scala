@@ -1,14 +1,15 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{PqNearestCode, Similarity}
+import graft.functions.PqNearestCode
 
 /** Bit-parity of the native [[PqNearestCode]] expression against the HOF
   * formulation it replaced (array_min of (d2, code) structs over
-  * aggregate(zip_with(...)) folds — kept as
-  * [[Similarity.pqNearestCodeHof]], the executable spec). The PQ
+  * aggregate(zip_with(...)) folds — kept here as [[pqNearestCodeHof]],
+  * the executable spec). The PQ
   * contract rows' oracles replay the HOF arithmetic in SQL, so the
   * native argmin must match it on every input shape: dense randoms,
   * exact ties, NaN poisoning, null elements, null arrays/index, ragged
@@ -20,6 +21,24 @@ class PqNearestCodeSpec extends AnyFunSuite {
   private val ksub = 16
   private val sd = 4
 
+  /** Squared L2 distance between subvector `sv` and the codebook-flat
+    * slice for (sub `j`, code `c`): explicit left fold from 0.0, the
+    * IEEE op sequence the DuckDB oracle mirrors with list_reduce. */
+  private def pqD2(sv: Column, cbFlat: Column, j: Column, c: Column,
+                   ksub: Int, sd: Int): Column =
+    aggregate(
+      zip_with(sv, slice(cbFlat, (j * ksub + c) * sd + 1, lit(sd)),
+        (a, b) => (a - b) * (a - b)),
+      lit(0.0), (acc, x) => acc + x)
+
+  /** The pre-native HOF formulation of the PQ nearest code: argmin over
+    * the ksub candidates by (distance ASC, code ASC). */
+  private def pqNearestCodeHof(sv: Column, cbFlat: Column, j: Column,
+                               ksub: Int, sd: Int): Column =
+    array_min(transform(sequence(lit(0), lit(ksub - 1)), c =>
+      struct(pqD2(sv, cbFlat, j, c, ksub, sd).as("d"),
+        c.as("code")))).getField("code")
+
   /** Rows of (sv, cbFlat, j) — cbFlat sized for m=2 subs of ksub×sd. */
   private def parityCheck(rows: Seq[(Seq[java.lang.Double],
                                      Seq[java.lang.Double],
@@ -27,7 +46,7 @@ class PqNearestCodeSpec extends AnyFunSuite {
     val df = rows.toDF("sv", "cb", "j")
     val both = df.select(
       PqNearestCode(col("sv"), col("cb"), col("j"), ksub, sd).as("native"),
-      Similarity.pqNearestCodeHof(col("sv"), col("cb"), col("j"), ksub,
+      pqNearestCodeHof(col("sv"), col("cb"), col("j"), ksub,
         sd).as("hof"))
     val mismatches = both.filter(
       !(col("native") <=> col("hof"))).collect()
@@ -108,7 +127,7 @@ class PqNearestCodeSpec extends AnyFunSuite {
     val df = rows.toDF("svf", "cb")
     val both = df.select(
       PqNearestCode(col("svf"), col("cb"), lit(0), ksub, sd).as("native"),
-      Similarity.pqNearestCodeHof(
+      pqNearestCodeHof(
         transform(col("svf"), x => x.cast("double")), col("cb"), lit(0),
         ksub, sd).as("hof"))
     assert(both.filter(!(col("native") <=> col("hof"))).count() === 0)

@@ -216,13 +216,15 @@ class Wal2JsonSpec extends AnyFunSuite {
       """[{"change":[]}]""",
       """{"change":[{"kind":"insert"},7]}""",
       """{"change":[{"kind":"insert","columnnames":[1],"columntypes":["integer"],"columnvalues":[1]}]}""")
-    malformed.foreach { m =>
+    // one call per batch, and chunks of one changeset: no chunk runs
+    // ahead of the failing frame
+    for (m <- malformed; bound <- Seq(JdbcApplySink.DefaultMaxRowsPerBatch, 1)) {
       val seen = scala.collection.mutable.ArrayBuffer.empty[JdbcApplySink.Statement]
-      val write = JdbcApplySink.writer(pks, Map.empty, st => seen ++= st)
+      val write = JdbcApplySink.writer(pks, Map.empty, st => seen ++= st, bound)
       val e = intercept[Exception](
         write(Wal2Json.decode(frames(1L -> insertMsg, 77L -> m), "seq", "msg"), 0L))
       assert(messages(e).contains("wal2json message 77"), messages(e))
-      assert(seen.isEmpty)
+      assert(seen.isEmpty, s"bound $bound")
     }
     // a null message, a DML-free transaction, unknown fields and
     // logical-decoding messages keep the composed decoder's output

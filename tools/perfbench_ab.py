@@ -2,7 +2,7 @@
 """Interleaved A/B of the end-to-end benchmark between two commits.
 
     python3 tools/perfbench_ab.py --parent HEAD~1 --change HEAD \\
-        --workload lr_catchup --seeds 101,102,103 --pairs 10
+        --workload lr_catchup --seeds 101,102,103 --pairs 10 [--trace]
 
 Run it from the repository root. Each side is checked out into its own
 `git worktree` in a temporary directory; pair i runs `perfbench/run.py`
@@ -18,6 +18,11 @@ holds: the change wins at least nine tenths of the pairs and its median
 beats the parent's by more than the parent's interquartile range. A run
 that exits non-zero or reports `correct: false` is listed, and its pair
 counts for neither side, so it still weighs against the nine tenths.
+
+With --trace each run is traced (`--trace 1`), so both sides pay the
+same tracing cost and the pairs compare like with like; a traced run
+reports the `per_layer` metrics, which are then summarized under the
+same rule. Metrics that no run reported are left out of the summary.
 
 The worktrees are removed at the end, also when a run fails or the tool
 is interrupted, and no benchmark process is left running. A change that
@@ -53,9 +58,9 @@ class Run:
     current = None
 
     @staticmethod
-    def once(tree, workload, seed, seconds):
+    def once(tree, workload, seed, seconds, trace=False):
         cmd = [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
-               "--seconds", str(seconds), "--trace", "0"]
+               "--seconds", str(seconds), "--trace", "1" if trace else "0"]
         proc = subprocess.Popen(cmd, cwd=tree, stdout=subprocess.PIPE,
                                 stderr=subprocess.DEVNULL, text=True)
         Run.current = proc
@@ -106,8 +111,37 @@ def summarize(metric, better, pairs):
     return out
 
 
+def summaries(bench, pairs, trace):
+    """One summary per metric of `bench` (the parent's BENCHMARK.json) that
+    some run reported: the end-to-end metrics, and with `trace` also the
+    per-layer ones."""
+    metrics = bench["end_to_end"] + (bench["per_layer"] if trace else [])
+    reported = {k for pr in pairs for r in pr for k in r["metrics"]}
+    return [summarize(m["name"], m["better"], pairs) for m in metrics if m["name"] in reported]
+
+
 def fmt(x):
     return "-" if x is None else f"{x:.6g}"
+
+
+def report(title, summary, pairs):
+    print(title)
+    for s in summary:
+        print(f"\n{s['metric']} ({s['better']} is better)")
+        print("  pair  parent        change")
+        for i, (p, c) in enumerate(s["pairs"]):
+            print(f"  {i + 1:>4}  {fmt(p):<12}  {fmt(c)}")
+        if "parent_median" in s:
+            print(f"  parent median {fmt(s['parent_median'])} "
+                  f"[q1 {fmt(s['parent_q'][0])}, q3 {fmt(s['parent_q'][1])}]; "
+                  f"change median {fmt(s['change_median'])} "
+                  f"[q1 {fmt(s['change_q'][0])}, q3 {fmt(s['change_q'][1])}]")
+        print(f"  change won {s['wins']} of {s['n']} pairs, lost {s['losses']}; "
+              f"gain rule {'holds' if s.get('gain_rule') else 'does not hold'}")
+    failed = [(i + 1, side) for i, pr in enumerate(pairs)
+              for side, r in zip(("parent", "change"), pr) if not r["ok"]]
+    if failed:
+        print(f"\nfailed or incorrect runs (pair, side): {failed}")
 
 
 def main(argv):
@@ -117,6 +151,8 @@ def main(argv):
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", required=True, help="comma-separated seeds, used in turn")
     ap.add_argument("--pairs", type=int, default=10)
+    ap.add_argument("--trace", action="store_true",
+                    help="trace every run and summarize the per-layer metrics too")
     a = ap.parse_args(argv)
     seeds = [int(s) for s in a.seeds.split(",") if s]
     repo = git("rev-parse", "--show-toplevel")
@@ -152,33 +188,19 @@ def main(argv):
             order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
             got = {}
             for side in order:
-                got[side] = Run.once(trees[side], a.workload, seed, seconds)
+                got[side] = Run.once(trees[side], a.workload, seed, seconds, a.trace)
                 r = got[side]
+                shown = "sink.batch_ms_p50" if a.trace else "changes_per_s"
                 print(f"pair {i + 1} seed {seed} {side}: exit {r['exit']} ok {r['ok']} "
-                      f"changes_per_s {fmt(r['metrics'].get('changes_per_s'))}", flush=True)
+                      f"{shown} {fmt(r['metrics'].get(shown))}", flush=True)
             pairs.append((got["parent"], got["change"]))
-        summary = [summarize(m["name"], m["better"], pairs) for m in bench["end_to_end"]]
+        summary = summaries(bench, pairs, a.trace)
     finally:
         cleanup()
 
-    print(f"\n{a.workload}: parent {shas['parent'][:10]} vs change {shas['change'][:10]}, "
-          f"{a.pairs} pairs, {seconds} s runs, seeds {a.seeds}")
-    for s in summary:
-        print(f"\n{s['metric']} ({s['better']} is better)")
-        print("  pair  parent        change")
-        for i, (p, c) in enumerate(s["pairs"]):
-            print(f"  {i + 1:>4}  {fmt(p):<12}  {fmt(c)}")
-        if "parent_median" in s:
-            print(f"  parent median {fmt(s['parent_median'])} "
-                  f"[q1 {fmt(s['parent_q'][0])}, q3 {fmt(s['parent_q'][1])}]; "
-                  f"change median {fmt(s['change_median'])} "
-                  f"[q1 {fmt(s['change_q'][0])}, q3 {fmt(s['change_q'][1])}]")
-        print(f"  change won {s['wins']} of {s['n']} pairs, lost {s['losses']}; "
-              f"gain rule {'holds' if s.get('gain_rule') else 'does not hold'}")
-    failed = [(i + 1, side) for i, pr in enumerate(pairs)
-              for side, r in zip(("parent", "change"), pr) if not r["ok"]]
-    if failed:
-        print(f"\nfailed or incorrect runs (pair, side): {failed}")
+    report(f"\n{a.workload}: parent {shas['parent'][:10]} vs change {shas['change'][:10]}, "
+           f"{a.pairs} pairs, {seconds} s runs{', traced' if a.trace else ''}, seeds {a.seeds}",
+           summary, pairs)
     return 0
 
 
