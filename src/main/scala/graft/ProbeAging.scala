@@ -99,8 +99,8 @@ object ProbeAging {
       Seq(2, -1, -2).map(np => s"np=$np r=${recallOf(fresh, baseProbes, base, np)}")
         .mkString(" "))
 
-    Similarity.appendToIvfIndexAssigned(spark, fresh, shifted,
-      "vec_id", "embedding", dims = 64)
+    Similarity.appendToIvfIndex(spark, fresh, shifted,
+      "vec_id", "embedding", "cell", dims = 64)
     val combined = base.unionByName(shifted)
     val shiftProbes = probesOf(shifted)
     println(s"SHIFTED probes, frozen index (K=$K): " +

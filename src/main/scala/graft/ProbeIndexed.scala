@@ -229,9 +229,7 @@ object ProbeIndexed {
     // compress the in-cell scan (8 bytes/vector), finalists rescore
     // exact. Measured on the k-means index at the SAME auto width as
     // the balanced plain probe (kmProbeAt(-1) above), so the pq/plain
-    // probe and recall columns are directly comparable. Runs BEFORE the
-    // later appends touch kmPath (they would legitimately staleness the
-    // sidecar).
+    // probe and recall columns are directly comparable.
     val ivfPqAddSec = time(Similarity.addPqToIvfIndex(spark, kmPath,
       "vec_id", "embedding", "cell", m = 8, ksub = pqKsub, iters = 2,
       trainMod = pqTrainMod))
@@ -249,8 +247,7 @@ object ProbeIndexed {
     // residuals span the cell radius, not the corpus radius, so the
     // same 8 bytes/vector quantize finer. Identical probe width and
     // rerank as the raw block above: the recall delta is pure encoding
-    // quality. Overwrites kmPath's sidecar (raw block already measured;
-    // the later aging appends staleness it either way).
+    // quality. Overwrites kmPath's sidecar (raw block already measured).
     val ivfPqResAddSec = time(Similarity.addPqToIvfIndex(spark, kmPath,
       "vec_id", "embedding", "cell", m = 8, ksub = pqKsub, iters = 2,
       trainMod = pqTrainMod, residual = true))
@@ -262,6 +259,11 @@ object ProbeIndexed {
     }
     val ivfPqResProbeSec = ivfPqResRuns.map(_._1).min
     val ivfPqResRecall = recall(ivfPqResRuns.head._2)
+    // drop the sidecar: an append encodes codes whenever `pq/` exists,
+    // and the assigned-append row below measures the plain index
+    val kmPq = new org.apache.hadoop.fs.Path(s"$kmPath/pq")
+    kmPq.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .delete(kmPq, true)
 
     // QUANTIZER AGING (round-13 verdict task 6): the k-means geometry is
     // frozen at build time, so a distribution-shifted ingest degrades
@@ -297,8 +299,8 @@ object ProbeIndexed {
       agePath, dims = 64, deterministic = true)
     val driftFresh = Similarity.ivfDriftStats(spark, agePath, "vec_id",
       "embedding", "cell", dims = 64)
-    Similarity.appendToIvfIndexAssigned(spark, agePath, shiftedBatch,
-      "vec_id", "embedding", dims = 64)
+    Similarity.appendToIvfIndex(spark, agePath, shiftedBatch,
+      "vec_id", "embedding", "cell", dims = 64)
     val driftShifted = Similarity.ivfDriftStats(spark, agePath, "vec_id",
       "embedding", "cell", dims = 64)
     val shiftProbes = shiftedBatch.orderBy(col("vec_id")).limit(200)
@@ -390,8 +392,9 @@ object ProbeIndexed {
           col("embedding"))
         .localCheckpoint()
       val t = time { appendAssignedFast &=
-        Similarity.appendToIvfIndexAssigned(
-          spark, kmPath, kmBatch, "vec_id", "embedding", dims = 64) }
+        Similarity.appendToIvfIndex(
+          spark, kmPath, kmBatch, "vec_id", "embedding", "cell",
+          dims = 64) }
       kmBatch.unpersist(); t
     }.min
 
@@ -438,7 +441,7 @@ object ProbeIndexed {
       val t = time {
         Similarity.maintainIvfIndex(spark, ingestIdx, "vec_id",
           "embedding", "label", dims = 64,
-          residualThreshold = Double.MaxValue, epochLayout = true)
+          residualThreshold = Double.MaxValue)
         route = StreamOps.ivfIngestEpoch(b, 200L + r, ingestIdx,
           "vec_id", "embedding", "label", dims = 64)
       }
@@ -461,8 +464,7 @@ object ProbeIndexed {
       val t = time {
         Similarity.maintainIvfIndex(spark, ingestIdx, "vec_id",
           "embedding", "label", dims = 64,
-          residualThreshold = Double.MaxValue, epochLayout = true,
-          cellMod = 8)
+          residualThreshold = Double.MaxValue, cellMod = 8)
         route = StreamOps.ivfIngestEpoch(b, 300L + r, ingestIdx,
           "vec_id", "embedding", "label", dims = 64)
       }

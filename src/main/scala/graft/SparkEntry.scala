@@ -1574,8 +1574,8 @@ object SparkEntry {
 
     // The assignment-only ingest step as an oracle row: a fixed batch
     // quantizes against the PERSISTED k-means index's stored centers
-    // (assignToCenters — the labeler appendToIvfIndexAssigned and
-    // ivfIngestAssignedTo use), no retrain. The oracle unrolls the
+    // (assignToCenters — the labeler appendToIvfIndex and ivfIngestTo
+    // use for an unlabeled batch), no retrain. The oracle unrolls the
     // k-means, recomputes the stored centers from the labels (the
     // build's cellCenters fold), and runs one more assignment round
     // against them — the whole production ingest step in SQL.

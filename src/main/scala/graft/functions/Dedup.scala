@@ -614,8 +614,6 @@ object Dedup {
       .withColumn("__ce", least(col("__c"), col("__na"), col("__nb")))
   }
 
-  /** Shared inverted-index candidate generation + exact verify on the full
-    * shingle sets; `score` computes the verify metric from (setA, setB). */
   /**
    * Candidates → hash-bound prefilter → exact string verify.
    *
@@ -771,6 +769,16 @@ object Dedup {
         "buildDedupIndex / dedupIngestBootstrap")
   }
 
+  /** Heal a crashed compaction of `sets` and `keys` ([[ParquetCompact]]
+    * or its epoch consolidation). Appends, epochs and probes run it
+    * first: in the window between a compaction's renames the live table
+    * is gone, and `mode("append")` would start a fresh one beside the
+    * only copy of the corpus. */
+  private[graft] def recoverIndexTables(
+      spark: org.apache.spark.sql.SparkSession, path: String): Unit =
+    Seq("sets", "keys").foreach(t =>
+      ParquetCompact.recoverTable(spark, s"$path/$t"))
+
   /** The `ib=` bucket of an id in the streaming near-dup state's sets
     * ([[graft.streaming.StreamOps.dedupEpoch]]). */
   private[graft] def idBucket(id: Column, buckets: Int): Column =
@@ -799,6 +807,7 @@ object Dedup {
                           textCol: String,
                           minJaccard: Double = 0.8): DataFrame = {
     requireFlatIndex(spark, path)
+    recoverIndexTables(spark, path)
     dedupAgainstTables(newDocs, spark.read.parquet(s"$path/keys"),
       spark.read.parquet(s"$path/sets"), idCol, textCol, minJaccard)
   }
@@ -844,6 +853,7 @@ object Dedup {
   def appendToDedupIndex(batch: DataFrame, idCol: String, textCol: String,
                          path: String): Unit = {
     requireFlatIndex(batch.sparkSession, path)
+    recoverIndexTables(batch.sparkSession, path)
     TopKAgg.requireIntegralId(batch, idCol, "appendToDedupIndex")
     val bSets = shingleSets(batch, idCol, textCol).localCheckpoint(false)
     bSets.write.mode("append").parquet(s"$path/sets")
@@ -914,15 +924,15 @@ object Dedup {
       df.filter(!isBench), df.filter(isBench), idCol, textCol, maxOverlapFrac)
   }
 
-  /** [[decontaminate]] with an explicit benchmark corpus — the production
-    * form: the eval suites live in their own table, not a sample of the
-    * training corpus. Same broadcast shingle-universe shape. */
   /** The distinct 28-bit shingle-hash universe of a (benchmark) corpus —
     * the broadcast side of decontamination. Small by construction: eval
     * suites are fixed-size regardless of corpus scale. */
   def shingleUniverse(bench: DataFrame, textCol: String): DataFrame =
     bench.select(explode(ShingleHash.h28(col(textCol))).as("h")).distinct()
 
+  /** [[decontaminate]] with an explicit benchmark corpus — the production
+    * form: the eval suites live in their own table, not a sample of the
+    * training corpus. Same broadcast shingle-universe shape. */
   def decontaminateAgainst(train: DataFrame, bench: DataFrame, idCol: String,
                            textCol: String,
                            maxOverlapFrac: Double = 0.5): DataFrame =

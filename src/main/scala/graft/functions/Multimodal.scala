@@ -740,6 +740,16 @@ object Multimodal {
         count(lit(1)).as("copies"),
         max(col("byte_len")).as("byte_len"))
 
+  /** Format dispatch for the perceptual hash: PNG or baseline JPEG by
+    * magic bytes (each codec re-validates its own structure — the
+    * dispatch only picks which decoder gets the first look). Every
+    * format hashes through the SAME [[PngCodec.dHash64]] grid, so a
+    * JPEG re-encode of a PNG's pixels collides at hamming 0. */
+  def mediaDHash(bytes: Array[Byte]): Option[Long] =
+    if (bytes != null && bytes.length >= 2 && (bytes(0) & 0xFF) == 0xFF &&
+      (bytes(1) & 0xFF) == 0xD8) JpegCodec.dHashOf(bytes)
+    else PngCodec.dHashOf(bytes)
+
   /**
    * PERCEPTUAL image near-dup (the gap exact [[dedupByContent]] leaves:
    * the same picture re-encoded — different filter strategy, different
@@ -754,16 +764,6 @@ object Multimodal {
    * hashing. Only (doc_id, hash) shuffles — the binary column stays at
    * the scan.
    */
-  /** Format dispatch for the perceptual hash: PNG or baseline JPEG by
-    * magic bytes (each codec re-validates its own structure — the
-    * dispatch only picks which decoder gets the first look). Every
-    * format hashes through the SAME [[PngCodec.dHash64]] grid, so a
-    * JPEG re-encode of a PNG's pixels collides at hamming 0. */
-  def mediaDHash(bytes: Array[Byte]): Option[Long] =
-    if (bytes != null && bytes.length >= 2 && (bytes(0) & 0xFF) == 0xFF &&
-      (bytes(1) & 0xFF) == 0xD8) JpegCodec.dHashOf(bytes)
-    else PngCodec.dHashOf(bytes)
-
   def phashSignatures(spark: SparkSession, media: DataFrame): DataFrame = {
     import spark.implicits._
     media.select(col("doc_id"), col("content")).as[(Long, Array[Byte])]
@@ -1300,8 +1300,13 @@ object Multimodal {
     * the batch, not the corpus). Same writer and routing as the build,
     * so probes see appended rows identically. */
   def appendToPhashIndex(spark: SparkSession, kind: PhashKind,
-                         media: DataFrame, path: String): Unit =
+                         media: DataFrame, path: String): Unit = {
+    // heal a crashed compaction first: in the window between its renames
+    // the root is gone, and an append would start a fresh one beside the
+    // only copy
+    ParquetCompact.recoverTable(spark, path)
     writePhashBlocks(spark, kind, media, path, "append", epoch = None)
+  }
 
   /**
    * COMPACT a phash index's accumulated small files — every

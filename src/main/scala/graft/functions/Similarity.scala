@@ -35,7 +35,6 @@ object Similarity {
     if (df.rdd.getNumPartitions >= want) df else df.repartition(want)
   }
 
-  /** Sequential-fold dot product of two float vectors, in double. */
   /** Dot product — the native [[ArrayDot]] expression (bit-identical to
     * the HOF `aggregate(zip_with(...))` formulation it replaced; same
     * left-fold IEEE op sequence, no intermediate product array). */
@@ -579,19 +578,40 @@ object Similarity {
    * quantizer geometry) — [[refreshIvfCenters]] or [[rebuildIvfCsums]]
    * converges. Same single-writer discipline as the dedup index.
    * Index contract: unique integral ids, vectors ≥ `dims` wide.
+   *
+   * The variant comes from the batch and the index ([[ivfLayout]]):
+   *  - a batch WITHOUT `labelCol` is labeled against the stored centers
+   *    ([[assignToCenters]]: one batch × broadcast(K) step, no retrain),
+   *    bit-identical to labeling the grown corpus against the same
+   *    frozen centers and rebuilding (Round8OpsSpec);
+   *  - with a PQ sidecar (`pq/`), the batch's codes are encoded
+   *    ([[pqCodesOf]]) and land beside their cells under deterministic
+   *    per-(cell, batch) names, so a crashed retry replaces rather than
+   *    duplicates; the pq marker is deleted before the lists move and
+   *    re-stamped last, so every crash window leaves probes refusing;
+   *  - a streamed (epoch-layout) index is refused before anything lands.
    */
   def appendToIvfIndex(spark: SparkSession, path: String, batch0: DataFrame,
                        idCol: String, vecCol: String, labelCol: String,
                        dims: Int = 64): Boolean = {
     TopKAgg.requireIntegralId(batch0, idCol, "appendToIvfIndex")
+    val pq = ivfLayout(spark, path, labelCol, dims, epochs = false,
+      "appendToIvfIndex")
     // ONE evaluation of the caller's frame: the bounds aggregate, the
     // lists write, and the csums delta would otherwise each re-evaluate
     // it — a non-deterministic batch (a sample, an uncheckpointed limit)
     // could then write one row set to lists and fold ANOTHER into csums
     // while stamping the marker valid. An append batch is ingest-sized,
-    // so the eager checkpoint is cheap insurance.
-    val batch = batch0.select(col(idCol), col(vecCol), col(labelCol))
-      .localCheckpoint()
+    // so the eager checkpoint is cheap insurance. It also makes the
+    // assignment safe: its lineage reads `centers`, which the fold
+    // below replaces.
+    val batch = (
+      if (batch0.columns.contains(labelCol))
+        batch0.select(col(idCol), col(vecCol), col(labelCol))
+      else batch0.select(col(idCol), col(vecCol)).join(
+        assignToCenters(spark, path, batch0, idCol, vecCol)
+          .withColumnRenamed("cell", labelCol), Seq(idCol))
+      ).localCheckpoint()
     val marker = readCsumsMarker(spark, path)
     val stats = csumsBatchStats(batch, idCol, vecCol, labelCol, dims,
       "appendToIvfIndex")
@@ -608,6 +628,7 @@ object Similarity {
     // artifact's single number — this names the heavy one when tuning
     val mark = stageTrace("ivf-append")
     deleteCsumsMarker(spark, path) // FIRST: no crash window trusts stale csums
+    if (pq.isDefined) deletePqMarker(spark, path)
     // STAGED append, not mode("append"): a path-based partitioned append
     // resolves the EXISTING table first — full partition discovery over
     // all K cell dirs, the dominant term of the whole append at K = 1000
@@ -636,6 +657,13 @@ object Similarity {
       foldCsumsDelta(spark, path, batch, cells, idCol, vecCol, labelCol,
         dims, spreadN, bMax, epoch = None, epochHash = None, mark)
     else rebuildIvfCsums(spark, path, idCol, vecCol, labelCol, dims)
+    pq.foreach { sc =>
+      // pqCodesOf partitions by cell key, one file per cell per task
+      stagedPartitionedWrite(spark, s"$path/pq/codes",
+        pqCodesOf(spark, path, batch, idCol, vecCol, labelCol, sc),
+        replaceDirs = false, batchTag = Some(s"pq-$bMin-$bMax"))
+      restampPqMarker(spark, path, sc)
+    }
     fast
   }
 
@@ -1063,15 +1091,6 @@ object Similarity {
     if (r.isNullAt(0)) None else Some(r.getLong(0))
   }
 
-  /** The touched cells' csums rows as (labelCol, __chunk, __opsums,
-    * __on), reading ONLY those cells' partition directories (one root
-    * listing, then explicit subdir paths — never a full partition
-    * discovery over all K cell dirs). Cells with no directory yet (new
-    * cells) simply contribute no rows; when NO touched cell has a dir,
-    * an empty frame with the join schema is derived from the delta.
-    * Cell keys are labels cast to string and matched against the
-    * ESCAPED dir names Spark writes, so special-charactered labels
-    * resolve correctly. */
   /** The csums root's cell partition dirs, filtered by the ESCAPED dir
     * names of `cells` (Spark escapes partition values in dir names — an
     * unescaped comparison would read a special-charactered label's
@@ -1093,6 +1112,15 @@ object Similarity {
         named.contains(p.getName) == include)
   }
 
+  /** The touched cells' csums rows as (labelCol, __chunk, __opsums,
+    * __on), reading ONLY those cells' partition directories (one root
+    * listing, then explicit subdir paths — never a full partition
+    * discovery over all K cell dirs). Cells with no directory yet (new
+    * cells) simply contribute no rows; when NO touched cell has a dir,
+    * an empty frame with the join schema is derived from the delta.
+    * Cell keys are labels cast to string and matched against the
+    * ESCAPED dir names Spark writes, so special-charactered labels
+    * resolve correctly. */
   private def readCsumsCells(spark: SparkSession, path: String,
                              cells: Seq[String], delta: DataFrame,
                              labelCol: String): DataFrame = {
@@ -1274,11 +1302,120 @@ object Similarity {
         .getBytes("UTF-8")))
   }
 
-  /** Compact an append-grown IVF index in place: one file per cell
-    * partition in `lists` (layout preserved for partition pruning),
-    * `centers` already tiny. Returns the lists row count. */
-  def compactIvfIndex(spark: SparkSession, path: String): Long =
-    ParquetCompact.partitionedTable(spark, s"$path/lists", "__cellkey")
+  /** The layout of `path/lists`, from one driver-side glob: Some(false)
+    * flat (`lists/__cellkey=c`, [[buildIvfIndex]]), Some(true) streamed
+    * epochs (`lists/__batch=N/__cellkey=c`), None for no data dirs. A
+    * tree holding both (every read then fails with conflicting partition
+    * columns) is refused. */
+  private[graft] def listsEpoched(spark: SparkSession,
+                                  path: String): Option[Boolean] = {
+    val pattern = new org.apache.hadoop.fs.Path(
+      s"$path/lists/{__batch=*,__cellkey=*}")
+    val fs = pattern.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val names = Option(fs.globStatus(pattern)).toSeq.flatten
+      .filter(_.isDirectory).map(_.getPath.getName)
+    val Seq(epochs, flat) =
+      Seq("__batch=", "__cellkey=").map(d => names.exists(_.startsWith(d)))
+    require(!(epochs && flat), s"$path/lists mixes __batch= epoch dirs " +
+      "with flat __cellkey= dirs; rebuild the index")
+    if (epochs) Some(true) else if (flat) Some(false) else None
+  }
+
+  /** The data columns of the lists, from one data file's footer
+    * (driver-side, no Spark job); None when the lists hold no data. */
+  private def listsColumns(spark: SparkSession,
+                           path: String): Option[Seq[String]] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val cells = new org.apache.hadoop.fs.Path(
+      s"$path/lists/{__cellkey=*,__batch=*/__cellkey=*}")
+    val fs = cells.getFileSystem(conf)
+    Option(fs.globStatus(cells)).toSeq.flatten.iterator
+      .flatMap(d => fs.listStatus(d.getPath))
+      .find(f => f.getPath.getName.endsWith(".parquet") &&
+        !f.getPath.getName.startsWith("."))
+      .map { f =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
+        try r.getFooter.getFileMetaData.getSchema.getFields.toArray
+          .map(_.asInstanceOf[org.apache.parquet.schema.Type].getName).toSeq
+        finally r.close()
+      }
+  }
+
+  /** A PQ sidecar's encoding, from its marker. */
+  private[graft] final case class PqSidecar(m: Int, ksub: Int, dims: Int,
+                                            residual: Boolean)
+
+  /** The guard every IVF mutation runs before anything lands: heals a
+    * crashed compaction, refuses the other lists layout (`epochs` = the
+    * one this entry point writes) and lists without `labelCol` (a retrain
+    * relabels cells to `cell`), and returns the PQ sidecar the rows must
+    * also be encoded into — refusing a `pq/` without a valid marker. */
+  private[graft] def ivfLayout(spark: SparkSession, path: String,
+                               labelCol: String, dims: Int, epochs: Boolean,
+                               op: String): Option[PqSidecar] = {
+    recoverIvfTables(spark, path)
+    require(!listsEpoched(spark, path).contains(!epochs),
+      if (epochs) s"$op: $path has the flat batch layout — append " +
+        "through Similarity.appendToIvfIndex instead"
+      else s"$op: $path has the streaming epoch layout — ingest " +
+        "through StreamOps.ivfIngestTo instead")
+    listsColumns(spark, path).foreach(have => require(have.contains(labelCol),
+      s"$op: the lists under $path lack `$labelCol` (they hold " +
+        s"${have.mkString(", ")})"))
+    val pqDir = new org.apache.hadoop.fs.Path(s"$path/pq")
+    if (!pqDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .exists(pqDir)) None
+    else {
+      val (_, m, ksub, d, residual) = readPqMarker(spark, path).getOrElse(
+        throw new IllegalStateException(s"$op: the PQ sidecar under " +
+          s"$path has no valid marker — run addPqToIvfIndex to rebuild it"))
+      require(d == dims, s"$op: pq sidecar dims $d != $dims")
+      Some(PqSidecar(m, ksub, d, residual))
+    }
+  }
+
+  /** Heal a crashed compaction of `lists` and `pq/codes` — run before
+    * every IVF append, epoch and probe: in the window between a
+    * compaction's renames an append would start a fresh table beside
+    * the only copy of the corpus, and a probe would return nothing. */
+  private[graft] def recoverIvfTables(spark: SparkSession,
+                                      path: String): Unit =
+    Seq("lists", "pq/codes").foreach(t =>
+      ParquetCompact.recoverTable(spark, s"$path/$t"))
+
+  /** Compact an IVF index in place, in the layout it holds: flat
+    * `lists` (and `pq/codes`) to one file per cell dir through
+    * [[ParquetCompact]]'s staged swap; streamed `lists` epochs into the
+    * reserved `__batch=-1` ([[ParquetCompact.consolidateEpochs]]), after
+    * dropping the assigned ingest's centers copies, which key on the
+    * epoch set this destroys. Streamed codes keep their epoch dirs (the
+    * sidecar's replay device). Rows are untouched, so the markers stay
+    * valid and probes do not change. Single-writer. Returns the lists
+    * row count. */
+  def compactIvfIndex(spark: SparkSession, path: String): Long = {
+    recoverIvfTables(spark, path)
+    listsEpoched(spark, path) match {
+      case None => 0L
+      case Some(false) =>
+        val n = ParquetCompact.partitionedTable(spark, s"$path/lists",
+          "__cellkey")
+        if (hasParquetData(spark, s"$path/pq/codes"))
+          ParquetCompact.partitionedTable(spark, s"$path/pq/codes",
+            "__cellkey")
+        n
+      case Some(true) =>
+        val ce = new org.apache.hadoop.fs.Path(s"$path/centers_epoch")
+        ce.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .delete(ce, true)
+        ParquetCompact.consolidateEpochs(spark, s"$path/lists") {
+          (df, stageDir) =>
+            // one task per cell keeps one file per cell directory
+            df.repartition(col("__cellkey"))
+              .write.partitionBy("__cellkey").parquet(stageDir)
+        }.getOrElse(spark.read.parquet(s"$path/lists").count())
+    }
+  }
 
   /** Quantizer-aging diagnostics for a persisted IVF index. The k-means
     * geometry is frozen at build time; an ingest whose cluster structure
@@ -1394,8 +1531,7 @@ object Similarity {
   def retrainIvfIndex(spark: SparkSession, path: String, idCol: String,
                       vecCol: String, dims: Int = 64, k: Int = -1,
                       iters: Int = 4, trainMod: Int = -1,
-                      superAssign: Int = -1,
-                      epochLayout: Boolean = false): Unit = {
+                      superAssign: Int = -1): Unit = {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val live = new org.apache.hadoop.fs.Path(path)
@@ -1407,6 +1543,8 @@ object Similarity {
       require(fs.rename(oldP, live), s"retrain crash repair failed: $oldP")
     require(fs.exists(live), s"no index at $path")
     fs.delete(newP, true); fs.delete(oldP, true)
+    recoverIvfTables(spark, path)
+    val epochs = listsEpoched(spark, path).contains(true)
 
     val corpus = spark.read.parquet(s"$path/lists")
       .select(col(idCol), col(vecCol))
@@ -1425,11 +1563,11 @@ object Similarity {
     // (lists/__batch=N/__cellkey=c — the replay-idempotence layout):
     // nest the rebuilt flat lists under the reserved consolidation
     // epoch BEFORE the swap, so the ingest's next epochs land beside it
-    // exactly as after compactIvfIngestState. Crash-safe: the staging
-    // root is garbage until the swap, and the renames happen inside it.
-    // (The fold state is layout-independent — the csums marker stamped
-    // by the build stays valid, selects drop partition columns.)
-    if (epochLayout) {
+    // exactly as after compactIvfIndex. Crash-safe: the staging root is
+    // garbage until the swap, and the renames happen inside it. (The
+    // fold state is layout-independent — the csums marker stamped by
+    // the build stays valid, selects drop partition columns.)
+    if (epochs) {
       val flat = new org.apache.hadoop.fs.Path(s"$newP/lists")
       val tmp = new org.apache.hadoop.fs.Path(s"$newP/lists.__flat")
       require(fs.rename(flat, tmp), s"retrain epoch nesting failed: $flat")
@@ -1497,7 +1635,6 @@ object Similarity {
                        targetRowsPerCell: Int = -1,
                        iters: Int = 4, sampleN: Int = 1000,
                        superAssign: Int = -1,
-                       epochLayout: Boolean = false,
                        cellMod: Int = 1): IvfMaintenance = {
     val stats = ivfDriftStats(spark, path, idCol, vecCol, labelCol, dims,
       sampleN, cellMod)
@@ -1510,7 +1647,7 @@ object Similarity {
         math.max(1, math.ceil(stats.rows.toDouble / targetRowsPerCell).toInt)
       else -1
     retrainIvfIndex(spark, path, idCol, vecCol, dims, k = k, iters = iters,
-      superAssign = superAssign, epochLayout = epochLayout)
+      superAssign = superAssign)
     IvfMaintenance(stats, retrained = true, k = k)
   }
 
@@ -1555,28 +1692,6 @@ object Similarity {
   def cellCentersOf(df: DataFrame, labelCol: String, idCol: String,
                     vecCol: String, dims: Int = 64): DataFrame =
     cellCenters(df, labelCol, idCol, vecCol, dims)
-
-  /**
-   * [[appendToIvfIndex]] with the batch's cells DERIVED from the stored
-   * centers via [[assignToCenters]] — the default ingest entry for a
-   * k-means-quantized index (new vectors carry no label column; the
-   * quantizer is the index's own geometry). The batch is labeled against
-   * the CURRENT centers, appended, and the centers then refresh exactly
-   * as in the labeled append, so append-with-assignment is bit-identical
-   * to labeling the grown corpus against the same frozen centers and
-   * rebuilding (Round8OpsSpec — the [[cellCenters]] fold is order-free).
-   */
-  def appendToIvfIndexAssigned(spark: SparkSession, path: String,
-                               batch: DataFrame, idCol: String,
-                               vecCol: String, dims: Int = 64): Boolean = {
-    // the assignment's lineage reads path/centers, which this same call
-    // replaces later — safe because appendToIvfIndex EAGERLY checkpoints
-    // its batch at entry, before any index mutation (one materialization
-    // for the determinism guarantee and this read-before-replace hazard)
-    val labeled = batch.select(col(idCol), col(vecCol))
-      .join(assignToCenters(spark, path, batch, idCol, vecCol), Seq(idCol))
-    appendToIvfIndex(spark, path, labeled, idCol, vecCol, "cell", dims)
-  }
 
   /**
    * THE auto two-level crossover rule, in one place (the probe default,
@@ -1721,6 +1836,7 @@ object Similarity {
                         idCol: String, vecCol: String, labelCol: String,
                         k: Int, nProbe: Int = 2, superProbe: Int = -1,
                         superBits: Int = 4, superOffset: Int = 32): DataFrame = {
+    recoverIvfTables(spark, path)
     val centers = spark.read.parquet(s"$path/centers")
     // auto resolution ([[resolveSuperProbe]]/[[resolveNProbe]]) needs
     // only the CELL COUNT — read it from the centers parquet footers
@@ -1762,6 +1878,22 @@ object Similarity {
       idCol, k)
   }
 
+  /** Supercell centroids (__sc, __scenter) of an LSH-bucketed centers
+    * frame — shared by the two-level probe and the pruned k-means
+    * assignment so the (deterministic) fold exists exactly once. */
+  private def superCentersOf(sc: DataFrame): DataFrame = sc
+    .select(col("__sc"), posexplode(col("__center")).as(Seq("pos", "v")))
+    .groupBy(col("__sc"), col("pos"))
+    // deterministic: supercells hold ≤ K rows — fold in cell order is
+    // unnecessary since avg over a sorted collect keeps ordering fixed
+    .agg(sort_array(collect_list(col("v"))).as("vs"), count(lit(1)).as("n"))
+    .select(col("__sc"), col("pos"),
+      (aggregate(col("vs"), lit(0.0), (a, x) => a + x) / col("n")).as("sv"))
+    .groupBy(col("__sc"))
+    .agg(sort_array(collect_list(struct(col("pos"), col("sv")))).as("ps"))
+    .select(col("__sc"),
+      transform(col("ps"), p => p.getField("sv")).as("__scenter"))
+
   /**
    * Two-level cell selection for [[ivfKnnJoinIndexed]]: with K cells the
    * flat ranking is O(probes × K) center cosines per probe batch — the
@@ -1780,22 +1912,6 @@ object Similarity {
    * (spec-pinned), so the knob moves continuously between recall and
    * cost.
    */
-  /** Supercell centroids (__sc, __scenter) of an LSH-bucketed centers
-    * frame — shared by the two-level probe and the pruned k-means
-    * assignment so the (deterministic) fold exists exactly once. */
-  private def superCentersOf(sc: DataFrame): DataFrame = sc
-    .select(col("__sc"), posexplode(col("__center")).as(Seq("pos", "v")))
-    .groupBy(col("__sc"), col("pos"))
-    // deterministic: supercells hold ≤ K rows — fold in cell order is
-    // unnecessary since avg over a sorted collect keeps ordering fixed
-    .agg(sort_array(collect_list(col("v"))).as("vs"), count(lit(1)).as("n"))
-    .select(col("__sc"), col("pos"),
-      (aggregate(col("vs"), lit(0.0), (a, x) => a + x) / col("n")).as("sv"))
-    .groupBy(col("__sc"))
-    .agg(sort_array(collect_list(struct(col("pos"), col("sv")))).as("ps"))
-    .select(col("__sc"),
-      transform(col("ps"), p => p.getField("sv")).as("__scenter"))
-
   private def probedCellsTwoLevel(centers: DataFrame, probes: DataFrame,
                                   nProbe: Int, superProbe: Int,
                                   bits: Int, offset: Int): DataFrame = {
@@ -2405,6 +2521,18 @@ object Similarity {
                             ksub: Int, sd: Int): Column =
     PqNearestCode(sv, cbFlat, j, ksub, sd)
 
+  /** `vec`, or a loud failure naming the row's id when it is narrower
+    * than `dims`: a short subvector would otherwise take
+    * [[PqNearestCode]]'s null-distance branch and code as 0 silently.
+    * An expression, so the check rides the caller's own projection and
+    * adds no job. */
+  private def pqWide(vec: Column, id: Column, dims: Int,
+                     op: String): Column =
+    when(vec.isNotNull && size(vec) < dims,
+      raise_error(concat(lit(s"$op: PQ needs vectors with >= $dims " +
+        "elements, found a shorter one at id "), id.cast("string"))))
+      .otherwise(vec)
+
   /** Subvector slice `j` (0-based) of `vec`, promoted to double. */
   private def pqSub(vec: Column, j: Column, sd: Int): Column =
     transform(slice(vec, j * sd + 1, lit(sd)), x => x.cast("double"))
@@ -2444,7 +2572,8 @@ object Similarity {
       s"ksub=$ksub iters=$iters trainMod=$trainMod")
     val sd = dims / m
     val tmark = stageTrace("pq-train")
-    val base = spread(df.select(col(idCol), col(vecCol)))
+    val base = spread(df.select(col(idCol),
+        pqWide(col(vecCol), col(idCol), dims, "pqTrain").as(vecCol)))
       .localCheckpoint(false)
     val train =
       if (trainMod <= 1) base
@@ -2503,6 +2632,7 @@ object Similarity {
   def pqEncode(df: DataFrame, codebooks: DataFrame, idCol: String,
                vecCol: String, m: Int = 8, ksub: Int = 16,
                dims: Int = 64): DataFrame = {
+    require(m >= 1 && dims % m == 0, s"m=$m must divide dims=$dims")
     val sd = dims / m
     // EXPLICIT spread before the per-row encode: the encode is the
     // library's most CPU-dense narrow map (m×ksub interpreted
@@ -2514,7 +2644,8 @@ object Similarity {
     // round-robin shuffle moves 4·dims bytes/row once to buy
     // core-count parallelism on work that costs ~1000× its I/O
     // ([[spread]] skips it when the input is already wide).
-    spread(df.select(col(idCol), col(vecCol)))
+    spread(df.select(col(idCol),
+        pqWide(col(vecCol), col(idCol), dims, "pqEncode").as(vecCol)))
       .crossJoin(broadcast(pqFlat(codebooks)))
       .select(col(idCol),
         transform(sequence(lit(0), lit(m - 1)), j =>
@@ -2627,20 +2758,6 @@ object Similarity {
       "pq marker")(_.write(s"$maxId|$m|$ksub|$dims|$r".getBytes("UTF-8")))
   }
 
-  /**
-   * Replace `vecCol` with the RESIDUAL against each row's assigned
-   * cell center — the FAISS IVF-PQ encoding target: within-cell
-   * residuals span a far tighter ball than raw vectors (the cell
-   * radius, not the corpus radius), so the same m·log2(ksub) bits
-   * quantize visibly finer. `centers` is the FROZEN snapshot persisted
-   * beside the codebooks (`path/pq/centers`): the live centers move on
-   * every append (they are cell means), and codes must decode against
-   * the exact geometry they were encoded with. A row whose label has
-   * no snapshot center (a cell born after the snapshot, via an
-   * assigned append) keeps its raw vector — the probe mirrors with a
-   * zero center-dot, so the two sides stay consistent. One broadcast
-   * join, no shuffle: centers are K rows, broadcast-sized forever.
-   */
   /** Extend a residual sidecar's FROZEN coarse-center snapshot with the
     * first-seen live centers of cells born after the snapshot. Without
     * this, post-snapshot cells fell back to RAW-vector codes scored
@@ -2710,6 +2827,20 @@ object Similarity {
         .escapePathName(c))).toSet
   }
 
+  /**
+   * Replace `vecCol` with the RESIDUAL against each row's assigned
+   * cell center — the FAISS IVF-PQ encoding target: within-cell
+   * residuals span a far tighter ball than raw vectors (the cell
+   * radius, not the corpus radius), so the same m·log2(ksub) bits
+   * quantize visibly finer. `centers` is the FROZEN snapshot persisted
+   * beside the codebooks (`path/pq/centers`): the live centers move on
+   * every append (they are cell means), and codes must decode against
+   * the exact geometry they were encoded with. A row whose label has
+   * no snapshot center (a cell born after the snapshot, via an
+   * assigned append) keeps its raw vector — the probe mirrors with a
+   * zero center-dot, so the two sides stay consistent. One broadcast
+   * join, no shuffle: centers are K rows, broadcast-sized forever.
+   */
   private[graft] def residualizedRows(rows: DataFrame,
                                       centers: DataFrame, vecCol: String,
                                       labelCol: String): DataFrame = {
@@ -2759,6 +2890,37 @@ object Similarity {
         col("__cellkey")) ++ extraCols.map(col)): _*)
   }
 
+  /** The PQ codes of freshly landed labeled rows under the STORED
+    * codebooks — the one encode step of [[appendToIvfIndex]] and the
+    * streamed epoch. Residual sidecars encode against the FROZEN
+    * snapshot centers (decode geometry is pinned at addPq time); a cell
+    * BORN by these rows gets its first-seen live center frozen in first
+    * ([[extendPqSnapshot]]), so call this after the centers refresh. */
+  private[graft] def pqCodesOf(spark: SparkSession, path: String,
+                               rows: DataFrame, idCol: String,
+                               vecCol: String, labelCol: String,
+                               pq: PqSidecar): DataFrame = {
+    val encodeRows =
+      if (!pq.residual) rows
+      else {
+        extendPqSnapshot(spark, path,
+          rows.select(col(labelCol).cast("string")).distinct()
+            .collect().map(_.getString(0)).toIndexedSeq)
+        residualizedRows(rows, spark.read.parquet(s"$path/pq/centers"),
+          vecCol, labelCol)
+      }
+    pqEncodeCells(encodeRows, spark.read.parquet(s"$path/pq/codebooks"),
+      idCol, vecCol, labelCol, pq.m, pq.ksub, pq.dims)
+  }
+
+  /** Re-stamp the pq marker once the codes cover the lists again — only
+    * from a PRESENT csums marker (absent = the refresh is mid-crash). */
+  private[graft] def restampPqMarker(spark: SparkSession, path: String,
+                                     pq: PqSidecar): Unit =
+    readCsumsMarker(spark, path).foreach { case (maxId, _, _, _) =>
+      writePqMarker(spark, path, maxId, pq.m, pq.ksub, pq.dims, pq.residual)
+    }
+
   /**
    * Attach a PQ sidecar to a persisted [[buildIvfIndex]] — the full
    * IVF-PQ layout: `path/pq/codebooks` (m·ksub rows, broadcast-sized
@@ -2770,9 +2932,9 @@ object Similarity {
    *
    * Freshness contract: the sidecar marker stamps the index's max id
    * (copied from the csums marker — no extra corpus scan); the probe
-   * REFUSES a stale or missing marker loudly. Appends go through
-   * [[appendToIvfPqIndex]] (encode-and-append is a narrow map — no
-   * retrain needed); [[retrainIvfIndex]]'s root swap drops the sidecar
+   * REFUSES a stale or missing marker loudly. [[appendToIvfIndex]] and
+   * the streamed epochs encode new rows whenever `pq/` exists
+   * (encode-and-append is a narrow map — no retrain needed); [[retrainIvfIndex]]'s root swap drops the sidecar
    * with the old root, and the next probe says so — rebuild with this.
    */
   def addPqToIvfIndex(spark: SparkSession, path: String, idCol: String,
@@ -2781,6 +2943,7 @@ object Similarity {
                       trainMod: Int = 0,
                       residual: Boolean = false): Unit = {
     val mark = stageTrace("pq-add")
+    recoverIvfTables(spark, path)
     deletePqMarker(spark, path)
     require(hasParquetData(spark, s"$path/lists"),
       s"addPqToIvfIndex: no lists data under $path")
@@ -2849,89 +3012,6 @@ object Similarity {
   }
 
   /**
-   * Append a batch to an IVF index AND its PQ sidecar: the lists append
-   * is [[appendToIvfIndex]] unchanged (same incremental-csums fast
-   * path); the batch's codes are then encoded against the STORED
-   * codebooks (one narrow map — quantizer geometry does not move on
-   * append, that is [[maintainIvfIndex]]'s job) and land beside their
-   * cells with deterministic per-(cell, batch) file names, so a crashed
-   * retry replaces rather than duplicates. The pq marker is deleted
-   * FIRST and re-stamped LAST from the post-append csums marker —
-   * every crash window leaves the sidecar refusing probes instead of
-   * silently missing the batch. Returns [[appendToIvfIndex]]'s flag.
-   */
-  def appendToIvfPqIndex(spark: SparkSession, path: String,
-                         batch: DataFrame, idCol: String, vecCol: String,
-                         labelCol: String, dims: Int = 64): Boolean = {
-    val pqm = readPqMarker(spark, path).getOrElse(throw new
-      IllegalStateException(s"appendToIvfPqIndex: no valid PQ sidecar " +
-        s"under $path — run addPqToIvfIndex first"))
-    val (_, m, ksub, pqDims, residual) = pqm
-    require(pqDims == dims, s"pq sidecar dims $pqDims != $dims")
-    require(!pqCodesEpoched(spark, path),
-      s"appendToIvfPqIndex: $path has the streaming epoch layout — " +
-        "ingest through StreamOps.ivfPqIngestTo instead")
-    deletePqMarker(spark, path)
-    val b = batch.localCheckpoint(false)
-    val fast = appendToIvfIndex(spark, path, b, idCol, vecCol, labelCol,
-      dims)
-    val cb = spark.read.parquet(s"$path/pq/codebooks")
-    val range = b.agg(min(col(idCol).cast("long")),
-      max(col(idCol).cast("long"))).collect()(0)
-    if (!range.isNullAt(0)) {
-      val spreadN = math.max(1, spark.sparkContext.defaultParallelism)
-      // residual codes encode against the SNAPSHOT centers — the lists
-      // append just moved the live centers, but decode geometry is
-      // frozen at addPq time. A cell BORN by this batch gets its
-      // first-seen center frozen into the snapshot first
-      // ([[extendPqSnapshot]]), so its codes are residual on the
-      // codebooks' scale instead of the old raw-vector fallback
-      val encodeRows =
-        if (!residual) b
-        else {
-          extendPqSnapshot(spark, path,
-            b.select(col(labelCol).cast("string")).distinct()
-              .collect().map(_.getString(0)).toIndexedSeq)
-          residualizedRows(b, spark.read.parquet(s"$path/pq/centers"),
-            vecCol, labelCol)
-        }
-      stagedPartitionedWrite(spark, s"$path/pq/codes",
-        pqEncodeCells(encodeRows, cb, idCol, vecCol, labelCol, m, ksub,
-          dims)
-          .repartition(spreadN, col("__cellkey")),
-        replaceDirs = false,
-        batchTag = Some(s"pq-${range.getLong(0)}-${range.getLong(1)}"))
-    }
-    val maxId = readCsumsMarker(spark, path).map(_._1).getOrElse(
-      maxIdOf(spark.read.parquet(s"$path/lists"), idCol, labelCol,
-        "appendToIvfPqIndex").getOrElse(Long.MinValue))
-    writePqMarker(spark, path, maxId, m, ksub, dims, residual)
-    fast
-  }
-
-  /** Does the codes sidecar carry the streaming `__batch` epoch dirs? */
-  private def pqCodesEpoched(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/pq/codes")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && fs.listStatus(p).exists(st =>
-      st.isDirectory && st.getPath.getName.startsWith("__batch="))
-  }
-
-  /** Compact an IVF-PQ index: the lists via [[compactIvfIndex]], the
-    * codes sidecar to one file per cell dir (probe results unchanged —
-    * same rows, same layout keys). The streaming epoch layout keeps its
-    * per-epoch dirs (they ARE the replay-idempotence device); only the
-    * flat batch layout's cell dirs fold. Returns the lists row count. */
-  def compactIvfPqIndex(spark: SparkSession, path: String): Long = {
-    val n = compactIvfIndex(spark, path)
-    if (hasParquetData(spark, s"$path/pq/codes") &&
-        !pqCodesEpoched(spark, path))
-      ParquetCompact.partitionedTable(spark, s"$path/pq/codes",
-        "__cellkey")
-    n
-  }
-
-  /**
    * IVF-PQ probe — [[ivfKnnJoinIndexed]] with the in-cell scan on CODES:
    * same cell resolution (flat or two-level, same auto rules), but the
    * candidate pass reads (id, label, codes) from the pruned code
@@ -2950,6 +3030,7 @@ object Similarity {
                           rerank: Int = 100, superProbe: Int = -1,
                           superBits: Int = 4,
                           superOffset: Int = 32): DataFrame = {
+    recoverIvfTables(spark, path)
     val pqm = readPqMarker(spark, path).getOrElse(throw new
       IllegalStateException(s"ivfPqKnnJoinIndexed: no valid PQ sidecar " +
         s"under $path — run addPqToIvfIndex (or re-add after a retrain)"))
@@ -2957,8 +3038,7 @@ object Similarity {
     readCsumsMarker(spark, path).foreach { case (idxMaxId, _, _, _) =>
       require(idxMaxId == pqMaxId,
         s"PQ sidecar is STALE under $path (index max id $idxMaxId, " +
-          s"sidecar $pqMaxId) — run appendToIvfPqIndex for new batches " +
-          "or addPqToIvfIndex to rebuild")
+          s"sidecar $pqMaxId) — run addPqToIvfIndex to rebuild")
     }
     val sd = dims / m
     val centers = spark.read.parquet(s"$path/centers")

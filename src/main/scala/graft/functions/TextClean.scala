@@ -54,31 +54,6 @@ object TextClean {
     * tracking set. Anchored; a bare name (no `=`) is dropped too. */
   val TrackingParamRe = "^(utm_[^=]*|gclid|fbclid|ref)(=.*)?$"
 
-  /**
-   * Canonical URL normalization — the crawl-corpus dedup key (round-12
-   * verdict task 7): re-encoded links to the same resource ("tracking
-   * params, fragments, host case, default ports") should collide.
-   * Rules, in order (each mirrored expression-for-expression by the
-   * DuckDB oracle):
-   *
-   *  1. strip the fragment (`#` to end);
-   *  2. split off the query at the FIRST `?`;
-   *  3. lowercase the scheme and the host; the path keeps its case
-   *     (paths are case-sensitive on most origins);
-   *  4. drop the port when empty or the scheme default (http:80,
-   *     https:443); keep any other port;
-   *  5. drop tracking params ([[TrackingParamRe]]), sort the remaining
-   *     params byte-wise, rejoin with `&`; a query left empty drops its
-   *     `?` entirely.
-   *
-   * Pure Column work (regexp/string/array builtins — the [[normalize]]
-   * precedent): a narrow map, no shuffle, scan-speed at 100 TB.
-   * Deliberately SYNTACTIC — no percent-decoding, no IDN/punycode, no
-   * userinfo or IPv6 bracket handling (a `user@host` or `[::1]`
-   * authority passes through textually); those need a real URI parser
-   * and are out of scope for a dedup KEY, where a canonicalization
-   * that is merely consistent still groups correctly.
-   */
   /** The block-level tags whose boundaries become newlines in
     * [[htmlExtract]] — shared with the oracle builder so both sides
     * derive the pattern from one list. */
@@ -146,6 +121,31 @@ object TextClean {
     regexp_replace(twoNl, "^[ \\n]+|[ \\n]+$", "")
   }
 
+  /**
+   * Canonical URL normalization — the crawl-corpus dedup key (round-12
+   * verdict task 7): re-encoded links to the same resource ("tracking
+   * params, fragments, host case, default ports") should collide.
+   * Rules, in order (each mirrored expression-for-expression by the
+   * DuckDB oracle):
+   *
+   *  1. strip the fragment (`#` to end);
+   *  2. split off the query at the FIRST `?`;
+   *  3. lowercase the scheme and the host; the path keeps its case
+   *     (paths are case-sensitive on most origins);
+   *  4. drop the port when empty or the scheme default (http:80,
+   *     https:443); keep any other port;
+   *  5. drop tracking params ([[TrackingParamRe]]), sort the remaining
+   *     params byte-wise, rejoin with `&`; a query left empty drops its
+   *     `?` entirely.
+   *
+   * Pure Column work (regexp/string/array builtins — the [[normalize]]
+   * precedent): a narrow map, no shuffle, scan-speed at 100 TB.
+   * Deliberately SYNTACTIC — no percent-decoding, no IDN/punycode, no
+   * userinfo or IPv6 bracket handling (a `user@host` or `[::1]`
+   * authority passes through textually); those need a real URI parser
+   * and are out of scope for a dedup KEY, where a canonicalization
+   * that is merely consistent still groups correctly.
+   */
   def canonicalizeUrl(u: Column): Column = {
     val stripped = regexp_replace(u, "#.*$", "")
     val halves = split(stripped, "\\?", 2)

@@ -14,8 +14,6 @@ import org.apache.spark.sql.{ForeachWriter, Row}
  */
 object ForeachSinks {
 
-  /** Serialize a changeset row as the reference CLI does (JSON per event,
-    * internal/cli/warp_pipe.go:100-114). */
   /** JSON string escape incl. all control characters (a raw newline in a
     * captured text column must not break the line protocol). */
   private def esc(s: String): String = s.flatMap {

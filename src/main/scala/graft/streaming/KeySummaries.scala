@@ -104,10 +104,6 @@ private[graft] object KeySummaries {
     Summary(mBits, k, words)
   }
 
-  /** Write an epoch's summary file: magic, k, mBits, words — staged and
-    * renamed with overwrite so a crash never leaves a truncated file a
-    * later epoch would misread (a malformed file reads as ABSENT =
-    * always-read, but the stage+rename keeps even that window out). */
   /** One key column's distinct values AS STRINGS, collected only when
     * they fit [[MaxKeys]] — None = over cap, and callers must degrade
     * to no-summary / always-read, never to a miss. This is the ONE gate
@@ -143,6 +139,10 @@ private[graft] object KeySummaries {
     })
   }
 
+  /** Write an epoch's summary file: magic, k, mBits, words — staged and
+    * renamed with overwrite so a crash never leaves a truncated file a
+    * later epoch would misread (a malformed file reads as ABSENT =
+    * always-read, but the stage+rename keeps even that window out). */
   def write(fs: FileSystem, p: Path, s: Summary): Unit = {
     graft.functions.LayoutMarker.replaceWith(fs, p, "summary") { o =>
       val out = new java.io.DataOutputStream(o)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.functions.{Bloom, Dedup, Similarity}
+import graft.functions.{Bloom, Dedup, ParquetCompact, Similarity}
 import graft.functions.Multimodal.PhashKind
 
 /**
@@ -857,6 +857,42 @@ object StreamOps {
     epochs
   }
 
+  /** Pure grouping arithmetic of [[compactStateGrouped]]: fold
+    * `candidates` (in order) into groups whose per-epoch distinct-key
+    * counts sum to ≤ `cap`, assigning strictly-decreasing gids from
+    * `firstGid`. An epoch whose own count exceeds the cap becomes a
+    * singleton group (a pure rewrite — its summary is dropped and it is
+    * read forever after, the conservative over-cap contract). Negative
+    * singletons (an already-consolidated group with no mergeable
+    * neighbor) are dropped as no-ops so a re-run rewrites nothing.
+    * Factored out for direct property coverage (Round11Properties). */
+  private[graft] def planGroups(candidates: Seq[Long],
+                                counts: Map[Long, Long],
+                                cap: Long, firstGid: Long)
+      : Seq[(Long, Seq[Long])] = {
+    var gid = firstGid
+    val groups = Seq.newBuilder[(Long, Seq[Long])]
+    var cur = Seq.newBuilder[Long]
+    var curN = 0L
+    var curEmpty = true
+    def flush(): Unit = if (!curEmpty) {
+      groups += ((gid, cur.result())); gid -= 1L
+      cur = Seq.newBuilder[Long]; curN = 0L; curEmpty = true
+    }
+    candidates.foreach { e =>
+      val n = counts.getOrElse(e, 0L)
+      if (!curEmpty && curN + n > cap) flush()
+      cur += e; curN += n; curEmpty = false
+      if (curN > cap) flush() // over-cap singleton
+    }
+    flush()
+    // drop no-op singletons: an already-consolidated negative with no
+    // mergeable neighbor (gid gaps are harmless)
+    groups.result().filterNot { case (_, es) =>
+      es.lengthCompare(1) == 0 && es.head < 0L
+    }
+  }
+
   /**
    * GROUPED state compaction — the 100 TB form of [[compactState]].
    * Full compaction consolidates everything into one `batch=-1`
@@ -895,42 +931,6 @@ object StreamOps {
    *
    * Returns per-table row counts (whole tables, post-compaction).
    */
-  /** Pure grouping arithmetic of [[compactStateGrouped]]: fold
-    * `candidates` (in order) into groups whose per-epoch distinct-key
-    * counts sum to ≤ `cap`, assigning strictly-decreasing gids from
-    * `firstGid`. An epoch whose own count exceeds the cap becomes a
-    * singleton group (a pure rewrite — its summary is dropped and it is
-    * read forever after, the conservative over-cap contract). Negative
-    * singletons (an already-consolidated group with no mergeable
-    * neighbor) are dropped as no-ops so a re-run rewrites nothing.
-    * Factored out for direct property coverage (Round11Properties). */
-  private[graft] def planGroups(candidates: Seq[Long],
-                                counts: Map[Long, Long],
-                                cap: Long, firstGid: Long)
-      : Seq[(Long, Seq[Long])] = {
-    var gid = firstGid
-    val groups = Seq.newBuilder[(Long, Seq[Long])]
-    var cur = Seq.newBuilder[Long]
-    var curN = 0L
-    var curEmpty = true
-    def flush(): Unit = if (!curEmpty) {
-      groups += ((gid, cur.result())); gid -= 1L
-      cur = Seq.newBuilder[Long]; curN = 0L; curEmpty = true
-    }
-    candidates.foreach { e =>
-      val n = counts.getOrElse(e, 0L)
-      if (!curEmpty && curN + n > cap) flush()
-      cur += e; curN += n; curEmpty = false
-      if (curN > cap) flush() // over-cap singleton
-    }
-    flush()
-    // drop no-op singletons: an already-consolidated negative with no
-    // mergeable neighbor (gid gaps are harmless)
-    groups.result().filterNot { case (_, es) =>
-      es.lengthCompare(1) == 0 && es.head < 0L
-    }
-  }
-
   def compactStateGrouped(spark: org.apache.spark.sql.SparkSession,
                           statePath: String,
                           maxGroupKeys: Int = KeySummaries.MaxKeys,
@@ -1086,7 +1086,8 @@ object StreamOps {
    *
    * Run OFFLINE (no concurrent stream on this state). Uses the same
    * crash-safe staged swap as every other epoch consolidation here
-   * ([[consolidateEpochs]]): the round-7 overwrite-then-delete shape
+   * ([[ParquetCompact.consolidateEpochs]]): the round-7
+   * overwrite-then-delete shape
    * could leave every state row twice on a crash between the two steps,
    * and a re-run baked the duplicates into `batch=-1` permanently —
    * merely *mostly* harmless for this state (admissions survive the
@@ -1122,11 +1123,11 @@ object StreamOps {
     if (fs.exists(ks)) { fs.delete(ks, true); () }
     KeySummaries.invalidate(s"$statePath/keysum")
     Map(
-      "keys" -> consolidateEpochs(spark, s"$statePath/keys",
+      "keys" -> ParquetCompact.consolidateEpochs(spark, s"$statePath/keys",
         epochPrefix = "batch=") { (df, stageDir) =>
         df.coalesce(8).write.parquet(stageDir)
       }.getOrElse(0L),
-      "sets" -> consolidateEpochs(spark, s"$statePath/sets",
+      "sets" -> ParquetCompact.consolidateEpochs(spark, s"$statePath/sets",
         epochPrefix = "batch=")(stageSets).getOrElse(0L))
   }
 
@@ -1137,40 +1138,77 @@ object StreamOps {
    * micro-batch would double its rows): each epoch's vectors land under
    * `lists/__batch=<epoch>/__cellkey=<cell>/` with OVERWRITE, so a
    * crash-replayed batch rewrites exactly its own epoch; then the cell
-   * centers (the tiny table) are recomputed exactly from the on-disk
-   * lists. A crash between the two writes leaves stale centers —
-   * probe-correct under the OLD quantizer geometry, healed by the next
-   * epoch's refresh (or a manual [[graft.functions.Similarity.refreshIvfCenters]]).
+   * centers (the tiny table) refresh through the csums fold — O(batch)
+   * for the monotone-id norm ([[ivfIngestEpoch]]). A crash between the
+   * two writes is healed by the replay: it finds its epoch dir already
+   * there, so its refresh rebuilds from the lists.
+   *
+   * One entry point for every variant; each epoch reads the variant
+   * from its batch and the index, as the batch append does:
+   *  - a stream WITHOUT `labelCol` is labeled against the index's own
+   *    centers (the k-means ingest: one batch × broadcast(K) step, no
+   *    retrain), with the replay-stable centers device described at
+   *    [[ivfIngestEpoch]];
+   *  - when a PQ sidecar exists (`pq/`), each epoch also encodes what
+   *    landed into `pq/codes/__batch=N` against the STORED codebooks;
+   *    a sidecar without a valid marker stops the epoch before anything
+   *    lands (heal with [[graft.functions.Similarity.addPqToIvfIndex]],
+   *    which mirrors the epoch layout).
+   *
+   * Every `compactEvery` epochs (0 = never) the lists epochs consolidate
+   * into `__batch=-1` through [[graft.functions.Similarity.compactIvfIndex]],
+   * under the foreachBatch single-writer fence and BEFORE the epoch
+   * write ([[shouldCompactAt]] skips a replayed boundary epoch). Every
+   * `maintainEvery` epochs (0 = never) drift is measured and the index
+   * retrained on breach ([[graft.functions.Similarity.maintainIvfIndex]]
+   * with the other settings), also before the epoch write, so a
+   * crash-replayed epoch re-lands AFTER any retrain consolidated the
+   * previous epochs. Residual hazard, documented: a replay whose
+   * re-measured drift STILL breaches retrains again and re-duplicates
+   * one epoch — bounded by a crash × persistent-breach coincidence.
+   * Maintenance needs an unlabeled stream with `labelCol = "cell"`: a
+   * retrain relabels every row's cell to `cell`, which a labeled
+   * stream's next epoch could not follow.
    *
    * The stream OWNS `indexPath`: the epoch layout nests `__cellkey` under
    * `__batch`, which cannot mix with [[Similarity.buildIvfIndex]]'s flat
-   * cell layout in one directory tree (conflicting partition structure) —
-   * seed a pre-existing corpus with [[ivfIngestBootstrap]] (the reserved
-   * `__batch=-1`, micro-batch ids start at 0) instead of buildIvfIndex.
-   * Probes via [[Similarity.ivfKnnJoinIndexed]] work unchanged: the extra
-   * `__batch` partition column is ignored and `__cellkey` still prunes at
-   * file listing whatever its nesting level.
+   * cell layout in one directory tree, and an epoch refuses a flat
+   * index before anything lands — seed a pre-existing corpus with
+   * [[ivfIngestBootstrap]] (the reserved `__batch=-1`, micro-batch ids
+   * start at 0) instead of buildIvfIndex. Probes via
+   * [[Similarity.ivfKnnJoinIndexed]] work unchanged: the extra
+   * `__batch` partition column is ignored and `__cellkey` still prunes
+   * at file listing whatever its nesting level.
    */
   def ivfIngestTo(vectors: DataFrame, indexPath: String, checkpoint: String,
                   idCol: String, vecCol: String, labelCol: String,
                   dims: Int = 64,
                   availableNow: Boolean = true,
-                  compactEvery: Int = 0): StreamingQuery = {
+                  compactEvery: Int = 0,
+                  maintainEvery: Int = 0,
+                  residualThreshold: Double = 0.17,
+                  skewThreshold: Double = Double.MaxValue,
+                  targetRowsPerCell: Int = -1,
+                  maintainIters: Int = 4,
+                  superAssign: Int = -1,
+                  maintainCellMod: Int = 1): StreamingQuery = {
+    require(maintainEvery <= 0 ||
+      (labelCol == "cell" && !vectors.columns.contains(labelCol)),
+      "ivfIngestTo: maintainEvery needs an unlabeled stream with " +
+        "labelCol = \"cell\" — a retrain relabels every cell to `cell`")
     val writer = vectors.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // periodic lists consolidation under the foreachBatch
-        // single-writer fence, BEFORE the epoch write (the
-        // phashIngestTo device): the fold state is a function of the
-        // row SET, so the csums marker stays valid across the rewrite
-        // and a crash-replayed epoch overwrites its own fresh dir —
-        // UNLESS this epoch already landed (then this invocation is a
-        // replay and the first attempt's compaction already folded the
-        // earlier epochs; shouldCompactAt skips to avoid folding the
-        // crashed attempt's own rows into -1 before they re-land)
-        if (shouldCompactAt(batch.sparkSession, indexPath, batchId,
-            compactEvery))
-          compactIvfIngestState(batch.sparkSession, indexPath)
+        val spark = batch.sparkSession
+        if (shouldCompactAt(spark, indexPath, batchId, compactEvery))
+          Similarity.compactIvfIndex(spark, indexPath)
+        if (maintainEvery > 0 && batchId > 0 &&
+            batchId % maintainEvery == 0)
+          Similarity.maintainIvfIndex(spark, indexPath, idCol, vecCol,
+            labelCol, dims, residualThreshold = residualThreshold,
+            skewThreshold = skewThreshold,
+            targetRowsPerCell = targetRowsPerCell, iters = maintainIters,
+            superAssign = superAssign, cellMod = maintainCellMod)
         ivfIngestEpoch(batch, batchId, indexPath, idCol, vecCol, labelCol,
           dims)
         ()
@@ -1179,156 +1217,166 @@ object StreamOps {
       .start()
   }
 
-  /**
-   * [[ivfIngestTo]] with cells DERIVED from the index's own centers —
-   * the streaming ingest for a k-means-quantized index, where arriving
-   * vectors carry no label column (one batch × broadcast(K) assignment
-   * step, no retrain), landing as epochs exactly like the labeled
-   * ingest.
-   *
-   * Replay idempotence needs one extra device the labeled path doesn't:
-   * a replayed batch must re-derive the SAME assignment, but the stored
-   * centers move with every refresh — including the replayed epoch's own
-   * first attempt (assign against post-refresh centers and a
-   * boundary-straddling vector can flip cells, so the replay would write
-   * different rows than the uninterrupted run). So the assignment-time
-   * centers are recomputed from the on-disk lists EXCLUDING the current
-   * epoch's own partition (`__batch =!= batchId` — the same
-   * own-epoch-exclusion the dedup state verify uses): first attempt and
-   * replay both see exactly the pre-epoch corpus, whatever the crash
-   * point. Costs one column-pruned corpus scan per epoch — the same
-   * shape the refresh half already pays.
-   *
-   * Bootstrap with [[ivfIngestBootstrap]] on a
-   * [[graft.functions.Similarity.kmeansLabels]]-labeled corpus first
-   * (the index must HAVE cells before anything can be assigned to them).
-   */
-  def ivfIngestAssignedTo(vectors: DataFrame, indexPath: String,
-                          checkpoint: String, idCol: String, vecCol: String,
-                          dims: Int = 64,
-                          availableNow: Boolean = true,
-                          maintainEvery: Int = 0,
-                          residualThreshold: Double = 0.17,
-                          skewThreshold: Double = Double.MaxValue,
-                          targetRowsPerCell: Int = -1,
-                          maintainIters: Int = 4,
-                          superAssign: Int = -1,
-                          maintainCellMod: Int = 1): StreamingQuery = {
-    val writer = vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // ONLINE MAINTENANCE (round-15: the drift metrics and the
-        // retrain lever existed but nothing in the ingest SCHEDULED
-        // them, so a drifting stream degraded until an operator
-        // intervened): every `maintainEvery` epochs, measure drift and
-        // retrain on breach — inside the foreachBatch body, the one
-        // place the stream is provably the only writer (the
-        // maintainIvfIndex single-writer fence), and BEFORE this
-        // epoch's write, so a crash-replayed epoch re-lands AFTER any
-        // retrain consolidated the previous epochs (overwriting its
-        // own dir, never duplicating into the consolidated corpus).
-        // Residual hazard, documented: a replay whose re-measured
-        // drift STILL breaches retrains again and re-duplicates one
-        // epoch — bounded by a crash × persistent-breach coincidence.
-        // The no-breach path is one bounded metrics pass per K epochs
-        // (maintainCellMod > 1 prunes it to ~1/cellMod of the cell
-        // dirs — the sampled-drift fast path for small K).
-        if (maintainEvery > 0 && batchId > 0 &&
-            batchId % maintainEvery == 0)
-          Similarity.maintainIvfIndex(batch.sparkSession, indexPath,
-            idCol, vecCol, "cell", dims,
-            residualThreshold = residualThreshold,
-            skewThreshold = skewThreshold,
-            targetRowsPerCell = targetRowsPerCell, iters = maintainIters,
-            superAssign = superAssign, epochLayout = true,
-            cellMod = maintainCellMod)
-        ivfIngestAssignedEpoch(batch, batchId, indexPath, idCol, vecCol,
-          dims)
-        ()
-      }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer)
-      .start()
-  }
-
-  /** One epoch of [[ivfIngestAssignedTo]] — factored out so the
-    * replay-idempotence contract is directly testable: same
-    * (batch, batchId) twice ≡ once, even with the crash point between
-    * the lists write and the centers refresh.
+  /** One epoch of [[ivfIngestTo]] — factored out so the replay-idempotence
+    * contract is directly testable: same (batch, batchId) twice ≡ once.
     *
-    * CENTERS REUSE (the round-8 verdict's per-epoch double-scan): the
-    * assignment-time centers of epoch M are [[Similarity.cellCentersOf]]
-    * over every epoch except M — which, on a clean run, is EXACTLY what
-    * epoch N's refresh already computed and wrote (all epochs ≤ N). So
-    * each completed epoch stamps an immutable copy of the refreshed
-    * centers under `centers_epoch/__batch=N` plus a marker recording the
-    * epoch set that copy covers, and epoch M reuses the copy IFF the
-    * marker's set equals the on-disk epochs minus M. Bit-identity of the
-    * reuse: the copy is the refresh's own parquet rows (doubles
-    * round-trip exactly), and the fallback recompute folds the identical
-    * epoch set with the identical order-free arithmetic. Every crash
-    * window degrades to the recompute, never to a wrong assignment:
+    * The epoch's refresh runs through the csums fold state
+    * ([[Similarity.streamingCsumsRefresh]], round 12): a monotone-id
+    * micro-batch — the streaming norm: new documents get new ids —
+    * continues the stored per-cell left folds in O(batch) instead of a
+    * full O(corpus) centers recompute per epoch; a replayed epoch is
+    * recognized by the marker's epoch field (its lists partition was
+    * rewritten with bit-identical rows) and only re-derives centers;
+    * anything else rebuilds from the lists — never a wrong fold. Returns
+    * the refresh path taken (0 = fold, 1 = replay skip/empty, 2 =
+    * rebuild) so specs can pin which ran.
+    *
+    * ASSIGNED epochs (no `labelCol` in the batch): a replayed batch must
+    * re-derive the SAME assignment, but the stored centers move with
+    * every refresh — including the replayed epoch's own first attempt.
+    * So the assignment-time centers are those of every epoch EXCEPT this
+    * one: first attempt and replay both see exactly the pre-epoch
+    * corpus, whatever the crash point. On a clean run those are EXACTLY
+    * the centers the previous epoch's refresh wrote, so each completed
+    * epoch stamps an immutable copy of its refreshed centers under
+    * `centers_epoch/__batch=N` plus a marker recording the epoch set the
+    * copy covers, and epoch M reuses the copy IFF the marker's set equals
+    * the on-disk epochs minus M ([[centersReusable]]); otherwise the
+    * centers are recomputed from the lists minus epoch M (one
+    * column-pruned corpus scan, same order-free arithmetic, so the reuse
+    * is bit-identical). Every crash window degrades to the recompute,
+    * never to a wrong assignment:
     *  - crash before the marker write (incl. mid-refresh, which may
     *    leave the LIVE centers table partial): the marker still names
     *    the previous epoch set; a replayed M sees on-disk minus M equal
     *    to that set and reuses the previous epoch's intact copy — the
-    *    assignment the first attempt made. The live table is rewritten
-    *    by the replay's refresh.
+    *    assignment the first attempt made.
     *  - crash after the marker write but before the stream commits M:
-    *    the marker now covers M itself, the match fails (the set
-    *    includes M), and the replay recomputes from lists-minus-M —
-    *    the same input set, so the same assignment.
-    *  - compaction rewrites the epoch layout: the set mismatch falls
-    *    back to recompute ([[compactIvfIngestState]] also clears the
-    *    copies).
+    *    the marker now covers M itself, the match fails, and the replay
+    *    recomputes from lists-minus-M — the same input set.
+    *  - compaction or retrain rewrites the epoch layout: the set mismatch
+    *    falls back to recompute (both also drop the copies).
     * The marker is a single file written via temp + atomic rename, so a
-    * present marker always names a COMPLETED copy. Returns whether the
-    * stored copy was reused (false = full fallback recompute), so the
-    * spec can assert the reuse engaged without plan introspection. */
-  private[graft] def ivfIngestAssignedEpoch(batch: DataFrame, batchId: Long,
-                                            indexPath: String, idCol: String,
-                                            vecCol: String,
-                                            dims: Int): Boolean = {
+    * present marker always names a COMPLETED copy.
+    *
+    * PQ epochs (a `pq/` sidecar): the pq marker is deleted before the
+    * epoch lands and re-stamped LAST from the post-epoch csums marker;
+    * what landed is encoded ([[Similarity.pqCodesOf]]) into the mirrored
+    * `pq/codes/__batch=N` tree, so a crash replay overwrites the whole
+    * epoch dir with bit-identical rows and a reused epoch id with
+    * DIFFERENT rows replaces its codes wholesale. */
+  private[graft] def ivfIngestEpoch(batch: DataFrame, batchId: Long,
+                                    indexPath: String, idCol: String,
+                                    vecCol: String, labelCol: String,
+                                    dims: Int): Int = {
     val spark = batch.sparkSession
-    val priorEpochs = listEpochs(spark, indexPath) - batchId
-    val marker = readCentersMarker(spark, indexPath)
-    val reuse = marker.exists(_._2 == priorEpochs)
-    // assignment-time centers from every epoch EXCEPT this one (replay
-    // sees the identical pre-epoch corpus; first attempt excludes
-    // nothing it wrote yet)
-    val centers =
-      if (reuse)
-        spark.read
-          .parquet(s"$indexPath/centers_epoch/__batch=${marker.get._1}")
-      else
-        Similarity.cellCentersOf(
-          spark.read.parquet(s"$indexPath/lists")
-            .filter(col("__batch") =!= batchId)
-            .select(col(idCol), col(vecCol), col("cell")),
-          "cell", idCol, vecCol, dims)
-    // EAGER: the epoch overwrite below rewrites partitions this lineage
-    // reads (on replay, the epoch's own old files are excluded by the
-    // filter but the scan still lists the tree)
-    val labeled = batch.select(col(idCol), col(vecCol))
-      .join(Similarity.assignAgainst(centers, batch, idCol, vecCol),
-        Seq(idCol))
-      .localCheckpoint()
-    ivfIngestEpoch(labeled, batchId, indexPath, idCol, vecCol, "cell", dims)
-    // stamp the refreshed centers for the NEXT epoch's reuse: immutable
-    // per-epoch copy first (a replayed M overwrites only its own copy),
-    // marker last (temp + atomic rename — present ⟹ copy complete)
-    spark.read.parquet(s"$indexPath/centers")
-      .write.mode("overwrite")
-      .parquet(s"$indexPath/centers_epoch/__batch=$batchId")
-    writeCentersMarker(spark, indexPath, batchId, priorEpochs + batchId)
-    // only the marker's named copy is ever read — prune the rest, or a
-    // long-running stream accumulates one dead K-row directory per
-    // micro-batch (sustained small-file/namenode pressure at 10k
-    // epochs). Pruning AFTER the rename is crash-safe: a crash mid-prune
-    // leaves unreferenced copies the next completed epoch removes, and
-    // every reuse decision consults only the marker's own copy.
-    pruneCentersCopies(spark, indexPath, keep = batchId)
-    reuse
+    val pq = Similarity.ivfLayout(spark, indexPath, labelCol, dims,
+      epochs = true, "ivfIngestEpoch")
+    val assigned = !batch.columns.contains(labelCol)
+    val labeled =
+      if (!assigned) batch
+      else {
+        val centers =
+          if (centersReusable(spark, indexPath, batchId))
+            spark.read.parquet(s"$indexPath/centers_epoch/__batch=" +
+              readCentersMarker(spark, indexPath).get._1)
+          else Similarity.cellCentersOf(
+            spark.read.parquet(s"$indexPath/lists")
+              .filter(col("__batch") =!= batchId)
+              .select(col(idCol), col(vecCol), col(labelCol)),
+            labelCol, idCol, vecCol, dims)
+        // EAGER: the epoch overwrite below rewrites partitions this
+        // lineage reads
+        batch.select(col(idCol), col(vecCol))
+          .join(Similarity.assignAgainst(centers, batch, idCol, vecCol)
+            .withColumnRenamed("cell", labelCol), Seq(idCol))
+          .localCheckpoint()
+      }
+    // validate BEFORE the epoch partition lands (the batch twin's rule:
+    // a ragged or null/empty-labeled batch must fail while the index is
+    // untouched — written first, it would poison every later rebuild,
+    // and even the manual repair would refuse the persisted rows)
+    val stats = Similarity.csumsBatchStats(labeled, idCol, vecCol, labelCol,
+      dims, "ivfIngestEpoch")
+    // EMPTY micro-batch (an idle trigger interval): short-circuit before
+    // anything lands. A data-less __batch=N dir would crash the next
+    // read's schema inference — and since foreachBatch replays the same
+    // empty batch on restart, the stream would wedge on it forever.
+    if (stats.isEmpty) return 1
+    if (pq.isDefined) Similarity.deletePqMarker(spark, indexPath)
+    val epochDir = s"$indexPath/lists/__batch=$batchId"
+    // epoch-id REUSE detection, sampled before the overwrite: a fresh
+    // stream restarted against an old index (new checkpoint → batch ids
+    // restart at 0) OVERWRITES an epoch partition whose old rows the
+    // csums still cover — only a full rebuild can reconcile that; a
+    // genuine crash-replay also overwrites, but with bit-identical rows
+    // (streamingCsumsRefresh tells the two apart via the marker's
+    // row-set hash)
+    val epochExisted = {
+      val p = new org.apache.hadoop.fs.Path(epochDir)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+    }
+    labeled.select(col(idCol), col(vecCol), col(labelCol),
+        Similarity.norm(col(vecCol)).as("__cn"),
+        col(labelCol).cast("string").as("__cellkey"))
+      .write.mode("overwrite").partitionBy("__cellkey").parquet(epochDir)
+    // the refresh folds what actually LANDED: reading the epoch
+    // partition back (batch-sized) makes the fold consistent with the
+    // lists by construction — no second evaluation of the caller's
+    // frame, no corpus-sized checkpoint on the bootstrap path
+    val r =
+      if (!Similarity.hasParquetData(spark, epochDir)) {
+        // stats said non-empty but zero rows landed: a non-deterministic
+        // frame. Nothing to fold; but if the overwrite wiped a
+        // pre-existing epoch's rows, the csums no longer cover the
+        // lists — rebuild.
+        if (!epochExisted) 1
+        else {
+          Similarity.rebuildIvfCsums(spark, indexPath, idCol, vecCol,
+            labelCol, dims, epoch = Some(batchId))
+          2
+        }
+      } else Similarity.streamingCsumsRefresh(spark, indexPath,
+        spark.read.parquet(epochDir)
+          .select(col(idCol), col(vecCol), col(labelCol)),
+        batchId, idCol, vecCol, labelCol, dims, epochExisted)
+    if (assigned) {
+      // stamp the refreshed centers for the NEXT epoch's reuse:
+      // immutable per-epoch copy first (a replayed M overwrites only its
+      // own copy), marker last (temp + atomic rename — present ⟹ copy
+      // complete), then prune every other copy — only the marker's is
+      // ever read, and a long-running stream would otherwise accumulate
+      // one dead K-row directory per micro-batch. Pruning AFTER the
+      // rename is crash-safe: a crash mid-prune leaves unreferenced
+      // copies the next completed epoch removes.
+      spark.read.parquet(s"$indexPath/centers")
+        .write.mode("overwrite")
+        .parquet(s"$indexPath/centers_epoch/__batch=$batchId")
+      writeCentersMarker(spark, indexPath, batchId,
+        listEpochs(spark, indexPath))
+      pruneCentersCopies(spark, indexPath, keep = batchId)
+    }
+    pq.foreach { sc =>
+      if (Similarity.hasParquetData(spark, epochDir))
+        Similarity.pqCodesOf(spark, indexPath,
+          spark.read.parquet(epochDir)
+            .select(col(idCol), col(vecCol), col(labelCol)),
+          idCol, vecCol, labelCol, sc)
+          .write.mode("overwrite").partitionBy("__cellkey")
+          .parquet(s"$indexPath/pq/codes/__batch=$batchId")
+      Similarity.restampPqMarker(spark, indexPath, sc)
+    }
+    r
   }
+
+  /** Whether an assigned epoch `batchId` may take its assignment-time
+    * centers from the stamped copy: the centers marker covers exactly the
+    * on-disk epochs other than `batchId` (a metadata-only FS listing). */
+  private[graft] def centersReusable(spark: org.apache.spark.sql.SparkSession,
+                                     indexPath: String,
+                                     batchId: Long): Boolean =
+    readCentersMarker(spark, indexPath)
+      .exists(_._2 == listEpochs(spark, indexPath) - batchId)
 
   /** Delete every `centers_epoch/__batch=N` copy except `keep` (the one
     * the marker names). */
@@ -1390,167 +1438,6 @@ object StreamOps {
       s"$lastEpoch|${epochs.toSeq.sorted.mkString(",")}".getBytes("UTF-8")))
   }
 
-  /** One epoch of [[ivfIngestTo]] — factored out so the replay-idempotence
-    * contract is directly testable: same (batch, batchId) twice ≡ once.
-    *
-    * The epoch's refresh runs through the csums fold state
-    * ([[Similarity.streamingCsumsRefresh]], round 12): a monotone-id
-    * micro-batch — the streaming norm: new documents get new ids —
-    * continues the stored per-cell left folds in O(batch) instead of the
-    * former full O(corpus) centers recompute per epoch; a replayed epoch
-    * is recognized by the marker's epoch field (its lists partition was
-    * rewritten with bit-identical rows) and only re-derives centers;
-    * anything else rebuilds from the lists — exactly the old per-epoch
-    * cost, never a wrong fold. Returns the refresh path taken (0 = fold,
-    * 1 = replay skip/empty, 2 = rebuild) so specs can pin which ran. */
-  private[graft] def ivfIngestEpoch(batch: DataFrame, batchId: Long,
-                                    indexPath: String, idCol: String,
-                                    vecCol: String, labelCol: String,
-                                    dims: Int): Int = {
-    val spark = batch.sparkSession
-    // validate BEFORE the epoch partition lands (the batch twin's rule:
-    // a ragged or null/empty-labeled batch must fail while the index is
-    // untouched — written first, it would poison every later rebuild,
-    // and even the manual repair would refuse the persisted rows)
-    val stats = Similarity.csumsBatchStats(batch, idCol, vecCol, labelCol,
-      dims, "ivfIngestEpoch")
-    // EMPTY micro-batch (an idle trigger interval): short-circuit before
-    // anything lands. The old path wrote a data-less __batch=N dir whose
-    // read-back crashed schema inference — and since foreachBatch replays
-    // the same empty batch on restart, the stream wedged on it forever.
-    // Nothing written → index untouched → the replay-skip return.
-    if (stats.isEmpty) return 1
-    // epoch-id REUSE detection, sampled before the overwrite: a fresh
-    // stream restarted against an old index (new checkpoint → batch ids
-    // restart at 0) OVERWRITES an epoch partition whose old rows the
-    // csums still cover — only a full rebuild can reconcile that; a
-    // genuine crash-replay also overwrites, but with bit-identical rows
-    // (streamingCsumsRefresh tells the two apart via the marker's
-    // maxId)
-    val fs = new org.apache.hadoop.fs.Path(indexPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val epochExisted = fs.exists(new org.apache.hadoop.fs.Path(
-      s"$indexPath/lists/__batch=$batchId"))
-    batch.select(col(idCol), col(vecCol), col(labelCol),
-        Similarity.norm(col(vecCol)).as("__cn"),
-        col(labelCol).cast("string").as("__cellkey"))
-      .write.mode("overwrite").partitionBy("__cellkey")
-      .parquet(s"$indexPath/lists/__batch=$batchId")
-    // the refresh folds what actually LANDED: reading the epoch
-    // partition back (batch-sized) makes the fold consistent with the
-    // lists by construction — no second evaluation of the caller's
-    // frame, no corpus-sized checkpoint on the bootstrap path
-    if (!Similarity.hasParquetData(spark,
-        s"$indexPath/lists/__batch=$batchId")) {
-      // stats said non-empty but zero rows landed: a non-deterministic
-      // frame. Nothing to fold; but if the overwrite wiped a pre-existing
-      // epoch's rows, the csums no longer cover the lists — rebuild.
-      if (epochExisted) {
-        Similarity.rebuildIvfCsums(spark, indexPath, idCol, vecCol,
-          labelCol, dims, epoch = Some(batchId))
-        return 2
-      }
-      return 1
-    }
-    val landed = spark.read
-      .parquet(s"$indexPath/lists/__batch=$batchId")
-      .select(col(idCol), col(vecCol), col(labelCol))
-    Similarity.streamingCsumsRefresh(spark, indexPath, landed,
-      batchId, idCol, vecCol, labelCol, dims, epochExisted)
-  }
-
-  /**
-   * [[ivfIngestTo]] with a PQ sidecar kept fresh per epoch — the
-   * streaming half of the IVF-PQ lifecycle. Each micro-batch runs the
-   * unchanged [[ivfIngestEpoch]] (same validation, same epoch-overwrite
-   * idempotence, same csums refresh), then encodes WHAT LANDED in the
-   * epoch's lists partition against the STORED codebooks (one narrow
-   * map) into the mirrored `pq/codes/__batch=N` tree: a crash replay
-   * overwrites the whole epoch dir with bit-identical rows, and a
-   * reused epoch id with DIFFERENT rows replaces its codes wholesale —
-   * no orphan codes, the hazard a delta-append layout would carry. The
-   * pq marker is deleted FIRST and re-stamped LAST from the post-epoch
-   * csums marker, so every crash window leaves the sidecar refusing
-   * probes instead of silently missing the epoch. Bootstrap:
-   * [[ivfIngestBootstrap]] then
-   * [[graft.functions.Similarity.addPqToIvfIndex]] (it mirrors the
-   * epoch layout automatically).
-   */
-  def ivfPqIngestTo(vectors: DataFrame, indexPath: String,
-                    checkpoint: String, idCol: String, vecCol: String,
-                    labelCol: String, dims: Int = 64,
-                    availableNow: Boolean = true,
-                    compactEvery: Int = 0): StreamingQuery = {
-    val writer = vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // periodic LISTS consolidation (see ivfIngestTo, including the
-        // shouldCompactAt replay skip): the codes sidecar keeps its
-        // per-epoch dirs (they ARE its replay device) and the pq
-        // marker stays valid — the fold state, and hence the csums
-        // marker it mirrors, is a function of the row set the rewrite
-        // preserves
-        if (shouldCompactAt(batch.sparkSession, indexPath, batchId,
-            compactEvery))
-          compactIvfIngestState(batch.sparkSession, indexPath)
-        ivfPqIngestEpoch(batch, batchId, indexPath, idCol, vecCol,
-          labelCol, dims)
-        ()
-      }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer)
-      .start()
-  }
-
-  private[graft] def ivfPqIngestEpoch(batch: DataFrame, batchId: Long,
-                                      indexPath: String, idCol: String,
-                                      vecCol: String, labelCol: String,
-                                      dims: Int): Int = {
-    val spark = batch.sparkSession
-    val pqm = Similarity.readPqMarker(spark, indexPath).getOrElse(
-      throw new IllegalStateException(s"ivfPqIngestEpoch: no valid PQ " +
-        s"sidecar under $indexPath — bootstrap with ivfIngestBootstrap " +
-        "+ addPqToIvfIndex first"))
-    val (_, m, ksub, pqDims, residual) = pqm
-    require(pqDims == dims, s"pq sidecar dims $pqDims != $dims")
-    Similarity.deletePqMarker(spark, indexPath)
-    val r = ivfIngestEpoch(batch, batchId, indexPath, idCol, vecCol,
-      labelCol, dims)
-    val epochLists = s"$indexPath/lists/__batch=$batchId"
-    if (Similarity.hasParquetData(spark, epochLists)) {
-      val landed = spark.read.parquet(epochLists)
-        .select(col(idCol), col(vecCol), col(labelCol))
-      // residual sidecars encode against the FROZEN snapshot centers
-      // (Similarity.residualized's contract) — the epoch just moved the
-      // live centers, but decode geometry is pinned at addPq time. A
-      // cell BORN this epoch gets its first-seen center frozen in
-      // first (extendPqSnapshot — idempotent across crash replays), so
-      // its codes are residual on the codebooks' scale
-      val encodeRows =
-        if (!residual) landed
-        else {
-          Similarity.extendPqSnapshot(spark, indexPath,
-            landed.select(col(labelCol).cast("string")).distinct()
-              .collect().map(_.getString(0)).toIndexedSeq)
-          Similarity.residualizedRows(landed,
-            spark.read.parquet(s"$indexPath/pq/centers"), vecCol,
-            labelCol)
-        }
-      val cb = spark.read.parquet(s"$indexPath/pq/codebooks")
-      Similarity.pqEncodeCells(encodeRows, cb, idCol, vecCol, labelCol,
-        m, ksub, dims)
-        .write.mode("overwrite").partitionBy("__cellkey")
-        .parquet(s"$indexPath/pq/codes/__batch=$batchId")
-    }
-    // restamp only from a PRESENT csums marker: an absent one means the
-    // refresh itself is mid-crash — leave the sidecar refusing too
-    Similarity.readCsumsMarker(spark, indexPath).foreach {
-      case (maxId, _, _, _) =>
-        Similarity.writePqMarker(spark, indexPath, maxId, m, ksub, dims,
-          residual)
-    }
-    r
-  }
-
   /** Seed [[ivfIngestTo]]'s index with a pre-existing corpus: the corpus
     * lands in the reserved `__batch=-1` epoch (micro-batch ids start at
     * 0), keeping the partition structure uniform for the stream that
@@ -1560,15 +1447,6 @@ object StreamOps {
                          dims: Int = 64): Unit =
     ivfIngestEpoch(corpus, -1L, indexPath, idCol, vecCol, labelCol, dims)
 
-  /**
-   * Compact [[ivfIngestTo]]'s epoch partitions — same small-file problem
-   * and same device as [[compactState]]: every epoch adds one directory
-   * per touched cell, and a long-lived ingest accumulates thousands of
-   * small files. Consolidates every epoch into the reserved `__batch=-1`
-   * partition, one file per cell directory, preserving `__cellkey`
-   * pruning. Run OFFLINE (single-writer, like the batch appends). Centers
-   * are unchanged (same rows, same fold). Returns the lists row count.
-   */
   /** Periodic-compaction gate for the streaming ingests: compact at
     * every `compactEvery`-th epoch EXCEPT when that epoch's partition is
     * already on disk. Inside the foreachBatch single-writer fence an
@@ -1603,26 +1481,6 @@ object StreamOps {
           .exists(lists)
       }
     !replayed
-  }
-
-  def compactIvfIngestState(spark: org.apache.spark.sql.SparkSession,
-                            indexPath: String): Long = {
-    // the per-epoch centers copies key on the exact epoch layout this
-    // rewrite destroys — drop them (and the marker) so the next assigned
-    // epoch takes the safe recompute path instead of a stale-set match
-    val ce = new org.apache.hadoop.fs.Path(s"$indexPath/centers_epoch")
-    val fs = ce.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(ce)) { fs.delete(ce, true); () }
-    // one task per cell keeps one file per cell directory
-    consolidateEpochs(spark, s"$indexPath/lists") { (df, stageDir) =>
-      df.repartition(col("__cellkey"))
-        .write.partitionBy("__cellkey").parquet(stageDir)
-    }.getOrElse {
-      // nothing to consolidate (possibly because recovery just rolled a
-      // crashed compaction forward) — report the live count
-      val root = new org.apache.hadoop.fs.Path(s"$indexPath/lists")
-      if (fs.exists(root)) spark.read.parquet(root.toString).count() else 0L
-    }
   }
 
   /**
@@ -1692,8 +1550,8 @@ object StreamOps {
    * and lands its top-k neighbors `(probe_id, rank, neighbor_id, cos)`
    * under `outPath/batch=N` — the "retrieve context for every arriving
    * query/document from the trained corpus" pass. The index is NOT
-   * mutated by the stream (ingest is [[ivfIngestTo]] /
-   * [[ivfIngestAssignedTo]], on a path this stream must not race), so
+   * mutated by the stream (ingest is [[ivfIngestTo]], on a path this
+   * stream must not race), so
    * batches are independent and the epoch overwrite alone gives replay
    * idempotence.
    *
@@ -1885,6 +1743,10 @@ object StreamOps {
                                       compactEvery: Int): Unit = {
     import graft.functions.Multimodal
     val spark = batch.sparkSession
+    // heal a crashed compaction first: with the root renamed away the
+    // replay test below would misread the layout, and the write would
+    // start a fresh root beside the only copy
+    ParquetCompact.recoverTable(spark, indexPath)
     if (shouldCompactAt(spark, indexPath, batchId, compactEvery,
         nested = true))
       Multimodal.compactPhashIndex(spark, indexPath)
@@ -1936,6 +1798,7 @@ object StreamOps {
                                       indexPath: String, idCol: String,
                                       textCol: String): Unit = {
     Dedup.requireFlatIndex(batch.sparkSession, indexPath)
+    Dedup.recoverIndexTables(batch.sparkSession, indexPath)
     graft.functions.TopKAgg.requireIntegralId(batch, idCol, "dedup ingest")
     // shingle once, derive both tables from the materialized sets —
     // identical row shapes to the batch build/append, so a probe cannot
@@ -1956,100 +1819,17 @@ object StreamOps {
 
   /** Compact [[dedupIngestTo]]'s epoch partitions — every epoch adds
     * files to both tables; consolidates each into the reserved
-    * `__batch=-1` via the crash-safe [[consolidateEpochs]]. Run OFFLINE
+    * `__batch=-1` via the crash-safe
+    * [[ParquetCompact.consolidateEpochs]]. Run OFFLINE
     * (single-writer). Returns per-table row counts. */
   def compactDedupIngestState(spark: org.apache.spark.sql.SparkSession,
                               indexPath: String,
                               targetFiles: Int = 8): Map[String, Long] = {
     Dedup.requireFlatIndex(spark, indexPath)
     Seq("sets", "keys").map(t =>
-      t -> consolidateEpochs(spark, s"$indexPath/$t") { (df, stageDir) =>
+      t -> ParquetCompact.consolidateEpochs(spark, s"$indexPath/$t") { (df, stageDir) =>
         df.coalesce(targetFiles).write.parquet(stageDir)
       }.getOrElse(0L)).toMap
-  }
-
-  /**
-   * Crash-safe consolidation of an epoch-partitioned table
-   * (`root/__batch=N/...`) into the reserved `__batch=-1` epoch.
-   *
-   * The round-7 shape (overwrite `__batch=-1`, then delete old epochs)
-   * had a non-convergent crash window: between the overwrite and the
-   * deletes every compacted row existed twice, and a re-run baked the
-   * duplicates into `__batch=-1` permanently (it re-read the duplicated
-   * root) — and duplicated IVF list rows change probe results (a
-   * duplicated neighbor eats two top-k slots). Now the consolidated
-   * epoch is STAGED outside the tree and swapped in by rename, with a
-   * manifest naming the epochs it supersedes, so every crash window
-   * either rolls back (stage incomplete → discarded on the next run) or
-   * rolls forward (stage complete → delete exactly the manifested
-   * epochs, rename the stage in); no run ever reads a root holding both
-   * the stage and the epochs it replaced. Run OFFLINE (single-writer).
-   * Like [[graft.functions.ParquetCompact]], the roll-forward/roll-back
-   * classification assumes ATOMIC directory rename (HDFS / local FS) —
-   * on an object store, rename is copy+delete and a mid-rename crash
-   * leaves a partial mix this protocol would misread; compact to a new
-   * path + pointer flip there instead.
-   * `epochPrefix` is the epoch directory naming (`__batch=` for the
-   * ingest indexes, `batch=` for the dedup state). `writeStage` writes
-   * the merged epochs (already stripped of the epoch column) to the
-   * stage directory. Returns Some(row count after consolidation), or
-   * None when there was nothing to consolidate.
-   */
-  private def consolidateEpochs(spark: org.apache.spark.sql.SparkSession,
-                                rootPath: String,
-                                epochPrefix: String = "__batch=")
-                               (writeStage: (DataFrame, String) => Unit): Option[Long] = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(rootPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(rootPath + ".__compact_tmp")
-    val manifest = new Path(rootPath + ".__compact_manifest")
-    val target = new Path(root, epochPrefix + "-1")
-    val epochCol = epochPrefix.stripSuffix("=")
-
-    def finishFromManifest(): Unit = {
-      val named = {
-        val in = fs.open(manifest)
-        val bytes = try {
-          val out = new java.io.ByteArrayOutputStream()
-          org.apache.hadoop.io.IOUtils.copyBytes(in, out, 4096, false)
-          out.toString("UTF-8")
-        } finally in.close()
-        bytes.split("\n").filter(_.nonEmpty)
-      }
-      named.foreach(n => fs.delete(new Path(root, n), true))
-      require(fs.rename(tmp, target),
-        s"consolidateEpochs: rename $tmp -> $target failed")
-      fs.delete(manifest, false)
-    }
-
-    // crash recovery: a manifest with a COMPLETE stage (tmp/_SUCCESS)
-    // rolls forward; with tmp already renamed in, only the manifest is
-    // left to clean; an incomplete stage (or an orphan tmp) is discarded
-    if (fs.exists(manifest)) {
-      if (fs.exists(new Path(tmp, "_SUCCESS"))) finishFromManifest()
-      else if (!fs.exists(tmp)) fs.delete(manifest, false)
-      else { fs.delete(tmp, true); fs.delete(manifest, false) }
-    } else if (fs.exists(tmp)) fs.delete(tmp, true)
-
-    val epochs =
-      if (!fs.exists(root)) Array.empty[Path]
-      else fs.listStatus(root).map(_.getPath)
-        .filter(_.getName.startsWith(epochPrefix))
-    if (!epochs.exists(_.getName != epochPrefix + "-1")) None
-    else {
-      val out = fs.create(manifest, true)
-      try out.write(epochs.map(_.getName).mkString("\n").getBytes("UTF-8"))
-      finally out.close()
-      // the source epochs are untouched until the stage commits (_SUCCESS)
-      writeStage(
-        spark.read.option("basePath", root.toString)
-          .parquet(epochs.map(_.toString).toIndexedSeq: _*)
-          .drop(epochCol),
-        tmp.toString)
-      finishFromManifest()
-      Some(spark.read.parquet(root.toString).count())
-    }
   }
 
   /**

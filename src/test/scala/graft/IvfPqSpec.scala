@@ -67,7 +67,7 @@ class IvfPqSpec extends AnyFunSuite {
     Similarity.buildIvfIndex(first, "vec_id", "embedding", "label", pathA)
     Similarity.addPqToIvfIndex(spark, pathA, "vec_id", "embedding",
       "label", m, ksub, iters = 2, trainMod = 1)
-    Similarity.appendToIvfPqIndex(spark, pathA, batch, "vec_id",
+    Similarity.appendToIvfIndex(spark, pathA, batch, "vec_id",
       "embedding", "label")
     // B: the same FIRST-half codebooks must score both sides: copy A's
     // codebooks by building B's index over the union and re-encoding
@@ -83,15 +83,22 @@ class IvfPqSpec extends AnyFunSuite {
     assert(rows(pqAppended) == rows(plainUnion))
   }
 
-  test("a lists append WITHOUT the pq append makes the probe refuse") {
+  test("a stale sidecar marker makes the probe refuse") {
     val path = Files.createTempDirectory("graft-ivfpq-stale").toString
     val df = corpus(90)
-    val first = df.filter(col("vec_id") < 60)
-    Similarity.buildIvfIndex(first, "vec_id", "embedding", "label", path)
+    Similarity.buildIvfIndex(df.filter(col("vec_id") < 60),
+      "vec_id", "embedding", "label", path)
     Similarity.addPqToIvfIndex(spark, path, "vec_id", "embedding", "label",
       m, ksub)
     Similarity.appendToIvfIndex(spark, path,
       df.filter(col("vec_id") >= 60), "vec_id", "embedding", "label")
+    // the append encoded its rows: the marker names the grown index
+    val Some((maxId, mm, kk, dd, res)) = Similarity.readPqMarker(spark, path)
+    assert(maxId == 89L)
+    // a marker left from before the append (staged by hand — no entry
+    // point writes lists without codes any more) must refuse, not scan
+    // codes that miss the newest rows
+    Similarity.writePqMarker(spark, path, 59L, mm, kk, dd, res)
     val probes = probesOf(df, 5)
     val e = intercept[IllegalArgumentException] {
       Similarity.ivfPqKnnJoinIndexed(spark, path, probes,
@@ -128,7 +135,7 @@ class IvfPqSpec extends AnyFunSuite {
     Similarity.addPqToIvfIndex(spark, path, "vec_id", "embedding", "label",
       m, ksub, trainMod = 1)
     (0 until 3).foreach { b =>
-      Similarity.appendToIvfPqIndex(spark, path,
+      Similarity.appendToIvfIndex(spark, path,
         df.filter(col("vec_id") >= 60 + b * 20 &&
           col("vec_id") < 80 + b * 20),
         "vec_id", "embedding", "label")
@@ -145,7 +152,7 @@ class IvfPqSpec extends AnyFunSuite {
         .count(_.getName.endsWith(".parquet"))
     }
     val filesBefore = codeFiles()
-    Similarity.compactIvfPqIndex(spark, path)
+    Similarity.compactIvfIndex(spark, path)
     assert(codeFiles() < filesBefore)
     val cellDirs = new java.io.File(s"$path/pq/codes").listFiles()
       .count(f => f.isDirectory && f.getName.startsWith("__cellkey="))
@@ -164,9 +171,9 @@ class IvfPqSpec extends AnyFunSuite {
     val e1 = all.filter(col("vec_id") >= 60 && col("vec_id") < 90)
       .localCheckpoint()
     val e2 = all.filter(col("vec_id") >= 90).localCheckpoint()
-    StreamOps.ivfPqIngestEpoch(e1, 0L, path, "vec_id", "embedding",
+    StreamOps.ivfIngestEpoch(e1, 0L, path, "vec_id", "embedding",
       "label", 64)
-    StreamOps.ivfPqIngestEpoch(e2, 1L, path, "vec_id", "embedding",
+    StreamOps.ivfIngestEpoch(e2, 1L, path, "vec_id", "embedding",
       "label", 64)
     val probes = probesOf(all, 10)
     def pqProbe() = rows(Similarity.ivfPqKnnJoinIndexed(spark, path,
@@ -177,7 +184,7 @@ class IvfPqSpec extends AnyFunSuite {
     val once = pqProbe()
     assert(once == plain) // full rerank: codes cover every epoch's rows
     // crash replay of epoch 1: whole-epoch overwrite, bit-identical
-    StreamOps.ivfPqIngestEpoch(e2, 1L, path, "vec_id", "embedding",
+    StreamOps.ivfIngestEpoch(e2, 1L, path, "vec_id", "embedding",
       "label", 64)
     assert(pqProbe() == once)
     // crash window: marker gone → probe refuses; the next epoch heals
@@ -186,7 +193,7 @@ class IvfPqSpec extends AnyFunSuite {
     // a replayed epoch cannot START without a valid marker either —
     // heal by re-adding the sidecar, then the stream continues
     intercept[IllegalStateException] {
-      StreamOps.ivfPqIngestEpoch(e2, 1L, path, "vec_id", "embedding",
+      StreamOps.ivfIngestEpoch(e2, 1L, path, "vec_id", "embedding",
         "label", 64)
     }
     Similarity.addPqToIvfIndex(spark, path, "vec_id", "embedding",
@@ -194,7 +201,7 @@ class IvfPqSpec extends AnyFunSuite {
     assert(pqProbe() == once)
     // and the batch append refuses the epoch layout outright
     val ex = intercept[IllegalArgumentException] {
-      Similarity.appendToIvfPqIndex(spark, path,
+      Similarity.appendToIvfIndex(spark, path,
         all.limit(5), "vec_id", "embedding", "label")
     }
     assert(ex.getMessage.contains("epoch layout"))
@@ -303,7 +310,7 @@ class IvfPqSpec extends AnyFunSuite {
       .selectExpr("cast(__cell as long) c", "__center").collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1))).toSet
     val before = snapshot()
-    Similarity.appendToIvfPqIndex(spark, pathA,
+    Similarity.appendToIvfIndex(spark, pathA,
       all.filter(col("vec_id") >= 80), "vec_id", "embedding", "label")
     // the append moved the LIVE centers but not the decode geometry,
     // and the sidecar stayed residual
@@ -327,7 +334,7 @@ class IvfPqSpec extends AnyFunSuite {
     Similarity.addPqToIvfIndex(spark, path, "vec_id", "embedding",
       "label", m, ksub, trainMod = 1, residual = true)
     val e1 = all.filter(col("vec_id") >= 60).localCheckpoint()
-    StreamOps.ivfPqIngestEpoch(e1, 0L, path, "vec_id", "embedding",
+    StreamOps.ivfIngestEpoch(e1, 0L, path, "vec_id", "embedding",
       "label", 64)
     val probes = probesOf(all, 10)
     def pqProbe() = rows(Similarity.ivfPqKnnJoinIndexed(spark, path,
@@ -338,7 +345,7 @@ class IvfPqSpec extends AnyFunSuite {
     val once = pqProbe()
     assert(once == plain)
     // replay: bit-identical, and the marker still says residual
-    StreamOps.ivfPqIngestEpoch(e1, 0L, path, "vec_id", "embedding",
+    StreamOps.ivfIngestEpoch(e1, 0L, path, "vec_id", "embedding",
       "label", 64)
     assert(pqProbe() == once)
     assert(Similarity.readPqMarker(spark, path).exists(_._5))

@@ -190,4 +190,30 @@ class PqSpec extends AnyFunSuite {
     val ref = refEncode(vs, refTrain(vs, iters = 2))
     for ((id, c) <- ref) assert(codes(id) == c, s"vec $id")
   }
+
+  test("a vector narrower than dims fails the PQ paths loudly") {
+    // one ragged row among full-width ones: a short subvector used to
+    // take the nearest-code null-distance branch and code as 0
+    val rows = corpus(40).map { case (id, v) =>
+      (id, if (id == 17L) v.take(dims - 3) else v) }
+    val df = rows.toDF("vec_id", "embedding")
+    val cb = Similarity.pqTrain(df.filter(col("vec_id") =!= 17L),
+      "vec_id", "embedding", m, ksub, iters = 2, dims).localCheckpoint()
+    def loud(f: => Unit): Unit = {
+      val e = intercept[Exception](f)
+      val msg = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+      assert(msg.contains(s">= $dims elements") && msg.contains("id 17"),
+        msg)
+    }
+    loud(Similarity.pqEncode(df, cb, "vec_id", "embedding", m, ksub, dims)
+      .collect())
+    loud(Similarity.pqTrain(df, "vec_id", "embedding", m, ksub, iters = 2,
+      dims).collect())
+    loud(Similarity.pqTopK(df, "vec_id", "embedding", probeId = 0L, k = 3,
+      m = m, ksub = ksub, dims = dims).collect())
+    // pqEncode now requires m | dims, as pqTrain does
+    intercept[IllegalArgumentException](
+      Similarity.pqEncode(df, cb, "vec_id", "embedding", 7, ksub, dims))
+  }
 }

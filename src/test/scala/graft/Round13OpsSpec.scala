@@ -150,9 +150,9 @@ class Round13OpsSpec extends AnyFunSuite {
     assert(fresh.occupancySkew >= 1.0 && fresh.meanResidual >= 0.0)
     // a rotated batch lands wherever the frozen geometry puts it —
     // occupancy skews and the sampled residual climbs
-    Similarity.appendToIvfIndexAssigned(spark, idx,
+    Similarity.appendToIvfIndex(spark, idx,
       clustered(idBase = 1000L, shift = true), "vec_id", "embedding",
-      dims = 4)
+      "cell", dims = 4)
     val drifted = Similarity.ivfDriftStats(spark, idx, "vec_id",
       "embedding", "cell", dims = 4)
     assert(drifted.rows == 80)
@@ -173,9 +173,9 @@ class Round13OpsSpec extends AnyFunSuite {
   test("retrainIvfIndex is bit-identical to a fresh build over the same corpus") {
     val idx = Files.createTempDirectory("graft-r13-retrain").toString + "/idx"
     buildKm(clustered(), idx)
-    Similarity.appendToIvfIndexAssigned(spark, idx,
+    Similarity.appendToIvfIndex(spark, idx,
       clustered(idBase = 1000L, shift = true), "vec_id", "embedding",
-      dims = 4)
+      "cell", dims = 4)
     Similarity.retrainIvfIndex(spark, idx, "vec_id", "embedding",
       dims = 4, iters = 4, trainMod = 1, superAssign = 0)
     val freshPath = Files.createTempDirectory("graft-r13-retrain-f")

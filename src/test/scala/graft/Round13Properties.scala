@@ -112,8 +112,8 @@ class Round13Properties extends AnyFunSuite {
       }
       val idx = Files.createTempDirectory(s"graft-r13p-$s").toString + "/i"
       km(base, idx)
-      Similarity.appendToIvfIndexAssigned(spark, idx, extra, "vec_id",
-        "embedding", dims = 4)
+      Similarity.appendToIvfIndex(spark, idx, extra, "vec_id",
+        "embedding", "cell", dims = 4)
       Similarity.retrainIvfIndex(spark, idx, "vec_id", "embedding",
         dims = 4, k = 5, iters = 3, trainMod = 1, superAssign = 0)
       val fresh = Files.createTempDirectory(s"graft-r13pf-$s")

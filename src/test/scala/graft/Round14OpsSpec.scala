@@ -150,8 +150,8 @@ class Round14OpsSpec extends AnyFunSuite {
 
     // out-of-distribution ingest raises the residual past a threshold
     // set between the fresh and shifted readings
-    Similarity.appendToIvfIndexAssigned(spark, path, shifted, "vec_id",
-      "embedding", dims = 64)
+    Similarity.appendToIvfIndex(spark, path, shifted, "vec_id",
+      "embedding", "cell", dims = 64)
     val drifted = Similarity.ivfDriftStats(spark, path, "vec_id",
       "embedding", "cell", dims = 64)
     assert(drifted.meanResidual > fresh.meanResidual,

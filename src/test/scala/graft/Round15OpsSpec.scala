@@ -124,7 +124,7 @@ class Round15OpsSpec extends AnyFunSuite {
 
     // append 40 rows forming NEW cell 9
     val batch = newCellBatch(40, 1000L, label = 9).localCheckpoint()
-    Similarity.appendToIvfPqIndex(spark, path, batch, "vec_id",
+    Similarity.appendToIvfIndex(spark, path, batch, "vec_id",
       "embedding", "label")
     val snapAfter = snapRows(path)
     assert(snapAfter.map(_._1) == Set(0, 1, 2, 3, 4, 9),
@@ -154,7 +154,7 @@ class Round15OpsSpec extends AnyFunSuite {
     val live1 = spark.read.parquet(s"$path/centers")
       .filter(col("__cell").cast("int") === 9)
       .select(col("__center")).head.getSeq[Double](0)
-    Similarity.appendToIvfPqIndex(spark, path,
+    Similarity.appendToIvfIndex(spark, path,
       newCellBatch(20, 2000L, label = 9), "vec_id", "embedding", "label")
     assert(snapRows(path) == snapAfter,
       "snapshot entries are frozen at first sight")
@@ -217,11 +217,11 @@ class Round15OpsSpec extends AnyFunSuite {
           .write.mode("append").parquet(in)
         Thread.sleep(1100) // distinct mtimes order the file source
       }
-      val q = StreamOps.ivfIngestAssignedTo(
+      val q = StreamOps.ivfIngestTo(
         spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
           .parquet(in),
         idx, Files.createTempDirectory("graft-ivfmck").toString,
-        "vec_id", "embedding",
+        "vec_id", "embedding", "cell",
         maintainEvery = maintainEvery, residualThreshold = 0.17,
         targetRowsPerCell = 60, maintainIters = 2)
       q.awaitTermination()

@@ -55,7 +55,7 @@ class Round16OpsSpec extends AnyFunSuite {
     // the epoch has not landed yet, so the gate says compact
     assert(StreamOps.shouldCompactAt(spark, idx, 2L, 2),
       "first attempt at the boundary must compact")
-    StreamOps.compactIvfIngestState(spark, idx)
+    Similarity.compactIvfIndex(spark, idx)
     StreamOps.ivfIngestEpoch(e2, 2L, idx, "vec_id", "embedding",
       "label", dims = 4)
     // ...crash before the checkpoint commit. foreachBatch REPLAYS batch
@@ -75,7 +75,7 @@ class Round16OpsSpec extends AnyFunSuite {
     // the UNGUARDED pre-fix sequence demonstrates the hazard: replaying
     // the compaction folds the crashed attempt's __batch=2 rows into
     // -1, then the epoch write re-lands them — ids duplicated
-    StreamOps.compactIvfIngestState(spark, idx)
+    Similarity.compactIvfIndex(spark, idx)
     StreamOps.ivfIngestEpoch(e2, 2L, idx, "vec_id", "embedding",
       "label", dims = 4)
     val (n2, d2) = listIds()
@@ -140,12 +140,17 @@ class Round16OpsSpec extends AnyFunSuite {
     assert(snapCells() == Set("0", "1", "2", "3", "4"))
 
     // two post-snapshot cells join the LISTS (live centers move, no
-    // codes yet) — the plain lists append, as a pre-fix code version
-    // would have left things
+    // codes yet), as a pre-fix code version would have left things: an
+    // append encodes codes whenever `pq/` exists, so the sidecar is
+    // moved aside for it
+    val (pq, aside) = (new java.io.File(s"$path/pq"),
+      new java.io.File(s"$path/pq.aside"))
+    assert(pq.renameTo(aside))
     Similarity.appendToIvfIndex(spark, path,
       newCellBatch(10, 3000L, label = 98)
         .unionByName(newCellBatch(10, 3100L, label = 99)),
       "vec_id", "embedding", "label")
+    assert(aside.renameTo(pq))
     // cell 98 ALREADY holds codes in the sidecar — the pre-fix
     // raw-vector fallback's footprint, synthesized directly
     spark.read.parquet(s"$path/pq/codes").limit(1)

@@ -119,8 +119,8 @@ class Round8OpsSpec extends AnyFunSuite {
       .join(Similarity.assignToCenters(spark, appended, kmBatch,
         "vec_id", "embedding"), Seq("vec_id"))
       .localCheckpoint()
-    Similarity.appendToIvfIndexAssigned(spark, appended, kmBatch,
-      "vec_id", "embedding", dims = 4)
+    Similarity.appendToIvfIndex(spark, appended, kmBatch,
+      "vec_id", "embedding", "cell", dims = 4)
     val rebuilt = java.nio.file.Files
       .createTempDirectory("graft-assign-reb").toString
     Similarity.buildIvfIndex(labeledCorpus.unionByName(frozenBatch),

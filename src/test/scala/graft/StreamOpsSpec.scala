@@ -766,7 +766,7 @@ class StreamOpsSpec extends AnyFunSuite {
     StreamOps.ivfIngestEpoch(ivfEpoch2, 1L, idx, "vec_id", "embedding",
       "label", dims = 4)
     val before = probeRows(idx)
-    val n = StreamOps.compactIvfIngestState(spark, idx)
+    val n = graft.functions.Similarity.compactIvfIndex(spark, idx)
     assert(n == 6)
     val dirs = new java.io.File(s"$idx/lists").listFiles()
       .filter(_.isDirectory).map(_.getName).toSet
@@ -867,11 +867,11 @@ class StreamOpsSpec extends AnyFunSuite {
     kmEpoch1.coalesce(1).write.mode("append").parquet(in)
     Thread.sleep(1100)
     kmEpoch2.coalesce(1).write.mode("append").parquet(in)
-    val q = StreamOps.ivfIngestAssignedTo(
+    val q = StreamOps.ivfIngestTo(
       spark.readStream.schema(kmEpoch1.schema)
         .option("maxFilesPerTrigger", 1).parquet(in),
       idx, Files.createTempDirectory("graft-kmck").toString,
-      "vec_id", "embedding", dims = 4)
+      "vec_id", "embedding", "cell", dims = 4)
     q.awaitTermination()
     // batch arm: same seed through the flat build, same epochs through
     // the assigned append (each assigns against the then-current
@@ -880,10 +880,10 @@ class StreamOpsSpec extends AnyFunSuite {
     val batch = Files.createTempDirectory("graft-kmb").toString + "/idx"
     Similarity.buildIvfIndex(kmSeedLabeled, "vec_id", "embedding", "cell",
       batch, dims = 4)
-    Similarity.appendToIvfIndexAssigned(spark, batch, kmEpoch1, "vec_id",
-      "embedding", dims = 4)
-    Similarity.appendToIvfIndexAssigned(spark, batch, kmEpoch2, "vec_id",
-      "embedding", dims = 4)
+    Similarity.appendToIvfIndex(spark, batch, kmEpoch1, "vec_id",
+      "embedding", "cell", dims = 4)
+    Similarity.appendToIvfIndex(spark, batch, kmEpoch2, "vec_id",
+      "embedding", "cell", dims = 4)
     val got = kmProbeRows(idx)
     assert(got.nonEmpty && got == kmProbeRows(batch))
     // streamed vectors are reachable
@@ -897,8 +897,8 @@ class StreamOpsSpec extends AnyFunSuite {
     val idx = Files.createTempDirectory("graft-kmrp").toString + "/idx"
     StreamOps.ivfIngestBootstrap(kmSeedLabeled, idx, "vec_id", "embedding",
       "cell", dims = 4)
-    StreamOps.ivfIngestAssignedEpoch(kmEpoch1, 0L, idx, "vec_id",
-      "embedding", dims = 4)
+    StreamOps.ivfIngestEpoch(kmEpoch1, 0L, idx, "vec_id",
+      "embedding", "cell", dims = 4)
     val once = kmProbeRows(idx)
     val cellsOnce = spark.read.parquet(s"$idx/lists")
       .filter(col("vec_id").isin(4L, 5L))
@@ -906,8 +906,8 @@ class StreamOpsSpec extends AnyFunSuite {
       .map(r => r.getLong(0) -> r.getInt(1)).toSet
     // replay the SAME epoch after the first attempt fully completed
     // (lists written AND centers refreshed)
-    StreamOps.ivfIngestAssignedEpoch(kmEpoch1, 0L, idx, "vec_id",
-      "embedding", dims = 4)
+    StreamOps.ivfIngestEpoch(kmEpoch1, 0L, idx, "vec_id",
+      "embedding", "cell", dims = 4)
     assert(kmProbeRows(idx) == once)
     assert(spark.read.parquet(s"$idx/lists")
       .filter(col("vec_id") === 4L).count() == 1,
@@ -943,12 +943,14 @@ class StreamOpsSpec extends AnyFunSuite {
     val a = Files.createTempDirectory("graft-kmre-a").toString + "/idx"
     StreamOps.ivfIngestBootstrap(kmSeedLabeled, a, "vec_id", "embedding",
       "cell", dims = 4)
-    val r0 = StreamOps.ivfIngestAssignedEpoch(kmEpoch1, 0L, a, "vec_id",
-      "embedding", dims = 4)
+    val r0 = StreamOps.centersReusable(spark, a, 0L)
+    StreamOps.ivfIngestEpoch(kmEpoch1, 0L, a, "vec_id",
+      "embedding", "cell", dims = 4)
     assert(!r0, "epoch 0 has no marker (bootstrap writes none) — recompute")
     val before1 = fileBytesRead()
-    val r1 = StreamOps.ivfIngestAssignedEpoch(kmEpoch2, 1L, a, "vec_id",
-      "embedding", dims = 4)
+    val r1 = StreamOps.centersReusable(spark, a, 1L)
+    StreamOps.ivfIngestEpoch(kmEpoch2, 1L, a, "vec_id",
+      "embedding", "cell", dims = 4)
     val bytesReuse = fileBytesRead() - before1
     assert(r1, "clean epoch 1 must reuse epoch 0's stamped centers")
     // arm B: marker deleted before epoch 1 — forced fallback recompute
@@ -956,12 +958,13 @@ class StreamOpsSpec extends AnyFunSuite {
     val b = Files.createTempDirectory("graft-kmre-b").toString + "/idx"
     StreamOps.ivfIngestBootstrap(kmSeedLabeled, b, "vec_id", "embedding",
       "cell", dims = 4)
-    StreamOps.ivfIngestAssignedEpoch(kmEpoch1, 0L, b, "vec_id",
-      "embedding", dims = 4)
+    StreamOps.ivfIngestEpoch(kmEpoch1, 0L, b, "vec_id",
+      "embedding", "cell", dims = 4)
     new java.io.File(s"$b/centers_epoch/__marker").delete()
     val before1b = fileBytesRead()
-    val r1b = StreamOps.ivfIngestAssignedEpoch(kmEpoch2, 1L, b, "vec_id",
-      "embedding", dims = 4)
+    val r1b = StreamOps.centersReusable(spark, b, 1L)
+    StreamOps.ivfIngestEpoch(kmEpoch2, 1L, b, "vec_id",
+      "embedding", "cell", dims = 4)
     val bytesFallback = fileBytesRead() - before1b
     assert(!r1b, "no marker — fallback recompute")
     // the scan proof: the fallback's extra work is the assignment-time
@@ -986,10 +989,10 @@ class StreamOpsSpec extends AnyFunSuite {
     val ref = Files.createTempDirectory("graft-kmcw-r").toString + "/idx"
     StreamOps.ivfIngestBootstrap(kmSeedLabeled, ref, "vec_id", "embedding",
       "cell", dims = 4)
-    StreamOps.ivfIngestAssignedEpoch(kmEpoch1, 0L, ref, "vec_id",
-      "embedding", dims = 4)
-    StreamOps.ivfIngestAssignedEpoch(kmEpoch2, 1L, ref, "vec_id",
-      "embedding", dims = 4)
+    StreamOps.ivfIngestEpoch(kmEpoch1, 0L, ref, "vec_id",
+      "embedding", "cell", dims = 4)
+    StreamOps.ivfIngestEpoch(kmEpoch2, 1L, ref, "vec_id",
+      "embedding", "cell", dims = 4)
     def listRows(p: String) = spark.read.parquet(s"$p/lists")
       .select("vec_id", "cell", "__batch").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSet
@@ -1001,8 +1004,8 @@ class StreamOpsSpec extends AnyFunSuite {
     val w1 = Files.createTempDirectory("graft-kmcw-1").toString + "/idx"
     StreamOps.ivfIngestBootstrap(kmSeedLabeled, w1, "vec_id", "embedding",
       "cell", dims = 4)
-    StreamOps.ivfIngestAssignedEpoch(kmEpoch1, 0L, w1, "vec_id",
-      "embedding", dims = 4)
+    StreamOps.ivfIngestEpoch(kmEpoch1, 0L, w1, "vec_id",
+      "embedding", "cell", dims = 4)
     val preCenters = spark.read
       .parquet(s"$w1/centers_epoch/__batch=0")
     val labeled1 = kmEpoch2.select(col("vec_id"), col("embedding"))
@@ -1014,8 +1017,9 @@ class StreamOpsSpec extends AnyFunSuite {
         col("cell").cast("string").as("__cellkey"))
       .write.mode("overwrite").partitionBy("__cellkey")
       .parquet(s"$w1/lists/__batch=1")
-    val re1 = StreamOps.ivfIngestAssignedEpoch(kmEpoch2, 1L, w1, "vec_id",
-      "embedding", dims = 4)
+    val re1 = StreamOps.centersReusable(spark, w1, 1L)
+    StreamOps.ivfIngestEpoch(kmEpoch2, 1L, w1, "vec_id",
+      "embedding", "cell", dims = 4)
     assert(re1, "marker still covers exactly the pre-epoch set — reuse ok")
     assert(listRows(w1) == listRows(ref), "window-1 replay diverged")
 
@@ -1026,12 +1030,13 @@ class StreamOpsSpec extends AnyFunSuite {
     val w2 = Files.createTempDirectory("graft-kmcw-2").toString + "/idx"
     StreamOps.ivfIngestBootstrap(kmSeedLabeled, w2, "vec_id", "embedding",
       "cell", dims = 4)
-    StreamOps.ivfIngestAssignedEpoch(kmEpoch1, 0L, w2, "vec_id",
-      "embedding", dims = 4)
-    StreamOps.ivfIngestAssignedEpoch(kmEpoch2, 1L, w2, "vec_id",
-      "embedding", dims = 4)
-    val re2 = StreamOps.ivfIngestAssignedEpoch(kmEpoch2, 1L, w2, "vec_id",
-      "embedding", dims = 4)
+    StreamOps.ivfIngestEpoch(kmEpoch1, 0L, w2, "vec_id",
+      "embedding", "cell", dims = 4)
+    StreamOps.ivfIngestEpoch(kmEpoch2, 1L, w2, "vec_id",
+      "embedding", "cell", dims = 4)
+    val re2 = StreamOps.centersReusable(spark, w2, 1L)
+    StreamOps.ivfIngestEpoch(kmEpoch2, 1L, w2, "vec_id",
+      "embedding", "cell", dims = 4)
     assert(!re2, "marker covers the replayed epoch itself — recompute")
     assert(listRows(w2) == listRows(ref), "window-2 replay diverged")
 
@@ -1041,13 +1046,14 @@ class StreamOpsSpec extends AnyFunSuite {
     val w3 = Files.createTempDirectory("graft-kmcw-3").toString + "/idx"
     StreamOps.ivfIngestBootstrap(kmSeedLabeled, w3, "vec_id", "embedding",
       "cell", dims = 4)
-    StreamOps.ivfIngestAssignedEpoch(kmEpoch1, 0L, w3, "vec_id",
-      "embedding", dims = 4)
+    StreamOps.ivfIngestEpoch(kmEpoch1, 0L, w3, "vec_id",
+      "embedding", "cell", dims = 4)
     // simulate the torn overwrite: live centers emptied
     val cdir = new java.io.File(s"$w3/centers")
     cdir.listFiles().foreach(_.delete())
-    val re3 = StreamOps.ivfIngestAssignedEpoch(kmEpoch2, 1L, w3, "vec_id",
-      "embedding", dims = 4)
+    val re3 = StreamOps.centersReusable(spark, w3, 1L)
+    StreamOps.ivfIngestEpoch(kmEpoch2, 1L, w3, "vec_id",
+      "embedding", "cell", dims = 4)
     assert(re3, "reuse reads the stamped copy, not the live table")
     assert(listRows(w3) == listRows(ref), "window-3 replay diverged")
   }
@@ -1058,10 +1064,11 @@ class StreamOpsSpec extends AnyFunSuite {
     val p = Files.createTempDirectory("graft-kmpr").toString + "/idx"
     StreamOps.ivfIngestBootstrap(kmSeedLabeled, p, "vec_id", "embedding",
       "cell", dims = 4)
-    StreamOps.ivfIngestAssignedEpoch(kmEpoch1, 0L, p, "vec_id",
-      "embedding", dims = 4)
-    val r1 = StreamOps.ivfIngestAssignedEpoch(kmEpoch2, 1L, p, "vec_id",
-      "embedding", dims = 4)
+    StreamOps.ivfIngestEpoch(kmEpoch1, 0L, p, "vec_id",
+      "embedding", "cell", dims = 4)
+    val r1 = StreamOps.centersReusable(spark, p, 1L)
+    StreamOps.ivfIngestEpoch(kmEpoch2, 1L, p, "vec_id",
+      "embedding", "cell", dims = 4)
     assert(r1, "pruning must not break the clean-epoch reuse chain")
     val copies = new java.io.File(s"$p/centers_epoch").listFiles()
       .map(_.getName).filter(_.startsWith("__batch=")).toSet

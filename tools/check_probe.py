@@ -8,8 +8,8 @@ Exit non-zero when the artifact is unusable or the scale claims it
 exists to document do not hold in it:
   - probing a fixed batch must be much cheaper than building (the
     amortization claim);
-  - appending a fixed batch must be much cheaper than rebuilding (the
-    incremental-maintenance claim), and since round 12 the append must
+  - appending a fixed batch, or streaming it as one ingest epoch, must
+    be much cheaper than rebuilding (the incremental-maintenance claim), and since round 12 the append must
     have taken the INCREMENTAL csums path (the recorded flag), with the
     corpus-proportional centers recompute surviving only as the
     repair/fallback cost (ivf_centers_refresh_sec);
@@ -33,7 +33,7 @@ REQUIRED = [
     "ivf_build_sec", "ivf_probe200_sec", "ivf_recall5_flat",
     "kmeans_build_sec", "ivf_recall5_kmeans",
     "ivf_append200_sec", "ivf_centers_refresh_sec",
-    "ivf_append200_assigned_sec",
+    "ivf_append200_assigned_sec", "ivf_ingest_epoch200_sec",
     "dedup_build_sec", "dedup_probe500_sec", "dedup_append500_sec",
 ]
 
@@ -93,6 +93,11 @@ def main():
         fails.append(
             f"ivf append {doc['ivf_append200_sec']:.2f}s not < rebuild "
             f"{doc['ivf_build_sec']:.2f}s - incremental claim broken")
+    if doc["ivf_ingest_epoch200_sec"] >= 0.8 * doc["ivf_build_sec"]:
+        fails.append(
+            f"ivf ingest epoch {doc['ivf_ingest_epoch200_sec']:.2f}s not < "
+            f"rebuild {doc['ivf_build_sec']:.2f}s - streamed epoch must "
+            "stay incremental like the append")
     if doc["ivf_append200_assigned_sec"] >= 0.8 * doc["kmeans_build_sec"]:
         fails.append(
             f"assigned append {doc['ivf_append200_assigned_sec']:.2f}s "
